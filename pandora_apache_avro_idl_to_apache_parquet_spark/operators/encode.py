@@ -44,6 +44,7 @@ import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..functions import codecs as C
 from ..functions.fsio import FsIO
@@ -259,8 +260,6 @@ def encode_tokens(df: DataFrame, out_dir: str, n_parts: int = 64,
         done_df = spark.createDataFrame([(p,) for p in done], "part_id int")
         keyed = keyed.join(F.broadcast(done_df), "part_id", "left_anti")
 
-    from pyspark.sql.types import StructType
-
     manifest_struct = StructType([f for f in CHUNK_SCHEMA.fields if not f.name.endswith("_payload")])
 
     def kernel(table: pa.Table) -> pa.Table:
@@ -304,8 +303,6 @@ def encode_tokens_scan(df: DataFrame, out_dir: str,
     pds = pds or date(2026, 1, 1)
     io = _io(out_dir, io)
     done = set(completed_parts(out_dir, io))
-
-    from pyspark.sql.types import StructType
 
     manifest_struct = StructType([f for f in CHUNK_SCHEMA.fields if not f.name.endswith("_payload")])
 
@@ -769,18 +766,26 @@ def read_manifest(spark: SparkSession, out_dir: str, io: FsIO | None = None) -> 
 
 
 def read_chunks(spark: SparkSession, out_dir: str, io: FsIO | None = None) -> DataFrame:
+    """Log-gated chunk-file scan of a token store (see `_read_live_chunks`)."""
+    return _read_live_chunks(spark, out_dir, _io(out_dir, io), CHUNK_SCHEMA)
+
+
+def _read_live_chunks(spark: SparkSession, out_dir: str, io: FsIO,
+                      schema: StructType, as_of: int | None = None) -> DataFrame:
     """Log-gated chunk-file scan: when a commit log exists, exactly the files
-    it references as live are read (half-published crash leftovers and
-    compacted-away files are invisible); directory listing is the fallback
-    for pre-commit state. The DataFrame read itself goes through Spark's own
-    Hadoop connectors (pass URIs for cluster stores)."""
-    io = _io(out_dir, io)
-    d = io.join("data")
-    live = committed_files(out_dir, io)
+    it references as live (at ``as_of``) are read (half-published crash
+    leftovers and compacted-away files are invisible); directory listing is
+    the fallback for pre-commit state. The DataFrame read itself goes through
+    Spark's own Hadoop connectors (pass URIs for cluster stores), under the
+    known chunk ``schema`` (nullable on read), so planning starts no
+    footer-inference job."""
+    live = committed_files(out_dir, io, as_of=as_of)
     if live is None:
-        live = [f for f in io.listdir(d) if f.endswith(".parquet")]
+        live = [f for f in io.listdir(io.join("data")) if f.endswith(".parquet")]
     if not live:
-        # empty input produced no chunk files: empty frame with the chunk schema
-        return spark.createDataFrame([], CHUNK_SCHEMA)
+        # no chunk files (empty input): empty frame with the chunk schema
+        return spark.createDataFrame([], schema)
+    relaxed = StructType([StructField(f.name, f.dataType, True)
+                          for f in schema.fields])
     base = out_dir.rstrip("/") + "/data/"
-    return spark.read.parquet(*[base + f for f in live])
+    return spark.read.schema(relaxed).parquet(*[base + f for f in live])

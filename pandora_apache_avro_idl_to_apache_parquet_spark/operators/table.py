@@ -1676,19 +1676,11 @@ def read_table_chunks(spark: SparkSession, out_dir: str,
     fallback pre-commit), and chunk files written before a schema evolution
     simply lack the new columns' stat/payload columns and surface them as
     nulls — no mergeSchema footer pass over every file."""
-    from .encode import committed_files
+    from .encode import _read_live_chunks
 
     io = _io(out_dir, io)
     schema = chunk_schema_for(read_table_spec(out_dir, io))
-    d = io.join("data")
-    live = committed_files(out_dir, io, as_of=as_of)
-    if live is None:
-        live = [f for f in io.listdir(d) if f.endswith(".parquet")]
-    if not live:
-        return spark.createDataFrame([], schema)
-    relaxed = T.StructType([T.StructField(f.name, f.dataType, True) for f in schema.fields])
-    base = out_dir.rstrip("/") + "/data/"
-    return spark.read.schema(relaxed).parquet(*[base + f for f in live])
+    return _read_live_chunks(spark, out_dir, io, schema, as_of=as_of)
 
 
 def read_table_manifest(spark: SparkSession, out_dir: str,

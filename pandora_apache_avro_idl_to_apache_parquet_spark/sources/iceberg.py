@@ -105,6 +105,9 @@ def _select_snapshot(meta: dict, snapshot_id: int | None,
             raise ValueError(f"no snapshot at or before {as_of_ms}")
         return _select_snapshot(meta, live[-1]["snapshot-id"], None)
     cur = meta.get("current-snapshot-id")
+    if cur is None:
+        raise ValueError("Iceberg table metadata has no current-snapshot-id; "
+                         "pass snapshot_id=, as_of_ms= or ref=")
     return _select_snapshot(meta, cur, None)
 
 
@@ -121,6 +124,21 @@ def _local_path(io: FsIO, table_dir: str, path: str) -> str:
         if io.exists(cand):
             return cand
     raise FileNotFoundError(f"referenced file not found: {path}")
+
+
+def _data_seq(entry: dict, manifest: dict) -> int:
+    """An entry's data sequence number: explicit when recorded (0 included),
+    else inherited from its manifest — which the spec allows only for ADDED
+    (status 1) entries. A v1 manifest list records no numbers at all, so
+    every file there is 0."""
+    seq = entry.get("sequence_number")
+    if seq is not None:
+        return seq
+    if entry.get("status", 1) == 1 or "sequence_number" not in manifest:
+        return manifest.get("sequence_number", 0)
+    raise ValueError(
+        f"manifest entry for {entry['data_file'].get('file_path')} has status "
+        f"{entry['status']} but no sequence_number; only ADDED entries inherit")
 
 
 def scan_manifests(table_dir: str, snapshot_id: int | None = None,
@@ -174,11 +192,9 @@ def scan_manifests(table_dir: str, snapshot_id: int | None = None,
             if e.get("status", 1) == 2:  # DELETED entry: file left the table
                 continue
             df_rec = dict(e["data_file"])
-            # data sequence number: explicit on the entry, else inherited
-            # from the manifest (the spec's inheritance rule) — equality
-            # deletes apply only to files with a STRICTLY LOWER one
-            df_rec["_seq"] = (e.get("sequence_number")
-                              or m.get("sequence_number", 0))
+            # equality deletes apply only to files with a STRICTLY LOWER
+            # data sequence number
+            df_rec["_seq"] = _data_seq(e, m)
             part = df_rec.get("partition") or {}
             if is_delete_manifest or df_rec.get("content", 0) in (1, 2):
                 delete_files.append(df_rec)
@@ -213,13 +229,12 @@ def read_iceberg(spark: SparkSession, table_dir: str,
     ordinal)`` using Spark's ``_metadata`` columns; equality deletes via a
     left-anti join on the delete file's columns, applied ONLY to data files
     with a strictly lower sequence number (the spec's rule — a row
-    re-inserted after the delete survives)."""
+    re-inserted after the delete survives). A plan that prunes every file
+    reads as an empty frame with the snapshot schema."""
     plan = scan_manifests(table_dir, snapshot_id, as_of_ms,
                           partition_filter, io, stats_filter=stats_filter,
                           ref=ref)
     io = _io(table_dir, io)
-    if not plan["data_files"]:
-        raise ValueError("scan plan is empty (all files pruned or table empty)")
     pos_dels = [f for f in plan["delete_files"] if f.get("content", 0) == 1]
     eq_dels = [f for f in plan["delete_files"] if f.get("content", 0) == 2]
     # impose the SNAPSHOT's schema on every file (fully-nullable on read):
@@ -229,6 +244,10 @@ def read_iceberg(spark: SparkSession, table_dir: str,
         T.StructField(f.name, f.dataType, True)
         for f in _snapshot_schema(plan["metadata"], plan["snapshot"]).fields
     ])
+    if not plan["data_files"]:
+        # every file pruned: nothing to scan, but the columns still resolve
+        empty = spark.createDataFrame([], expected)
+        return empty.select(*columns) if columns else empty
 
     pos_del_df = None
     if pos_dels:
@@ -1288,7 +1307,7 @@ def _iceberg_stream_classes():
                     for e in entries:
                         if e.get("status", 1) == 2:
                             continue
-                        e_seq = e.get("sequence_number") or seq
+                        e_seq = _data_seq(e, m)
                         rec = e["data_file"]
                         if e_seq == seq and rec.get("content", 0) == 0:
                             files.append(

@@ -6,7 +6,8 @@ entries, append + time travel (by snapshot id and by timestamp), positional
 merge-on-read deletes (subtraction, composition, older snapshots untouched,
 zero data-file rewrites), the pre-tokenized-sequence schema (array<int>
 tokens — the north-star input shape), metadata-layout shape checks, and the
-error paths (not-a-table, unknown snapshot, fully-pruned scan)."""
+error paths (not-a-table, unknown snapshot, missing current snapshot), and
+the fully-pruned scan (an empty frame, not an error)."""
 
 import json
 import os
@@ -156,8 +157,10 @@ def test_error_paths(spark, tmp_path):
         read_iceberg(spark, str(tmp_path / "nope"))
     d = str(tmp_path / "t")
     write_iceberg(_docs(spark, n=50), d, partition_by="source")
-    with pytest.raises(ValueError, match="empty"):
-        read_iceberg(spark, d, partition_filter=lambda p: False)
+    # a fully pruned scan is an empty frame with the snapshot schema
+    empty = read_iceberg(spark, d, partition_filter=lambda p: False)
+    assert empty.count() == 0
+    assert empty.columns == ["doc_id", "source", "v"]
 
 
 def test_equality_delete_sequence_semantics(spark, tmp_path):
@@ -778,3 +781,128 @@ def test_metadata_walk_through_object_store_io(spark, tmp_path):
     got = read_iceberg(spark, d, io=io,
                        partition_filter=lambda p: p["source"] == "src1")
     assert got.count() == 75
+
+
+def test_fully_pruned_partition_filter_reads_empty(spark, tmp_path):
+    """A partition filter that matches no file plans zero data files: the
+    read is an empty frame with the snapshot schema, and projections still
+    resolve."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        derive_partition_filter,
+    )
+
+    d = str(tmp_path / "t")
+    df = _docs(spark, n=200)
+    write_iceberg(df, d, partition_by="source")
+    pf = derive_partition_filter(d, eq="no-such-source")
+    plan = scan_manifests(d, partition_filter=pf)
+    assert plan["data_files"] == [] and plan["pruned_files"] > 0
+    got = read_iceberg(spark, d, partition_filter=pf)
+    assert got.count() == 0
+    assert [(f.name, f.dataType) for f in got.schema.fields] == \
+        [(f.name, f.dataType) for f in df.schema.fields]
+    assert read_iceberg(spark, d, partition_filter=pf,
+                        columns=["doc_id"]).columns == ["doc_id"]
+
+
+@pytest.mark.parametrize("drop", ["missing", "null"])
+def test_missing_current_snapshot_id_raises(spark, tmp_path, drop):
+    """Metadata without a current snapshot (key absent or null) is refused
+    with a clear error instead of recursing without end."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        _write_next_metadata,
+    )
+
+    d = str(tmp_path / "t")
+    write_iceberg(_docs(spark, n=50), d)
+    meta = dict(current_metadata(d))
+    if drop == "missing":
+        del meta["current-snapshot-id"]
+    else:
+        meta["current-snapshot-id"] = None
+    _write_next_metadata(FsIO.resolve(d), meta, "test")
+    with pytest.raises(ValueError, match="current-snapshot-id"):
+        scan_manifests(d)
+    with pytest.raises(ValueError, match="current-snapshot-id"):
+        read_iceberg(spark, d)
+    # an explicit snapshot still reads
+    assert read_iceberg(spark, d, snapshot_id=1).count() == 50
+
+
+def test_explicit_zero_sequence_number_meets_equality_delete(spark, tmp_path):
+    """An entry's explicit ``sequence_number`` of 0 is its data sequence
+    number; only a null one inherits, and only on an ADDED entry. A file
+    recorded at 0 in a manifest committed after an equality delete is
+    still older than the delete, so the delete subtracts its keys; the same
+    file with a null number inherits the later manifest number and keeps
+    them."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.avro_binary import (
+        write_avro_container,
+    )
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        _data_seq,
+        _write_next_metadata,
+        equality_delete_iceberg,
+    )
+
+    d = str(tmp_path / "t")
+    write_iceberg(_docs(spark, n=100), d)  # sequence number 1
+    equality_delete_iceberg(
+        spark.range(10).select(F.col("id").alias("doc_id")), d)  # 2
+    assert read_iceberg(spark, d).count() == 90
+
+    meta = current_metadata(d)
+    cur = [s for s in meta["snapshots"]
+           if s["snapshot-id"] == meta["current-snapshot-id"]][0]
+    ml_schema, manifests = read_avro_container(
+        open(cur["manifest-list"], "rb").read())
+    data_m = [m for m in manifests if m.get("content", 0) == 0][0]
+    m_schema, entries = read_avro_container(
+        open(data_m["manifest_path"], "rb").read())
+    # a data file holding some of the deleted keys
+    src = next(e["data_file"] for e in entries
+               if min(pq.read_table(e["data_file"]["file_path"],
+                                    columns=["doc_id"])["doc_id"].to_pylist()) < 10)
+    keys = pq.read_table(src["file_path"], columns=["doc_id"])["doc_id"].to_pylist()
+    n_low = sum(k < 10 for k in keys)
+
+    new_entries = []
+    for name, seq in (("zero", 0), ("inherit", None)):
+        path = os.path.join(d, "data", f"copy-{name}.parquet")
+        shutil.copyfile(src["file_path"], path)
+        new_entries.append({"status": 1, "snapshot_id": 1003,
+                            "sequence_number": seq,
+                            "data_file": dict(src, file_path=path)})
+    m_path = os.path.join(d, "metadata", "m-test-3.avro")
+    write_avro_container(m_path, m_schema, new_entries)
+    # snapshot 1003 at sequence number 3: the old manifests plus this one
+    ml_path = os.path.join(d, "metadata", "snap-test-3.avro")
+    write_avro_container(ml_path, ml_schema, manifests + [dict(
+        data_m, manifest_path=m_path, sequence_number=3, min_sequence_number=0)])
+    meta = dict(meta, **{"current-snapshot-id": 1003, "last-sequence-number": 3})
+    meta["snapshots"] = list(meta["snapshots"]) + [dict(
+        cur, **{"snapshot-id": 1003, "sequence-number": 3,
+                "timestamp-ms": cur["timestamp-ms"] + 1,
+                "manifest-list": ml_path, "summary": {"operation": "append"}})]
+    _write_next_metadata(FsIO.resolve(d), meta, "test")
+
+    seqs = {posixpath.basename(f["file_path"]): f["_seq"]
+            for f in scan_manifests(d)["data_files"]}
+    assert seqs["copy-zero.parquet"] == 0
+    assert seqs["copy-inherit.parquet"] == 3
+    got = read_iceberg(spark, d)
+    assert got.count() == 90 + (len(keys) - n_low) + len(keys)
+    assert got.filter(F.col("doc_id") < 10).count() == n_low
+
+    # inheritance is for ADDED entries only; a v1 manifest list has no
+    # numbers, so everything there is 0
+    existing = {"status": 0, "sequence_number": None,
+                "data_file": {"file_path": "f.parquet"}}
+    with pytest.raises(ValueError, match="only ADDED entries inherit"):
+        _data_seq(existing, {"sequence_number": 3})
+    assert _data_seq(existing, {}) == 0
+    assert _data_seq(dict(existing, status=1), {"sequence_number": 3}) == 3
