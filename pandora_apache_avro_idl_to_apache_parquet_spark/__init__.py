@@ -16,3 +16,10 @@ hot path.
 """
 
 __version__ = "0.1.0"
+
+# in a Spark Python worker (first engine UDF unpickled), stop PySpark's
+# per-task importlib.invalidate_caches() from re-reading every zip directory
+# on sys.path; a no-op on the driver and on CPython >= 3.13 (see _zipimport)
+from . import _zipimport
+
+_zipimport.install()

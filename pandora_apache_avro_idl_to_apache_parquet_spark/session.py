@@ -4,12 +4,18 @@ Local defaults mirror what a 1000-executor cluster deployment would set:
 AQE on (runtime re-plan + skew-join splitting), Arrow execution on (every
 UDF in this engine is Arrow-vectorized), shuffle partitions sized to cores.
 
-A Python task has a fixed cost: about 0.2 CPU-s before any user code runs
-(4-vCPU Xeon VM, CPython 3.11, PySpark 4.1), nearly all of it PySpark's
-per-task ``importlib.invalidate_caches()``, which re-reads the zip
-directories of the spark-core jar and ``pyspark.zip``. On small inputs that
-cost, not the vectorized kernels, dominates an op's CPU time. So the engine
-cuts the tasks and jobs that buy no parallelism:
+A Python task used to carry a fixed cost of about 0.2 CPU-s before any user
+code ran (4-vCPU Xeon VM, CPython 3.11, PySpark 4.1). Nearly all of it was
+PySpark's per-task ``importlib.invalidate_caches()``: before CPython 3.13,
+every ``zipimporter`` on the worker's path re-reads its whole archive
+directory at once (about a dozen importers into ``pyspark.zip``, two into
+the spark-core jar). On small inputs that cost, not the vectorized kernels,
+dominated an op's CPU time. The engine package now makes that reload lazy
+in each worker, as CPython 3.13 does (``_zipimport``), the first time the
+worker unpickles an engine UDF; so the cost is paid once per worker, for
+its first task, and a reused worker's later tasks pay under 1 ms. A task
+still costs a scheduling round trip and a worker hand-off, so the engine
+also cuts the tasks and jobs that buy no parallelism:
 
 * a scan of more than 32 paths (an Iceberg plan) lists them in at most
   ``cores`` tasks, not one task per path;

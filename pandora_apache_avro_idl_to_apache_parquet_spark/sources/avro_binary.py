@@ -471,9 +471,44 @@ def _varint_tables(block: bytes) -> tuple:
 # --------------------------------------------------------- container files
 
 
+def decompress_block(codec: str, block: bytes) -> bytes:
+    """One container block's serialized records, given the file's
+    ``avro.codec``: ``null``, ``deflate``, ``snappy`` (each block followed
+    by the big-endian CRC32 of its uncompressed bytes, which is checked) or
+    ``zstandard``."""
+    if codec == "null":
+        return block
+    if codec == "deflate":
+        return zlib.decompress(block, -15)
+    if codec not in ("snappy", "zstandard"):
+        raise ValueError(f"unsupported avro codec {codec!r}")
+    import pyarrow as pa
+
+    try:
+        if codec == "zstandard":
+            return pa.input_stream(pa.py_buffer(block),
+                                   compression="zstd").read()
+        raw, crc = block[:-4], block[-4:]
+        # raw snappy opens with its uncompressed length as an unsigned varint
+        n = shift = i = 0
+        while True:
+            b = raw[i]
+            n |= (b & 0x7F) << shift
+            i, shift = i + 1, shift + 7
+            if b < 0x80:
+                break
+        out = pa.Codec("snappy").decompress(raw, decompressed_size=n,
+                                            asbytes=True)
+    except (OSError, IndexError) as e:
+        raise ValueError(f"corrupt {codec} block: {e}") from e
+    if len(crc) != 4 or zlib.crc32(out) != int.from_bytes(crc, "big"):
+        raise ValueError("snappy block CRC32 mismatch (corrupt container)")
+    return out
+
+
 def read_avro_container(data: bytes) -> tuple[dict, list]:
     """One Object Container File → (parsed schema dict, records as plain
-    Python values). Supports ``null`` and ``deflate`` codecs. This is the
+    Python values). Reads every codec :func:`decompress_block` does. This is the
     full-surface ROW decoder (the executable specification);
     `.avro_columnar.decode_container_columnar` is the vectorized path for
     the schema subset it supports, A/B'd record-exact in tests."""
@@ -503,12 +538,7 @@ def read_avro_container(data: bytes) -> tuple[dict, list]:
         buf.seek(-1, 1)
         count = _read_varint(buf)
         size = _read_varint(buf)
-        block = buf.read(size)
-        if codec == "deflate":
-            block = zlib.decompress(block, -15)
-        elif codec != "null":
-            raise ValueError(f"unsupported avro codec {codec!r}")
-        bb = _io.BytesIO(block)
+        bb = _io.BytesIO(decompress_block(codec, buf.read(size)))
         for _ in range(count):
             records.append(rd(bb))
         if buf.read(16) != sync:

@@ -51,13 +51,18 @@ from __future__ import annotations
 
 import io as _io
 import json
-import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
 
-from .avro_binary import MAGIC, _read_bytes, _read_varint, _varint_tables
+from .avro_binary import (
+    MAGIC,
+    _read_bytes,
+    _read_varint,
+    _varint_tables,
+    decompress_block,
+)
 
 _PRIM_PA = {
     "int": pa.int32(),
@@ -779,12 +784,8 @@ def decode_container_columnar(data: bytes, compiled: Compiled | None = None):
             buf.seek(-1, 1)
             count = _read_varint(buf)
             size = _read_varint(buf)
-            block = buf.read(size)
-            if codec == "deflate":
-                block = zlib.decompress(block, -15)
-            elif codec != "null":
-                raise ValueError(f"unsupported avro codec {codec!r}")
-            yield compiled.decode_block(block, count)
+            yield compiled.decode_block(decompress_block(codec, buf.read(size)),
+                                        count)
             if buf.read(16) != sync:
                 raise ValueError("sync marker mismatch (corrupt container)")
 

@@ -44,6 +44,7 @@ from __future__ import annotations
 
 import json
 import posixpath
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -357,16 +358,25 @@ def _iceberg_type(dt: T.DataType) -> object:
 def _iceberg_schema_json(schema: T.StructType) -> dict:
     fields = []
     eid = len(schema.fields) + 1  # element ids after field ids
-    out_fields = []
     for i, f in enumerate(schema.fields, start=1):
         t = _iceberg_type(f.dataType)
         if isinstance(t, dict):  # list: assign the element id
             t = dict(t, **{"element-id": eid, "element-required": True})
             eid += 1
-        out_fields.append({"id": i, "name": f.name,
-                           "required": not f.nullable, "type": t})
-    fields = out_fields
+        fields.append({"id": i, "name": f.name,
+                       "required": not f.nullable, "type": t})
     return {"type": "struct", "schema-id": 0, "fields": fields}
+
+
+def _max_column_id(sch: dict) -> int:
+    """The largest field or list-element id a schema allocates (the
+    ``last-column-id`` it implies)."""
+    ids = [0]
+    for f in sch["fields"]:
+        ids.append(f["id"])
+        if isinstance(f["type"], dict):
+            ids.append(f["type"].get("element-id", 0))
+    return max(ids)
 
 
 def _avro_part_type(dt: T.DataType) -> object:
@@ -749,12 +759,19 @@ def _evolve_schema(meta: dict, schema: T.StructType) -> dict:
     if not added:
         return meta
     # added columns are recorded OPTIONAL regardless of the incoming
-    # frame's nullability: pre-evolution files serve them as null
-    next_id = meta.get("last-column-id", len(cur_by_name))
+    # frame's nullability: pre-evolution files serve them as null. Fresh
+    # ids start above every id any schema allocated (a table written before
+    # last-column-id counted element ids understates it)
+    next_id = max([meta.get("last-column-id", 0)]
+                  + [_max_column_id(sc) for sc in meta["schemas"]])
     fields = list(cur["fields"])
     for f in added:
         next_id += 1
-        fields.append(dict(f, id=next_id, required=False))
+        f = dict(f, id=next_id, required=False)
+        if isinstance(f["type"], dict):  # list: a fresh element id too
+            next_id += 1
+            f["type"] = dict(f["type"], **{"element-id": next_id})
+        fields.append(f)
     meta = dict(meta)
     new_schema = {"type": "struct", "schema-id": len(meta["schemas"]),
                   "fields": fields}
@@ -771,8 +788,8 @@ def _commit_snapshot(io: FsIO, table_dir: str, schema: T.StructType,
     """Append one snapshot: write the new manifest, a manifest-list that
     carries every prior snapshot's manifests plus the new one, and the next
     ``vN.metadata.json`` + ``version-hint.text``. Timestamps derive from the
-    version counter (deterministic — reproducible metadata for identical
-    inputs, and nothing here needs wall-clock)."""
+    version counter (nothing here needs wall-clock); manifest file names
+    carry a per-attempt uuid."""
     meta_dir = io.join("metadata")
     io.makedirs(meta_dir)
     try:
@@ -814,10 +831,15 @@ def _commit_snapshot(io: FsIO, table_dir: str, schema: T.StructType,
         part_fields = [(t.field, at)]
     mf_schema, me_schema = _manifest_schemas(part_fields)
 
-    man_name = f"m{seq}-{manifest_content}.avro"
+    # manifest and manifest-list names are unique per commit ATTEMPT (as in
+    # Iceberg): both are written before the version claim below, so a name
+    # derived from the sequence number alone would let a losing racer
+    # overwrite the winner's already-committed files with its own
+    attempt = uuid.uuid4().hex
+    man_name = f"{attempt}-m{seq}-{manifest_content}.avro"
     man_path = posixpath.join(meta_dir, man_name)
     man_bytes = write_avro_container(None, me_schema, new_entries)
-    io.publish_bytes(man_path, man_bytes, attempt_tag=f"man{seq}")
+    io.publish_bytes(man_path, man_bytes, attempt_tag=attempt)
 
     rows = sum(e["data_file"]["record_count"] for e in new_entries)
     new_manifest = {
@@ -834,10 +856,10 @@ def _commit_snapshot(io: FsIO, table_dir: str, schema: T.StructType,
         {k: m[k] for k in (f["name"] for f in mf_schema["fields"])}
         for m in (prev_manifests if carry_prev else [])
     ] + [new_manifest]
-    ml_name = f"snap-{snap_id}.avro"
+    ml_name = f"snap-{snap_id}-{attempt}.avro"
     ml_path = posixpath.join(meta_dir, ml_name)
     io.publish_bytes(ml_path, write_avro_container(None, mf_schema, manifests),
-                     attempt_tag=f"ml{seq}")
+                     attempt_tag=attempt)
 
     snapshot = {
         "snapshot-id": snap_id, "sequence-number": seq,
@@ -850,13 +872,14 @@ def _commit_snapshot(io: FsIO, table_dir: str, schema: T.StructType,
         import hashlib
         h = hashlib.md5(table_dir.encode()).hexdigest()
         table_uuid = f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
+        sch = _iceberg_schema_json(schema)
         meta = {
             "format-version": 2, "table-uuid": table_uuid,
             "location": table_dir, "last-sequence-number": seq,
             "last-updated-ms": ts,
-            "last-column-id": len(schema.fields),
+            "last-column-id": _max_column_id(sch),
             "current-schema-id": 0,
-            "schemas": [_iceberg_schema_json(schema)],
+            "schemas": [sch],
             "default-spec-id": 0,
             "partition-specs": [{
                 "spec-id": 0,

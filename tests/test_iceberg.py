@@ -906,3 +906,54 @@ def test_explicit_zero_sequence_number_meets_equality_delete(spark, tmp_path):
         _data_seq(existing, {"sequence_number": 3})
     assert _data_seq(existing, {}) == 0
     assert _data_seq(dict(existing, status=1), {"sequence_number": 3}) == 3
+
+
+def _column_ids(sch):
+    """Every field and list-element id a schema entry allocates."""
+    ids = []
+    for f in sch["fields"]:
+        ids.append(f["id"])
+        if isinstance(f["type"], dict):
+            ids.append(f["type"]["element-id"])
+    return ids
+
+
+@pytest.mark.parametrize("table", ["new", "understated"])
+def test_evolved_column_ids_collide_with_no_element_id(spark, tmp_path, table):
+    """New-table metadata records the largest id its schema allocates, list
+    element ids included, and columns added by evolution (a list column
+    with its element too) take ids no existing field or element holds —
+    also on a table whose ``last-column-id`` counted only top-level fields,
+    as earlier writers recorded it."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        _schema_by_id,
+        _write_next_metadata,
+    )
+
+    d = str(tmp_path / "t")
+    toks = spark.range(20).select(
+        F.col("id").alias("doc_id"),
+        F.array(F.lit(1), F.lit(2)).alias("tokens"),
+        F.lit("s").alias("source"),
+    )
+    write_iceberg(toks, d)
+    meta = current_metadata(d)
+    old_ids = _column_ids(_schema_by_id(meta))
+    assert sorted(old_ids) == [1, 2, 3, 4]
+    assert meta["last-column-id"] == 4
+    if table == "understated":
+        _write_next_metadata(FsIO.resolve(d), dict(meta, **{"last-column-id": 3}),
+                             "test")
+
+    append_iceberg(toks.withColumn("extra", F.lit(7).cast("long"))
+                   .withColumn("more", F.array(F.lit(3))), d)
+    meta = current_metadata(d)
+    sch = _schema_by_id(meta)
+    ids = _column_ids(sch)
+    assert len(ids) == len(set(ids)) == 7
+    assert {f["name"]: f["id"] for f in sch["fields"]}["doc_id"] == 1
+    assert set(old_ids) < set(ids)
+    assert meta["last-column-id"] == max(ids) == 7
+    got = read_iceberg(spark, d)
+    assert got.count() == 40
+    assert got.filter(F.col("more").isNull()).count() == 20
