@@ -642,18 +642,6 @@ def bytes_to_blob(arr) -> tuple[np.ndarray, bytes]:
     return lengths, blob
 
 
-def blob_to_binary(lengths: np.ndarray, blob: bytes):
-    """(lengths, blob) -> pyarrow BinaryArray (inverse of bytes_to_blob)."""
-    import pyarrow as pa
-
-    offs = np.zeros(len(lengths) + 1, dtype=np.int32)
-    np.cumsum(lengths, out=offs[1:])
-    return pa.Array.from_buffers(
-        pa.binary(), len(lengths),
-        [None, pa.py_buffer(offs.tobytes()), pa.py_buffer(blob)],
-    )
-
-
 def _enc_str_plain(lengths: np.ndarray, blob: bytes) -> bytes:
     lb = encode_int32(lengths, FOR)
     return struct.pack("<Q", len(lb)) + lb + blob

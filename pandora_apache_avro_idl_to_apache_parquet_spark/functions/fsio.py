@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import os
 import posixpath
+import uuid
 
 import pyarrow.fs as pafs
 
@@ -161,17 +162,31 @@ class FsIO:
         """Create ``path`` iff absent; False if it already exists.
 
         The commit log's optimistic lock (the reference's
-        upload-with-overwrite=false). Local: kernel-atomic ``O_EXCL``.
-        Elsewhere: check-then-write (per-store conditional-PUT semantics are a
-        deployment concern; the caller's re-read-and-retry loop keeps the
-        exactly-once invariant either way)."""
+        upload-with-overwrite=false). Local: the bytes go to a hidden
+        temporary file first, then ``os.link`` publishes it under ``path`` —
+        kernel-atomic and exclusive, and a concurrent reader never sees the
+        entry before its content (an ``O_EXCL`` create followed by a write
+        shows an empty or partial entry in between, and a committer that
+        replays that misses the winner's adds). So a local store needs a
+        filesystem with hard links. The temporary file is removed on every
+        path out, a failed write included. Elsewhere: check-then-write
+        (per-store conditional-PUT semantics are a deployment concern; the
+        caller's re-read-and-retry loop keeps the exactly-once invariant
+        either way)."""
         if self.local_excl:
+            d, name = posixpath.split(path)
+            tmp = posixpath.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
             try:
-                fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                with open(tmp, "wb") as fh:
+                    fh.write(data)
+                os.link(tmp, path)
             except FileExistsError:
                 return False
-            with os.fdopen(fd, "wb") as fh:
-                fh.write(data)
+            finally:
+                try:
+                    os.unlink(tmp)
+                except FileNotFoundError:
+                    pass
             return True
         if self.exists(path):
             return False

@@ -37,6 +37,7 @@ from __future__ import annotations
 import json
 import posixpath
 import uuid
+from dataclasses import dataclass, field
 from datetime import date
 
 import numpy as np
@@ -229,6 +230,13 @@ def _encode_partition_arrow(table: pa.Table, io: FsIO, chunk_rows: int,
     return out.drop_columns([f"{c}_payload" for c in CHUNK_COLUMNS])
 
 
+def part_id_frame(spark: SparkSession, parts: list[int]) -> DataFrame:
+    """The completed part ids of a resumed encode as a one-column local
+    frame, built from Arrow (see :func:`empty_frame`)."""
+    return spark.createDataFrame(
+        pa.table({"part_id": pa.array(parts, pa.int32())}), "part_id int")
+
+
 def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
     """Salted partition key: hashes (source, doc_id) so skewed sources spread."""
     return df.withColumn(
@@ -257,8 +265,8 @@ def encode_tokens(df: DataFrame, out_dir: str, n_parts: int = 64,
 
     done = completed_parts(out_dir, io)
     if done:
-        done_df = spark.createDataFrame([(p,) for p in done], "part_id int")
-        keyed = keyed.join(F.broadcast(done_df), "part_id", "left_anti")
+        keyed = keyed.join(F.broadcast(part_id_frame(spark, done)),
+                           "part_id", "left_anti")
 
     manifest_struct = StructType([f for f in CHUNK_SCHEMA.fields if not f.name.endswith("_payload")])
 
@@ -425,25 +433,22 @@ def write_commit_log(out_dir: str, pds: date, io: FsIO | None = None,
         for f in new_files:
             path = posixpath.join(data_dir, f)
             info = markers[f]
-            lines.append(
-                json.dumps(
-                    {
-                        "add": {
-                            "path": f,
-                            "size": info["file_size"],
-                            "sha256": info["file_sha256"],
-                            # date-partitioned encodes record each file's own
-                            # partition date in its marker; legacy markers
-                            # fall back to the run-level pds
-                            "partitionValues": {
-                                "pds": info.get("pds", pds.isoformat())
-                            },
-                            "dataChange": True,
-                            "modificationTime": io.mtime_ms(path),
-                        }
-                    }
-                )
-            )
+            add = {
+                "path": f,
+                "size": info["file_size"],
+                "sha256": info["file_sha256"],
+                # date-partitioned encodes record each file's own partition
+                # date in its marker; legacy markers fall back to the
+                # run-level pds
+                "partitionValues": {"pds": info.get("pds", pds.isoformat())},
+                "dataChange": True,
+                "modificationTime": io.mtime_ms(path),
+            }
+            if "stats" in info:
+                # table-store markers carry exact per-file stats, so
+                # readers plan from the log (token-store markers have none)
+                add["stats"] = info["stats"]
+            lines.append(json.dumps({"add": add}))
         return "\n".join(lines) + "\n"
 
     referenced, indices = _scan_log()
@@ -513,36 +518,12 @@ def checkpoint_log(out_dir: str, io: FsIO | None = None,
     if not versions:
         raise ValueError("no commit log to checkpoint")
     v = versions[-1]
-    adds: dict[str, dict] = {}
-    removes: dict[str, dict] = {}  # tombstones: 'referenced, never re-add'
-    meta: dict | None = None
-    txns: dict[str, dict] = {}
-    dvs: list[dict] = []  # deletion-vector actions, "v"-stamped
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json") or int(f[:-5]) > v:
-            continue
-        idx = int(f[:-5])
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "add" in entry:
-                adds[entry["add"]["path"]] = entry
-                removes.pop(entry["add"]["path"], None)
-            if "remove" in entry:
-                removes[entry["remove"]["path"]] = entry
-                adds.pop(entry["remove"]["path"], None)
-            if "metaData" in entry:
-                meta = entry
-            if "txn" in entry:
-                txns[entry["txn"]["appId"]] = entry
-            if "dv" in entry:
-                dvs.append(dict(entry["dv"], v=entry["dv"].get("v", idx)))
-            if "dvRestore" in entry:
-                dvs = [dict(a) for a in entry["dvRestore"]["keep"]]
-    lines = (([meta] if meta else [])
-             + [txns[a] for a in sorted(txns)]
-             + [adds[p] for p in sorted(adds)]
-             + [removes[p] for p in sorted(removes)]
-             + [{"dv": a} for a in dvs])
+    snap = log_snapshot(out_dir, io, as_of=v)
+    lines = (([{"metaData": snap.meta}] if snap.meta else [])
+             + [{"txn": snap.txns[a]} for a in sorted(snap.txns)]
+             + [{"add": snap.adds[p]} for p in sorted(snap.adds)]
+             + [{"remove": snap.removes[p]} for p in sorted(snap.removes)]
+             + [{"dv": a} for a in snap.dvs])
     buf = pa.BufferOutputStream()
     pq.write_table(
         pa.table({"line": pa.array([json.dumps(e) for e in lines], pa.string())}),
@@ -582,12 +563,48 @@ def read_log_checkpoint(out_dir: str, io: FsIO | None = None
     return int(d["version"]), [json.loads(s) for s in tbl.column("line").to_pylist()]
 
 
-def committed_files(out_dir: str, io: FsIO | None = None,
-                    as_of: int | None = None) -> list[str] | None:
-    """Live data-file basenames per the commit log (adds minus removes), or
-    None when no log exists (pre-commit state: directory listing governs).
-    This is what makes readers log-gated: half-published crash leftovers and
-    compacted-away files are invisible.
+@dataclass
+class LogSnapshot:
+    """The table state one replay of the commit log yields: the live
+    ``add`` action per data file (with its ``stats`` when the writer
+    recorded them), the live deletion-vector actions in commit order
+    (``"v"``-stamped), the remove tombstones, the latest ``metaData`` and
+    the latest ``txn`` per appId."""
+
+    adds: dict[str, dict] = field(default_factory=dict)
+    dvs: list[dict] = field(default_factory=list)
+    removes: dict[str, dict] = field(default_factory=dict)
+    meta: dict | None = None
+    txns: dict[str, dict] = field(default_factory=dict)
+
+    @property
+    def files(self) -> list[str]:
+        return sorted(self.adds)
+
+    def apply(self, entry: dict, idx: int) -> None:
+        if "add" in entry:
+            self.adds[entry["add"]["path"]] = entry["add"]
+            self.removes.pop(entry["add"]["path"], None)
+        if "remove" in entry:
+            self.removes[entry["remove"]["path"]] = entry["remove"]
+            self.adds.pop(entry["remove"]["path"], None)
+        if "metaData" in entry:
+            self.meta = entry["metaData"]
+        if "txn" in entry:
+            self.txns[entry["txn"]["appId"]] = entry["txn"]
+        if "dv" in entry:
+            self.dvs.append(dict(entry["dv"], v=entry["dv"].get("v", idx)))
+        if "dvRestore" in entry:
+            # REPLACES the DV state (see committed_dv_actions)
+            self.dvs = [dict(a) for a in entry["dvRestore"]["keep"]]
+
+
+def log_snapshot(out_dir: str, io: FsIO | None = None,
+                 as_of: int | None = None) -> LogSnapshot | None:
+    """Replay the commit log once, or None when no log exists (pre-commit
+    state: directory listing governs). Every reader plans from this one
+    replay: :func:`committed_files` and :func:`committed_dv_actions` are
+    views of it.
 
     ``as_of`` replays only log files with index <= ``as_of`` — time travel:
     the table exactly as some earlier commit left it (files removed *later*,
@@ -605,12 +622,13 @@ def committed_files(out_dir: str, io: FsIO | None = None,
     log_dir = io.join("_log")
     if not io.isdir(log_dir):
         return None
-    live: set[str] = set()
+    snap = LogSnapshot()
     start_after = -1
     ckpt = read_log_checkpoint(out_dir, io)
     if ckpt is not None and (as_of is None or as_of >= ckpt[0]):
         start_after = ckpt[0]
-        live = {e["add"]["path"] for e in ckpt[1] if "add" in e}
+        for entry in ckpt[1]:
+            snap.apply(entry, ckpt[0])
     elif ckpt is not None and as_of is not None and as_of < ckpt[0]:
         # pre-checkpoint time travel replays raw json; if checkpoint_log ran
         # with clean=True those files are gone — fail loudly, never return a
@@ -631,12 +649,18 @@ def committed_files(out_dir: str, io: FsIO | None = None,
         if as_of is not None and idx > as_of:
             break
         for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "add" in entry:
-                live.add(entry["add"]["path"])
-            if "remove" in entry:
-                live.discard(entry["remove"]["path"])
-    return sorted(live)
+            snap.apply(json.loads(line), idx)
+    return snap
+
+
+def committed_files(out_dir: str, io: FsIO | None = None,
+                    as_of: int | None = None) -> list[str] | None:
+    """Live data-file basenames per the commit log (adds minus removes) at
+    ``as_of``, or None when no log exists (see :func:`log_snapshot`). This
+    is what makes readers log-gated: half-published crash leftovers and
+    compacted-away files are invisible."""
+    snap = log_snapshot(out_dir, io, as_of)
+    return None if snap is None else snap.files
 
 
 def committed_dv_actions(out_dir: str, io: FsIO | None = None,
@@ -661,31 +685,8 @@ def committed_dv_actions(out_dir: str, io: FsIO | None = None,
     actions a sequential replay had already dropped. Each action carries
     ``"v"`` (its original commit index) so identity survives checkpoints,
     where the source file index is gone."""
-    io = _io(out_dir, io)
-    log_dir = io.join("_log")
-    if not io.isdir(log_dir):
-        return []
-    kept: list[dict] = []  # actions with resolved "v"
-    start_after = -1
-    ckpt = read_log_checkpoint(out_dir, io)
-    if ckpt is not None and (as_of is None or as_of >= ckpt[0]):
-        start_after = ckpt[0]
-        kept = [dict(e["dv"]) for e in ckpt[1] if "dv" in e]
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json"):
-            continue
-        idx = int(f[:-5])
-        if idx <= start_after:
-            continue
-        if as_of is not None and idx > as_of:
-            break
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "dv" in entry:
-                kept.append(dict(entry["dv"], v=entry["dv"].get("v", idx)))
-            if "dvRestore" in entry:
-                kept = [dict(a) for a in entry["dvRestore"]["keep"]]
-    return kept
+    snap = log_snapshot(out_dir, io, as_of)
+    return [] if snap is None else snap.dvs
 
 
 def log_versions(out_dir: str, io: FsIO | None = None) -> list[int]:
@@ -770,22 +771,39 @@ def read_chunks(spark: SparkSession, out_dir: str, io: FsIO | None = None) -> Da
     return _read_live_chunks(spark, out_dir, _io(out_dir, io), CHUNK_SCHEMA)
 
 
+def listed_data_files(io: FsIO) -> list[str]:
+    """The data directory listing: the files a reader sees in pre-commit
+    state (no log yet)."""
+    return sorted(f for f in io.listdir(io.join("data")) if f.endswith(".parquet"))
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """An empty frame of ``schema`` built on the driver from Arrow: a local
+    relation, so ``collect`` starts no job and an aggregate over it one
+    (a frame from a Python list is a parallelized RDD, and costs more)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
+
+
 def _read_live_chunks(spark: SparkSession, out_dir: str, io: FsIO,
-                      schema: StructType, as_of: int | None = None) -> DataFrame:
+                      schema: StructType, as_of: int | None = None,
+                      files: list[str] | None = None) -> DataFrame:
     """Log-gated chunk-file scan: when a commit log exists, exactly the files
     it references as live (at ``as_of``) are read (half-published crash
     leftovers and compacted-away files are invisible); directory listing is
-    the fallback for pre-commit state. The DataFrame read itself goes through
-    Spark's own Hadoop connectors (pass URIs for cluster stores), under the
-    known chunk ``schema`` (nullable on read), so planning starts no
-    footer-inference job."""
-    live = committed_files(out_dir, io, as_of=as_of)
+    the fallback for pre-commit state. ``files`` passes a live set the
+    caller already planned (and possibly pruned). The DataFrame read itself
+    goes through Spark's own Hadoop connectors (pass URIs for cluster
+    stores), under the known chunk ``schema`` (nullable on read), so
+    planning starts no footer-inference job."""
+    live = committed_files(out_dir, io, as_of=as_of) if files is None else files
     if live is None:
-        live = [f for f in io.listdir(io.join("data")) if f.endswith(".parquet")]
-    if not live:
-        # no chunk files (empty input): empty frame with the chunk schema
-        return spark.createDataFrame([], schema)
+        live = listed_data_files(io)
     relaxed = StructType([StructField(f.name, f.dataType, True)
                           for f in schema.fields])
+    if not live:
+        # no chunk files (empty input): empty frame with the chunk schema
+        return empty_frame(spark, relaxed)
     base = out_dir.rstrip("/") + "/data/"
     return spark.read.schema(relaxed).parquet(*[base + f for f in live])

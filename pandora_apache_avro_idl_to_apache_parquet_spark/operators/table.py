@@ -50,11 +50,13 @@ from __future__ import annotations
 
 import base64
 import json
+import math
 import posixpath
 import uuid
 import zlib
 from dataclasses import dataclass, field
-from datetime import date
+from datetime import date, datetime, timedelta, timezone
+from decimal import Decimal
 
 import numpy as np
 import pyarrow as pa
@@ -66,7 +68,8 @@ from ..functions import codecs as C
 from ..functions.fsio import FsIO
 from ..functions.hashing import klondike, sha256
 from ..plans.cost import select_int_codec, select_str_codec, select_typed_codec
-from .encode import _io, write_commit_log
+from .encode import (_io, listed_data_files, log_snapshot, part_id_frame,
+                     write_commit_log)
 
 DEFAULT_CHUNK_ROWS = 65536
 
@@ -1250,6 +1253,244 @@ def _decode_column(valid_payload: bytes | None, payload: bytes, logical: str,
     return arr if arr.type == target else arr.cast(target)
 
 
+# ------------------------------------------------------- per-file log stats
+# Every table-store ``add`` action carries exact per-file statistics, as
+# Delta's add action does (``DeltaLake.fs:176-444``): ``numRecords``, per
+# column ``nullCount``, ``minValues`` and ``maxValues``, plus the file's
+# ``chunkIds`` (so a deletion vector on a chunk that is no longer live is
+# not subtracted). They are folds of the chunk zone maps in Spark's value
+# order, so the driver answers ``table_stats`` (and the DataSource prunes
+# whole files) with exactly what a Spark aggregate over the chunk stat
+# columns would give.
+# A column absent from ``nullCount`` is null in every row of the file (the
+# file predates it); one absent from ``minValues`` has no ordered value.
+
+_EPOCH = datetime(1970, 1, 1)
+_EPOCH_UTC = _EPOCH.replace(tzinfo=timezone.utc)
+_MICRO = timedelta(microseconds=1)
+
+
+def _stat_to_json(v):
+    """One JSON value per logical type, exact and never truncated: floats
+    keep NaN/±inf as strings, binary is base64, timestamps are epoch
+    microseconds, decimals their exact string."""
+    if isinstance(v, float):
+        return v if math.isfinite(v) else str(v)
+    if isinstance(v, bytes):
+        return base64.b64encode(v).decode("ascii")
+    if isinstance(v, datetime):
+        return (v - (_EPOCH_UTC if v.tzinfo else _EPOCH)) // _MICRO
+    if isinstance(v, date):
+        return v.isoformat()
+    if isinstance(v, Decimal):
+        return str(v)
+    return v
+
+
+def _stat_from_json(j, logical: str):
+    if logical in ("float", "double"):
+        return float(j)
+    if logical == "binary":
+        return base64.b64decode(j)
+    if logical == "date":
+        return date.fromisoformat(j)
+    if logical == "timestamp":
+        return _EPOCH_UTC + j * _MICRO
+    if logical == "timestamp_ntz":
+        return _EPOCH + j * _MICRO
+    if logical.startswith("decimal"):
+        return Decimal(j)
+    return j
+
+
+def _order_key(v):
+    # Spark orders NaN above every other float
+    return (1, 0.0) if isinstance(v, float) and v != v else (0, v)
+
+
+def _fold_extreme(acc: dict, col: str, v, pick) -> None:
+    if v is not None:
+        cur = acc.get(col)
+        acc[col] = v if cur is None else pick(cur, v, key=_order_key)
+
+
+@dataclass
+class _FileStats:
+    """Decoded per-file stats (see the section comment)."""
+
+    n_rows: int = 0
+    nulls: dict = field(default_factory=dict)
+    mins: dict = field(default_factory=dict)
+    maxs: dict = field(default_factory=dict)
+    chunk_ids: list = field(default_factory=list)
+
+    def null_count(self, col: str) -> int:
+        return self.nulls.get(col, self.n_rows)
+
+    @classmethod
+    def of_chunks(cls, rows: list[dict], names: list[str]) -> "_FileStats":
+        """Fold chunk rows (``n_rows``, ``chunk_id``, ``<c>__nulls``,
+        ``<c>__min``, ``<c>__max``) of one file; a null ``__nulls`` cell (a
+        column promoted into a compacted file) counts every row null."""
+        out = cls()
+        for r in rows:
+            n = r["n_rows"]
+            out.n_rows += n
+            out.chunk_ids.append(r["chunk_id"])
+            for c in names:
+                nl = r.get(f"{c}__nulls")
+                out.nulls[c] = out.nulls.get(c, 0) + (n if nl is None else nl)
+                _fold_extreme(out.mins, c, r.get(f"{c}__min"), min)
+                _fold_extreme(out.maxs, c, r.get(f"{c}__max"), max)
+        return out
+
+    @classmethod
+    def merge(cls, parts: list["_FileStats"]) -> "_FileStats":
+        out = cls(n_rows=sum(p.n_rows for p in parts),
+                  chunk_ids=[c for p in parts for c in p.chunk_ids])
+        for c in {c for p in parts for c in p.nulls}:
+            out.nulls[c] = sum(p.null_count(c) for p in parts)
+        for p in parts:
+            for c, v in p.mins.items():
+                _fold_extreme(out.mins, c, v, min)
+            for c, v in p.maxs.items():
+                _fold_extreme(out.maxs, c, v, max)
+        return out
+
+    def to_json(self) -> dict:
+        return {"numRecords": self.n_rows, "nullCount": self.nulls,
+                "minValues": {c: _stat_to_json(v) for c, v in self.mins.items()},
+                "maxValues": {c: _stat_to_json(v) for c, v in self.maxs.items()},
+                "chunkIds": self.chunk_ids}
+
+    @classmethod
+    def from_json(cls, d: dict, logicals: dict) -> "_FileStats":
+        return cls(
+            n_rows=d["numRecords"], nulls=dict(d["nullCount"]),
+            mins={c: _stat_from_json(v, logicals[c])
+                  for c, v in d["minValues"].items() if c in logicals},
+            maxs={c: _stat_from_json(v, logicals[c])
+                  for c, v in d["maxValues"].items() if c in logicals},
+            chunk_ids=list(d["chunkIds"]))
+
+
+def _read_file_stats(io: FsIO, fname: str, spec: TableSpec) -> _FileStats:
+    """Stats of a file whose log ``add`` has none (written before the log
+    carried them): fold its chunk stat columns, read with pyarrow (meta
+    columns only, no payload byte)."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(io.open_input_file(io.join("data/" + fname)))
+    present = set(pf.schema_arrow.names)
+    names = [f.name for f in spec.schema.fields if f"{f.name}__nulls" in present]
+    cols = ["n_rows", "chunk_id"] + [
+        f"{c}__{k}" for c in names for k in ("nulls", "min", "max")]
+    return _FileStats.of_chunks(pf.read(columns=cols).to_pylist(), names)
+
+
+def _live_file_stats(io: FsIO, spec: TableSpec, snap,
+                     files: list[str]) -> dict[str, _FileStats]:
+    adds = snap.adds if snap is not None else {}
+    logicals = spec.logicals
+    return {
+        f: (_FileStats.from_json(adds[f]["stats"], logicals)
+            if "stats" in adds.get(f, {}) else _read_file_stats(io, f, spec))
+        for f in files
+    }
+
+
+# Pruning conjuncts are structured ``(op, column, literal)`` triples — op in
+# lt/le/gt/ge/eq/in/isnull/notnull, each the test a ROW must pass, as the
+# DataSource's pushed filters give them — never a Column: a chunk-meta
+# predicate such as ``key_min > 5`` is not monotone under a file's
+# min-of-chunk-mins, so evaluating arbitrary ``chunk_filter`` Columns on
+# file stats would drop matching files.
+
+
+def _comparable(stat, lit):
+    """(stat, lit) as Spark would compare them, or TypeError when the pair
+    is not provably compared the same way in Python and in Spark."""
+    if isinstance(stat, bool) or isinstance(lit, bool):
+        if isinstance(stat, bool) and isinstance(lit, bool):
+            return stat, lit
+        raise TypeError
+    num = (int, float, Decimal)
+    if isinstance(stat, num) and isinstance(lit, num):
+        if isinstance(stat, float) or isinstance(lit, float):
+            # Spark widens to double; a NaN literal never prunes
+            if lit != lit:
+                raise TypeError
+            return float(stat), float(lit)
+        return stat, lit
+    if isinstance(stat, datetime) or isinstance(lit, datetime):
+        # only instants compare alike: a naive literal's zone is the
+        # session's in Spark and unknown here
+        if (isinstance(stat, datetime) and isinstance(lit, datetime)
+                and stat.tzinfo is not None and lit.tzinfo is not None):
+            return stat, lit
+        raise TypeError
+    if type(stat) is type(lit):
+        return stat, lit
+    raise TypeError
+
+
+def _range_may_hold(op: str, lit, lo, hi) -> bool:
+    try:
+        if op == "in":  # the list's own range must overlap the file's
+            if any(v != v for v in lit):
+                return True  # Spark's NaN equals NaN
+            return (_range_may_hold("le", max(lit), lo, hi)
+                    and _range_may_hold("ge", min(lit), lo, hi))
+        if op in ("lt", "le"):
+            a, b = _comparable(lo, lit)
+            return a < b if op == "lt" else a <= b
+        if op in ("gt", "ge"):
+            a, b = _comparable(hi, lit)
+            return a > b if op == "gt" else a >= b
+        if op == "eq":
+            a, b = _comparable(lo, lit)
+            c, d = _comparable(hi, lit)
+            return a <= b and c >= d
+    except TypeError:
+        pass
+    return True
+
+
+def _stats_may_match(fs: _FileStats, conjuncts: list, logicals: dict) -> bool:
+    """False only when some conjunct provably holds for no row of the file."""
+    for op, col, lit in conjuncts:
+        if col not in logicals:
+            continue
+        nulls = fs.null_count(col)
+        if op == "isnull":
+            if nulls == 0:
+                return False
+            continue
+        if nulls >= fs.n_rows:
+            return False  # every row null: no comparison or notnull holds
+        if op == "notnull":
+            continue
+        if logicals[col] in ("float", "double") and op in ("gt", "ge"):
+            continue  # NaN rows pass > and >=; zone maps do not record them
+        lo, hi = fs.mins.get(col), fs.maxs.get(col)
+        if lo is not None and hi is not None and not _range_may_hold(op, lit, lo, hi):
+            return False
+    return True
+
+
+def _plan_files(io: FsIO, spec: TableSpec, snap,
+                prune: list | None = None) -> list[str]:
+    """The live files of ``snap`` (directory listing without a log) that
+    the ``prune`` conjuncts do not rule out. ``decode_table`` and the reads
+    built on it pass none: their chunk filters prune inside the scan."""
+    files = snap.files if snap is not None else listed_data_files(io)
+    if prune and files:
+        stats = _live_file_stats(io, spec, snap, files)
+        files = [f for f in files
+                 if _stats_may_match(stats[f], prune, spec.logicals)]
+    return files
+
+
 # ------------------------------------------------------------- encode driver
 
 
@@ -1382,6 +1623,7 @@ def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
         "file_size": file_size,
         "file_sha256": file_sha,
         "status": "done",
+        "stats": _FileStats.of_chunks(rows, payload_cols).to_json(),
     }
     io.publish_bytes(
         posixpath.join(ckpt_dir, f"part-{run}-{part_id:05d}.json"),
@@ -1475,8 +1717,8 @@ def encode_table(df: DataFrame, out_dir: str, key_cols: list[str],
         keyed = df.withColumn("part_id", salt)
     done = completed_table_parts(out_dir, run, io)
     if done:
-        done_df = spark.createDataFrame([(p,) for p in done], "part_id int")
-        keyed = keyed.join(F.broadcast(done_df), "part_id", "left_anti")
+        keyed = keyed.join(F.broadcast(part_id_frame(spark, done)),
+                           "part_id", "left_anti")
 
     full = chunk_schema_for(spec)
     manifest_struct = T.StructType(
@@ -1572,18 +1814,15 @@ def compact_table(out_dir: str, io: FsIO | None = None,
     """
     import pyarrow.parquet as pq
 
-    from .encode import append_log_entry, committed_files, read_commit_log
+    from .encode import append_log_entry, committed_files
 
     io = _io(out_dir, io)
     spec = read_table_spec(out_dir, io)
-    live = committed_files(out_dir, io)
-    if live is None:
+    snap = log_snapshot(out_dir, io)
+    if snap is None:
         raise ValueError("compact_table requires a committed table (no _log found)")
-    sizes = {
-        e["add"]["path"]: e["add"]["size"]
-        for e in read_commit_log(out_dir, io)
-        if "add" in e
-    }
+    live = snap.files
+    sizes = {f: snap.adds[f]["size"] for f in live}
     groups: list[list[str]] = []
     cur: list[str] = []
     cur_bytes = 0
@@ -1613,6 +1852,8 @@ def compact_table(out_dir: str, io: FsIO | None = None,
                       "partitionColumns": ["pds"], "format": {"provider": "parquet"}}}
     ]
     new_files = 0
+    stats = _live_file_stats(io, spec, snap,
+                             [f for g in groups if len(g) > 1 for f in g])
     for i, group in enumerate(groups):
         if len(group) <= 1:
             continue  # singleton stays as-is (still live, not removed)
@@ -1636,8 +1877,11 @@ def compact_table(out_dir: str, io: FsIO | None = None,
             ],
         )
         new_files += 1
-        entries.append({"add": {"path": name, "size": size, "sha256": sha,
-                                "dataChange": False}})
+        # chunk rows move verbatim, so the merged file's stats are the
+        # fold of its sources'
+        entries.append({"add": {
+            "path": name, "size": size, "sha256": sha, "dataChange": False,
+            "stats": _FileStats.merge([stats[f] for f in group]).to_json()}})
         entries += [{"remove": {"path": f, "dataChange": False}} for f in group]
     log = append_log_entry(out_dir, entries, io)
     after = len(committed_files(out_dir, io))
@@ -1843,11 +2087,11 @@ def _decode_table_flat(spark: SparkSession, out_dir: str,
     arrow_out = to_arrow_schema(out_struct)
     names = [f.name for f in fields]
 
-    # merge-on-read deletes: DV state at this version, packed per chunk id
-    from .encode import committed_dv_actions
+    # one log replay plans the read: the live files and, for merge-on-read
+    # deletes, the DV state at this version, packed per chunk id
     _riod = _io(out_dir, io)
-    dv_packed = _dv_packed_map(_riod, committed_dv_actions(out_dir, _riod,
-                                                           as_of=as_of))
+    snap = log_snapshot(out_dir, _riod, as_of)
+    dv_packed = _dv_packed_map(_riod, snap.dvs if snap is not None else [])
 
     select_cols = ["n_rows"]
     if dv_packed and "chunk_id" not in meta_cols:
@@ -1891,7 +2135,10 @@ def _decode_table_flat(spark: SparkSession, out_dir: str,
                         arrays = [a.filter(mask) for a in arrays]
                 yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
 
-    chunks = read_table_chunks(spark, out_dir, io, as_of=as_of)
+    from .encode import _read_live_chunks
+
+    chunks = _read_live_chunks(spark, out_dir, _riod, chunk_schema_for(spec),
+                               files=_plan_files(_riod, spec, snap))
     if "__src_file" in meta_cols:
         chunks = chunks.withColumn(
             "__src_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
@@ -2156,30 +2403,32 @@ def table_stats(spark: SparkSession, out_dir: str,
                 columns: list[str] | None = None,
                 io: FsIO | None = None,
                 as_of: int | None = None) -> DataFrame:
-    """Exact per-column statistics WITHOUT reading any payload byte.
+    """Exact per-column statistics WITHOUT reading any data file.
 
-    Total rows, null count, min and max per column, aggregated from the
-    chunk zone maps alone — the same answer a full decode + aggregate gives,
+    Total rows, null count, min and max per column, folded on the driver
+    from the per-file stats in the commit log (themselves folds of the
+    chunk zone maps) — the same answer a full decode + aggregate gives,
     because chunk stats are computed from the actual values at encode time
-    (never truncated the way parquet footer string stats can be). At 100 TB
-    this turns ``SELECT count(*), min(x), max(x)`` into a parquet scan of a
-    few small stat columns over the chunk rows (~1e-5 of the data), one
-    map-side-combined aggregate, zero decode.
+    (never truncated the way parquet footer string stats can be). No Spark
+    job runs: the result is a projection over a local relation. Files whose
+    log ``add`` predates per-file stats fold their chunk stat columns
+    instead, read with pyarrow.
 
-    Schema-evolved chunks predate added columns entirely (their stat cells
-    are null) and count as all-null — ``coalesce(col__nulls, n_rows)``.
-    Output: one row per column ``(column, n_rows, n_nulls, min_value,
-    max_value)`` with min/max stringified (binary hex-encoded), the
-    :func:`read_table_manifest` convention, so the row type is homogeneous
-    across columns.
+    Schema-evolved chunks predate added columns entirely and count as
+    all-null. Output: one row per column ``(column, n_rows, n_nulls,
+    min_value, max_value)`` with min/max stringified by Spark's own cast
+    (binary hex-encoded), the :func:`read_table_manifest` convention, so
+    the row type is homogeneous across columns.
 
     Deletion vectors (:func:`dv_delete_where`): ``n_rows`` stays EXACT — the
-    per-chunk DV cardinalities broadcast-join onto the chunk scan and
-    subtract. ``n_nulls``/``min``/``max`` remain the chunks' physical stats,
-    i.e. valid-but-possibly-loose bounds once rows are soft-deleted (the
-    Delta convention: file stats are physical; a CoW rewrite or compaction
-    of the affected files re-tightens them).
+    DV cardinalities of the live files' chunks (the file stats list their
+    chunk ids) subtract. ``n_nulls``/``min``/``max`` remain the chunks'
+    physical stats, i.e. valid-but-possibly-loose bounds once rows are
+    soft-deleted (the Delta convention: file stats are physical; a CoW
+    rewrite or compaction of the affected files re-tightens them).
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     spec = read_table_spec(out_dir, io)
     fields = [f for f in spec.schema.fields if columns is None or f.name in columns]
     if columns is not None:
@@ -2187,48 +2436,43 @@ def table_stats(spark: SparkSession, out_dir: str,
         if missing:
             raise ValueError(f"columns not in encoded table: {sorted(missing)}")
         fields.sort(key=lambda f: columns.index(f.name))
-    chunks = read_table_chunks(spark, out_dir, io, as_of=as_of)
-    from .encode import committed_dv_actions
-    _riod = _io(out_dir, io)
-    dvm = load_dv_map(_riod, committed_dv_actions(out_dir, _riod, as_of=as_of))
-    rows_expr = F.col("n_rows")
-    if dvm:
-        dv_counts = spark.createDataFrame(
-            [(cid, len(pos)) for cid, pos in dvm.items()],
-            "chunk_id string, __dvk long",
-        )
-        chunks = chunks.join(F.broadcast(dv_counts), "chunk_id", "left")
-        rows_expr = F.col("n_rows") - F.coalesce(F.col("__dvk"), F.lit(0))
-    aggs = [F.sum(rows_expr).alias("__rows")]
-    for f in fields:
-        aggs += [
-            F.sum(F.coalesce(F.col(f"{f.name}__nulls"), F.col("n_rows")))
-            .alias(f"{f.name}__tn"),
-            F.min(f"{f.name}__min").alias(f"{f.name}__mn"),
-            F.max(f"{f.name}__max").alias(f"{f.name}__mx"),
-        ]
+    io = _io(out_dir, io)
+    snap = log_snapshot(out_dir, io, as_of)
+    tot = _FileStats.merge(list(
+        _live_file_stats(io, spec, snap, _plan_files(io, spec, snap)).values()))
+    n_rows = None  # a sum over zero chunks is null
+    if tot.chunk_ids:
+        dvm = load_dv_map(io, snap.dvs if snap is not None else [])
+        n_rows = tot.n_rows - sum(len(dvm[c]) for c in tot.chunk_ids if c in dvm)
+    # one row per column; row i holds column i's typed min/max in its own
+    # pair of cells, so Spark's own cast/hex stringifies them as a plain
+    # projection over a local relation (no job)
+    typed = T.StructType(
+        [T.StructField("column", T.StringType(), False),
+         T.StructField("n_rows", T.LongType(), True),
+         T.StructField("n_nulls", T.LongType(), True)]
+        + [T.StructField(f"{f.name}__{w}", f.dataType, True)
+           for f in fields for w in ("mn", "mx")])
+    data = {"column": [f.name for f in fields],
+            "n_rows": [n_rows] * len(fields),
+            "n_nulls": [tot.null_count(f.name) if tot.chunk_ids else None
+                        for f in fields]}
+    for i, f in enumerate(fields):
+        for w, ext in (("mn", tot.mins), ("mx", tot.maxs)):
+            data[f"{f.name}__{w}"] = [ext.get(f.name) if j == i else None
+                                      for j in range(len(fields))]
+    local = spark.createDataFrame(
+        pa.Table.from_pydict(data, schema=to_arrow_schema(typed)), typed)
 
-    def _s(name: str, which: str):
-        col = F.col(f"{name}__{which}")
-        if spec.logicals[name] == "binary":
-            return F.hex(col).alias(f"{which}_value")
-        return col.cast("string").alias(f"{which}_value")
+    def _s(which: str):
+        cells = [F.hex(F.col(f"{f.name}__{which}"))
+                 if spec.logicals[f.name] == "binary"
+                 else F.col(f"{f.name}__{which}").cast("string")
+                 for f in fields]
+        return F.coalesce(*cells) if cells else F.lit(None).cast("string")
 
-    per_col = [
-        F.struct(
-            F.lit(f.name).alias("column"),
-            F.col("__rows").alias("n_rows"),
-            F.col(f"{f.name}__tn").alias("n_nulls"),
-            _s(f.name, "mn").alias("min_value"),
-            _s(f.name, "mx").alias("max_value"),
-        )
-        for f in fields
-    ]
-    return (
-        chunks.agg(*aggs)
-        .select(F.explode(F.array(*per_col)).alias("s"))
-        .select("s.*")
-    )
+    return local.select("column", "n_rows", "n_nulls",
+                        _s("mn").alias("min_value"), _s("mx").alias("max_value"))
 
 
 # ------------------------------------------- row-level DELETE / MERGE (CoW)
@@ -2288,6 +2532,7 @@ def _rewrite_job(survivors: DataFrame, io: FsIO, spec: TableSpec,
                     "partitionValues": {"pds": st.get("pds",
                                                       pds.isoformat())},
                     "dataChange": True,
+                    "stats": st["stats"],
                 }})
     return adds
 
@@ -3313,20 +3558,16 @@ def restore_table(out_dir: str, version: int, io: FsIO | None = None) -> dict:
     history is preserved (``as_of`` reads of intermediate versions still
     work, and the restore itself is a new version that can be restored
     away). Raises if any needed file has already been vacuumed."""
-    from .encode import (append_log_entry, committed_dv_actions,
-                         committed_files, read_commit_log)
+    from .encode import append_log_entry
 
     io = _io(out_dir, io)
-    cur = committed_files(out_dir, io)
-    old = committed_files(out_dir, io, as_of=version)
-    dv_target = committed_dv_actions(out_dir, io, as_of=version)
-    dv_changed = committed_dv_actions(out_dir, io) != dv_target
-    if cur is None or old is None:
+    cur_snap = log_snapshot(out_dir, io)
+    old_snap = log_snapshot(out_dir, io, as_of=version)
+    if cur_snap is None or old_snap is None:
         raise ValueError("restore_table requires a committed table (no _log found)")
-    add_records = {
-        e["add"]["path"]: e["add"] for e in read_commit_log(out_dir, io)
-        if "add" in e
-    }
+    cur, old = cur_snap.files, old_snap.files
+    dv_target = old_snap.dvs
+    dv_changed = cur_snap.dvs != dv_target
     re_add = sorted(set(old) - set(cur))
     remove = sorted(set(cur) - set(old))
     data_dir = io.join("data")
@@ -3351,7 +3592,7 @@ def restore_table(out_dir: str, version: int, io: FsIO | None = None) -> dict:
     log = append_log_entry(
         out_dir,
         [_meta_entry(spec)]
-        + [{"add": dict(add_records[f], dataChange=True)} for f in re_add]
+        + [{"add": dict(old_snap.adds[f], dataChange=True)} for f in re_add]
         + [{"remove": {"path": f, "dataChange": True}} for f in remove]
         + ([{"dvRestore": {"asOf": version, "keep": dv_target}}]
            if dv_changed else []),
@@ -3372,19 +3613,16 @@ def clone_table(src_dir: str, dst_dir: str, as_of: int | None = None,
     never touch the other. File bytes stream through FsIO (works across
     filesystems); sizes/hashes are carried from the source's add records —
     commit never re-reads what it just wrote."""
-    from .encode import append_log_entry, committed_files, read_commit_log
+    from .encode import append_log_entry
 
     src_io = _io(src_dir, src_io)
     dst_io = _io(dst_dir, dst_io)
-    live = committed_files(src_dir, src_io, as_of=as_of)
-    if live is None:
+    snap = log_snapshot(src_dir, src_io, as_of=as_of)
+    if snap is None:
         raise ValueError("clone_table requires a committed source (no _log found)")
     if dst_io.isdir(dst_io.join("_log")):
         raise ValueError(f"clone destination {dst_dir!r} already has a table")
-    add_records = {
-        e["add"]["path"]: e["add"] for e in read_commit_log(src_dir, src_io)
-        if "add" in e
-    }
+    live = snap.files
     spec = read_table_spec(src_dir, src_io)
     dst_io.makedirs(dst_io.join("data"))
     tag = uuid.uuid4().hex[:8]
@@ -3396,9 +3634,7 @@ def clone_table(src_dir: str, dst_dir: str, as_of: int | None = None,
         dst_io.publish_bytes(posixpath.join(dst_data, f), data, attempt_tag=tag)
     # deletion-vector state travels with the clone: copy the live dv files
     # and re-commit their actions in the clone's version 0
-    from .encode import committed_dv_actions
-
-    dv_actions = committed_dv_actions(src_dir, src_io, as_of=as_of)
+    dv_actions = snap.dvs
     if dv_actions:
         dst_io.makedirs(dst_io.join("_dv"))
         for a in dv_actions:
@@ -3411,7 +3647,7 @@ def clone_table(src_dir: str, dst_dir: str, as_of: int | None = None,
     log = append_log_entry(
         dst_dir,
         [_meta_entry(spec)]
-        + [{"add": dict(add_records[f], dataChange=True)} for f in live]
+        + [{"add": dict(snap.adds[f], dataChange=True)} for f in live]
         + [{"dv": {"dvFile": a["dvFile"], "cardinality": a["cardinality"]}}
            for a in dv_actions],
         dst_io,

@@ -42,6 +42,7 @@ machinery the reference builds its IDL walker on (``Avro.fs:405-541``).
 
 from __future__ import annotations
 
+import itertools
 import json
 import posixpath
 import uuid
@@ -247,7 +248,9 @@ def read_iceberg(spark: SparkSession, table_dir: str,
     ])
     if not plan["data_files"]:
         # every file pruned: nothing to scan, but the columns still resolve
-        empty = spark.createDataFrame([], expected)
+        from ..operators.encode import empty_frame
+
+        empty = empty_frame(spark, expected)
         return empty.select(*columns) if columns else empty
 
     pos_del_df = None
@@ -350,33 +353,40 @@ def _iceberg_type(dt: T.DataType) -> object:
         return "date"
     if isinstance(dt, T.TimestampType):
         return "timestamptz"
-    if isinstance(dt, T.ArrayType):
-        return {"type": "list", "element": _iceberg_type(dt.elementType)}
     raise ValueError(f"unsupported Iceberg schema type: {dt}")
 
 
+def _iceberg_field_type(dt: T.DataType, ids) -> object:
+    """Iceberg type of ``dt``; every list, at any depth, takes the next id
+    of ``ids`` for its element and records its element nullability."""
+    if isinstance(dt, T.ArrayType):
+        eid = next(ids)
+        return {"type": "list", "element-id": eid,
+                "element-required": not dt.containsNull,
+                "element": _iceberg_field_type(dt.elementType, ids)}
+    return _iceberg_type(dt)
+
+
 def _iceberg_schema_json(schema: T.StructType) -> dict:
-    fields = []
-    eid = len(schema.fields) + 1  # element ids after field ids
-    for i, f in enumerate(schema.fields, start=1):
-        t = _iceberg_type(f.dataType)
-        if isinstance(t, dict):  # list: assign the element id
-            t = dict(t, **{"element-id": eid, "element-required": True})
-            eid += 1
-        fields.append({"id": i, "name": f.name,
-                       "required": not f.nullable, "type": t})
+    ids = itertools.count(len(schema.fields) + 1)  # element ids after field ids
+    fields = [{"id": i, "name": f.name, "required": not f.nullable,
+               "type": _iceberg_field_type(f.dataType, ids)}
+              for i, f in enumerate(schema.fields, start=1)]
     return {"type": "struct", "schema-id": 0, "fields": fields}
+
+
+def _element_ids(t) -> list[int]:
+    """List-element ids of a field type, nested lists included."""
+    if isinstance(t, dict) and t.get("type") == "list":
+        return [t.get("element-id", 0)] + _element_ids(t["element"])
+    return []
 
 
 def _max_column_id(sch: dict) -> int:
     """The largest field or list-element id a schema allocates (the
     ``last-column-id`` it implies)."""
-    ids = [0]
-    for f in sch["fields"]:
-        ids.append(f["id"])
-        if isinstance(f["type"], dict):
-            ids.append(f["type"].get("element-id", 0))
-    return max(ids)
+    return max([0] + [i for f in sch["fields"]
+                      for i in [f["id"]] + _element_ids(f["type"])])
 
 
 def _avro_part_type(dt: T.DataType) -> object:
@@ -562,6 +572,13 @@ def transform_value(t: _Transform, v):
     return (v // t.param) * t.param
 
 
+ENGINE_PROPERTY = "pandora.writer"
+"""Table property this engine stamps into the metadata it creates. Its
+``bucket`` transform hashes with md5 (:func:`transform_value`), so only a
+table carrying ``ENGINE_PROPERTY: ENGINE_NAME`` may be pruned by it."""
+ENGINE_NAME = "pandora-columnar-md5-bucket"
+
+
 def derive_partition_filter(table_dir: str, lo=None, hi=None, eq=None,
                             isin=None, io: FsIO | None = None):
     """HIDDEN partitioning's payoff: the caller constrains the SOURCE
@@ -569,13 +586,21 @@ def derive_partition_filter(table_dir: str, lo=None, hi=None, eq=None,
     engine derives the partition-dict predicate for the table's transform —
     the user never names the partition field. Ranges work for identity /
     day / truncate (order-preserving transforms); ``bucket`` supports
-    equality only (range over a hash is meaningless) and raises otherwise."""
+    equality only (range over a hash is meaningless) and raises otherwise,
+    and prunes only tables whose metadata carries this engine's
+    :data:`ENGINE_PROPERTY` — another engine's buckets use another hash,
+    so on such a table the predicate keeps every file."""
     io = _io(table_dir, io)
     meta = current_metadata(table_dir, io)
     pb = _spec_to_partition_by(meta)
     if pb is None:
         raise ValueError("table is unpartitioned")
     t = _parse_transform(pb)
+    if t.kind == "bucket" and (eq is not None or isin is not None) and (
+            meta.get("properties", {}).get(ENGINE_PROPERTY) != ENGINE_NAME):
+        # another engine computed these buckets (the spec's murmur3, not
+        # this engine's md5): pruning by our hash would drop matching rows
+        return lambda p: True
     if eq is not None:
         tv = transform_value(t, eq)
         return lambda p: p.get(t.field) == tv
@@ -730,8 +755,12 @@ def _type_shape(t) -> object:
     element/field ids are allocation artifacts (they shift when columns are
     added), not type identity."""
     if isinstance(t, dict):
+        # element nullability is not type identity either, just as a
+        # field's ``required`` is not (tables written before it was
+        # recorded say ``element-required: true`` for every list)
         return {k: _type_shape(v) for k, v in t.items()
-                if k not in ("element-id", "field-id", "key-id", "value-id")}
+                if k not in ("element-id", "field-id", "key-id", "value-id",
+                             "element-required")}
     return t
 
 
@@ -764,20 +793,19 @@ def _evolve_schema(meta: dict, schema: T.StructType) -> dict:
     # last-column-id counted element ids understates it)
     next_id = max([meta.get("last-column-id", 0)]
                   + [_max_column_id(sc) for sc in meta["schemas"]])
-    fields = list(cur["fields"])
-    for f in added:
-        next_id += 1
-        f = dict(f, id=next_id, required=False)
-        if isinstance(f["type"], dict):  # list: a fresh element id too
-            next_id += 1
-            f["type"] = dict(f["type"], **{"element-id": next_id})
-        fields.append(f)
+    ids = itertools.count(next_id + 1)
+    dtypes = {f.name: f.dataType for f in schema.fields}
+    # lists take fresh element ids too, at every depth
+    fields = list(cur["fields"]) + [
+        dict(f, id=next(ids), required=False,
+             type=_iceberg_field_type(dtypes[f["name"]], ids))
+        for f in added]
     meta = dict(meta)
     new_schema = {"type": "struct", "schema-id": len(meta["schemas"]),
                   "fields": fields}
     meta["schemas"] = list(meta["schemas"]) + [new_schema]
     meta["current-schema-id"] = new_schema["schema-id"]
-    meta["last-column-id"] = next_id
+    meta["last-column-id"] = max(next_id, _max_column_id(new_schema))
     return meta
 
 
@@ -893,6 +921,8 @@ def _commit_snapshot(io: FsIO, table_dir: str, schema: T.StructType,
             "default-sort-order-id": 0,
             "sort-orders": [{"order-id": 0, "fields": []}],
             "snapshots": [], "snapshot-log": [], "metadata-log": [],
+            # names the writer, so readers know whose bucket hash it used
+            "properties": {ENGINE_PROPERTY: ENGINE_NAME},
         }
     meta = dict(meta)
     meta["last-sequence-number"] = seq
@@ -1400,19 +1430,23 @@ def _snapshot_schema(meta: dict, snap: dict) -> T.StructType:
     return _struct_from_iceberg(sch)
 
 
+_SPARK_OF_ICEBERG = {
+    "long": T.LongType(), "int": T.IntegerType(), "double": T.DoubleType(),
+    "float": T.FloatType(), "string": T.StringType(),
+    "boolean": T.BooleanType(), "binary": T.BinaryType(),
+    "date": T.DateType(), "timestamptz": T.TimestampType(),
+}
+
+
+def _spark_type_from_iceberg(t) -> T.DataType:
+    if isinstance(t, dict) and t.get("type") == "list":
+        return T.ArrayType(_spark_type_from_iceberg(t["element"]),
+                           not t.get("element-required", True))
+    return _SPARK_OF_ICEBERG[t]
+
+
 def _struct_from_iceberg(sch: dict) -> T.StructType:
-    inv = {
-        "long": T.LongType(), "int": T.IntegerType(), "double": T.DoubleType(),
-        "float": T.FloatType(), "string": T.StringType(),
-        "boolean": T.BooleanType(), "binary": T.BinaryType(),
-        "date": T.DateType(), "timestamptz": T.TimestampType(),
-    }
-    fields = []
-    for f in sch["fields"]:
-        t = f["type"]
-        if isinstance(t, dict) and t.get("type") == "list":
-            dt = T.ArrayType(inv[t["element"]], not t.get("element-required", True))
-        else:
-            dt = inv[t]
-        fields.append(T.StructField(f["name"], dt, not f["required"]))
-    return T.StructType(fields)
+    return T.StructType([
+        T.StructField(f["name"], _spark_type_from_iceberg(f["type"]),
+                      not f["required"])
+        for f in sch["fields"]])

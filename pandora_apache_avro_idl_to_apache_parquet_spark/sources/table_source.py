@@ -14,14 +14,14 @@ so the encoded store becomes a first-class Catalyst relation —
 plan, subqueries …) reach :meth:`DataSourceReader.pushFilters`, where they
 become zone-map pruning at two levels:
 
-* **file level (planning, driver)**: each chunk file's parquet FOOTER carries
-  row-group statistics for the tiny ``{col}__min``/``{col}__max``/
-  ``{col}__nulls`` stat columns (payload stats are deliberately not written —
-  ``operators/table.py``); a metadata-only probe drops whole files no
-  conjunct can match, so they never become tasks. This is the same
-  planning-time contract as the reference's Delta reader (file skipping from
-  log/footer stats, ``DeltaLake.fs:176-444``), with the commit log supplying
-  the live file set (orphans and compacted-away files are invisible).
+* **file level (planning, driver)**: each live file's commit-log ``add``
+  carries exact per-file stats (row count, per column null count, min and
+  max); the store's driver-side file pruner (``operators/table.py``
+  ``_plan_files``) drops whole files no conjunct can match, so they never
+  become tasks. This is the planning-time contract of the reference's Delta
+  reader (file skipping from log stats, ``DeltaLake.fs:176-444``), with the
+  same log replay supplying the live file set (orphans and compacted-away
+  files are invisible).
 * **chunk level (executors)**: the surviving files are read with a pyarrow
   filter over the chunk META rows (``col__min``/``col__max``/``col__nulls``),
   so pruned chunks' payload bytes are never materialized; only then do the
@@ -36,7 +36,7 @@ hook, so the projected column set is an explicit read option
 
 Options: ``path`` (load arg), ``columns`` (comma list), ``as_of`` (commit-log
 index, same semantics as :func:`operators.table.decode_table`), ``plan_prune``
-("false" disables the planning-time file probe; chunk-level pruning remains).
+("false" disables the planning-time file pruning; chunk-level pruning remains).
 
 The format is also a **sink** (``df.write.format("pandora_table")`` — map-only
 per-task encode, one atomic commit-log entry per save, append/overwrite modes;
@@ -252,16 +252,6 @@ class PandoraTableReader(DataSourceReader):
         self._as_of = as_of
         self._plan_prune = plan_prune
         self._zone: list = []
-        # merge-on-read deletes: live DV file names at this version; the
-        # executors load `_dv/` payloads themselves (bounded sidecars), so
-        # only the NAMES ride the plan
-        from ..operators.encode import committed_dv_actions
-        from ..operators.table import _io
-
-        self._dv_files = [
-            a["dvFile"]
-            for a in committed_dv_actions(path, _io(path, None), as_of=as_of)
-        ]
 
     # -- planning (driver) --------------------------------------------------
 
@@ -274,98 +264,30 @@ class PandoraTableReader(DataSourceReader):
         # the exact predicate to every decoded row
         return iter(filters)
 
-    def _live_files(self) -> list[str]:
-        from ..operators.encode import committed_files
-        from ..operators.table import _io
-
-        io = _io(self._path, None)
-        live = committed_files(self._path, io, as_of=self._as_of)
-        if live is None:
-            d = io.join("data")
-            live = sorted(f for f in io.listdir(d) if f.endswith(".parquet"))
-        return live
-
     def partitions(self) -> list[InputPartition]:
-        files = self._live_files()
-        if self._plan_prune and self._zone:
-            files = [f for f in files if self._file_may_match(f)]
-        return [InputPartition(f) for f in files]
-
-    def _file_may_match(self, fname: str) -> bool:
-        """Metadata-only probe: footer row-group stats of the stat columns.
-        True unless some conjunct proves NO chunk in the file can match."""
-        import pyarrow.parquet as pq
-
-        from ..operators.table import _io
+        """One log replay plans the read: the live files the pushed
+        conjuncts do not rule out, each partition carrying the live DV file
+        names at this version (executors load the bounded `_dv/` sidecars
+        themselves, so only the NAMES ride the plan)."""
+        from ..operators.encode import log_snapshot
+        from ..operators.table import TableSpec, _io, _plan_files
 
         io = _io(self._path, None)
-        try:
-            md = pq.ParquetFile(
-                io.open_input_file(io.join("data/" + fname))
-            ).metadata
-        except Exception:
-            return True  # unreadable footer -> let the scan decide
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-
-        def col_range(col: str):
-            """(min, max) over row groups of a stat column, or None when any
-            row group lacks stats (disabled or all-null page)."""
-            if col not in idx:
-                return "absent"
-            lo = hi = None
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(idx[col]).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            return (lo, hi)
-
-        for op, c, v in self._zone:
-            if op in _COMPARE_OPS:
-                rng_min = col_range(f"{c}__min")
-                rng_max = col_range(f"{c}__max")
-                if rng_min == "absent" or rng_max == "absent":
-                    return False  # column predates file: all-null, no match
-                if rng_min is None or rng_max is None:
-                    continue
-                try:
-                    if op == "lt" and not rng_min[0] < v:
-                        return False
-                    if op == "le" and not rng_min[0] <= v:
-                        return False
-                    if op == "gt" and not rng_max[1] > v:
-                        return False
-                    if op == "ge" and not rng_max[1] >= v:
-                        return False
-                    if op == "eq" and not (rng_min[0] <= v and rng_max[1] >= v):
-                        return False
-                    if op == "in" and not (
-                        rng_min[0] <= max(v) and rng_max[1] >= min(v)
-                    ):
-                        return False
-                except TypeError:
-                    continue  # incomparable stat repr (e.g. binary): keep
-            elif op == "isnull":
-                rng = col_range(f"{c}__nulls")
-                if rng == "absent":
-                    continue  # column predates file: all null, keep
-                if rng is not None and rng[1] == 0:
-                    return False
-            elif op == "notnull":
-                rng = col_range(f"{c}__nulls")
-                if rng == "absent":
-                    return False  # all null in this file
-        return True
+        snap = log_snapshot(self._path, io, as_of=self._as_of)
+        dv_files = tuple(a["dvFile"] for a in (snap.dvs if snap else []))
+        files = _plan_files(io, TableSpec.from_json(self._spec_json), snap,
+                            self._zone if self._plan_prune else None)
+        return [InputPartition((f, dv_files)) for f in files]
 
     # -- execution (executors) ----------------------------------------------
 
     def read(self, partition: InputPartition) -> Iterator[Any]:
         if partition is None:  # Spark probes once when partitions() is empty
             return
+        fname, dv_files = partition.value
         yield from _decode_file_batches(
             self._path, self._spec_json, self._out_names, self._zone,
-            partition.value, dv_files=self._dv_files,
+            fname, dv_files=list(dv_files),
         )
 
 
@@ -538,7 +460,8 @@ def _encode_partition_task(path: str, spec_json: str, chunk_rows: int,
     st = _json.loads(io.read_text(marker))
     return _FileCommit(file_name=st["file_name"],
                        file_size=st["file_size"],
-                       file_sha=st["file_sha256"])
+                       file_sha=st["file_sha256"],
+                       stats=st["stats"])
 
 
 @dataclass
@@ -550,6 +473,20 @@ class _FileCommit(WriterCommitMessage):
     file_name: str | None = None
     file_size: int = 0
     file_sha: str = ""
+    stats: dict | None = None
+
+
+def _add_action(io, m: _FileCommit) -> dict:
+    """The log ``add`` of one task's file, with the kernel's file stats."""
+    return {"add": {
+        "path": m.file_name,
+        "size": m.file_size,
+        "sha256": m.file_sha,
+        "partitionValues": {"pds": "2026-01-01"},
+        "dataChange": True,
+        "modificationTime": io.mtime_ms(io.join("data/" + m.file_name)),
+        "stats": m.stats,
+    }}
 
 
 class PandoraTableWriter(DataSourceArrowWriter):
@@ -596,16 +533,7 @@ class PandoraTableWriter(DataSourceArrowWriter):
                 "format": {"provider": "parquet"},
             }},
         ]
-        for m in adds:
-            lines.append({"add": {
-                "path": m.file_name,
-                "size": m.file_size,
-                "sha256": m.file_sha,
-                "partitionValues": {"pds": "2026-01-01"},
-                "dataChange": True,
-                "modificationTime": io.mtime_ms(
-                    io.join("data/" + m.file_name)),
-            }})
+        lines += [_add_action(io, m) for m in adds]
         lines += [{"remove": {"path": f, "dataChange": True}}
                   for f in self._prev_live]
         if len(lines) > 2:
@@ -738,16 +666,7 @@ class PandoraTableStreamWriter(DataSourceStreamArrowWriter):
             {"txn": {"appId": self._app_id, "version": batchId}},
         ]
         prev_live = committed_files(self._path, io) if self._overwrite else None
-        for m in adds:
-            lines.append({"add": {
-                "path": m.file_name,
-                "size": m.file_size,
-                "sha256": m.file_sha,
-                "partitionValues": {"pds": "2026-01-01"},
-                "dataChange": True,
-                "modificationTime": io.mtime_ms(
-                    io.join("data/" + m.file_name)),
-            }})
+        lines += [_add_action(io, m) for m in adds]
         lines += [{"remove": {"path": f, "dataChange": True}}
                   for f in (prev_live or [])]
         # the txn line makes even an empty epoch a commit: replay stays gated

@@ -21,7 +21,6 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -117,11 +116,6 @@ def synthesize_tokens(spark: SparkSession, n_rows: int, seed: int = 42,
     )
 
 
-def synthesize_tokens_pandas(n_rows: int, seed: int = 42) -> pd.DataFrame:
-    """Driver-side generator for small pytest fixtures (same bits)."""
-    return _gen_batch(np.arange(n_rows, dtype=np.uint64), seed)
-
-
 def scan_tokens(spark: SparkSession, path: str) -> DataFrame:
     """Schema-validated scan of a token table: an Iceberg v2 table directory
     (detected by its ``metadata/`` chain; read through
@@ -151,17 +145,3 @@ def scan_tokens(spark: SparkSession, path: str) -> DataFrame:
     if missing:
         raise ValueError(f"token table at {path} missing/mistyped columns: {missing}; have {have}")
     return df.select(*want)
-
-
-def write_tokens_table(spark: SparkSession, path: str, n_rows: int, seed: int = 42) -> str:
-    synthesize_tokens(spark, n_rows, seed).write.mode("overwrite").parquet(path)
-    return path
-
-
-def tokens_arrow_schema() -> pa.Schema:
-    return pa.schema(
-        [pa.field("doc_id", pa.string(), False),
-         pa.field("tokens", pa.list_(pa.int32()), False),
-         pa.field("n_tok", pa.int32(), False),
-         pa.field("source", pa.string(), False)]
-    )

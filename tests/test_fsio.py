@@ -72,3 +72,53 @@ def test_fsio_exclusive_create_without_o_excl(tmp_path):
     assert io.create_exclusive(target, b"a") is True
     assert io.create_exclusive(target, b"b") is False
     assert io.read_bytes(target) == b"a"
+
+
+def test_local_exclusive_create_is_never_seen_partial(tmp_path):
+    """A reader listing the directory while entries are created sees each
+    one whole or not at all: a commit-log replay that read an entry before
+    its content would miss the winner's adds and add its files twice."""
+    import os
+    import threading
+
+    from pandora_apache_avro_idl_to_apache_parquet_spark.functions.fsio import FsIO
+
+    io = FsIO.resolve(str(tmp_path))
+    payload = b"x" * (1 << 20)
+    bad, done = [], threading.Event()
+
+    def read_all():
+        while not done.is_set():
+            for f in os.listdir(tmp_path):
+                if f.endswith(".json"):
+                    got = io.read_bytes(io.join(f))
+                    if got != payload:
+                        bad.append((f, len(got)))
+
+    reader = threading.Thread(target=read_all)
+    reader.start()
+    try:
+        for i in range(200):
+            assert io.create_exclusive(io.join(f"{i:05d}.json"), payload)
+    finally:
+        done.set()
+        reader.join(timeout=30)
+    assert not reader.is_alive()
+    assert bad == []
+    assert io.create_exclusive(io.join("00000.json"), b"late") is False
+    assert [f for f in os.listdir(tmp_path) if not f.endswith(".json")] == []
+
+
+def test_local_exclusive_create_leaves_no_temp_file_on_failed_write(tmp_path):
+    """A write that fails before the entry is published removes its hidden
+    temporary file: nothing else would ever delete it."""
+    import os
+
+    import pytest
+
+    from pandora_apache_avro_idl_to_apache_parquet_spark.functions.fsio import FsIO
+
+    io = FsIO.resolve(str(tmp_path))
+    with pytest.raises(TypeError):
+        io.create_exclusive(io.join("00000.json"), object())
+    assert os.listdir(tmp_path) == []

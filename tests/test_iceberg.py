@@ -957,3 +957,111 @@ def test_evolved_column_ids_collide_with_no_element_id(spark, tmp_path, table):
     got = read_iceberg(spark, d)
     assert got.count() == 40
     assert got.filter(F.col("more").isNull()).count() == 20
+
+
+def _nested_schemas():
+    """Nested list shapes up to depth 3, with nullable and non-nullable
+    elements at every level and nullable and required fields."""
+    from pyspark.sql import types as T
+
+    out = []
+    for depth in (1, 2, 3):
+        for nulls in ((True,) * depth, (False,) * depth,
+                      tuple(i % 2 == 0 for i in range(depth))):
+            t = T.IntegerType()
+            for n in reversed(nulls):
+                t = T.ArrayType(t, n)
+            out.append(t)
+    return [T.StructType([
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("a", dt, True),
+        T.StructField("b", T.ArrayType(T.ArrayType(T.StringType(), False), True), False),
+    ]) for dt in out]
+
+
+@pytest.mark.parametrize("schema", _nested_schemas(), ids=lambda s: s["a"].dataType.simpleString())
+def test_nested_list_schema_round_trip(schema):
+    """Every list at every depth takes its own element id and records its
+    element nullability, so the schema reads back exactly, and
+    ``last-column-id`` is the largest id allocated."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        _iceberg_schema_json,
+        _max_column_id,
+        _struct_from_iceberg,
+    )
+
+    sch = _iceberg_schema_json(schema)
+    assert _struct_from_iceberg(sch) == schema
+    ids = []
+    for f in sch["fields"]:
+        ids.append(f["id"])
+        t = f["type"]
+        while isinstance(t, dict):
+            ids.append(t["element-id"])
+            t = t["element"]
+    assert len(ids) == len(set(ids))
+    assert _max_column_id(sch) == max(ids)
+
+
+def test_nested_list_table_round_trip(spark, tmp_path):
+    from pyspark.sql import types as T
+
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        _max_column_id,
+        _schema_by_id,
+        _struct_from_iceberg,
+    )
+
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("nest", T.ArrayType(T.ArrayType(T.IntegerType(), True), False), True),
+        T.StructField("vals", T.ArrayType(T.LongType(), True), True),
+    ])
+    rows = [(1, [[1, None], []], [5, None]), (2, None, None), (3, [[7]], [])]
+    d = str(tmp_path / "t")
+    write_iceberg(spark.createDataFrame(rows, schema), d)
+    meta = current_metadata(d)
+    assert meta["last-column-id"] == _max_column_id(_schema_by_id(meta)) == 6
+    assert _struct_from_iceberg(_schema_by_id(meta)) == schema
+    got = read_iceberg(spark, d)  # a Spark file scan reads every level nullable
+    assert _rows(got) == sorted(rows)
+    # evolution appends a nested list with fresh ids at every depth
+    more = T.StructType(schema.fields + [
+        T.StructField("deep", T.ArrayType(T.ArrayType(T.ArrayType(T.StringType()))), True)])
+    append_iceberg(spark.createDataFrame([(4, None, [1], [[["x", None]]])], more), d)
+    meta = current_metadata(d)
+    sch = _schema_by_id(meta)
+    assert meta["last-column-id"] == _max_column_id(sch) == 10
+    assert _struct_from_iceberg(sch).fields[-1].dataType == more.fields[-1].dataType
+    assert read_iceberg(spark, d).filter("doc_id = 4").first()["deep"] == [[["x", None]]]
+
+
+def test_bucket_prunes_only_tables_this_engine_wrote(spark, tmp_path):
+    """A ``bucket`` table without this engine's property was bucketed by
+    another engine's hash: equality reads keep every file and return every
+    matching row."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
+        ENGINE_NAME,
+        ENGINE_PROPERTY,
+        _write_next_metadata,
+        derive_partition_filter,
+    )
+
+    d = str(tmp_path / "bucket")
+    docs = _docs(spark, n=400)
+    write_iceberg(docs, d, partition_by="bucket(8, doc_id)")
+    meta = current_metadata(d)
+    assert meta["properties"][ENGINE_PROPERTY] == ENGINE_NAME
+    assert scan_manifests(d, partition_filter=derive_partition_filter(
+        d, eq=123))["pruned_files"] > 0
+
+    foreign = {k: v for k, v in meta.items() if k != "properties"}
+    _write_next_metadata(FsIO.resolve(d), foreign, "test")
+    plan = scan_manifests(d, partition_filter=derive_partition_filter(d, eq=123))
+    assert plan["pruned_files"] == 0
+    for pf in (derive_partition_filter(d, eq=123),
+               derive_partition_filter(d, isin=[5, 123, 399])):
+        got = read_iceberg(spark, d, partition_filter=pf).filter(
+            F.col("doc_id").isin(5, 123, 399))
+        want = docs.filter(F.col("doc_id").isin(5, 123, 399))
+        assert _rows(got) == _rows(want)

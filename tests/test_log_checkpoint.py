@@ -116,3 +116,20 @@ def test_txn_lookup_survives_clean_checkpoint(spark, out_dir, tmp_path):
     checkpoint_log(out_dir, clean=True)
     # the collapsed txn line still gates epoch replay
     assert _last_txn_version(out_dir, "ckpt-app") == last
+
+
+def test_second_checkpoint_after_clean_keeps_checkpointed_files(tmp_path):
+    """A checkpoint taken after ``clean=True`` deleted the covered json
+    files replays from the earlier checkpoint, so the files it holds stay
+    live (a json-only replay would collapse the table to the tail)."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+        append_log_entry,
+    )
+
+    out = str(tmp_path / "t")
+    append_log_entry(out, [{"add": {"path": "a.parquet"}},
+                           {"add": {"path": "b.parquet"}}])
+    checkpoint_log(out, clean=True)
+    append_log_entry(out, [{"add": {"path": "c.parquet"}}])
+    checkpoint_log(out)
+    assert committed_files(out) == ["a.parquet", "b.parquet", "c.parquet"]
