@@ -1,5 +1,7 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS]; prints two JSON lines: the per-query detail, then
+a compact headline (total seconds, encode and decode tokens/sec, bytes/token,
+cpus) as the last line.
 
 Two parts:
 1. the engine headline — encode throughput (tokens/sec) + compressed
@@ -139,10 +141,7 @@ def _sf_from_dir(d: str) -> float:
 
 
 def main() -> None:
-    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.decode import (
-        decode_tokens,
-        decode_tokens_attributed,
-    )
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.decode import decode_tokens
     from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import encode_tokens
     from pandora_apache_avro_idl_to_apache_parquet_spark.queries import QUERIES
     from pandora_apache_avro_idl_to_apache_parquet_spark.session import get_spark
@@ -187,23 +186,9 @@ def main() -> None:
     enc_bytes = sum(os.path.getsize(f) for f in glob.glob(out + "/data/*.parquet"))
     timings["encode_tokens"] = round(enc_sec, 3)
 
-    # Attributed warm-up pass FIRST (untimed for the headline): warms the
-    # page cache over the chunk files AND records per-stage CPU-seconds via
-    # accumulators. Kernel CPU-seconds are host-load-invariant, so when a
-    # run's decode wall time collapses while `kernel_cpu_sec` stays in band,
-    # the regression is host contention, not the decode path (VERDICT r04
-    # item 1: the bench must self-diagnose the 8x driver/local conflict).
-    dec_df, dec_acc = decode_tokens_attributed(spark, out)
-    t0 = time.perf_counter()
-    n_dec = dec_df.selectExpr("sum(n_tok)").first()[0]
-    warm_sec = time.perf_counter() - t0
+    # untimed warm-up decode: warms the page cache over the chunk files
+    n_dec = decode_tokens(spark, out).selectExpr("sum(n_tok)").first()[0]
     assert n_dec == n_tokens, f"decode token total {n_dec} != {n_tokens}"
-    decode_stages = {
-        "warmup_wall_sec": round(warm_sec, 3),
-        "pull_cpu_sec": round(dec_acc["pull"].value, 3),
-        "kernel_cpu_sec": round(dec_acc["kernel"].value, 3),
-        "arrow_cpu_sec": round(dec_acc["arrow"].value, 3),
-    }
 
     dec_runs = []
     for _ in range(2):
@@ -224,21 +209,20 @@ def main() -> None:
         timings[name] = round(time.perf_counter() - t0, 3)
 
     total = round(sum(timings.values()), 3)
+    # the per-query detail first: the last stdout line is the headline and
+    # stays short enough for a log tail to parse
+    print(json.dumps({"queries": timings, "sf": sf, "encode_rows": n_rows,
+                      "encode_tokens": int(n_tokens),
+                      "encode_runs_sec": [round(s, 3) for s in enc_runs],
+                      "decode_runs_sec": [round(s, 3) for s in dec_runs]}))
     print(
         json.dumps(
             {
                 "metric": "encode tokens/sec + breadth query wall time",
                 "value": total,
                 "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "encode_rows": n_rows,
-                "encode_tokens": int(n_tokens),
                 "tokens_per_sec": int(n_tokens / enc_sec),
                 "decode_tokens_per_sec": int(n_tokens / dec_sec),
-                "encode_runs_sec": [round(s, 3) for s in enc_runs],
-                "decode_runs_sec": [round(s, 3) for s in dec_runs],
-                "decode_stages": decode_stages,
                 "bytes_per_token": round(enc_bytes / n_tokens, 4),
                 "cpus": CPUS,
             }

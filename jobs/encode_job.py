@@ -43,7 +43,6 @@ def main() -> int:
                    help="shuffle: salted repartition (skew-safe default); "
                    "scan: map-only, encode partitions as scanned (no shuffle "
                    "— for already-distributed inputs)")
-    p.add_argument("--chunk-rows", type=int, default=4096)
     p.add_argument("--repeat", type=int, default=1,
                    help="encode the input N times in THIS JVM (distinct out "
                    "dirs) and report per-iteration metrics; steady-state = "
@@ -87,9 +86,9 @@ def main() -> int:
     def one_encode(out_dir: str) -> float:
         t0 = time.perf_counter()
         if args.mode == "scan":
-            encode_tokens_scan(src, out_dir, chunk_rows=args.chunk_rows)
+            encode_tokens_scan(src, out_dir)
         else:
-            encode_tokens(src, out_dir, n_parts=args.n_parts, chunk_rows=args.chunk_rows)
+            encode_tokens(src, out_dir, n_parts=args.n_parts)
         return time.perf_counter() - t0
 
     n_tokens = src.selectExpr("sum(n_tok)").first()[0] or 0
@@ -108,22 +107,19 @@ def main() -> int:
         bad = verify_roundtrip(src, decode_tokens(spark, out_for_stats)).count()
 
     # per-stage attribution from the checkpoint markers: kernel_sec is pure
-    # numpy codec time inside the grouped-map UDF, write_sec the chunk-file
-    # publication, the remainder of total_sec is Arrow exchange + pandas
-    # assembly. Summed across partitions these separate "the kernels got
-    # slower" (memory-bandwidth/steal contention) from "Spark overhead grew".
-    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
-        checkpoint_stats,
-    )
-
-    stats = checkpoint_stats(out_for_stats)
+    # numpy codec time inside the encode UDF, write_sec the chunk-file
+    # publication, the remainder of total_sec is Arrow exchange + assembly.
+    # Summed across partitions these separate "the kernels got slower"
+    # (memory-bandwidth/steal contention) from "Spark overhead grew".
+    markers = []
+    for f in glob.glob(os.path.join(out_for_stats, "_checkpoints", "part-*.json")):
+        with open(f) as fh:
+            markers.append(json.load(fh))
     attrib = {}
-    if len(stats) and "kernel_sec" in stats.columns:
-        attrib = {
-            "kernel_sec_sum": round(float(stats["kernel_sec"].sum()), 3),
-            "write_sec_sum": round(float(stats["write_sec"].sum()), 3),
-            "group_sec_sum": round(float(stats["total_sec"].sum()), 3),
-        }
+    if markers:
+        attrib = {k: round(sum(m[s] for m in markers), 3) for k, s in (
+            ("kernel_sec_sum", "kernel_sec"), ("write_sec_sum", "write_sec"),
+            ("group_sec_sum", "total_sec"))}
         attrib["arrow_sec_sum"] = round(
             attrib["group_sec_sum"] - attrib["kernel_sec_sum"] - attrib["write_sec_sum"], 3
         )

@@ -1,12 +1,9 @@
-"""Decode pipeline: chunk files -> token table, plus round-trip verification.
+"""Decode pipeline: token store -> token table, plus round-trip verification.
 
-Every chunk row is independently round-trippable (its payloads are
-self-describing), so decode is a shuffle-free ``mapInArrow`` over the chunk
-scan: decode each column payload, rebuild the list column zero-copy via
-``pa.ListArray.from_arrays(offsets, values)`` — the inverse of the vectorized
-explode. This mirrors the reference's parent/child recombination contract
-(``child.pj_pid = parent.pj_uid``, ``/root/reference/README.md:95-102``) with
-offsets standing in for the FK join.
+A token store is a table store (see ``encode.py``), so every decode here is
+:func:`..operators.table.decode_table` over its stored lanes — a
+shuffle-free ``mapInArrow`` over the log-gated chunk scan — with ``n_tok``
+re-derived as ``size(tokens)``.
 
 ``verify_roundtrip`` enforces the north-rule invariant: per-row token-array
 equality between source and decode(encode(source)).
@@ -14,189 +11,49 @@ equality between source and decode(encode(source)).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pyarrow as pa
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..functions import codecs as C
-from ..schema import TOKENS_SCHEMA
-from .encode import read_chunks
+from .table import decode_table
+
+_LANES = ["doc_id", "tokens", "source"]
 
 
-def _decode_arrow_schema() -> pa.Schema:
-    return pa.schema(
-        [pa.field("doc_id", pa.string(), False),
-         pa.field("tokens", pa.list_(pa.int32()), False),
-         pa.field("n_tok", pa.int32(), False),
-         pa.field("source", pa.string(), False)]
-    )
-
-
-def _decode_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    schema = _decode_arrow_schema()
-    for batch in it:
-        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        for i in range(batch.num_rows):  # iterates CHUNKS (few per batch), not rows
-            d_len, d_blob = C.decode_strings(cols["doc_id_payload"][i].as_py())
-            s_len, s_blob = C.decode_strings(cols["source_payload"][i].as_py())
-            lengths = C.decode_int32(cols["lengths_payload"][i].as_py())
-            vbuf = cols["values_payload"][i].as_py()
-            if C.payload_codec_name(vbuf) == "grouped":
-                values = C.decode_int32_grouped(vbuf, lengths)
-            else:
-                values = C.decode_int32(vbuf)
-            offs = np.zeros(len(lengths) + 1, dtype=np.int32)
-            np.cumsum(lengths, out=offs[1:])
-            tokens = pa.ListArray.from_arrays(pa.array(offs, pa.int32()),
-                                              pa.array(values, pa.int32()))
-            yield pa.RecordBatch.from_arrays(
-                [C.blob_to_strings(d_len, d_blob).cast(pa.string()),
-                 tokens.cast(pa.list_(pa.int32())),
-                 pa.array(lengths, pa.int32()),
-                 C.blob_to_strings(s_len, s_blob).cast(pa.string())],
-                schema=schema,
-            )
+def _with_n_tok(df: DataFrame) -> DataFrame:
+    """The token table's columns, ``n_tok`` re-derived from ``tokens``."""
+    return df.select("doc_id", "tokens", F.size("tokens").alias("n_tok"), "source")
 
 
 def decode_tokens(spark: SparkSession, out_dir: str) -> DataFrame:
-    chunks = read_chunks(spark, out_dir).select(
-        "doc_id_payload", "source_payload", "lengths_payload", "values_payload"
-    )
-    return chunks.mapInArrow(_decode_batches, schema=TOKENS_SCHEMA)
-
-
-def decode_tokens_attributed(spark: SparkSession, out_dir: str):
-    """Bench-only decode with per-stage attribution via float accumulators.
-
-    Same result as :func:`decode_tokens`; additionally sums, across ALL
-    tasks, the CPU-seconds spent in each stage of the Python worker:
-
-    * ``pull``   — blocked on the upstream Arrow batch iterator (parquet
-      payload read + JVM→Python transfer; after the first yield this also
-      absorbs the downstream send that precedes the next pull);
-    * ``kernel`` — codec decode proper (numpy/zlib in ``functions.codecs``);
-    * ``arrow``  — list-offset + RecordBatch assembly.
-
-    Purpose (VERDICT r04 item 1): kernel CPU-seconds are host-load-invariant
-    — if a bench run's decode *wall* time blows up while ``kernel`` stays in
-    its usual band, the regression is host contention (I/O stalls, steal
-    time), not the decode path. Returns ``(df, {stage: accumulator})``; read
-    ``acc.value`` only after an action has consumed ``df``.
-    """
-    import time as _time
-
-    acc = {k: spark.sparkContext.accumulator(0.0)
-           for k in ("pull", "kernel", "arrow")}
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        schema = _decode_arrow_schema()
-        while True:
-            t0 = _time.perf_counter()
-            try:
-                batch = next(it)
-            except StopIteration:
-                acc["pull"].add(_time.perf_counter() - t0)
-                return
-            acc["pull"].add(_time.perf_counter() - t0)
-            cols = {name: batch.column(i)
-                    for i, name in enumerate(batch.schema.names)}
-            for i in range(batch.num_rows):
-                t0 = _time.perf_counter()
-                d_len, d_blob = C.decode_strings(cols["doc_id_payload"][i].as_py())
-                s_len, s_blob = C.decode_strings(cols["source_payload"][i].as_py())
-                lengths = C.decode_int32(cols["lengths_payload"][i].as_py())
-                vbuf = cols["values_payload"][i].as_py()
-                if C.payload_codec_name(vbuf) == "grouped":
-                    values = C.decode_int32_grouped(vbuf, lengths)
-                else:
-                    values = C.decode_int32(vbuf)
-                acc["kernel"].add(_time.perf_counter() - t0)
-                t0 = _time.perf_counter()
-                offs = np.zeros(len(lengths) + 1, dtype=np.int32)
-                np.cumsum(lengths, out=offs[1:])
-                tokens = pa.ListArray.from_arrays(pa.array(offs, pa.int32()),
-                                                  pa.array(values, pa.int32()))
-                rb = pa.RecordBatch.from_arrays(
-                    [C.blob_to_strings(d_len, d_blob).cast(pa.string()),
-                     tokens.cast(pa.list_(pa.int32())),
-                     pa.array(lengths, pa.int32()),
-                     C.blob_to_strings(s_len, s_blob).cast(pa.string())],
-                    schema=schema,
-                )
-                acc["arrow"].add(_time.perf_counter() - t0)
-                yield rb
-
-    chunks = read_chunks(spark, out_dir).select(
-        "doc_id_payload", "source_payload", "lengths_payload", "values_payload"
-    )
-    return chunks.mapInArrow(batches, schema=TOKENS_SCHEMA), acc
-
-
-def _tokens_only_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    schema = pa.schema(
-        [pa.field("tokens", pa.list_(pa.int32()), False),
-         pa.field("n_tok", pa.int32(), False)]
-    )
-    for batch in it:
-        cols = {name: batch.column(i) for i, name in enumerate(batch.schema.names)}
-        for i in range(batch.num_rows):
-            lengths = C.decode_int32(cols["lengths_payload"][i].as_py())
-            vbuf = cols["values_payload"][i].as_py()
-            if C.payload_codec_name(vbuf) == "grouped":
-                values = C.decode_int32_grouped(vbuf, lengths)
-            else:
-                values = C.decode_int32(vbuf)
-            offs = np.zeros(len(lengths) + 1, dtype=np.int32)
-            np.cumsum(lengths, out=offs[1:])
-            tokens = pa.ListArray.from_arrays(pa.array(offs, pa.int32()),
-                                              pa.array(values, pa.int32()))
-            yield pa.RecordBatch.from_arrays(
-                [tokens.cast(pa.list_(pa.int32())), pa.array(lengths, pa.int32())],
-                schema=schema,
-            )
+    return _with_n_tok(decode_table(spark, out_dir, columns=_LANES))
 
 
 def decode_values_only(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Column-pruned decode: only the ``lengths`` and ``values`` payloads are
-    read and decoded — the doc_id/source string payloads never leave parquet
-    (their columns are pruned at the scan). The intra-format analog of
-    Catalyst's column pruning, for token-statistics workloads that don't need
-    identities."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-    from pyspark.sql.types import ArrayType
-
-    chunks = read_chunks(spark, out_dir).select("lengths_payload", "values_payload")
-    schema = StructType(
-        [StructField("tokens", ArrayType(IntegerType(), False), False),
-         StructField("n_tok", IntegerType(), False)]
-    )
-    return chunks.mapInArrow(_tokens_only_batches, schema=schema)
+    """Column-pruned decode: only the ``tokens`` lane is read and decoded —
+    the doc_id/source string payloads never leave parquet (their columns are
+    pruned at the scan). The intra-format analog of Catalyst's column
+    pruning, for token-statistics workloads that don't need identities."""
+    dec = decode_table(spark, out_dir, columns=["tokens"])
+    return dec.select("tokens", F.size("tokens").alias("n_tok"))
 
 
 def lookup_docs(spark: SparkSession, out_dir: str, doc_ids: list[str]) -> DataFrame:
     """Selective decode: fetch specific documents without scanning every chunk.
 
-    Chunk pruning via the manifest's ``doc_id_min``/``doc_id_max`` zone map:
-    rows inside a chunk are sorted by doc_id (the encode kernel sorts before
-    chunking), so a chunk can contain a wanted doc only if
-    ``doc_id_min <= id <= doc_id_max``. The predicate lands in the parquet
-    scan (PushedFilters on the min/max columns), payloads of pruned chunks are
-    never read, and only surviving chunks are decoded — the point-lookup path
-    the reference's one-file-per-table layout cannot offer.
+    Chunk pruning via the per-chunk ``doc_id`` zone map: a chunk can
+    contain a wanted doc only if ``doc_id__min <= id <= doc_id__max``. The
+    predicate lands in the parquet scan (PushedFilters on the min/max
+    columns), payloads of pruned chunks are never read, and only surviving
+    chunks are decoded — the point-lookup path the reference's
+    one-file-per-table layout cannot offer.
     """
-    chunks = read_chunks(spark, out_dir)
-    cond = None
-    for d in doc_ids:
-        c = (F.lit(d) >= F.col("doc_id_min")) & (F.lit(d) <= F.col("doc_id_max"))
-        cond = c if cond is None else (cond | c)
-    hit = chunks.filter(cond).select(
-        "doc_id_payload", "source_payload", "lengths_payload", "values_payload"
-    )
-    decoded = hit.mapInArrow(_decode_batches, schema=TOKENS_SCHEMA)
-    return decoded.filter(F.col("doc_id").isin(doc_ids))
+    hit = reduce(lambda a, b: a | b, [
+        (F.col("doc_id__min") <= F.lit(d)) & (F.col("doc_id__max") >= F.lit(d))
+        for d in doc_ids
+    ], F.lit(False))
+    decoded = decode_table(spark, out_dir, columns=_LANES, chunk_filter=hit)
+    return _with_n_tok(decoded).filter(F.col("doc_id").isin(doc_ids))
 
 
 def verify_roundtrip(src: DataFrame, decoded: DataFrame) -> DataFrame:

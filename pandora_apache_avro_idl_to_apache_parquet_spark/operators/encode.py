@@ -1,35 +1,32 @@
-"""Encode pipeline: token table -> encoded chunk files + manifest + checkpoints.
+"""Token pipeline entry points, and the commit log every store shares.
 
-Plan shape (SURVEY.md §3.4): one shuffle, everything else Arrow-vectorized
-inside a grouped-map UDF:
+A token table ``(doc_id, tokens, n_tok, source)`` is stored as a generic
+table store (``table.py``) with the stored lanes ``doc_id``, ``tokens``
+(``array<int>``, the GROUPED codec cascade) and ``source``:
 
-    scan -> part_id = pmod(xxhash64(source, doc_id), n_parts)   # salted spread
-         -> anti-join against completed checkpoints              # resume
-         -> groupBy(part_id).applyInArrow(encode_partition)      # the only shuffle
-         -> chunk parquet files (payload columns) + checkpoint markers
-         -> manifest = payload-free projection of the chunk files
+    scan -> check n_tok == size(tokens), drop n_tok          # derived lane
+         -> part_id = pmod(xxhash64(source, doc_id), n_parts) # salted spread
+         -> anti-join against completed checkpoints           # resume
+         -> groupBy(part_id).applyInArrow(encode partition)   # the only shuffle
+         -> chunk parquet files + checkpoint markers -> commit log
 
-Scale notes (the 100 TB story):
-* ``part_id`` hashes *both* source and doc_id, so a source holding 50% of rows
-  spreads uniformly over all partitions — this IS the salted repartition the
-  north rule asks for (AQE skew handling does not apply to grouped-map UDFs,
-  SURVEY.md §4).
-* All chunk/checkpoint/commit-log I/O goes through :class:`..functions.fsio.
-  FsIO` resolved from the output URI, so executors write to the real shared
-  store (S3/HDFS/local) — never to a path that only exists on their own disk.
-  Publication is atomic-rename where the store supports it and write-once keys
-  where it does not (complete-object visibility + marker/log-gated readers;
-  see ``fsio.py``).
-* Each group publishes its own chunk file and then its checkpoint marker, so a
-  failed job leaves only whole-partition units; the next run anti-joins
-  completed part_ids and re-encodes only the remainder — the reference's
-  optimistic Delta-commit retry (A29,
-  ``/root/reference/README.md:608-701``) re-expressed as idempotent
-  per-partition commits.
-* The manifest is never written as a separate table that can drift: it is a
-  column-pruned read of the chunk files (payload columns untouched on disk).
-* Payload columns are stored uncompressed inside the chunk parquet (they are
-  already codec-compressed); metadata columns stay snappy.
+``n_tok`` is not stored: it equals ``size(tokens)`` (checked at encode,
+re-derived at decode), the correlated-column idea of *Corra* (VLDB 2024).
+The key ``(source, doc_id)`` hashes both columns, so a source holding 50% of
+rows spreads uniformly over all partitions (the salted repartition the north
+rule asks for; AQE skew handling does not apply to grouped-map UDFs), and
+sorts each part by source, then doc_id. A chunk holds at most
+``DEFAULT_CHUNK_ROWS`` rows and ``DEFAULT_CHUNK_VALUES`` tokens.
+
+The commit log (below) is the store's: all chunk/checkpoint/commit-log I/O
+goes through :class:`..functions.fsio.FsIO` resolved from the output URI, so
+executors write to the real shared store (S3/HDFS/local). Each group
+publishes its chunk file and then its checkpoint marker, so a failed job
+leaves only whole-partition units; the next run re-encodes only the
+remainder, and the driver commits every marked file in one log entry — the
+reference's optimistic Delta-commit retry (A29,
+``/root/reference/README.md:608-701``) re-expressed as idempotent
+per-partition commits.
 """
 
 from __future__ import annotations
@@ -40,194 +37,35 @@ import uuid
 from dataclasses import dataclass, field
 from datetime import date
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType
 
-from ..functions import codecs as C
 from ..functions.fsio import FsIO
-from ..functions.hashing import klondike, sha256
-from ..plans.cost import encode_values, select_int_codec, select_str_codec
-from ..schema import CHUNK_COLUMNS, CHUNK_SCHEMA, MANIFEST_COLUMNS, TOKENS_SCHEMA
 
 DEFAULT_CHUNK_ROWS = 4096
+# the one element cap of every table-store chunk, summed over its array and
+# map lanes (table._chunk_boundaries); for a token chunk, its token count
 DEFAULT_CHUNK_VALUES = 1 << 18
-MANIFEST_ONLY_SCHEMA = CHUNK_SCHEMA  # full schema; UDF returns manifest cols + payloads
+TOKEN_KEY = ["source", "doc_id"]
 
 
 def _io(out_dir: str, io: FsIO | None) -> FsIO:
     return io if io is not None else FsIO.resolve(out_dir)
 
 
-def completed_parts(out_dir: str, io: FsIO | None = None) -> list[int]:
+def completed_parts(out_dir: str, io: FsIO | None = None,
+                    run: str = "r0") -> list[int]:
+    """Part ids of ``run`` with a checkpoint marker (the resume identity —
+    per run, so append runs into one dir never mask each other)."""
     io = _io(out_dir, io)
-    d = io.join("_checkpoints")
+    prefix = f"part-{run}-"
     return sorted(
-        int(f[len("part-"):-len(".json")])
-        for f in io.listdir(d)
-        if f.startswith("part-") and f.endswith(".json")
+        int(f[len(prefix):-len(".json")])
+        for f in io.listdir(io.join("_checkpoints"))
+        if f.startswith(prefix) and f.endswith(".json")
     )
-
-
-def checkpoint_stats(out_dir: str, io: FsIO | None = None) -> pd.DataFrame:
-    io = _io(out_dir, io)
-    d = io.join("_checkpoints")
-    rows = [
-        json.loads(io.read_text(posixpath.join(d, f"part-{p:05d}.json")))
-        for p in completed_parts(out_dir, io)
-    ]
-    return pd.DataFrame(rows)
-
-
-def _chunk_boundaries(lengths: np.ndarray, max_rows: int, max_values: int) -> list[tuple[int, int]]:
-    """Greedy row-ranges such that each chunk has <= max_rows rows and
-    <= max_values token values (a single huge row still gets its own chunk)."""
-    n = len(lengths)
-    bounds = []
-    lo = 0
-    cum = np.concatenate(([0], np.cumsum(lengths.astype(np.int64))))
-    while lo < n:
-        hi_rows = min(lo + max_rows, n)
-        # furthest hi with cum[hi]-cum[lo] <= max_values
-        hi_vals = int(np.searchsorted(cum, cum[lo] + max_values, side="right")) - 1
-        hi = max(lo + 1, min(hi_rows, hi_vals))
-        bounds.append((lo, hi))
-        lo = hi
-    return bounds
-
-
-def _chunk_arrow_schema() -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(CHUNK_SCHEMA)
-
-
-def _encode_partition_arrow(table: pa.Table, io: FsIO, chunk_rows: int,
-                            chunk_values: int, pds: date, fail_parts=None) -> pa.Table:
-    """Grouped-map kernel: one part_id's rows -> chunk parquet file + manifest.
-
-    Arrow-native end-to-end (``applyInArrow``): the token list column's Arrow
-    (values, offsets) buffers ARE the engine's flattened representation, read
-    zero-copy — no pandas conversion, no per-row ndarray objects, no
-    re-concatenation. This is the "vectorized explode without blow-up" of
-    SURVEY.md §7 taken all the way to the exchange format.
-    """
-    import time
-
-    import pyarrow.compute as pc
-
-    t_start = time.perf_counter()
-    part_id = int(table.column("part_id")[0].as_py())
-    if fail_parts and part_id in fail_parts:
-        raise RuntimeError(f"injected failure for part {part_id}")
-
-    # sort rows by doc_id (C++ stable sort): RLE-friendly doc_id prefixes +
-    # valid zone maps (doc_id_min/max) per chunk
-    table = table.take(pc.sort_indices(table, sort_keys=[("doc_id", "ascending")]))
-    tokens = table.column("tokens").combine_chunks()
-    offs = tokens.offsets.to_numpy().astype(np.int64, copy=False)
-    cum = offs - offs[0]
-    lengths_all = np.diff(cum).astype(np.int32)
-    values_all = tokens.flatten().to_numpy(zero_copy_only=False).astype(np.int32, copy=False)
-    n_tok_col = table.column("n_tok").combine_chunks().to_numpy(zero_copy_only=False)
-    if not np.array_equal(n_tok_col.astype(np.int64), lengths_all.astype(np.int64)):
-        bad = int(np.flatnonzero(n_tok_col != lengths_all)[0])
-        raise ValueError(
-            f"n_tok invariant violated at doc_id={table.column('doc_id')[bad].as_py()}"
-        )
-    doc_arr = table.column("doc_id").combine_chunks()
-    src_arr = table.column("source").combine_chunks()
-
-    t_kernel0 = time.perf_counter()
-    rows: list[dict] = []
-    for seq, (lo, hi) in enumerate(_chunk_boundaries(lengths_all, chunk_rows, chunk_values)):
-        lengths = lengths_all[lo:hi]
-        values = values_all[cum[lo]:cum[hi]]
-
-        d_len, d_blob = C.strings_to_blob(doc_arr.slice(lo, hi - lo))
-        s_len, s_blob = C.strings_to_blob(src_arr.slice(lo, hi - lo))
-        payloads = {
-            "doc_id": (select_str_codec(d_len, d_blob), len(d_blob) + 4 * len(d_len)),
-            "source": (select_str_codec(s_len, s_blob), len(s_blob) + 4 * len(s_len)),
-            "lengths": (select_int_codec(lengths), 4 * len(lengths)),
-            "values": (encode_values(values, lengths), 4 * len(values)),
-        }
-        sha = sha256(b"".join(p for p, _ in payloads.values()))
-        row = {
-            "part_id": part_id,
-            "chunk_seq": seq,
-            "chunk_id": klondike(f"{part_id}:{seq}:".encode() + sha),
-            "row_lo": lo,
-            "row_hi": hi,
-            "n_rows": hi - lo,
-            "n_values": int(cum[hi] - cum[lo]),
-            "doc_id_min": doc_arr[lo].as_py(),
-            "doc_id_max": doc_arr[hi - 1].as_py(),
-            "sha": sha,
-            "pds": pds,
-        }
-        for col in CHUNK_COLUMNS:
-            payload, raw = payloads[col]
-            row[f"{col}_codec"] = C.payload_codec_name(payload)
-            row[f"{col}_raw_bytes"] = raw
-            row[f"{col}_enc_bytes"] = len(payload)
-            row[f"{col}_payload"] = payload
-        rows.append(row)
-    kernel_sec = time.perf_counter() - t_kernel0
-
-    chunk_schema = _chunk_arrow_schema()
-    out = pa.Table.from_pylist(rows, schema=chunk_schema)
-
-    # publish chunk file, then checkpoint marker (all through FsIO: atomic
-    # rename locally, write-once keys on object stores — see fsio.py)
-    data_dir, ckpt_dir = io.join("data"), io.join("_checkpoints")
-    io.makedirs(data_dir)
-    io.makedirs(ckpt_dir)
-    tag = uuid.uuid4().hex[:8]
-    file_name = f"part-{part_id:05d}.parquet"
-    t_write0 = time.perf_counter()
-    file_size, file_sha = io.publish_parquet(
-        out,
-        posixpath.join(data_dir, file_name),
-        attempt_tag=tag,
-        compression={f"{c}_payload": "NONE" for c in CHUNK_COLUMNS} | {"__default__": "SNAPPY"},
-        # no parquet statistics/dictionary for payload bytes: binary min/max
-        # stats would embed payload prefixes in the footer (measured ~40 KB
-        # per file of pure overhead) and every payload is unique; stats stay
-        # on the small columns Spark actually filters on (zone maps, meta)
-        use_dictionary=False,
-        write_statistics=[c for c in MANIFEST_COLUMNS if c != "sha"],
-    )
-    write_sec = time.perf_counter() - t_write0
-
-    stats = {
-        "part_id": part_id,
-        "n_chunks": len(rows),
-        "n_rows": int(table.num_rows),
-        "n_values": int(cum[-1]) if len(cum) else 0,
-        "enc_bytes": sum(r[f"{c}_enc_bytes"] for r in rows for c in CHUNK_COLUMNS),
-        "raw_bytes": sum(r[f"{c}_raw_bytes"] for r in rows for c in CHUNK_COLUMNS),
-        "kernel_sec": round(kernel_sec, 4),
-        "write_sec": round(write_sec, 4),
-        "total_sec": round(time.perf_counter() - t_start, 4),
-        # file integrity recorded at write time so the commit log never
-        # re-reads data files driver-side — at 100 TB a driver sha pass over
-        # every chunk file would be the serial bottleneck
-        "file_name": file_name,
-        "file_size": file_size,
-        "file_sha256": file_sha,
-        "status": "done",
-    }
-    io.publish_bytes(
-        posixpath.join(ckpt_dir, f"part-{part_id:05d}.json"),
-        json.dumps(stats).encode(),
-        attempt_tag=tag,
-    )
-
-    return out.drop_columns([f"{c}_payload" for c in CHUNK_COLUMNS])
 
 
 def part_id_frame(spark: SparkSession, parts: list[int]) -> DataFrame:
@@ -237,111 +75,57 @@ def part_id_frame(spark: SparkSession, parts: list[int]) -> DataFrame:
         pa.table({"part_id": pa.array(parts, pa.int32())}), "part_id int")
 
 
-def with_part_id(df: DataFrame, n_parts: int) -> DataFrame:
-    """Salted partition key: hashes (source, doc_id) so skewed sources spread."""
-    return df.withColumn(
-        "part_id", F.pmod(F.xxhash64("source", "doc_id"), F.lit(n_parts)).cast("int")
-    )
+def _token_lanes(df: DataFrame) -> DataFrame:
+    """The stored lanes of a token frame. Fails the job on a row whose
+    ``n_tok`` is not ``size(tokens)``: decode re-derives it from ``tokens``."""
+    bad = F.col("n_tok") != F.size("tokens")
+    msg = F.concat(F.lit("n_tok invariant violated at doc_id="), F.col("doc_id"))
+    return (df.where(F.when(bad, F.raise_error(msg)).otherwise(F.lit(True)))
+            .select("doc_id", "tokens", "source"))
 
 
 def encode_tokens(df: DataFrame, out_dir: str, n_parts: int = 64,
-                  chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                  chunk_values: int = DEFAULT_CHUNK_VALUES,
                   pds: date | None = None,
                   fail_parts: set[int] | None = None,
                   io: FsIO | None = None) -> DataFrame:
-    """Run the encode job; returns the manifest DataFrame (payload-free).
+    """Encode a token table (salted shuffle into ``n_parts`` groups);
+    returns the manifest (:func:`read_manifest`).
 
-    Resume: part_ids with a checkpoint marker in ``out_dir/_checkpoints`` are
-    skipped; ``fail_parts`` injects failures for the resume pytest (A29 analog).
-    ``io`` injects a custom filesystem (tests use a latency + no-rename
-    wrapper); by default it resolves from ``out_dir`` via ``pyarrow.fs`` and
-    is shipped to executors inside the kernel closure (picklable).
-    """
-    spark = df.sparkSession
-    pds = pds or date(2026, 1, 1)
-    io = _io(out_dir, io)
-    keyed = with_part_id(df, n_parts)
+    Resume: part ids with a checkpoint marker in ``out_dir/_checkpoints``
+    are skipped; ``fail_parts`` injects failures for the resume tests (A29
+    analog). ``io`` injects a custom filesystem (tests use a latency +
+    no-rename wrapper); by default it resolves from ``out_dir`` via
+    ``pyarrow.fs`` and is shipped to executors inside the kernel closure."""
+    from .table import _encode_store
 
-    done = completed_parts(out_dir, io)
-    if done:
-        keyed = keyed.join(F.broadcast(part_id_frame(spark, done)),
-                           "part_id", "left_anti")
-
-    manifest_struct = StructType([f for f in CHUNK_SCHEMA.fields if not f.name.endswith("_payload")])
-
-    def kernel(table: pa.Table) -> pa.Table:
-        return _encode_partition_arrow(table, io, chunk_rows, chunk_values, pds,
-                                       fail_parts=fail_parts)
-
-    result = keyed.groupBy("part_id").applyInArrow(kernel, schema=manifest_struct)
-    # force execution with a no-file action: the manifest of record is the
-    # chunk files themselves, and writing (then overwriting) an attempt
-    # manifest would churn deletes — expensive on discard-mounted filesystems
-    result.write.format("noop").mode("overwrite").save()
-    write_commit_log(out_dir, pds, io)
-    return read_manifest(spark, out_dir, io)
+    _encode_store(_token_lanes(df), out_dir, TOKEN_KEY, n_parts,
+                  DEFAULT_CHUNK_ROWS, pds, fail_parts, io, "r0")
+    return read_manifest(df.sparkSession, out_dir, io)
 
 
 def encode_tokens_scan(df: DataFrame, out_dir: str,
-                       chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                       chunk_values: int = DEFAULT_CHUNK_VALUES,
                        pds: date | None = None,
                        fail_parts: set[int] | None = None,
                        io: FsIO | None = None) -> DataFrame:
-    """Map-only encode: each *scan partition* is an encode unit — the plan is
-    scan → ``mapInArrow`` → files, with **no shuffle at all**.
+    """Map-only encode: each *scan partition* is an encode unit, with **no
+    shuffle at all** (:func:`..operators.table.encode_table_scan`).
 
     For a curated Iceberg/parquet token table the input files already spread
-    the corpus (the common case at 10^12-sequence scale), so paying a full
-    shuffle of every token byte — plus the JVM-side sort and row↔Arrow serde
-    the grouped-map path implies — buys nothing. This mode removes that
-    entire cost; :func:`encode_tokens` (salted shuffle) remains the path for
-    skewed or hot-keyed sources, exactly as the north rule's "explicit salted
-    repartitioning for skewed sources" prescribes.
+    the corpus, so paying a full shuffle of every token byte buys nothing;
+    :func:`encode_tokens` (salted shuffle) remains the path for skewed or
+    hot-keyed sources, as the north rule's "explicit salted repartitioning
+    for skewed sources" prescribes."""
+    from .table import _encode_store
 
-    Resume: partition ids are the encode identity. Spark's file-split
-    planning is deterministic for a static input + fixed reader conf, so a
-    restart maps rows to the same partition ids; partitions with a checkpoint
-    marker short-circuit (their input is re-scanned but neither re-encoded
-    nor re-written — idempotent, not free; the shuffle mode's anti-join
-    semantics, minus the shuffle).
-    """
-    spark = df.sparkSession
-    pds = pds or date(2026, 1, 1)
-    io = _io(out_dir, io)
-    done = set(completed_parts(out_dir, io))
-
-    manifest_struct = StructType([f for f in CHUNK_SCHEMA.fields if not f.name.endswith("_payload")])
-
-    def gen(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        if pid in done:
-            return
-        collected = list(batches)
-        if not collected or sum(b.num_rows for b in collected) == 0:
-            return
-        table = pa.Table.from_batches(collected)
-        table = table.append_column(
-            "part_id", pa.array(np.full(table.num_rows, pid, np.int32))
-        )
-        yield from _encode_partition_arrow(
-            table, io, chunk_rows, chunk_values, pds, fail_parts=fail_parts
-        ).to_batches()
-
-    result = df.mapInArrow(gen, schema=manifest_struct)
-    result.write.format("noop").mode("overwrite").save()
-    write_commit_log(out_dir, pds, io)
-    return read_manifest(spark, out_dir, io)
+    _encode_store(_token_lanes(df), out_dir, TOKEN_KEY, None,
+                  DEFAULT_CHUNK_ROWS, pds, fail_parts, io, "r0")
+    return read_manifest(df.sparkSession, out_dir, io)
 
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 1, "payloadFormat": 2}
 
 
-def write_commit_log(out_dir: str, pds: date, io: FsIO | None = None,
-                     schema_json: str | None = None) -> str | None:
+def write_commit_log(out_dir: str, pds: date, io: FsIO | None = None) -> str | None:
     """Numbered-JSONL commit log — the A28/A29 analog of the reference's
     ``_delta_log`` writer (``/root/reference/.../Pandora/Databricks/
     DeltaLake.fs:176-444``): a ``_log/<%020d>.json`` file holding one
@@ -355,9 +139,11 @@ def write_commit_log(out_dir: str, pds: date, io: FsIO | None = None,
     re-read so files the winner committed are dropped from our payload before
     the next index is tried. Only files not yet referenced by earlier log
     entries are added, so re-running after resume appends exactly the new
-    files.
+    files. ``metaData.schemaString`` is the chunk schema of the store's
+    ``_schema.json`` sidecar, and each ``add`` carries the exact per-file
+    ``stats`` its marker recorded.
     """
-    from ..schema import CHUNK_SCHEMA
+    from .table import chunk_schema_for, read_table_spec
 
     io = _io(out_dir, io)
     data_dir, log_dir = io.join("data"), io.join("_log")
@@ -423,7 +209,8 @@ def write_commit_log(out_dir: str, pds: date, io: FsIO | None = None,
             json.dumps(
                 {
                     "metaData": {
-                        "schemaString": schema_json or CHUNK_SCHEMA.json(),
+                        "schemaString": chunk_schema_for(
+                            read_table_spec(out_dir, io)).json(),
                         "partitionColumns": ["pds"],
                         "format": {"provider": "parquet"},
                     }
@@ -443,11 +230,8 @@ def write_commit_log(out_dir: str, pds: date, io: FsIO | None = None,
                 "partitionValues": {"pds": info.get("pds", pds.isoformat())},
                 "dataChange": True,
                 "modificationTime": io.mtime_ms(path),
+                "stats": info["stats"],
             }
-            if "stats" in info:
-                # table-store markers carry exact per-file stats, so
-                # readers plan from the log (token-store markers have none)
-                add["stats"] = info["stats"]
             lines.append(json.dumps({"add": add}))
         return "\n".join(lines) + "\n"
 
@@ -762,13 +546,26 @@ def vacuum(out_dir: str, io: FsIO | None = None,
 
 
 def read_manifest(spark: SparkSession, out_dir: str, io: FsIO | None = None) -> DataFrame:
-    """Manifest = payload-free projection of chunk files (column-pruned scan)."""
-    return read_chunks(spark, out_dir, io).select(*MANIFEST_COLUMNS)
+    """One row per chunk of a token store, projected from the chunk meta
+    columns (the scan reads no payload byte): lineage (``part_id``,
+    ``chunk_seq``, ``chunk_id``, ``row_lo``/``row_hi``, ``n_rows``,
+    ``pds``), the ``doc_id_min``/``doc_id_max`` zone map, and the
+    ``tokens`` lane as ``values_*``: ``values_codec`` is its token stream's
+    codec (the lane's codec name is ``<lengths>+<tokens>``), the sizes are
+    the whole lane's, and ``n_values`` — the chunk's token count — is exact
+    from the lane's raw size (4 bytes per row length and per token)."""
+    from .table import read_table_chunks
 
-
-def read_chunks(spark: SparkSession, out_dir: str, io: FsIO | None = None) -> DataFrame:
-    """Log-gated chunk-file scan of a token store (see `_read_live_chunks`)."""
-    return _read_live_chunks(spark, out_dir, _io(out_dir, io), CHUNK_SCHEMA)
+    return read_table_chunks(spark, out_dir, io).select(
+        "part_id", "chunk_seq", "chunk_id", "row_lo", "row_hi", "n_rows",
+        F.expr("(tokens__raw - 4 * n_rows) div 4").alias("n_values"),
+        F.col("doc_id__min").alias("doc_id_min"),
+        F.col("doc_id__max").alias("doc_id_max"),
+        "pds",
+        F.element_at(F.split("tokens__codec", r"\+"), -1).alias("values_codec"),
+        F.col("tokens__raw").alias("values_raw_bytes"),
+        F.col("tokens__enc").alias("values_enc_bytes"),
+    )
 
 
 def listed_data_files(io: FsIO) -> list[str]:

@@ -1,8 +1,9 @@
 """Generic table encode/decode: ANY flat DataFrame -> per-column codec'd chunks.
 
-The token pipeline (``encode.py``) is specialized to the north rule's fixed
-``(doc_id, tokens, n_tok, source)`` shape. This module is the schema-driven
-generalization the reference's design implies: its flattener emits one flat
+This is the engine's one columnar store; the token pipeline (``encode.py``,
+``decode.py``) is this store over the north rule's fixed
+``(doc_id, tokens, n_tok, source)`` shape. It is the schema-driven
+design the reference implies: its flattener emits one flat
 extension table per nested record/array/map
 (``/root/reference/.../Pandora/Apache/Parquet.fs:444-467, 880-946``), and each
 such table's columns span the full Avro physical-type set — BOOLEAN, INT, LONG,
@@ -14,14 +15,14 @@ reference's flatten-then-store contract) and writes per-column, per-chunk
 auto-selected codec payloads; ``decode_table`` reproduces the input
 bit-identically, nulls included.
 
-Physical design (mirrors the token pipeline, so every scale property carries
-over):
+Physical design:
 
 * one salted shuffle (``part_id = pmod(xxhash64(*key_cols), n_parts)``) into a
   grouped-map Arrow kernel — or none in scan mode;
 * each partition sorts by the key columns (zone maps ``key_min``/``key_max``
-  per chunk), slices into ``chunk_rows`` chunks, and encodes every column
-  independently with the sampled cost model (``plans/cost.py``);
+  per chunk), slices into chunks of at most ``chunk_rows`` rows and
+  ``encode.DEFAULT_CHUNK_VALUES`` array/map elements, and encodes every
+  column independently with the sampled cost model (``plans/cost.py``);
 * lane mapping: int8/16/32, date32 and bool ride the int32 codec family;
   int64, timestamp and decimal(<=18) unscaled ride int64; decimal(19..38)
   rides TWO codec'd int64 word streams (lo/hi halves of the 128-bit unscaled
@@ -35,8 +36,8 @@ over):
 * chunk files carry one top-level column per (source column x
   {codec,nulls,raw,enc,valid,payload}) so BOTH the manifest scan and selective
   decode get parquet column pruning (read 2 of 40 columns -> scan 2 of 40);
-* checkpoints, resume, FsIO publication, and the numbered-JSONL commit log are
-  shared with the token pipeline (``encode.py``) — the ``_schema.json``
+* checkpoints, resume, FsIO publication, and the numbered-JSONL commit log
+  live in ``encode.py`` — the ``_schema.json``
   sidecar plays the reference's Delta ``metaData.schemaString`` role
   (``DeltaLake.fs:176-444``) so a reader needs nothing but the output dir;
 * table lifecycle: loads are run-namespaced appends (``run=``) with
@@ -68,7 +69,8 @@ from ..functions import codecs as C
 from ..functions.fsio import FsIO
 from ..functions.hashing import klondike, sha256
 from ..plans.cost import select_int_codec, select_str_codec, select_typed_codec
-from .encode import (_io, listed_data_files, log_snapshot, part_id_frame,
+from .encode import (DEFAULT_CHUNK_VALUES, _io, completed_parts,
+                     listed_data_files, log_snapshot, part_id_frame,
                      write_commit_log)
 
 DEFAULT_CHUNK_ROWS = 65536
@@ -952,9 +954,9 @@ def _encode_column(arr: pa.Array, logical: str) -> tuple[bytes | None, bytes, in
 
     ``raw_bytes`` is the uncompressed lane footprint (lane width x rows, or
     blob + offsets for byte lanes) — the denominator of the compression ratio.
-    Array lanes (the token pipeline's layout generalized) store a composite
-    payload: length-prefixed row-lengths stream + flattened element stream —
-    int32 elements ride the GROUPED adaptive cascade exactly like tokens.
+    Array lanes store a composite payload: length-prefixed row-lengths
+    stream + flattened element stream — int32 elements (a token store's
+    ``tokens``) ride the GROUPED adaptive cascade.
     """
     import struct as _struct
 
@@ -1076,8 +1078,11 @@ def _encode_column(arr: pa.Array, logical: str) -> tuple[bytes | None, bytes, in
 
 
 def _min_max(arr: pa.Array):
-    """(min, max) of the non-null values, or (None, None) when empty/all-null
-    or the type has no min_max kernel."""
+    """(min, max) of the non-null values in Spark's order, or (None, None)
+    when empty/all-null or the type has no min_max kernel. Spark orders NaN
+    above every other float, but ``pc.min_max`` skips it: a float chunk
+    holding a NaN records it as its max, and one holding only NaNs as its
+    min too."""
     import pyarrow.compute as pc
 
     if arr.null_count == len(arr):
@@ -1086,7 +1091,14 @@ def _min_max(arr: pa.Array):
         mm = pc.min_max(arr)
     except (pa.ArrowNotImplementedError, pa.ArrowInvalid, pa.ArrowTypeError):
         return None, None  # e.g. list types have no min_max kernel
-    return mm["min"].as_py(), mm["max"].as_py()
+    lo, hi = mm["min"].as_py(), mm["max"].as_py()
+    if pa.types.is_floating(arr.type):
+        n_nan = pc.sum(pc.is_nan(arr)).as_py() or 0
+        if n_nan:
+            hi = math.nan
+            if n_nan == len(arr) - arr.null_count:
+                lo = math.nan
+    return lo, hi
 
 
 def _validity_buffer(mask: np.ndarray) -> pa.Buffer:
@@ -1417,10 +1429,11 @@ def _comparable(stat, lit):
     num = (int, float, Decimal)
     if isinstance(stat, num) and isinstance(lit, num):
         if isinstance(stat, float) or isinstance(lit, float):
-            # Spark widens to double; a NaN literal never prunes
+            # Spark widens to double and orders a NaN stat above every
+            # value; a NaN literal never prunes
             if lit != lit:
                 raise TypeError
-            return float(stat), float(lit)
+            return _order_key(float(stat)), _order_key(float(lit))
         return stat, lit
     if isinstance(stat, datetime) or isinstance(lit, datetime):
         # only instants compare alike: a naive literal's zone is the
@@ -1471,7 +1484,9 @@ def _stats_may_match(fs: _FileStats, conjuncts: list, logicals: dict) -> bool:
         if op == "notnull":
             continue
         if logicals[col] in ("float", "double") and op in ("gt", "ge"):
-            continue  # NaN rows pass > and >=; zone maps do not record them
+            # NaN rows pass > and >=; stores written before chunk zone maps
+            # recorded NaN as the max hold file stats that leave them out
+            continue
         lo, hi = fs.mins.get(col), fs.maxs.get(col)
         if lo is not None and hi is not None and not _range_may_hold(op, lit, lo, hi):
             return False
@@ -1494,16 +1509,57 @@ def _plan_files(io: FsIO, spec: TableSpec, snap,
 # ------------------------------------------------------------- encode driver
 
 
+def _chunk_boundaries(elems: np.ndarray, max_rows: int,
+                      max_values: int) -> list[tuple[int, int]]:
+    """Greedy row ranges of at most ``max_rows`` rows and ``max_values``
+    elements (``elems`` per row); a single huge row still gets its own
+    chunk."""
+    n = len(elems)
+    cum = np.concatenate(([0], np.cumsum(elems)))
+    bounds = []
+    lo = 0
+    while lo < n:
+        # furthest hi with cum[hi] - cum[lo] <= max_values
+        hi_vals = int(np.searchsorted(cum, cum[lo] + max_values, side="right")) - 1
+        hi = max(lo + 1, min(lo + max_rows, n, hi_vals))
+        bounds.append((lo, hi))
+        lo = hi
+    return bounds
+
+
+def _publish_chunk_file(io: FsIO, chunks: pa.Table, path: str, tag: str,
+                        spec: TableSpec) -> tuple[int, str]:
+    """Publish one chunk file; returns its (size, sha256). Payload and
+    validity columns are stored uncompressed (they are codec output) and
+    without parquet statistics, which would only copy payload prefixes into
+    the footer. Float zone columns carry none either: the parquet writer
+    skips NaN, so a footer max could rule out a chunk whose max is NaN."""
+    payload_cols = [f.name for f in spec.schema.fields]
+    return io.publish_parquet(
+        chunks, path, attempt_tag=tag,
+        compression={f"{c}__payload": "NONE" for c in payload_cols}
+        | {f"{c}__valid": "NONE" for c in payload_cols}
+        | {"__default__": "SNAPPY"},
+        use_dictionary=False,
+        write_statistics=[
+            f.name for f in chunk_schema_for(spec).fields
+            if not f.name.endswith(("__payload", "__valid")) and f.name != "sha"
+            and not isinstance(f.dataType, (T.FloatType, T.DoubleType))
+        ],
+    )
+
+
 def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
                             chunk_rows: int, pds: date,
                             fail_parts=None, run: str = "r0",
                             marker_dir: str = "_checkpoints",
                             sort_cols: list[str] | None = None,
                             pds_from_col: bool = False) -> pa.Table:
-    """Grouped-map kernel: one part_id's rows -> one chunk parquet file +
-    checkpoint marker (same publication contract as the token kernel).
-    ``run`` namespaces files/markers so append runs into one table dir never
-    collide with earlier runs' parts.
+    """Grouped-map kernel: one part_id's rows -> one chunk parquet file,
+    then its checkpoint marker (a crash between the two leaves an orphan
+    the marker-gated commit never adds). ``run`` namespaces files/markers
+    so append runs into one table dir never collide with earlier runs'
+    parts.
 
     ``marker_dir`` defaults to the resume/commit checkpoint dir; rewrite jobs
     (:func:`delete_where` / :func:`merge_table`) pass ``"_rewrites"`` so their
@@ -1543,8 +1599,15 @@ def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
     t_kernel0 = time.perf_counter()
     rows: list[dict] = []
     payload_cols = [f.name for f in spec.schema.fields]
-    for seq, lo in enumerate(range(0, n, chunk_rows)):
-        hi = min(lo + chunk_rows, n)
+    # per-row element count summed over the array and map lanes: a chunk
+    # holds at most chunk_rows rows AND DEFAULT_CHUNK_VALUES elements
+    elems = np.zeros(n, np.int64)
+    for name in payload_cols:
+        if logicals[name].startswith(("array<", "map<")):
+            offs = table.column(name).combine_chunks().offsets
+            elems += np.diff(offs.to_numpy(zero_copy_only=False))
+    for seq, (lo, hi) in enumerate(_chunk_boundaries(elems, chunk_rows,
+                                                     DEFAULT_CHUNK_VALUES)):
         key_mm = (
             (key0[lo].as_py(), key0[hi - 1].as_py()) if key_sorted
             else _min_max(key0.slice(lo, hi - lo))
@@ -1593,21 +1656,8 @@ def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
     tag = uuid.uuid4().hex[:8]
     file_name = f"part-{run}-{part_id:05d}.parquet"
     t_write0 = time.perf_counter()
-    file_size, file_sha = io.publish_parquet(
-        out,
-        posixpath.join(data_dir, file_name),
-        attempt_tag=tag,
-        compression={f"{c}__payload": "NONE" for c in payload_cols}
-        | {f"{c}__valid": "NONE" for c in payload_cols}
-        | {"__default__": "SNAPPY"},
-        # see encode.py: parquet stats on binary payloads are pure footer
-        # bloat; keep stats only on the prunable/meta columns
-        use_dictionary=False,
-        write_statistics=[
-            f.name for f in chunk_schema_for(spec).fields
-            if not f.name.endswith(("__payload", "__valid")) and f.name != "sha"
-        ],
-    )
+    file_size, file_sha = _publish_chunk_file(
+        io, out, posixpath.join(data_dir, file_name), tag, spec)
     stats = {
         "run": run,
         "part_id": part_id,
@@ -1635,49 +1685,16 @@ def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
     )
 
 
-def completed_table_parts(out_dir: str, run: str = "r0",
-                          io: FsIO | None = None) -> list[int]:
-    """Part ids of ``run`` with a checkpoint marker (the resume identity —
-    per run, so append runs into one dir never mask each other)."""
-    io = _io(out_dir, io)
-    d = io.join("_checkpoints")
-    prefix = f"part-{run}-"
-    return sorted(
-        int(f[len(prefix):-len(".json")])
-        for f in io.listdir(d)
-        if f.startswith(prefix) and f.endswith(".json")
-    )
-
-
-def encode_table(df: DataFrame, out_dir: str, key_cols: list[str],
-                 n_parts: int = 64, chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                 pds: date | None = None,
-                 fail_parts: set[int] | None = None,
-                 io: FsIO | None = None,
-                 run: str = "r0",
-                 bloom_cols: list[str] | None = None,
-                 pds_col: str | None = None) -> DataFrame:
-    """Encode any supported-typed DataFrame; returns the manifest (long form).
-
-    Same plan as :func:`..operators.encode.encode_tokens`: salted shuffle on
-    ``xxhash64(*key_cols)``, anti-join completed checkpoints (resume), one
-    grouped-map Arrow kernel, commit log at the end. ``key_cols`` provide the
-    salt, the intra-chunk sort order, and the ``key_min/key_max`` zone maps.
-
-    ``run`` is the append identity: a second load into the same dir uses a
-    new run id (its files/markers are namespaced ``part-<run>-``), and may
-    carry an evolved schema — appended columns must be nullable; earlier
-    runs' chunks decode them as null (:func:`_prepare_spec`).
-
-    ``pds_col`` (a non-null ``date`` column) turns on DATE-PARTITIONED
-    layout — the reference's ``partitionColumns=["pj_pds"]`` contract
-    (``DeltaLake.fs:288``): rows group by (date, salt), each file/chunk
-    carries its own date as ``pds`` (commit-log ``partitionValues``, chunk
-    zone column), so date-range reads prune whole files via
-    ``chunk_filter`` on ``pds`` exactly like Hive/Delta partition pruning.
-    The distinct-date set is collected to the driver (bounded — dates are a
-    partition key, not data); ``n_parts`` becomes parts PER DATE.
-    """
+def _encode_store(df: DataFrame, out_dir: str, key_cols: list[str],
+                  n_parts: int | None, chunk_rows: int, pds: date | None,
+                  fail_parts: set[int] | None, io: FsIO | None, run: str,
+                  bloom_cols: list[str] | None = None,
+                  pds_col: str | None = None) -> None:
+    """The encode job behind :func:`encode_table` (salted shuffle into
+    ``n_parts`` groups) and :func:`encode_table_scan` (``n_parts=None``:
+    each scan partition is an encode unit, no shuffle): chunk files and
+    their checkpoint markers, then one commit-log entry. Part ids with a
+    marker of ``run`` are skipped (resume)."""
     spark = df.sparkSession
     pds = pds or date(2026, 1, 1)
     io = _io(out_dir, io)
@@ -1693,48 +1710,100 @@ def encode_table(df: DataFrame, out_dir: str, key_cols: list[str],
     spec = _prepare_spec(io, _struct_lane_nullable(df.schema, structs),
                          list(key_cols), bloom_cols, pds_col,
                          structs=structs)
-    # appends into a date-partitioned table inherit its partition column
-    pds_col = pds_col or spec.pds_col
-
-    salt = F.pmod(F.xxhash64(*key_cols), F.lit(n_parts)).cast("int")
-    if pds_col is not None:
-        if not isinstance(df.schema[pds_col].dataType, T.DateType):
-            raise ValueError(f"pds_col {pds_col!r} must be a date column")
-        raw = [r[0] for r in df.select(pds_col).distinct().collect()]
-        if any(d is None for d in raw):
-            raise ValueError(f"pds_col {pds_col!r} contains nulls")
-        dates = sorted(raw)
-        date_idx = spark.createDataFrame(
-            [(d, i) for i, d in enumerate(dates)], f"{pds_col} date, __didx int"
-        )
-        keyed = (
-            df.join(F.broadcast(date_idx), pds_col)
-            .withColumn("part_id", (F.col("__didx") * n_parts + salt).cast("int"))
-            .withColumn("__pds", F.col(pds_col))
-            .drop("__didx")
-        )
-    else:
-        keyed = df.withColumn("part_id", salt)
-    done = completed_table_parts(out_dir, run, io)
-    if done:
-        keyed = keyed.join(F.broadcast(part_id_frame(spark, done)),
-                           "part_id", "left_anti")
-
+    done = completed_parts(out_dir, io, run)
     full = chunk_schema_for(spec)
     manifest_struct = T.StructType(
         [f for f in full.fields
          if not (f.name.endswith("__payload") or f.name.endswith("__valid"))]
     )
 
-    def kernel(table: pa.Table) -> pa.Table:
-        return _encode_table_partition(table, io, spec, chunk_rows, pds,
-                                       fail_parts=fail_parts, run=run,
-                                       pds_from_col=pds_col is not None)
+    if n_parts is None:
+        def gen(batches):
+            from pyspark import TaskContext
 
-    result = keyed.groupBy("part_id").applyInArrow(kernel, schema=manifest_struct)
+            pid = TaskContext.get().partitionId()
+            if pid in done:
+                return
+            collected = list(batches)
+            if not collected or sum(b.num_rows for b in collected) == 0:
+                return
+            table = pa.Table.from_batches(collected)
+            table = table.append_column(
+                "part_id", pa.array(np.full(table.num_rows, pid, np.int32))
+            )
+            yield from _encode_table_partition(
+                table, io, spec, chunk_rows, pds, fail_parts=fail_parts, run=run
+            ).to_batches()
+
+        result = df.mapInArrow(gen, schema=manifest_struct)
+    else:
+        # appends into a date-partitioned table inherit its partition column
+        pds_col = pds_col or spec.pds_col
+        salt = F.pmod(F.xxhash64(*key_cols), F.lit(n_parts)).cast("int")
+        if pds_col is not None:
+            if not isinstance(df.schema[pds_col].dataType, T.DateType):
+                raise ValueError(f"pds_col {pds_col!r} must be a date column")
+            raw = [r[0] for r in df.select(pds_col).distinct().collect()]
+            if any(d is None for d in raw):
+                raise ValueError(f"pds_col {pds_col!r} contains nulls")
+            dates = sorted(raw)
+            date_idx = spark.createDataFrame(
+                [(d, i) for i, d in enumerate(dates)], f"{pds_col} date, __didx int"
+            )
+            keyed = (
+                df.join(F.broadcast(date_idx), pds_col)
+                .withColumn("part_id", (F.col("__didx") * n_parts + salt).cast("int"))
+                .withColumn("__pds", F.col(pds_col))
+                .drop("__didx")
+            )
+        else:
+            keyed = df.withColumn("part_id", salt)
+        if done:
+            keyed = keyed.join(F.broadcast(part_id_frame(spark, done)),
+                               "part_id", "left_anti")
+
+        def kernel(table: pa.Table) -> pa.Table:
+            return _encode_table_partition(table, io, spec, chunk_rows, pds,
+                                           fail_parts=fail_parts, run=run,
+                                           pds_from_col=pds_col is not None)
+
+        result = keyed.groupBy("part_id").applyInArrow(kernel, schema=manifest_struct)
     result.write.format("noop").mode("overwrite").save()
-    write_commit_log(out_dir, pds, io, schema_json=full.json())
-    return read_table_manifest(spark, out_dir, io)
+    write_commit_log(out_dir, pds, io)
+
+
+def encode_table(df: DataFrame, out_dir: str, key_cols: list[str],
+                 n_parts: int = 64, chunk_rows: int = DEFAULT_CHUNK_ROWS,
+                 pds: date | None = None,
+                 fail_parts: set[int] | None = None,
+                 io: FsIO | None = None,
+                 run: str = "r0",
+                 bloom_cols: list[str] | None = None,
+                 pds_col: str | None = None) -> DataFrame:
+    """Encode any supported-typed DataFrame; returns the manifest (long form).
+
+    Plan: salted shuffle on ``xxhash64(*key_cols)``, anti-join completed
+    checkpoints (resume), one grouped-map Arrow kernel, commit log at the
+    end. ``key_cols`` provide the salt, the intra-chunk sort order, and the
+    ``key_min/key_max`` zone maps.
+
+    ``run`` is the append identity: a second load into the same dir uses a
+    new run id (its files/markers are namespaced ``part-<run>-``), and may
+    carry an evolved schema — appended columns must be nullable; earlier
+    runs' chunks decode them as null (:func:`_prepare_spec`).
+
+    ``pds_col`` (a non-null ``date`` column) turns on DATE-PARTITIONED
+    layout — the reference's ``partitionColumns=["pj_pds"]`` contract
+    (``DeltaLake.fs:288``): rows group by (date, salt), each file/chunk
+    carries its own date as ``pds`` (commit-log ``partitionValues``, chunk
+    zone column), so date-range reads prune whole files via
+    ``chunk_filter`` on ``pds`` exactly like Hive/Delta partition pruning.
+    The distinct-date set is collected to the driver (bounded — dates are a
+    partition key, not data); ``n_parts`` becomes parts PER DATE.
+    """
+    _encode_store(df, out_dir, key_cols, n_parts, chunk_rows, pds,
+                  fail_parts, io, run, bloom_cols, pds_col)
+    return read_table_manifest(df.sparkSession, out_dir, io)
 
 
 def encode_table_scan(df: DataFrame, out_dir: str, key_cols: list[str],
@@ -1744,53 +1813,18 @@ def encode_table_scan(df: DataFrame, out_dir: str, key_cols: list[str],
                       io: FsIO | None = None,
                       run: str = "r0") -> DataFrame:
     """Map-only generic encode: each *scan partition* is the encode unit —
-    scan → ``mapInArrow`` → chunk files, **no shuffle at all** (the table
-    analog of :func:`..operators.encode.encode_tokens_scan`, with the same
-    resume-by-deterministic-partition-id contract). Use for curated inputs
-    whose files already spread the data; :func:`encode_table` (salted
-    shuffle) remains the path for skewed or hot-keyed sources."""
-    spark = df.sparkSession
-    pds = pds or date(2026, 1, 1)
-    io = _io(out_dir, io)
-    if "part_id" in df.columns:
-        raise ValueError("'part_id' is a reserved column name")
-    for k in key_cols:
-        if k not in df.columns:
-            raise ValueError(f"key column {k!r} not in DataFrame")
-        if isinstance(df.schema[k].dataType, T.StructType):
-            raise ValueError(f"key column {k!r} may not be a struct")
-    df, structs = flatten_struct_columns(df)
-    spec = _prepare_spec(io, _struct_lane_nullable(df.schema, structs),
-                         list(key_cols), structs=structs)
-    done = set(completed_table_parts(out_dir, run, io))
+    scan → ``mapInArrow`` → chunk files, **no shuffle at all**, for curated
+    inputs whose files already spread the data; :func:`encode_table`
+    (salted shuffle) remains the path for skewed or hot-keyed sources.
 
-    full = chunk_schema_for(spec)
-    manifest_struct = T.StructType(
-        [f for f in full.fields
-         if not (f.name.endswith("__payload") or f.name.endswith("__valid"))]
-    )
-
-    def gen(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        if pid in done:
-            return
-        collected = list(batches)
-        if not collected or sum(b.num_rows for b in collected) == 0:
-            return
-        table = pa.Table.from_batches(collected)
-        table = table.append_column(
-            "part_id", pa.array(np.full(table.num_rows, pid, np.int32))
-        )
-        yield from _encode_table_partition(
-            table, io, spec, chunk_rows, pds, fail_parts=fail_parts, run=run
-        ).to_batches()
-
-    result = df.mapInArrow(gen, schema=manifest_struct)
-    result.write.format("noop").mode("overwrite").save()
-    write_commit_log(out_dir, pds, io, schema_json=full.json())
-    return read_table_manifest(spark, out_dir, io)
+    Resume: partition ids are the encode identity. Spark's file-split
+    planning is deterministic for a static input + fixed reader conf, so a
+    restart maps rows to the same partition ids; partitions with a
+    checkpoint marker short-circuit (their input is re-scanned but neither
+    re-encoded nor re-written)."""
+    _encode_store(df, out_dir, key_cols, None, chunk_rows, pds,
+                  fail_parts, io, run)
+    return read_table_manifest(df.sparkSession, out_dir, io)
 
 
 def compact_table(out_dir: str, io: FsIO | None = None,
@@ -1844,7 +1878,6 @@ def compact_table(out_dir: str, io: FsIO | None = None,
     arrow_schema = to_arrow_schema(
         T.StructType([T.StructField(f.name, f.dataType, True) for f in chunk_schema.fields])
     )
-    payload_cols = [f.name for f in spec.schema.fields]
     data_dir = io.join("data")
     tag = uuid.uuid4().hex[:8]
     entries: list[dict] = [
@@ -1863,19 +1896,8 @@ def compact_table(out_dir: str, io: FsIO | None = None,
         ]
         merged = _promote_to(tables, arrow_schema)
         name = f"part-compact{tag}-{i:05d}.parquet"
-        size, sha = io.publish_parquet(
-            merged,
-            posixpath.join(data_dir, name),
-            attempt_tag=tag,
-            compression={f"{c}__payload": "NONE" for c in payload_cols}
-            | {f"{c}__valid": "NONE" for c in payload_cols}
-            | {"__default__": "SNAPPY"},
-            use_dictionary=False,
-            write_statistics=[
-                f.name for f in chunk_schema.fields
-                if not f.name.endswith(("__payload", "__valid")) and f.name != "sha"
-            ],
-        )
+        size, sha = _publish_chunk_file(
+            io, merged, posixpath.join(data_dir, name), tag, spec)
         new_files += 1
         # chunk rows move verbatim, so the merged file's stats are the
         # fold of its sources'
@@ -1907,8 +1929,17 @@ def _promote_to(tables: list[pa.Table], arrow_schema: pa.Schema) -> pa.Table:
 
 
 def read_table_spec(out_dir: str, io: FsIO | None = None) -> TableSpec:
+    """The store's ``_schema.json`` sidecar. A directory without one (such
+    as a token store written before token stores became table stores) is
+    refused: nothing else says how to read its chunk files."""
     io = _io(out_dir, io)
-    return TableSpec.from_json(io.read_text(io.join("_schema.json")))
+    sidecar = io.join("_schema.json")
+    if not io.exists(sidecar):
+        raise ValueError(
+            f"{out_dir!r} has no _schema.json sidecar, so it is not a store "
+            "this engine can read; re-encode it from its source"
+        )
+    return TableSpec.from_json(io.read_text(sidecar))
 
 
 def read_table_chunks(spark: SparkSession, out_dir: str,
@@ -1976,7 +2007,7 @@ def decode_table(spark: SparkSession, out_dir: str,
 
     ``columns`` selects a subset — only those payload/validity columns are
     read (parquet column pruning at the chunk scan) and decoded; the plan is a
-    shuffle-free ``mapInArrow`` either way, mirroring ``decode.decode_tokens``.
+    shuffle-free ``mapInArrow`` either way.
     ``chunk_filter`` (a Column over the chunk meta fields, e.g. a
     ``key_min``/``key_max`` zone-map predicate) prunes whole chunks at the
     parquet scan before any payload is read. ``as_of`` time-travels to the
@@ -2392,8 +2423,11 @@ def column_range_filter(name: str, lo, hi):
     range (all-null chunks have NULL stats and are pruned by null semantics).
     Pass to :func:`decode_table` as ``chunk_filter``; combine with ``&``/``|``
     for conjunctive predicates. The caller applies the residual row filter
-    after decode (zone maps prune chunks, not rows)."""
-    return (F.col(f"{name}__max") >= F.lit(lo)) & (F.col(f"{name}__min") <= F.lit(hi))
+    after decode (zone maps prune chunks, not rows). A ``None`` bound leaves
+    that side of the range open."""
+    lo_ok = F.lit(True) if lo is None else F.col(f"{name}__max") >= F.lit(lo)
+    hi_ok = F.lit(True) if hi is None else F.col(f"{name}__min") <= F.lit(hi)
+    return lo_ok & hi_ok
 
 
 # ----------------------------------------------- metadata-only statistics

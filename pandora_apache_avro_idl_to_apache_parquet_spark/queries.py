@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 from .functions.hashing import duck_md5_int, duck_md5_long, spark_md5_int, spark_md5_long
 from .operators import dedup, flatten, multimodal, similarity, sketches, text
 from .operators.decode import decode_tokens
-from .operators.encode import encode_tokens, read_manifest
+from .operators.encode import completed_parts, encode_tokens, read_manifest
 
 # --------------------------------------------------------------------- tables
 
@@ -115,13 +115,12 @@ DUCK_TOK_ROWS = (
 # resume path).
 
 _ENCODE_PARTS = 8
-_FORMAT_TAG = "v7"  # bump to bust the /tmp encode cache on payload-affecting changes
+_FORMAT_TAG = "v8"  # bump to bust the /tmp encode cache on payload-affecting changes
 
 
 def _encode_dir(spark: SparkSession, sf_dir: str) -> str:
     key = hashlib.md5(f"{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()).hexdigest()[:10]
     out = os.path.join(tempfile.gettempdir(), f"pandora_engine_enc_{key}")
-    from .operators.encode import completed_parts
 
     if sorted(completed_parts(out)) != list(range(_ENCODE_PARTS)):
         shutil.rmtree(out, ignore_errors=True)
@@ -161,7 +160,6 @@ def q_iceberg_encode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain (`sources/iceberg.read_iceberg`), encodes through the flagship
     codec path, decodes, and explodes — the oracle derives the same tokens
     from `documents` having seen neither Iceberg nor the codecs."""
-    from .operators.encode import completed_parts
     from .sources.iceberg import read_iceberg, write_iceberg
 
     key = hashlib.md5(
@@ -205,12 +203,13 @@ FROM toks
 def q_manifest_codec_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard driver signal for the codec-selection path (VERDICT r04 #4,
     retiring the oracle-less ``manifest_codecs``): accounting invariants over
-    the raw encoded chunk files. For each of the four streams the manifest's
-    ``*_enc_bytes`` must equal the physical payload blob bytes actually
-    written; every chosen codec name must come from the registry
-    (`functions.codecs.CODEC_NAMES`); and no chosen codec may lose to PLAIN
-    by more than the fixed chunk header — the cost model always includes
-    PLAIN as a candidate, so a worse choice is a selection bug, not taste.
+    the raw encoded chunk files. For each of the three lanes (``doc_id``,
+    ``source``, ``tokens``) the chunk's ``__enc`` bytes must equal the
+    physical payload blob bytes actually written; every chosen codec name
+    (each ``+``-joined stream of a composite lane) must come from the
+    registry (`functions.codecs.CODEC_NAMES`); and no lane may lose to PLAIN
+    by more than its fixed headers — the cost model always includes PLAIN
+    as a candidate, so a worse choice is a selection bug, not taste.
     total_rows / total_values tie the same files to the source corpus, so
     the DuckDB oracle pins real values, not just tautologies."""
     from .functions import codecs
@@ -221,18 +220,21 @@ def q_manifest_codec_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_stream_eq = []
     per_stream_known = []
     per_stream_within = []
-    for s in ("doc_id", "source", "lengths", "values"):
+    for s in ("doc_id", "source", "tokens"):
         per_stream_eq.append(
-            F.sum(F.length(F.col(f"{s}_payload"))) == F.sum(F.col(f"{s}_enc_bytes"))
+            F.sum(F.length(F.col(f"{s}__payload"))) == F.sum(F.col(f"{s}__enc"))
         )
+        names_known = F.forall(F.split(F.col(f"{s}__codec"), r"\+"),
+                               lambda c: c.isin(known))
         per_stream_known.append(
-            F.max(F.when(F.col(f"{s}_codec").isin(known), 0).otherwise(1)) == F.lit(0)
+            F.max(F.when(names_known, 0).otherwise(1)) == F.lit(0)
         )
-        # PLAIN is enc = raw + 13-byte header (+ tiny codec tables); 64 bytes
-        # of slack bounds every legitimate header in the format.
+        # PLAIN is enc = raw + 13-byte header (+ tiny codec tables) per
+        # stream, plus 16 bytes of stream lengths in a composite lane; 64
+        # bytes of slack bounds every legitimate header in the format.
         per_stream_within.append(
             F.max(
-                F.when(F.col(f"{s}_enc_bytes") > F.col(f"{s}_raw_bytes") + 64, 1)
+                F.when(F.col(f"{s}__enc") > F.col(f"{s}__raw") + 64, 1)
                 .otherwise(0)
             )
             == F.lit(0)
@@ -246,7 +248,8 @@ def q_manifest_codec_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return raw.agg(
         F.sum("n_rows").cast("long").alias("total_rows"),
-        F.sum("n_values").cast("long").alias("total_values"),
+        F.sum(F.expr("(tokens__raw - 4 * n_rows) div 4")).cast("long")
+        .alias("total_values"),
         _all(per_stream_eq).cast("long").alias("payload_bytes_match"),
         _all(per_stream_known).cast("long").alias("codecs_known"),
         _all(per_stream_within).cast("long").alias("enc_within_plain"),
@@ -302,7 +305,7 @@ FROM tok_rows GROUP BY source ORDER BY source
 
 def q_values_only_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-pruned decode path: token histogram moments computed from the
-    lengths/values payloads alone (string payloads never read)."""
+    tokens lane alone (string payloads never read)."""
     from .operators.decode import decode_values_only
 
     out = _encode_dir(spark, sf_dir)
@@ -326,7 +329,7 @@ FROM toks
 
 def q_doc_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selective decode (point lookup): fetch five specific documents through
-    the manifest's doc_id_min/doc_id_max zone map — chunks outside the range
+    the chunks' doc_id zone map — chunks outside the range
     are pruned at the parquet scan, their payloads never read
     (``operators/decode.py:lookup_docs``)."""
     from .operators.decode import lookup_docs
@@ -447,13 +450,13 @@ def _bloom_table_dir(spark: SparkSession, sf_dir: str) -> str:
     """Separate cached encode with per-chunk blooms on the unsorted
     l_partkey column (the shared store's schema stays untouched so its
     round-trip oracles keep their column set)."""
-    from .operators.table import completed_table_parts, encode_table
+    from .operators.table import encode_table
 
     key = hashlib.md5(
         f"tblbloom1:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
     ).hexdigest()[:10]
     out = os.path.join(tempfile.gettempdir(), f"pandora_engine_tblb_{key}")
-    if completed_table_parts(out) != list(range(_TABLE_ENCODE_PARTS)):
+    if completed_parts(out) != list(range(_TABLE_ENCODE_PARTS)):
         shutil.rmtree(out, ignore_errors=True)
         encode_table(
             _t(spark, sf_dir, "lineitem").select(
@@ -494,13 +497,13 @@ def _zorder_table_dir(spark: SparkSession, sf_dir: str) -> str:
     chunks cover small rectangles of that 2-D space, so BOTH columns' zone
     maps prune a 2-D range predicate (a key-sorted layout prunes neither)."""
     from .operators.clustering import zorder_bounds, zorder_key
-    from .operators.table import completed_table_parts, encode_table
+    from .operators.table import encode_table
 
     key = hashlib.md5(
         f"tblz1:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
     ).hexdigest()[:10]
     out = os.path.join(tempfile.gettempdir(), f"pandora_engine_tblz_{key}")
-    if completed_table_parts(out) != list(range(_TABLE_ENCODE_PARTS)):
+    if completed_parts(out) != list(range(_TABLE_ENCODE_PARTS)):
         shutil.rmtree(out, ignore_errors=True)
         base = _t(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
@@ -552,13 +555,13 @@ def _mutable_table_dir(spark: SparkSession, sf_dir: str, kind: str,
     leaves one entry; the rewrite's atomic add+remove entry makes two), so
     bench / oracle re-runs read the post-mutation table without rewriting
     it again."""
-    from .operators.table import completed_table_parts, encode_table
+    from .operators.table import encode_table
 
     key = hashlib.md5(
         f"tblmut1:{kind}:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
     ).hexdigest()[:10]
     out = os.path.join(tempfile.gettempdir(), f"pandora_engine_tblm_{kind}_{key}")
-    if completed_table_parts(out) != list(range(_TABLE_ENCODE_PARTS)):
+    if completed_parts(out) != list(range(_TABLE_ENCODE_PARTS)):
         shutil.rmtree(out, ignore_errors=True)
         encode_table(
             _t(spark, sf_dir, "lineitem").select(
@@ -792,7 +795,7 @@ def q_table_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parquet.fs:948-1039). Variable sizes and NULL maps exercise the
     validity stream; the decoded map explodes to (event_id, key, value)
     rows so the driver hash can canonicalize it."""
-    from .operators.table import completed_table_parts, decode_table, encode_table
+    from .operators.table import decode_table, encode_table
 
     key = hashlib.md5(
         f"tblmap1:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
@@ -809,7 +812,7 @@ def q_table_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("props_map"),
     )
-    if not completed_table_parts(out):
+    if not completed_parts(out):
         shutil.rmtree(out, ignore_errors=True)
         encode_table(ev, out, key_cols=["event_id"],
                      n_parts=_TABLE_ENCODE_PARTS)
@@ -838,7 +841,7 @@ def q_table_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     false ⇒ whole struct null), a null leaf inside a non-null struct, and
     a nested inner struct; the decoded struct projects back to flat
     columns so the driver hash can canonicalize it."""
-    from .operators.table import completed_table_parts, decode_table, encode_table
+    from .operators.table import decode_table, encode_table
 
     key = hashlib.md5(
         f"tblstruct1:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
@@ -855,7 +858,7 @@ def q_table_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("ctx"),
     )
-    if not completed_table_parts(out):
+    if not completed_parts(out):
         shutil.rmtree(out, ignore_errors=True)
         encode_table(ev, out, key_cols=["event_id"],
                      n_parts=_TABLE_ENCODE_PARTS)
@@ -890,7 +893,7 @@ def q_table_array_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     boolean leaf (int lane), and a nested inner struct. The decoded array
     posexplodes back to scalar rows (the driver hash can't hold list
     cells); sentinels only in the compare projection."""
-    from .operators.table import completed_table_parts, decode_table, encode_table
+    from .operators.table import decode_table, encode_table
 
     key = hashlib.md5(
         f"tblarrstruct1:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
@@ -914,7 +917,7 @@ def q_table_array_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
                     (F.col("event_id") % 4).cast("int"))
         ).alias("tags"),
     )
-    if not completed_table_parts(out):
+    if not completed_parts(out):
         shutil.rmtree(out, ignore_errors=True)
         encode_table(ev, out, key_cols=["event_id"],
                      n_parts=_TABLE_ENCODE_PARTS)
@@ -1268,9 +1271,7 @@ def q_table_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the commit log and the ``pds`` zone column — and a one-week read
     prunes all other dates' files before any payload byte is touched.
     Result = the plain SQL date-range filter."""
-    from .operators.table import (
-        completed_table_parts, decode_table, encode_table,
-    )
+    from .operators.table import decode_table, encode_table
 
     key = hashlib.md5(
         f"tblpds1:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
@@ -1280,7 +1281,7 @@ def q_table_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "event_type", "value",
         F.to_date("ts").alias("day"),
     )
-    if not completed_table_parts(out):
+    if not completed_parts(out):
         shutil.rmtree(out, ignore_errors=True)
         encode_table(ev, out, key_cols=["event_id"], n_parts=1,
                      pds_col="day")
@@ -1472,13 +1473,13 @@ SELECT 'flag_n', count(*), count(*) FILTER (WHERE l_returnflag = 'N'),
 
 
 def _table_encode_dir(spark: SparkSession, sf_dir: str) -> str:
-    from .operators.table import completed_table_parts, encode_table
+    from .operators.table import encode_table
 
     key = hashlib.md5(
         f"tbl8:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
     ).hexdigest()[:10]
     out = os.path.join(tempfile.gettempdir(), f"pandora_engine_tbl_{key}")
-    if completed_table_parts(out) != list(range(_TABLE_ENCODE_PARTS)):
+    if completed_parts(out) != list(range(_TABLE_ENCODE_PARTS)):
         shutil.rmtree(out, ignore_errors=True)
         encode_table(
             _table_encode_input(spark, sf_dir), out,
@@ -1602,13 +1603,13 @@ def q_table_embeddings_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare canonicalizes scalar cells only (raw list cells are unhashable
     in a pandas sort); element-level bit-exactness is preserved — the
     float32→double cast is exact in both engines."""
-    from .operators.table import completed_table_parts, decode_table, encode_table
+    from .operators.table import decode_table, encode_table
 
     key = hashlib.md5(
         f"emb1:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
     ).hexdigest()[:10]
     out = os.path.join(tempfile.gettempdir(), f"pandora_engine_emb_{key}")
-    if completed_table_parts(out) != list(range(4)):
+    if completed_parts(out) != list(range(4)):
         shutil.rmtree(out, ignore_errors=True)
         encode_table(_t(spark, sf_dir, "embeddings"), out,
                      key_cols=["vec_id"], n_parts=4)
@@ -1637,7 +1638,7 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the even-key subset — the oracle is that subset in SQL, so a
     version leak in either direction fails the row/hash compare."""
     from .operators.encode import log_versions
-    from .operators.table import completed_table_parts, decode_table, encode_table
+    from .operators.table import decode_table, encode_table
 
     key = hashlib.md5(
         f"tt1:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
@@ -1645,8 +1646,8 @@ def q_table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(tempfile.gettempdir(), f"pandora_engine_tt_{key}")
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    if (completed_table_parts(out, "even") != list(range(4))
-            or completed_table_parts(out, "odd") != list(range(4))):
+    if (completed_parts(out, run="even") != list(range(4))
+            or completed_parts(out, run="odd") != list(range(4))):
         shutil.rmtree(out, ignore_errors=True)
         encode_table(li.filter("l_orderkey % 2 = 0"), out,
                      key_cols=["l_orderkey", "l_linenumber"], n_parts=4, run="even")

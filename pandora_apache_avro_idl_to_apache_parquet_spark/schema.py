@@ -1,17 +1,16 @@
-"""Schemas: the token input table, the chunk table, and the manifest view.
+"""The token input table's schema.
 
 The input shape is fixed by ``BASELINE.json#input_hint``:
-``(doc_id:string, tokens:array<int32>, n_tok:int32, source:string)``.
-
-The chunk table is the engine's flatten-to-extension-tables output — the Spark
-re-expression of the reference's per-FQDN child tables with ``pj_*`` lineage
-columns (``/root/reference/.../Pandora/Apache/Parquet.fs:444-467``): each chunk
-row carries deterministic lineage (``chunk_id``/``part_id``/``row_lo``..) instead
-of random GUID ``pj_uid``s, and one self-describing encoded payload per logical
-column instead of exploded one-row-per-item children (``Parquet.fs:880-946``) —
-semantically the same extension table, physically columnar (values + offsets).
-The manifest is a projection of the chunk table minus payloads; Parquet column
-pruning means reading the manifest never touches payload bytes.
+``(doc_id:string, tokens:array<int32>, n_tok:int32, source:string)``. A
+token store keeps it as a table store (``operators/table.py``): the chunk
+table is the engine's flatten-to-extension-tables output — the Spark
+re-expression of the reference's per-FQDN child tables with ``pj_*``
+lineage columns (``/root/reference/.../Pandora/Apache/Parquet.fs:444-467``):
+each chunk row carries deterministic lineage (``chunk_id``/``part_id``/
+``row_lo``..) instead of random GUID ``pj_uid``s, and one self-describing
+encoded payload per logical column instead of exploded one-row-per-item
+children (``Parquet.fs:880-946``). ``n_tok`` is not stored; decode derives
+it from ``tokens``.
 """
 
 from __future__ import annotations
@@ -24,46 +23,5 @@ TOKENS_SCHEMA = T.StructType(
         T.StructField("tokens", T.ArrayType(T.IntegerType(), False), False),
         T.StructField("n_tok", T.IntegerType(), False),
         T.StructField("source", T.StringType(), False),
-    ]
-)
-
-# logical columns inside a chunk; "values" is the flattened token stream and
-# "lengths" its per-row offsets (the vectorized explode of SURVEY.md Part C)
-CHUNK_COLUMNS = ("doc_id", "source", "lengths", "values")
-
-_chunk_fields = [
-    T.StructField("part_id", T.IntegerType(), False),
-    T.StructField("chunk_seq", T.IntegerType(), False),
-    T.StructField("chunk_id", T.StringType(), False),
-    T.StructField("row_lo", T.LongType(), False),
-    T.StructField("row_hi", T.LongType(), False),
-    T.StructField("n_rows", T.LongType(), False),
-    T.StructField("n_values", T.LongType(), False),
-    T.StructField("doc_id_min", T.StringType(), False),
-    T.StructField("doc_id_max", T.StringType(), False),
-    T.StructField("sha", T.BinaryType(), False),
-    T.StructField("pds", T.DateType(), False),
-]
-for _c in CHUNK_COLUMNS:
-    _chunk_fields += [
-        T.StructField(f"{_c}_codec", T.StringType(), False),
-        T.StructField(f"{_c}_raw_bytes", T.LongType(), False),
-        T.StructField(f"{_c}_enc_bytes", T.LongType(), False),
-        T.StructField(f"{_c}_payload", T.BinaryType(), False),
-    ]
-
-CHUNK_SCHEMA = T.StructType(_chunk_fields)
-
-MANIFEST_COLUMNS = [f.name for f in _chunk_fields if not f.name.endswith("_payload")]
-
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("n_chunks", T.IntegerType(), False),
-        T.StructField("n_rows", T.LongType(), False),
-        T.StructField("n_values", T.LongType(), False),
-        T.StructField("enc_bytes", T.LongType(), False),
-        T.StructField("raw_bytes", T.LongType(), False),
-        T.StructField("status", T.StringType(), False),
     ]
 )

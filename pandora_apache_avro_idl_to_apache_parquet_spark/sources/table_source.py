@@ -343,18 +343,21 @@ def _decode_file_batches(path: str, spec_json: str, names: list[str],
         mn, mx, nl = f"{c}__min", f"{c}__max", f"{c}__nulls"
         if op in _COMPARE_OPS and not (mn in present and mx in present):
             return  # column predates file: all-null, no row matches
+        # a NaN max is above every value in Spark's order, never in Arrow's
+        nan_max = (pc.is_nan(pc.field(mx))
+                   if logicals.get(c) in ("float", "double") else pc.scalar(False))
         if op == "lt":
             e = pc.field(mn) < v
         elif op == "le":
             e = pc.field(mn) <= v
         elif op == "gt":
-            e = pc.field(mx) > v
+            e = (pc.field(mx) > v) | nan_max
         elif op == "ge":
-            e = pc.field(mx) >= v
+            e = (pc.field(mx) >= v) | nan_max
         elif op == "eq":
-            e = (pc.field(mn) <= v) & (pc.field(mx) >= v)
+            e = (pc.field(mn) <= v) & ((pc.field(mx) >= v) | nan_max)
         elif op == "in":
-            e = (pc.field(mn) <= max(v)) & (pc.field(mx) >= min(v))
+            e = (pc.field(mn) <= max(v)) & ((pc.field(mx) >= min(v)) | nan_max)
         elif op == "isnull":
             if nl not in present:
                 continue  # column predates file: all rows null, keep all

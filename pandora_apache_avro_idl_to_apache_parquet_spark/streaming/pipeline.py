@@ -4,8 +4,8 @@ The reference's only streaming construct is a pull-based console loop
 (``/root/reference/demo/avroidl2parquet.fsx:191-420``, A30): generate n events,
 flatten, upload, repeat until a key press. Its Spark re-expression is
 ``foreachBatch`` — each micro-batch runs the same batch encode pipeline into a
-batch-scoped output directory, so the per-partition checkpoint/resume
-semantics of :mod:`..operators.encode` apply within every batch, and Spark's
+batch-scoped output directory, so the store's per-partition checkpoint/resume
+semantics apply within every batch, and Spark's
 own streaming checkpoint replaces the reference's monotonic Delta-commit-index
 discovery (A29, ``README.md:608-701``).
 
@@ -56,6 +56,26 @@ def dedup_stream(stream: DataFrame, keys: list[str],
     )
 
 
+def _encode_batches(stream: DataFrame, out_dir: str, checkpoint_dir: str,
+                    encode, available_now: bool):
+    """Run ``encode(batch_df, batch_dir)`` on every non-empty micro-batch,
+    into ``out_dir/batch=<id>``."""
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        encode(batch_df, os.path.join(out_dir, f"batch={batch_id}"))
+
+    writer = (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def encode_stream(stream: DataFrame, out_dir: str, checkpoint_dir: str,
                   n_parts: int = 64, available_now: bool = False):
     """Encode a token stream micro-batch-wise via foreachBatch.
@@ -66,21 +86,9 @@ def encode_stream(stream: DataFrame, out_dir: str, checkpoint_dir: str,
     batch re-encodes into the same directory and the part markers make the
     replay idempotent, the A29 optimistic-retry analog).
     """
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        encode_tokens(batch_df, os.path.join(out_dir, f"batch={batch_id}"),
-                      n_parts=n_parts)
-
-    writer = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _encode_batches(
+        stream, out_dir, checkpoint_dir,
+        lambda df, d: encode_tokens(df, d, n_parts=n_parts), available_now)
 
 
 def encode_table_stream(stream: DataFrame, out_dir: str, checkpoint_dir: str,
@@ -93,20 +101,10 @@ def encode_table_stream(stream: DataFrame, out_dir: str, checkpoint_dir: str,
     dir in its ``_schema.json`` sidecar)."""
     from ..operators.table import encode_table
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        encode_table(batch_df, os.path.join(out_dir, f"batch={batch_id}"),
-                     key_cols=key_cols, n_parts=n_parts)
-
-    writer = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _encode_batches(
+        stream, out_dir, checkpoint_dir,
+        lambda df, d: encode_table(df, d, key_cols=key_cols, n_parts=n_parts),
+        available_now)
 
 
 def token_window_counts(stream: DataFrame, window: str = "1 hour",

@@ -24,9 +24,9 @@ def main() -> None:
         decode_values_only,
     )
     from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+        TOKEN_KEY,
         encode_tokens,
         read_manifest,
-        with_part_id,
     )
     from pandora_apache_avro_idl_to_apache_parquet_spark.session import get_spark
     from pandora_apache_avro_idl_to_apache_parquet_spark.sources.tokens import synthesize_tokens
@@ -36,6 +36,11 @@ def main() -> None:
     out = tempfile.mkdtemp(prefix="plans_enc_")
     src = synthesize_tokens(spark, 500, seed=5)
     encode_tokens(src, out, n_parts=4)
+
+    from pyspark.sql import functions as F
+
+    salted = src.withColumn(
+        "part_id", F.pmod(F.xxhash64(*TOKEN_KEY), F.lit(4)).cast("int"))
 
     def fmt(df):
         return df._sc._jvm.PythonSQLUtils.explainString(
@@ -48,7 +53,7 @@ def main() -> None:
             "ONE Exchange total (hashpartitioning on part_id); the grouped-map\n"
             "kernel (FlatMapGroupsInPandas) sits directly on it — no second\n"
             "shuffle, no sort exchange, no collect.",
-            with_part_id(src, 4).groupBy("part_id").applyInArrow(
+            salted.groupBy("part_id").applyInArrow(
                 lambda t: t.slice(0, 0).select(["part_id"]), schema="part_id int"
             ),
         ),
@@ -66,7 +71,7 @@ def main() -> None:
         ),
         (
             "Values-only decode (column-pruned)",
-            "ReadSchema carries only lengths/values payloads; the string\n"
+            "ReadSchema carries only the tokens lane's payload; the string\n"
             "payload columns are pruned at the parquet scan.",
             decode_values_only(spark, out),
         ),
@@ -191,8 +196,6 @@ def main() -> None:
             ),
         ),
     ]
-
-    from pyspark.sql import functions as F
 
     from pandora_apache_avro_idl_to_apache_parquet_spark.operators.packing import (
         pack_sequences,

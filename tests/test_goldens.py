@@ -4,7 +4,7 @@ suite (``Unit.Tests/Tests/Tables/EqualsMarkdownTests.fs`` diffing
 byte-for-byte against checked-in goldens, regenerable with
 ``python -m tests.test_goldens`` (run as a module).
 
-Covered: the chunk/manifest physical schema, and the codec-choice table for
+Covered: the token store's chunk physical schema, and the codec-choice table for
 the seeded fixture (the auto-selection provenance — the engine's analog of
 the reference's Transformation tags).
 """
@@ -17,16 +17,23 @@ GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
 
 
 def manifest_schema_md() -> str:
-    from pandora_apache_avro_idl_to_apache_parquet_spark.schema import (
-        CHUNK_SCHEMA,
-        MANIFEST_COLUMNS,
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import TOKEN_KEY
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        TableSpec,
+        chunk_schema_for,
     )
+    from pandora_apache_avro_idl_to_apache_parquet_spark.schema import TOKENS_SCHEMA
+    from pyspark.sql import types as T
 
-    lines = ["# chunk table physical schema", "", "| column | type | nullable | in manifest |", "|---|---|---|---|"]
-    for f in CHUNK_SCHEMA.fields:
+    lanes = T.StructType([f for f in TOKENS_SCHEMA.fields if f.name != "n_tok"])
+    chunks = chunk_schema_for(TableSpec(schema=lanes, key_cols=TOKEN_KEY))
+    lines = ["# token store chunk table physical schema", "",
+             "| column | type | nullable | payload |", "|---|---|---|---|"]
+    for f in chunks.fields:
+        payload = f.name.endswith(("__payload", "__valid"))
         lines.append(
             f"| {f.name} | {f.dataType.simpleString()} | {str(f.nullable).lower()} "
-            f"| {str(f.name in MANIFEST_COLUMNS).lower()} |"
+            f"| {str(payload).lower()} |"
         )
     return "\n".join(lines) + "\n"
 
@@ -38,23 +45,26 @@ def codec_choices_md(spark) -> str:
     from pyspark.sql import functions as F
 
     from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import encode_tokens
-    from pandora_apache_avro_idl_to_apache_parquet_spark.schema import CHUNK_COLUMNS
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        read_table_chunks,
+    )
     from pandora_apache_avro_idl_to_apache_parquet_spark.sources.tokens import synthesize_tokens
 
     out = tempfile.mkdtemp(prefix="golden_enc_")
     df = synthesize_tokens(spark, 3000, seed=42)
-    manifest = encode_tokens(df, out, n_parts=8)
+    encode_tokens(df, out, n_parts=8)
+    chunks = read_table_chunks(spark, out)
     lines = ["# codec choices — seeded fixture (3000 rows, seed 42, 8 parts)", ""]
-    for col in CHUNK_COLUMNS:
+    for col in ("doc_id", "tokens", "source"):
         lines += [f"## {col}", "", "| codec | n_chunks |", "|---|---|"]
         rows = (
-            manifest.groupBy(f"{col}_codec")
+            chunks.groupBy(f"{col}__codec")
             .agg(F.count("*").alias("n"))
-            .orderBy(f"{col}_codec")
+            .orderBy(f"{col}__codec")
             .collect()
         )
         for r in rows:
-            lines.append(f"| {r[f'{col}_codec']} | {r['n']} |")
+            lines.append(f"| {r[f'{col}__codec']} | {r['n']} |")
         lines.append("")
     return "\n".join(lines) + "\n"
 

@@ -327,7 +327,6 @@ def test_driver_built_frames_come_from_arrow(spark, tmp_path):
     from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
         encode_tokens,
         part_id_frame,
-        read_chunks,
     )
     from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import (
         read_iceberg,
@@ -342,7 +341,7 @@ def test_driver_built_frames_come_from_arrow(spark, tmp_path):
 
     store = str(tmp_path / "empty_store")
     encode_tokens(synthesize_tokens(spark, 10).limit(0), store, n_parts=2)
-    chunks = read_chunks(spark, store)
+    chunks = read_table_chunks(spark, store)
     assert _jobs(spark, "empty-chunks", chunks.collect) == ([], 0)
     assert _jobs(spark, "empty-chunks-agg", lambda: count(chunks)) == (0, 1)
 
@@ -358,3 +357,33 @@ def test_driver_built_frames_come_from_arrow(spark, tmp_path):
     assert done.schema.simpleString() == "struct<part_id:int>"
     rows, jobs = _jobs(spark, "done", done.collect)
     assert sorted(r[0] for r in rows) == [1, 2, 3] and jobs == 0
+
+
+# ------------------------------------------------------- NaN in zone maps
+
+
+def test_nan_rows_survive_every_pruned_read(spark, tmp_path):
+    """Spark orders NaN above every double, so ``d > 5`` holds for NaN
+    rows. A chunk holding a NaN records it as its max (and an all-NaN chunk
+    as its min too); otherwise the SQL zone map, a ``chunk_filter`` and the
+    DataSource pushdown all drop those rows."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        column_range_filter,
+    )
+
+    out = str(tmp_path / "nan")
+    # one part, 4-row chunks: chunk 0 is all NaN, the others half NaN
+    rows = [(k, float("nan") if k < 4 or k % 2 else float(k % 5))
+            for k in range(16)]
+    encode_table(spark.createDataFrame(rows, "k long, d double"), out,
+                 key_cols=["k"], n_parts=1, chunk_rows=4)
+    want = sum(1 for _, d in rows if d != d or d > 5)
+    assert decode_table(spark, out).where("d > 5").count() == want == 10
+    got_sql = table_sql(spark, out, "SELECT count(*) AS n FROM t WHERE d > 5", "t")
+    assert got_sql.first()["n"] == want
+    pruned = decode_table(spark, out,
+                          chunk_filter=column_range_filter("d", 5.0, None))
+    assert pruned.where("d > 5").count() == want
+    for op in (">", ">="):
+        assert read_encoded_table(spark, out).where(f"d {op} 5").count() == want
+    assert read_encoded_table(spark, out).where("d < 5").count() == 6

@@ -143,3 +143,42 @@ def test_commit_log_protocol(spark, token_df, encoded):
     # idempotent: nothing new to commit -> no new log file
     assert write_commit_log(out, date(2026, 1, 1)) is None
     assert read_commit_log(out) == entries
+
+
+def test_encode_refuses_n_tok_that_is_not_the_token_count(spark, token_df, tmp_path):
+    """``n_tok`` is not stored (decode derives it from ``tokens``), so
+    encode fails on a row whose ``n_tok`` disagrees, and commits nothing."""
+    import pyspark.sql.functions as F
+
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+        log_versions,
+    )
+
+    out = str(tmp_path / "bad_n_tok")
+    one = token_df.orderBy("doc_id").first()["doc_id"]
+    bad = token_df.withColumn(
+        "n_tok", F.when(F.col("doc_id") == one, F.col("n_tok") + 1)
+        .otherwise(F.col("n_tok")))
+    with pytest.raises(Exception, match=f"n_tok invariant violated at doc_id={one}"):
+        encode_tokens(bad, out, n_parts=4)
+    assert log_versions(out) == []
+    assert completed_parts(out) == []
+
+
+def test_store_without_sidecar_is_refused(spark, tmp_path):
+    """A directory holding only a commit log (e.g. a token store written
+    before token stores were table stores) has no ``_schema.json``: every
+    reader refuses it and says to re-encode."""
+    import json
+
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        decode_table,
+    )
+
+    out = tmp_path / "no_sidecar"
+    (out / "_log").mkdir(parents=True)
+    (out / "_log" / f"{0:020d}.json").write_text(
+        json.dumps({"protocol": {"minReaderVersion": 1}}) + "\n")
+    for read in (decode_tokens, decode_table, read_manifest):
+        with pytest.raises(ValueError, match="_schema.json.*re-encode"):
+            read(spark, str(out))

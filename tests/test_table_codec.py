@@ -19,10 +19,10 @@ from pyspark.sql import functions as F, types as T
 
 from pandora_apache_avro_idl_to_apache_parquet_spark.functions.fsio import object_store_like_io
 from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+    completed_parts,
     read_commit_log,
 )
 from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
-    completed_table_parts,
     decode_table,
     encode_table,
     read_table_manifest,
@@ -156,10 +156,10 @@ def test_resume_after_injected_failure(spark):
     try:
         with pytest.raises(Exception):
             encode_table(df, out, key_cols=["id"], n_parts=4, fail_parts={2})
-        done_first = completed_table_parts(out)
+        done_first = completed_parts(out)
         assert 2 not in done_first and len(done_first) < 4
         encode_table(df, out, key_cols=["id"], n_parts=4)
-        assert completed_table_parts(out) == [0, 1, 2, 3]
+        assert completed_parts(out) == [0, 1, 2, 3]
         a = df.toPandas().sort_values("id", ignore_index=True)
         b = decode_table(spark, out).toPandas().sort_values("id", ignore_index=True)
         pd.testing.assert_frame_equal(a, b[a.columns], check_exact=True)
@@ -370,10 +370,10 @@ def test_scan_mode_resume_after_failure(spark):
     try:
         with pytest.raises(Exception):
             encode_table_scan(df, out, key_cols=["id"], fail_parts={1})
-        done = completed_table_parts(out)
+        done = completed_parts(out)
         assert 1 not in done and len(done) < 4
         encode_table_scan(df, out, key_cols=["id"])
-        assert completed_table_parts(out) == [0, 1, 2, 3]
+        assert completed_parts(out) == [0, 1, 2, 3]
         a = df.toPandas().sort_values("id", ignore_index=True)
         b = decode_table(spark, out).toPandas().sort_values("id", ignore_index=True)
         pd.testing.assert_frame_equal(a, b[a.columns], check_exact=True)
@@ -416,8 +416,8 @@ def test_append_runs_and_schema_evolution(spark):
     try:
         encode_table(v1, out, key_cols=["k"], n_parts=2, run="r0")
         encode_table(v2, out, key_cols=["k"], n_parts=2, run="r1")
-        assert completed_table_parts(out, "r0") == [0, 1]
-        assert completed_table_parts(out, "r1") == [0, 1]
+        assert completed_parts(out, run="r0") == [0, 1]
+        assert completed_parts(out, run="r1") == [0, 1]
         spec = read_table_spec(out)
         assert [f.name for f in spec.schema.fields] == ["k", "s", "score"]
 

@@ -14,9 +14,9 @@ import pytest
 from pandora_apache_avro_idl_to_apache_parquet_spark.operators.decode import decode_tokens
 from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
     encode_tokens,
-    read_chunks,
     read_manifest,
 )
+from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import read_table_chunks
 from pandora_apache_avro_idl_to_apache_parquet_spark.sources.iceberg import write_iceberg
 from pandora_apache_avro_idl_to_apache_parquet_spark.sources.tokens import (
     scan_tokens,
@@ -78,7 +78,7 @@ def shape(spark, tmp_path_factory):
     got["store_files"] = len([f for f in os.listdir(os.path.join(out, "data"))
                               if f.endswith(".parquet")])
     with _Group(spark, "plan") as g:
-        for df in (read_manifest(spark, out), read_chunks(spark, out),
+        for df in (read_manifest(spark, out), read_table_chunks(spark, out),
                    decode_tokens(spark, out)):
             df.schema
     got["plan"] = g
