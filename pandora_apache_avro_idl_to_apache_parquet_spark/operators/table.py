@@ -165,16 +165,17 @@ def _logical_of(dt: T.DataType) -> str:
 
 
 # ------------------------------------------------------ struct column lane
-# A struct column rides the store as independent per-leaf lanes (round 4):
-# the encode boundary projects ``s`` into ``s·__set`` (presence: struct
-# non-null) plus one flat column per leaf ``s·leaf`` (nested structs chain
-# the separator), each codec'd/zone-mapped like any scalar lane — exactly
-# the reference's flatten-to-columns instinct (Parquet.fs:768-878) applied
-# INSIDE one table instead of across extension tables. ``decode_table``
-# reassembles the original shape; presence decides struct-null vs
-# struct-of-nulls. All projection, no kernel changes: Catalyst expressions
-# on both sides. ``·`` (U+00B7) keeps flat names parse-safe for the plain
-# identifier paths the store uses internally.
+# A struct column rides the store as independent per-leaf lanes: the encode
+# kernel splits ``s`` into ``s·__set`` (presence: struct non-null) plus one
+# flat column per leaf ``s·leaf`` (nested structs chain the separator), each
+# codec'd/zone-mapped like any scalar lane — the reference's
+# flatten-to-columns instinct (Parquet.fs:768-878) applied INSIDE one table
+# instead of across extension tables. The chunk decoder reassembles the
+# original shape; presence decides struct-null vs struct-of-nulls. Both
+# directions are Arrow code run inside the kernels
+# (:func:`flatten_struct_arrow`, :func:`assemble_struct_arrow`), so every
+# writer and reader shares them. ``·`` (U+00B7) keeps flat names parse-safe
+# for the plain identifier paths the store uses internally.
 
 _STRUCT_SEP = "·"
 _STRUCT_SET = "__set"
@@ -200,7 +201,7 @@ def _is_nested_lane_type(dt: T.DataType) -> bool:
 
 # array<struct> element-leaf lane types: each leaf of the element struct
 # becomes one array<prim> lane; booleans ride int lanes (cast back on
-# rebuild). Richer element leaves (date/timestamp/decimal/array/map) have no
+# reassembly). Richer element leaves (date/timestamp/decimal/array/map) have no
 # array lane — explode to extension tables (operators.nested.flatten_table).
 _ELEM_LANE_OK = (T.IntegerType, T.LongType, T.FloatType, T.DoubleType,
                  T.StringType)
@@ -235,67 +236,6 @@ def _elem_leaves(dt: T.StructType, prefix: str = "",
     return out
 
 
-def _elem_path_expr(x, path: tuple):
-    e = x
-    for p in path:
-        e = e[p]
-    return e
-
-
-def _flatten_array_struct_exprs(col, name: str, dt: T.ArrayType) -> list:
-    """One array<struct> column → its per-leaf array lanes: a ``·__elem``
-    presence lane (int 1/0 per element; the lane itself is null exactly
-    where the array is null) plus one array lane per element leaf, each the
-    same length as the source array (interior nulls where the element, a
-    parent struct, or the value is null)."""
-    elem_dt = dt.elementType
-    out = [
-        F.transform(col, lambda x: x.isNotNull().cast("int"))
-        .alias(f"{name}{_STRUCT_SEP}{_STRUCT_ELEM}")
-    ]
-    for relname, _lane_t, path, kind in _elem_leaves(elem_dt):
-        if kind == "set":
-            fn = (lambda p: lambda x:
-                  _elem_path_expr(x, p).isNotNull().cast("int"))(path)
-        elif kind == "bool":
-            fn = (lambda p: lambda x:
-                  _elem_path_expr(x, p).cast("int"))(path)
-        else:
-            fn = (lambda p: lambda x: _elem_path_expr(x, p))(path)
-        out.append(F.transform(col, fn).alias(f"{name}{_STRUCT_SEP}{relname}"))
-    return out
-
-
-def _flatten_struct_exprs(col, name: str, dt: T.DataType) -> list:
-    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
-        return _flatten_array_struct_exprs(col, name, dt)
-    if not isinstance(dt, T.StructType):
-        return [col.alias(name)]
-    out = [col.isNotNull().alias(f"{name}{_STRUCT_SEP}{_STRUCT_SET}")]
-    for f in dt.fields:
-        out += _flatten_struct_exprs(
-            col.getField(f.name), f"{name}{_STRUCT_SEP}{f.name}", f.dataType
-        )
-    return out
-
-
-def _struct_lane_nullable(schema: T.StructType, structs: dict) -> T.StructType:
-    """Spec schema for a flattened frame: every struct-derived lane is
-    recorded nullable, so appending a NEW struct column passes the
-    append-only evolution rule (old chunks decode the whole struct as
-    null via its null presence lane)."""
-    if not structs.get("cols"):
-        return schema
-    covered: set[str] = set()
-    for name, tj in structs["cols"].items():
-        covered.update(_struct_flat_names(name, _struct_col_type(tj)))
-    return T.StructType(
-        [T.StructField(f.name, f.dataType,
-                       True if f.name in covered else f.nullable)
-         for f in schema.fields]
-    )
-
-
 def _validate_struct_names(name: str, dt: T.DataType) -> None:
     """Nested field names may not contain the lane separator or shadow the
     presence lanes — either would alias two flat lanes onto one name and
@@ -312,31 +252,6 @@ def _validate_struct_names(name: str, dt: T.DataType) -> None:
             )
         if _is_nested_lane_type(f.dataType):
             _validate_struct_names(f"{name}.{f.name}", f.dataType)
-
-
-def flatten_struct_columns(df: DataFrame) -> tuple[DataFrame, dict]:
-    """(flat df, structs sidecar entry). No struct / array<struct> columns
-    → (df, {})."""
-    has = [f for f in df.schema.fields if _is_nested_lane_type(f.dataType)]
-    if not has:
-        return df, {}
-    clash = [c for c in df.columns if _STRUCT_SEP in c]
-    if clash:
-        raise ValueError(
-            f"column names may not contain {_STRUCT_SEP!r} "
-            f"(struct-lane separator): {clash}"
-        )
-    for f in has:
-        _validate_struct_names(f.name, f.dataType)
-    exprs, cols, order = [], {}, []
-    for f in df.schema.fields:
-        order.append(f.name)
-        if _is_nested_lane_type(f.dataType):
-            cols[f.name] = f.dataType.jsonValue()
-            exprs += _flatten_struct_exprs(df[f.name], f.name, f.dataType)
-        else:
-            exprs.append(df[f.name])
-    return df.select(*exprs), {"cols": cols, "order": order}
 
 
 def relax_nullable(dt: T.DataType) -> T.DataType:
@@ -356,15 +271,15 @@ def relax_nullable(dt: T.DataType) -> T.DataType:
 
 def _struct_leaf_fields(name: str, dt: T.DataType) -> list[T.StructField]:
     """Flat physical StructFields for one struct or array<struct> column
-    (presence lane + one field per leaf, nested structs chained) — the
-    schema-level twin of :func:`_flatten_struct_exprs`, for callers that
-    hold a schema but no DataFrame (the DataSource sink)."""
+    (presence lane + one field per leaf, nested structs chained), in the
+    order :func:`flatten_struct_arrow` emits them. Every lane is nullable;
+    presence lanes of array elements hold 0/1 in every slot."""
     if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
         out = [T.StructField(f"{name}{_STRUCT_SEP}{_STRUCT_ELEM}",
                              T.ArrayType(T.IntegerType(), False), True)]
-        for rel, lane_t, _p, _k in _elem_leaves(dt.elementType):
+        for rel, lane_t, _p, kind in _elem_leaves(dt.elementType):
             out.append(T.StructField(f"{name}{_STRUCT_SEP}{rel}",
-                                     T.ArrayType(lane_t, True), True))
+                                     T.ArrayType(lane_t, kind != "set"), True))
         return out
     out = [T.StructField(f"{name}{_STRUCT_SEP}{_STRUCT_SET}",
                          T.BooleanType(), True)]
@@ -403,11 +318,10 @@ def flatten_struct_schema(schema: T.StructType) -> tuple[T.StructType, dict]:
 
 
 def flatten_struct_arrow(table: "pa.Table", structs: dict) -> "pa.Table":
-    """Arrow-side twin of :func:`flatten_struct_columns` for executor tasks
-    that receive struct-bearing batches (the DataSource sinks): replace each
-    struct column with its presence lane + leaf columns. Children under a
-    NULL struct are masked to null (parity with the Catalyst projection,
-    where ``getField`` of a null struct is null)."""
+    """Replace each struct / array<struct> column of an encode kernel's
+    input with its presence lane + leaf lanes (the lanes
+    :func:`flatten_struct_schema` names). Children under a NULL struct are
+    masked to null, so a leaf lane never carries a value its struct hides."""
     if not structs.get("cols"):
         return table
     import pyarrow.compute as pc
@@ -486,8 +400,8 @@ def flatten_struct_arrow(table: "pa.Table", structs: dict) -> "pa.Table":
 def assemble_struct_arrow(flat: dict, name: str, dt: T.DataType,
                           arrow_type) -> "pa.Array":
     """Reassemble one struct or array<struct> column from decoded flat-lane
-    Arrow arrays — the Arrow-side twin of :func:`_rebuild_struct_expr`
-    (presence null or false ⇒ struct null)."""
+    Arrow arrays (presence null or false ⇒ struct null; a chunk predating
+    the column decodes its presence lane as null)."""
     import pyarrow.compute as pc
 
     if isinstance(dt, T.ArrayType):
@@ -561,74 +475,6 @@ def _assemble_array_struct_arrow(flat: dict, name: str, dt: T.ArrayType,
     return out if out.type == arrow_type else out.cast(arrow_type)
 
 
-def _struct_flat_names(name: str, dt: T.DataType) -> list[str]:
-    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
-        return [f"{name}{_STRUCT_SEP}{_STRUCT_ELEM}"] + [
-            f"{name}{_STRUCT_SEP}{rel}"
-            for rel, _t, _p, _k in _elem_leaves(dt.elementType)
-        ]
-    if not isinstance(dt, T.StructType):
-        return [name]
-    out = [f"{name}{_STRUCT_SEP}{_STRUCT_SET}"]
-    for f in dt.fields:
-        out += _struct_flat_names(f"{name}{_STRUCT_SEP}{f.name}", f.dataType)
-    return out
-
-
-def _rebuild_struct_expr(df: DataFrame, name: str, dt: T.DataType):
-    if isinstance(dt, T.ArrayType) and isinstance(dt.elementType, T.StructType):
-        return _rebuild_array_struct_expr(df, name, dt)
-    leaves = []
-    for f in dt.fields:
-        child = f"{name}{_STRUCT_SEP}{f.name}"
-        if _is_nested_lane_type(f.dataType):
-            leaves.append(_rebuild_struct_expr(df, child, f.dataType).alias(f.name))
-        else:
-            leaves.append(df[child].alias(f.name))
-    # __set null (chunk predates the column) or false → struct is null
-    return F.when(
-        df[f"{name}{_STRUCT_SEP}{_STRUCT_SET}"] == F.lit(True),
-        F.struct(*leaves),
-    )
-
-
-def _rebuild_array_struct_expr(df: DataFrame, name: str, dt: T.ArrayType):
-    """Reassemble one array<struct> column from its decoded array lanes:
-    ``arrays_zip`` re-aligns every leaf lane with the per-element presence
-    lane, ``transform`` rebuilds each element (presence 0 → null element),
-    and the ``__elem`` lane's own row-null marks the whole array null (a
-    chunk predating the column decodes every lane as null → null array)."""
-    elem_dt = dt.elementType
-    leaves = _elem_leaves(elem_dt)
-    elem_lane = df[f"{name}{_STRUCT_SEP}{_STRUCT_ELEM}"]
-    zipped = F.arrays_zip(
-        elem_lane.alias("e"),
-        *[df[f"{name}{_STRUCT_SEP}{rel}"].alias(f"v{i}")
-          for i, (rel, _t, _p, _k) in enumerate(leaves)],
-    )
-    slot = {rel: (f"v{i}", kind) for i, (rel, _t, _p, kind) in enumerate(leaves)}
-
-    def build(z, sdt: T.StructType, prefix: str):
-        fields = []
-        for f in sdt.fields:
-            nm = f"{prefix}{f.name}"
-            if isinstance(f.dataType, T.StructType):
-                set_slot, _ = slot[f"{nm}{_STRUCT_SEP}{_STRUCT_SET}"]
-                inner = build(z, f.dataType, f"{nm}{_STRUCT_SEP}")
-                fields.append(F.when(z[set_slot] == 1, inner).alias(f.name))
-            else:
-                vslot, kind = slot[nm]
-                v = z[vslot]
-                if kind == "bool":
-                    v = v.cast("boolean")
-                fields.append(v.alias(f.name))
-        return F.struct(*fields)
-
-    elems = F.transform(zipped, lambda z: F.when(z["e"] == 1,
-                                                 build(z, elem_dt, "")))
-    return F.when(elem_lane.isNotNull(), elems)
-
-
 @dataclass
 class TableSpec:
     """Source schema + key columns (+ optional per-chunk bloom columns),
@@ -688,20 +534,30 @@ def _meta_fields(spec: "TableSpec") -> list[T.StructField]:
     ]
 
 
+def _has_zone_map(logical: str) -> bool:
+    """Array and map lanes have no value order, so no ``__min``/``__max``."""
+    return not logical.startswith(("array<", "map<"))
+
+
 def chunk_schema_for(spec: TableSpec) -> T.StructType:
     """Chunk-file schema: meta columns + 6 top-level columns per source column
-    (top-level so parquet prunes both manifest scans and selective decodes)."""
+    (top-level so parquet prunes both manifest scans and selective decodes),
+    plus a typed zone map for every column with a value order."""
     fields = _meta_fields(spec)
+    logicals = spec.logicals
     for f in spec.schema.fields:
         fields += [
             T.StructField(f"{f.name}__codec", T.StringType(), False),
             T.StructField(f"{f.name}__nulls", T.LongType(), False),
             T.StructField(f"{f.name}__raw", T.LongType(), False),
             T.StructField(f"{f.name}__enc", T.LongType(), False),
+        ]
+        if _has_zone_map(logicals[f.name]):
             # per-column typed zone map (None when the chunk is all-null):
             # lets chunk_filter prune on ANY column, not just the sort key
-            T.StructField(f"{f.name}__min", f.dataType, True),
-            T.StructField(f"{f.name}__max", f.dataType, True),
+            fields += [T.StructField(f"{f.name}__min", f.dataType, True),
+                       T.StructField(f"{f.name}__max", f.dataType, True)]
+        fields += [
             T.StructField(f"{f.name}__valid", T.BinaryType(), True),
             T.StructField(f"{f.name}__payload", T.BinaryType(), False),
         ]
@@ -787,21 +643,28 @@ def bloom_value_predicate(column: str, value) -> "F.Column":
 def _prepare_spec(io: FsIO, df_schema: T.StructType,
                   key_cols: list[str],
                   bloom_cols: list[str] | None = None,
-                  pds_col: str | None = None,
-                  structs: dict | None = None) -> TableSpec:
+                  pds_col: str | None = None) -> TableSpec:
     """Create or evolve the ``_schema.json`` sidecar (append-only schema
     evolution, the reference's Delta ``metaData`` schema-evolve contract,
     ``DeltaLake.fs:176-444``): new columns may be ADDED if nullable; existing
     columns must keep name+type; key columns are immutable. Old chunk files
     simply lack the new columns' payloads and decode as nulls.
 
-    ``df_schema`` is the FLAT physical schema (struct columns already split
-    by :func:`flatten_struct_columns`); ``structs`` is that split's sidecar
-    entry. An existing struct column's shape is immutable (its leaves are
-    its flat type); NEW struct columns may be appended."""
+    ``df_schema`` is the frame's original shape; the spec records its flat
+    physical schema (:func:`flatten_struct_schema`). An existing struct
+    column's shape is immutable (its leaves are its flat type); NEW struct
+    columns may be appended."""
+    if "part_id" in df_schema.fieldNames():
+        raise ValueError("'part_id' is a reserved column name")
+    for k in key_cols:
+        if k not in df_schema.fieldNames():
+            raise ValueError(f"key column {k!r} not in DataFrame")
+        if isinstance(df_schema[k].dataType, T.StructType):
+            raise ValueError(f"key column {k!r} may not be a struct")
+    df_schema, structs = flatten_struct_schema(df_schema)
     new_spec = TableSpec(schema=df_schema, key_cols=list(key_cols),
                          bloom_cols=list(bloom_cols or []), pds_col=pds_col,
-                         structs=structs or {})
+                         structs=structs)
     logicals = new_spec.logicals  # validates every column type is supported
     for b in new_spec.bloom_cols:
         if b not in logicals:
@@ -1079,18 +942,14 @@ def _encode_column(arr: pa.Array, logical: str) -> tuple[bytes | None, bytes, in
 
 def _min_max(arr: pa.Array):
     """(min, max) of the non-null values in Spark's order, or (None, None)
-    when empty/all-null or the type has no min_max kernel. Spark orders NaN
-    above every other float, but ``pc.min_max`` skips it: a float chunk
-    holding a NaN records it as its max, and one holding only NaNs as its
-    min too."""
+    when empty/all-null. Spark orders NaN above every other float, but
+    ``pc.min_max`` skips it: a float chunk holding a NaN records it as its
+    max, and one holding only NaNs as its min too."""
     import pyarrow.compute as pc
 
     if arr.null_count == len(arr):
         return None, None
-    try:
-        mm = pc.min_max(arr)
-    except (pa.ArrowNotImplementedError, pa.ArrowInvalid, pa.ArrowTypeError):
-        return None, None  # e.g. list types have no min_max kernel
+    mm = pc.min_max(arr)
     lo, hi = mm["min"].as_py(), mm["max"].as_py()
     if pa.types.is_floating(arr.type):
         n_nan = pc.sum(pc.is_nan(arr)).as_py() or 0
@@ -1396,7 +1255,8 @@ def _read_file_stats(io: FsIO, fname: str, spec: TableSpec) -> _FileStats:
     present = set(pf.schema_arrow.names)
     names = [f.name for f in spec.schema.fields if f"{f.name}__nulls" in present]
     cols = ["n_rows", "chunk_id"] + [
-        f"{c}__{k}" for c in names for k in ("nulls", "min", "max")]
+        f"{c}__{k}" for c in names for k in ("nulls", "min", "max")
+        if f"{c}__{k}" in present]
     return _FileStats.of_chunks(pf.read(columns=cols).to_pylist(), names)
 
 
@@ -1557,9 +1417,10 @@ def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
                             pds_from_col: bool = False) -> pa.Table:
     """Grouped-map kernel: one part_id's rows -> one chunk parquet file,
     then its checkpoint marker (a crash between the two leaves an orphan
-    the marker-gated commit never adds). ``run`` namespaces files/markers
-    so append runs into one table dir never collide with earlier runs'
-    parts.
+    the marker-gated commit never adds). ``table`` holds the rows in the
+    table's original shape plus the ``part_id`` helper column (and
+    ``__pds`` with ``pds_from_col``). ``run`` namespaces files/markers so
+    append runs into one table dir never collide with earlier runs' parts.
 
     ``marker_dir`` defaults to the resume/commit checkpoint dir; rewrite jobs
     (:func:`delete_where` / :func:`merge_table`) pass ``"_rewrites"`` so their
@@ -1580,6 +1441,11 @@ def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
         # date-partitioned encode (encode_table's pds_col): every row of the
         # group shares one partition date, carried in the helper column
         pds = table.column("__pds")[0].as_py()
+    logicals = spec.logicals
+    payload_cols = [f.name for f in spec.schema.fields]
+    # struct columns arrive in their original shape: split them into their
+    # flat lanes, in the spec's column order
+    table = flatten_struct_arrow(table, spec.structs).select(payload_cols)
 
     # ``sort_cols`` (recluster_table) re-orders rows physically WITHOUT
     # changing key semantics: key_min/key_max below then fall back from the
@@ -1591,14 +1457,12 @@ def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
         pc.sort_indices(table, sort_keys=[(k, "ascending") for k in order])
     )
     n = table.num_rows
-    logicals = spec.logicals
     key0 = table.column(spec.key_cols[0])
     if key0.null_count:
         raise ValueError(f"key column {spec.key_cols[0]!r} contains nulls")
 
     t_kernel0 = time.perf_counter()
     rows: list[dict] = []
-    payload_cols = [f.name for f in spec.schema.fields]
     # per-row element count summed over the array and map lanes: a chunk
     # holds at most chunk_rows rows AND DEFAULT_CHUNK_VALUES elements
     elems = np.zeros(n, np.int64)
@@ -1632,7 +1496,8 @@ def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
             row[f"{name}__nulls"] = n_nulls
             row[f"{name}__raw"] = raw
             row[f"{name}__enc"] = len(payload) + (len(valid_payload) if valid_payload else 0)
-            row[f"{name}__min"], row[f"{name}__max"] = _min_max(arr)
+            if _has_zone_map(logicals[name]):
+                row[f"{name}__min"], row[f"{name}__max"] = _min_max(arr)
             row[f"{name}__valid"] = valid_payload
             row[f"{name}__payload"] = payload
             if name in spec.bloom_cols:
@@ -1698,18 +1563,7 @@ def _encode_store(df: DataFrame, out_dir: str, key_cols: list[str],
     spark = df.sparkSession
     pds = pds or date(2026, 1, 1)
     io = _io(out_dir, io)
-    if "part_id" in df.columns:
-        raise ValueError("'part_id' is a reserved column name")
-    for k in key_cols:
-        if k not in df.columns:
-            raise ValueError(f"key column {k!r} not in DataFrame")
-        if isinstance(df.schema[k].dataType, T.StructType):
-            raise ValueError(f"key column {k!r} may not be a struct")
-    # struct columns split into per-leaf lanes here (decode reassembles)
-    df, structs = flatten_struct_columns(df)
-    spec = _prepare_spec(io, _struct_lane_nullable(df.schema, structs),
-                         list(key_cols), bloom_cols, pds_col,
-                         structs=structs)
+    spec = _prepare_spec(io, df.schema, list(key_cols), bloom_cols, pds_col)
     done = completed_parts(out_dir, io, run)
     full = chunk_schema_for(spec)
     manifest_struct = T.StructType(
@@ -1973,6 +1827,8 @@ def read_table_manifest(spark: SparkSession, out_dir: str,
         # typed per column in the chunk files; stringified here so the long
         # form has one homogeneous struct type across columns. Binary stats
         # hex-encode (a raw cast would produce invalid UTF-8 strings).
+        if not _has_zone_map(spec.logicals[name]):
+            return F.lit(None).cast("string").alias(f"{which}_value")
         col = F.col(f"{name}__{which}")
         if spec.logicals[name] == "binary":
             return F.hex(col).alias(f"{which}_value")
@@ -1995,6 +1851,88 @@ def read_table_manifest(spark: SparkSession, out_dir: str,
         chunks.select(*meta, F.explode(F.array(*per_col)).alias("c"))
         .select(*meta, "c.*")
     )
+
+
+def _read_plan(spec: TableSpec,
+               columns: list[str] | None = None) -> tuple[list[str], T.StructType]:
+    """(flat lanes to decode, output schema) of a read of ``columns``:
+    original column names (a struct column comes back reassembled, every
+    nested field nullable — :func:`relax_nullable`) or flat lane names
+    (``s·leaf``). ``None`` reads the original shape: the recorded
+    declaration order, then any later-appended flat columns."""
+    fields = {f.name: f for f in spec.schema.fields}
+    structs = spec.structs or {}
+    scols = {n: relax_nullable(_struct_col_type(tj))
+             for n, tj in structs.get("cols", {}).items()}
+    leaves = {n: [f.name for f in _struct_leaf_fields(n, dt)]
+              for n, dt in scols.items()}
+    if columns is None:
+        covered = {lane for ls in leaves.values() for lane in ls}
+        order = structs.get("order", [])
+        names = order + [n for n in fields if n not in covered and n not in order]
+    else:
+        names = list(dict.fromkeys(columns))
+        missing = [c for c in names if c not in fields and c not in scols]
+        if missing:
+            raise ValueError(f"columns not in encoded table: {missing}")
+    lanes = [lane for n in names for lane in leaves.get(n, [n])]
+    out = T.StructType(
+        [T.StructField(n, scols[n] if n in scols else fields[n].dataType, True)
+         for n in names])
+    return list(dict.fromkeys(lanes)), out
+
+
+def _decode_chunks(chunks, spec: TableSpec, lanes: list[str], out: pa.Schema,
+                   meta_cols: list[str] | tuple = (), dead: dict | None = None):
+    """One batch of chunk rows -> one ``out`` RecordBatch per chunk: the
+    flat ``lanes`` decode (a lane the chunk predates decodes all-null),
+    struct columns reassemble, the trailing ``meta_cols`` repeat per row
+    (``__pos`` is the in-chunk ordinal, assigned BEFORE the deletion-vector
+    filter so DV deletes address original positions), and the positions
+    ``dead`` lists under the chunk's ``chunk_id`` drop. ``chunks`` (a
+    RecordBatch or Table) carries ``n_rows``, each lane's
+    ``__valid``/``__payload`` (a file predating a lane lacks them), the
+    meta columns and, with ``dead``, ``chunk_id``. Every reader of the
+    store decodes through here."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    logicals = spec.logicals
+    lane_types = to_arrow_schema(T.StructType(
+        [T.StructField(lane, spec.schema[lane].dataType, True) for lane in lanes]))
+    scols = {n: _struct_col_type(tj)
+             for n, tj in (spec.structs or {}).get("cols", {}).items()}
+    n_data = len(out) - len(meta_cols)
+    cols = dict(zip(chunks.schema.names, chunks.columns))
+    for i in range(chunks.num_rows):  # iterates CHUNKS, not rows
+        n = int(cols["n_rows"][i].as_py())
+        flat = {}
+        for lane in lanes:
+            pcol, vcol = cols.get(f"{lane}__payload"), cols.get(f"{lane}__valid")
+            pl = pcol[i].as_py() if pcol is not None else None
+            if pl is None:
+                flat[lane] = pa.nulls(n, lane_types.field(lane).type)
+            else:
+                flat[lane] = _decode_column(
+                    vcol[i].as_py() if vcol is not None else None, pl,
+                    logicals[lane], n, lane_types.field(lane).type)
+        arrays = []
+        for k, f in enumerate(out):
+            if k >= n_data:
+                arrays.append(
+                    pa.array(np.arange(n, dtype=np.int64)) if f.name == "__pos"
+                    else pa.repeat(cols[f.name][i].cast(f.type), n))
+            elif f.name in scols:
+                arrays.append(
+                    assemble_struct_arrow(flat, f.name, scols[f.name], f.type))
+            else:
+                arrays.append(flat[f.name])
+        drop = dead.get(cols["chunk_id"][i].as_py()) if dead else None
+        if drop is not None:
+            keep = np.ones(n, dtype=bool)
+            keep[drop] = False
+            mask = pa.array(keep)
+            arrays = [a.filter(mask) for a in arrays]
+        yield pa.RecordBatch.from_arrays(arrays, schema=out)
 
 
 def decode_table(spark: SparkSession, out_dir: str,
@@ -2022,101 +1960,33 @@ def decode_table(spark: SparkSession, out_dir: str,
     :func:`delete_where`/:func:`merge_table` operate on). ``chunk_filter``
     may reference them too.
 
-    Struct columns (auto-flattened at encode, :func:`flatten_struct_columns`)
-    reassemble here: pass the ORIGINAL struct name in ``columns`` to get the
-    struct back (its leaves decode selectively); pass a flat leaf name
-    (``s·leaf``) to read just that lane. ``chunk_filter`` predicates address
-    the flat lanes (each leaf has its own zone map).
+    Struct columns (split into flat lanes at encode) reassemble here: pass
+    the ORIGINAL struct name in ``columns`` to get the struct back (its
+    leaves decode selectively); pass a flat leaf name (``s·leaf``) to read
+    just that lane. ``chunk_filter`` predicates address the flat lanes
+    (each leaf has its own zone map).
     """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .encode import _read_live_chunks
+
     spec = read_table_spec(out_dir, io)
-    structs = spec.structs or {}
-    if structs.get("cols"):
-        scols = {n: _struct_col_type(tj)
-                 for n, tj in structs["cols"].items()}
-        flat_names = {f.name for f in spec.schema.fields}
-        wanted = list(columns) if columns is not None else _orig_columns(spec)
-        flat_needed: list[str] = []
-        missing = []
-        for c in wanted:
-            if c in scols:
-                flat_needed += [
-                    n for n in _struct_flat_names(c, scols[c])
-                    if n not in flat_needed
-                ]
-            elif c in flat_names:
-                if c not in flat_needed:
-                    flat_needed.append(c)
-            else:
-                missing.append(c)
-        if missing:
-            raise ValueError(f"columns not in encoded table: {missing}")
-        flat = _decode_table_flat(spark, out_dir, flat_needed, io,
-                                  chunk_filter, as_of, meta_cols, spec)
-        exprs = []
-        for c in wanted:
-            if c in scols:
-                exprs.append(_rebuild_struct_expr(flat, c, scols[c]).alias(c))
-            else:
-                exprs.append(flat[c])
-        exprs += [flat[m] for m in (meta_cols or [])]
-        return flat.select(*exprs)
-    return _decode_table_flat(spark, out_dir, columns, io, chunk_filter,
-                              as_of, meta_cols, spec)
-
-
-def _orig_columns(spec: TableSpec) -> list[str]:
-    """Original-shape column list: the recorded declaration order, plus any
-    later-appended flat columns not covered by a struct."""
-    st = spec.structs or {}
-    if not st.get("cols"):
-        return [f.name for f in spec.schema.fields]
-    covered: set[str] = set()
-    for name, tj in st["cols"].items():
-        covered.update(_struct_flat_names(name, _struct_col_type(tj)))
-    out = list(st.get("order", []))
-    seen = set(out)
-    for f in spec.schema.fields:
-        if f.name not in covered and f.name not in seen:
-            out.append(f.name)
-    return out
-
-
-def _decode_table_flat(spark: SparkSession, out_dir: str,
-                       columns: list[str] | None,
-                       io: FsIO | None,
-                       chunk_filter,
-                       as_of: int | None,
-                       meta_cols: list[str] | None,
-                       spec: TableSpec) -> DataFrame:
-    logicals = spec.logicals
-    fields = [f for f in spec.schema.fields if columns is None or f.name in columns]
-    if columns is not None:
-        missing = set(columns) - {f.name for f in fields}
-        if missing:
-            raise ValueError(f"columns not in encoded table: {sorted(missing)}")
-        fields.sort(key=lambda f: columns.index(f.name))
+    lanes, out_struct = _read_plan(spec, columns)
     meta_cols = list(meta_cols or [])
     chunk_fields = {f.name: f for f in chunk_schema_for(spec).fields}
     for m in meta_cols:
-        if m in {f.name for f in spec.schema.fields}:
+        if m in spec.schema.fieldNames() or m in (spec.structs or {}).get("cols", {}):
             raise ValueError(f"meta column {m!r} collides with a table column")
         if m not in ("__src_file", "__pos") and (
             m not in chunk_fields or m.endswith(("__payload", "__valid"))
         ):
             raise ValueError(f"unknown meta column {m!r}")
     _synth_types = {"__src_file": T.StringType(), "__pos": T.LongType()}
-    meta_struct = [
+    out_struct = T.StructType(out_struct.fields + [
         T.StructField(m, _synth_types.get(m) or chunk_fields[m].dataType, True)
         for m in meta_cols
-    ]
-    out_struct = T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in fields] + meta_struct
-    )
-
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+    ])
     arrow_out = to_arrow_schema(out_struct)
-    names = [f.name for f in fields]
 
     # one log replay plans the read: the live files and, for merge-on-read
     # deletes, the DV state at this version, packed per chunk id
@@ -2127,46 +1997,16 @@ def _decode_table_flat(spark: SparkSession, out_dir: str,
     select_cols = ["n_rows"]
     if dv_packed and "chunk_id" not in meta_cols:
         select_cols.append("chunk_id")
-    for name in names:
-        select_cols += [f"{name}__valid", f"{name}__payload"]
+    for lane in lanes:
+        select_cols += [f"{lane}__valid", f"{lane}__payload"]
     select_cols += [m for m in meta_cols if m != "__pos"]
 
     def gen(it):
+        dead = {cid: np.frombuffer(zlib.decompress(pk), dtype="<u4")
+                for cid, pk in dv_packed.items()}
         for batch in it:
-            cols = {c: batch.column(i) for i, c in enumerate(batch.schema.names)}
-            for i in range(batch.num_rows):  # iterates CHUNKS, not rows
-                n = int(cols["n_rows"][i].as_py())
-                arrays = []
-                for name in names:
-                    vp = cols[f"{name}__valid"][i].as_py()
-                    pl = cols[f"{name}__payload"][i].as_py()
-                    if pl is None:
-                        # chunk predates this column (schema evolution):
-                        # it decodes as all-null
-                        arrays.append(pa.nulls(n, arrow_out.field(name).type))
-                        continue
-                    arrays.append(
-                        _decode_column(vp, pl, logicals[name], n,
-                                       arrow_out.field(name).type)
-                    )
-                for m in meta_cols:
-                    if m == "__pos":
-                        # physical in-chunk ordinal, assigned BEFORE the DV
-                        # filter so new DV deletes address original positions
-                        arrays.append(pa.array(np.arange(n, dtype=np.int64)))
-                    else:
-                        arrays.append(pa.repeat(
-                            cols[m][i].cast(arrow_out.field(m).type), n))
-                if dv_packed:
-                    pk = dv_packed.get(cols["chunk_id"][i].as_py())
-                    if pk is not None:
-                        keep = np.ones(n, dtype=bool)
-                        keep[np.frombuffer(zlib.decompress(pk), dtype="<u4")] = False
-                        mask = pa.array(keep)
-                        arrays = [a.filter(mask) for a in arrays]
-                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
-
-    from .encode import _read_live_chunks
+            yield from _decode_chunks(batch, spec, lanes, arrow_out,
+                                      meta_cols, dead)
 
     chunks = _read_live_chunks(spark, out_dir, _riod, chunk_schema_for(spec),
                                files=_plan_files(_riod, spec, snap))
@@ -2295,7 +2135,7 @@ def zone_map_filter_for_sql(sql: str, spec: TableSpec, view_name: str):
 
     logicals = spec.logicals
     dtypes = {f.name.lower(): f for f in spec.schema.fields
-              if not logicals[f.name].startswith("array")}
+              if _has_zone_map(logicals[f.name])}
     conds: list[tuple] = []
 
     def grab_between(m):
@@ -2578,18 +2418,6 @@ def _meta_entry(spec: TableSpec) -> dict:
                          "format": {"provider": "parquet"}}}
 
 
-def _flat_for_rewrite(df: DataFrame, spec: TableSpec) -> DataFrame:
-    """DML frames are built in the table's ORIGINAL shape (structs
-    reassembled, so conditions/assignments address ``s.a`` naturally); the
-    rewrite kernel works on the FLAT physical schema. Re-split struct
-    columns here — pure projection, Catalyst folds it into the decode
-    projection. Helper columns (``part_id``/``__pds``) pass through."""
-    if not (spec.structs or {}).get("cols"):
-        return df
-    flat, _ = flatten_struct_columns(df)
-    return flat
-
-
 DML_MAX_MATCHED_FILES = 1_000_000
 """Cap on DML detect-phase matched files returned to the driver.
 
@@ -2678,8 +2506,8 @@ def delete_where(spark: SparkSession, out_dir: str, condition,
         .filter(~F.coalesce(condition, F.lit(False)))
         .drop("__src_file")
     )
-    adds = _rewrite_job(_flat_for_rewrite(survivors, spec), io, spec,
-                        chunk_rows, pds, run, pds_from_col=True)
+    adds = _rewrite_job(survivors, io, spec, chunk_rows, pds, run,
+                        pds_from_col=True)
     log = append_log_entry(
         out_dir,
         [_meta_entry(spec)] + adds
@@ -2845,13 +2673,8 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
     if committed_files(out_dir, io) is None:
         raise ValueError("dv_update_where requires a committed table (no _log found)")
     spec = read_table_spec(out_dir, io)
-    scols = {n: relax_nullable(_struct_col_type(tj))
-             for n, tj in (spec.structs or {}).get("cols", {}).items()}
-    orig_fields = [
-        (n, scols.get(n) or spec.schema[n].dataType)
-        for n in _orig_columns(spec)
-    ]
-    bad = sorted(set(assignments) - {n for n, _ in orig_fields})
+    orig_fields = _read_plan(spec)[1].fields
+    bad = sorted(set(assignments) - {f.name for f in orig_fields})
     if bad:
         raise ValueError(f"assigned columns not in table: {bad}")
     pds = pds or date(2026, 1, 1)
@@ -2887,13 +2710,13 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
                        chunk_filter=F.col("chunk_id").isin(sorted(chunks)))
     updated = dec.filter(condition).select(
         *[
-            assignments[name].cast(dtype).alias(name)
-            if name in assignments else F.col(name)
-            for name, dtype in orig_fields
+            assignments[f.name].cast(f.dataType).alias(f.name)
+            if f.name in assignments else F.col(f.name)
+            for f in orig_fields
         ]
     )
-    routed = _route_inserts(spark, _flat_for_rewrite(updated, spec), spec,
-                            update_parts, pds, 0, out_dir, io)
+    routed = _route_inserts(spark, updated, spec, update_parts, pds, 0,
+                            out_dir, io)
     adds = _rewrite_job(routed, io, spec, chunk_rows, pds, run,
                         pds_from_col=True)
 
@@ -2914,7 +2737,7 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
             "files_added": len(adds), "dv_file": name, "log": log}
 
 
-def _route_inserts(spark: SparkSession, src_flat: DataFrame, spec: TableSpec,
+def _route_inserts(spark: SparkSession, src: DataFrame, spec: TableSpec,
                    insert_parts: int, pds: date, part_offset: int,
                    out_dir: str, io: FsIO) -> DataFrame:
     """Assign fresh part ids + partition dates to merge-insert rows: fresh
@@ -2924,7 +2747,7 @@ def _route_inserts(spark: SparkSession, src_flat: DataFrame, spec: TableSpec,
     insert_salt = (F.pmod(F.xxhash64(*keys), F.lit(insert_parts))
                    + F.lit(part_offset)).cast("int")
     if spec.pds_col:
-        raw = [r[0] for r in src_flat.select(spec.pds_col).distinct().collect()]
+        raw = [r[0] for r in src.select(spec.pds_col).distinct().collect()]
         if any(d is None for d in raw):
             raise ValueError(
                 f"pds_col {spec.pds_col!r} contains nulls in the merge source")
@@ -2933,13 +2756,13 @@ def _route_inserts(spark: SparkSession, src_flat: DataFrame, spec: TableSpec,
             f"{spec.pds_col} date, __didx int",
         )
         return (
-            src_flat.join(F.broadcast(date_idx), spec.pds_col)
+            src.join(F.broadcast(date_idx), spec.pds_col)
             .withColumn("part_id",
                         (insert_salt + F.col("__didx") * insert_parts).cast("int"))
             .withColumn("__pds", F.col(spec.pds_col))
             .drop("__didx")
         )
-    return (src_flat.withColumn("part_id", insert_salt)
+    return (src.withColumn("part_id", insert_salt)
             .withColumn("__pds", F.lit(pds)))
 
 
@@ -3001,18 +2824,18 @@ def merge_table(spark: SparkSession, out_dir: str, source: DataFrame,
             when_matched_update, when_matched_delete,
             when_matched_condition, when_not_matched_condition,
         )
-    # the source arrives in the table's ORIGINAL shape; struct columns
-    # split into their physical lanes before the schema check, so shape
-    # mismatches surface as flat-lane name/type diffs
-    source_flat = _flat_for_rewrite(source, spec)
+    # the source arrives in the table's ORIGINAL shape; its struct columns
+    # compare as their physical lanes, so shape mismatches surface as
+    # flat-lane name/type diffs
     want = {f.name: f.dataType for f in spec.schema.fields}
-    got = {f.name: f.dataType for f in source_flat.schema.fields}
+    got = {f.name: f.dataType
+           for f in flatten_struct_schema(source.schema)[0].fields}
     if got != want:
         raise ValueError(
             f"merge source schema must match the encoded table: want {want}, got {got}"
         )
     pds = pds or date(2026, 1, 1)
-    src = source_flat.select(*[f.name for f in spec.schema.fields])
+    src = source.select(*_read_plan(spec)[1].fieldNames())
     src_keys = src.select(*keys).distinct()
 
     probe = decode_table(spark, out_dir, columns=list(keys), io=io,
@@ -3034,11 +2857,7 @@ def merge_table(spark: SparkSession, out_dir: str, source: DataFrame,
             [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
             "__src_file string, part_id int, __pds date",
         )
-        # decode the FLAT physical lanes directly (keys are always scalar
-        # lanes), matching the flattened source side of the union
-        dec = decode_table(spark, out_dir, io=io,
-                           columns=[f.name for f in spec.schema.fields],
-                           meta_cols=["__src_file"],
+        dec = decode_table(spark, out_dir, io=io, meta_cols=["__src_file"],
                            chunk_filter=F.col("__src_file").isin(matched))
         survivors = (
             dec.join(F.broadcast(part_map), "__src_file")
@@ -3077,7 +2896,7 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
     if m_cond is not None and upd is None and not delete:
         raise ValueError("when_matched_condition requires a matched action")
     keys = spec.key_cols
-    orig_cols = _orig_columns(spec)
+    orig_cols = _read_plan(spec)[1].fieldNames()
     if upd is not None:
         bad = [c for c in upd if c in keys]
         if bad:
@@ -3129,14 +2948,15 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
                 "inserts; pass when_not_matched_condition=F.lit(False) for "
                 "a matched-only merge")
     else:
-        ins_flat = _flat_for_rewrite(inserts_src.select(*orig_cols), spec)
+        ins = inserts_src.select(*orig_cols)
         want = {f.name: f.dataType for f in spec.schema.fields}
-        got = {f.name: f.dataType for f in ins_flat.schema.fields}
+        got = {f.name: f.dataType
+               for f in flatten_struct_schema(ins.schema)[0].fields}
         if got != want:
             raise ValueError(
                 f"merge insert schema must match the encoded table: "
                 f"want {want}, got {got}")
-        inserts = _route_inserts(spark, ins_flat, spec, insert_parts, pds,
+        inserts = _route_inserts(spark, ins, spec, insert_parts, pds,
                                  len(matched), out_dir, io)
 
     run = f"mg{uuid.uuid4().hex[:8]}"
@@ -3176,8 +2996,7 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
             [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
             "__src_file string, part_id int, __pds date",
         )
-        survivors = (_flat_for_rewrite(result, spec)
-                     .join(F.broadcast(part_map), "__src_file")
+        survivors = (result.join(F.broadcast(part_map), "__src_file")
                      .drop("__src_file"))
         new_rows = (survivors if inserts is None
                     else survivors.unionByName(inserts))
@@ -3226,16 +3045,9 @@ def update_where(spark: SparkSession, out_dir: str, condition,
     # assignments address the table's ORIGINAL shape: a struct column is
     # assigned as a whole (produce the full struct value); leaf-level
     # assignment composes naturally via F.struct over the PRE-update row.
-    # Cast targets relax to fully-nullable (the physical lanes are nullable
-    # anyway — decode reassembles through the presence lane)
-    scols = {n: relax_nullable(_struct_col_type(tj))
-             for n, tj in (spec.structs or {}).get("cols", {}).items()}
-    orig_fields = [
-        (n, scols.get(n) or spec.schema[n].dataType)
-        for n in _orig_columns(spec)
-    ]
-    names = {n for n, _ in orig_fields}
-    bad = sorted(set(assignments) - names)
+    # Cast targets are the decoded types (structs fully nullable)
+    orig_fields = _read_plan(spec)[1].fields
+    bad = sorted(set(assignments) - {f.name for f in orig_fields})
     if bad:
         raise ValueError(f"assigned columns not in table: {bad}")
     keyed = sorted(set(assignments) & set(spec.key_cols))
@@ -3273,16 +3085,16 @@ def update_where(spark: SparkSession, out_dir: str, condition,
     hit = F.coalesce(condition, F.lit(False))
     updated = dec.join(F.broadcast(part_map), "__src_file").select(
         *[
-            F.when(hit, assignments[name]).otherwise(F.col(name))
-            .cast(dtype).alias(name)
-            if name in assignments else F.col(name)
-            for name, dtype in orig_fields
+            F.when(hit, assignments[f.name]).otherwise(F.col(f.name))
+            .cast(f.dataType).alias(f.name)
+            if f.name in assignments else F.col(f.name)
+            for f in orig_fields
         ],
         "part_id",
         "__pds",
     )
-    adds = _rewrite_job(_flat_for_rewrite(updated, spec), io, spec,
-                        chunk_rows, pds, run, pds_from_col=True)
+    adds = _rewrite_job(updated, io, spec, chunk_rows, pds, run,
+                        pds_from_col=True)
     log = append_log_entry(
         out_dir,
         [_meta_entry(spec)] + adds

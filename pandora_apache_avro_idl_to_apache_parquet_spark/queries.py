@@ -115,7 +115,7 @@ DUCK_TOK_ROWS = (
 # resume path).
 
 _ENCODE_PARTS = 8
-_FORMAT_TAG = "v8"  # bump to bust the /tmp encode cache on payload-affecting changes
+_FORMAT_TAG = "v9"  # bump to bust the /tmp encode cache on payload-affecting changes
 
 
 def _encode_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -835,9 +835,9 @@ SELECT event_id, 'flag', 'x' FROM base WHERE event_id % 5 = 0
 def q_table_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """struct<...> column through the encoded store (round 4): the struct
     rides as independent per-leaf codec'd lanes plus a presence lane
-    (``flatten_struct_columns`` — the reference's flatten-to-columns
-    contract, Parquet.fs:768-878, applied INSIDE one table); decode
-    reassembles the original shape. Exercises a NULL struct (presence
+    (``flatten_struct_arrow`` in the encode kernel — the reference's
+    flatten-to-columns contract, Parquet.fs:768-878, applied INSIDE one
+    table); the chunk decoder reassembles the original shape. Exercises a NULL struct (presence
     false ⇒ whole struct null), a null leaf inside a non-null struct, and
     a nested inner struct; the decoded struct projects back to flat
     columns so the driver hash can canonicalize it."""
@@ -888,7 +888,7 @@ def q_table_array_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     """array<struct<...>> column through the encoded store (round 5, the
     in-store analog of the reference's first-class array-of-record rewrite
     A5, Avro.fs:221-290): the column rides as per-leaf ARRAY lanes plus a
-    per-element presence lane; decode reassembles via arrays_zip/transform.
+    per-element presence lane; the chunk decoder reassembles it in Arrow.
     Exercises NULL arrays, empty arrays, null elements, null leaf values, a
     boolean leaf (int lane), and a nested inner struct. The decoded array
     posexplodes back to scalar rows (the driver hash can't hold list
@@ -1476,7 +1476,7 @@ def _table_encode_dir(spark: SparkSession, sf_dir: str) -> str:
     from .operators.table import encode_table
 
     key = hashlib.md5(
-        f"tbl8:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
+        f"tbl9:{_FORMAT_TAG}:{os.path.abspath(sf_dir)}".encode()
     ).hexdigest()[:10]
     out = os.path.join(tempfile.gettempdir(), f"pandora_engine_tbl_{key}")
     if completed_parts(out) != list(range(_TABLE_ENCODE_PARTS)):

@@ -35,8 +35,7 @@ hook, so the projected column set is an explicit read option
 (``.option("columns", "a,b,c")``) — :func:`read_encoded_table` wires it.
 
 Options: ``path`` (load arg), ``columns`` (comma list), ``as_of`` (commit-log
-index, same semantics as :func:`operators.table.decode_table`), ``plan_prune``
-("false" disables the planning-time file pruning; chunk-level pruning remains).
+index, same semantics as :func:`operators.table.decode_table`).
 
 The format is also a **sink** (``df.write.format("pandora_table")`` — map-only
 per-task encode, one atomic commit-log entry per save, append/overwrite modes;
@@ -82,14 +81,19 @@ FORMAT_NAME = "pandora_table"
 _COMPARE_OPS = {"lt", "le", "gt", "ge", "eq", "in"}
 
 
-def _zone_specs(filters: list[Filter], colnames: set[str]) -> tuple[list, list[Filter]]:
-    """Translate supported pushed filters into picklable zone specs."""
+def _zone_specs(filters: list[Filter], logicals: dict[str, str]) -> list:
+    """Translate supported pushed filters into picklable zone specs;
+    comparisons only on columns that carry a zone map."""
+    from ..operators.table import _has_zone_map
+
     specs = []
     for f in filters:
         attr = getattr(f, "attribute", None)
-        if not attr or len(attr) != 1 or attr[0] not in colnames:
+        if not attr or len(attr) != 1 or attr[0] not in logicals:
             continue
         c = attr[0]
+        if not (_has_zone_map(logicals[c]) or isinstance(f, (IsNull, IsNotNull))):
+            continue
         if isinstance(f, LessThan):
             specs.append(("lt", c, f.value))
         elif isinstance(f, LessThanOrEqual):
@@ -125,28 +129,16 @@ class PandoraTableDataSource(DataSource):
         return path, read_table_spec(path)
 
     def schema(self) -> T.StructType:
-        """The table's ORIGINAL shape: struct columns (auto-flattened at
-        encode) report as structs; the ``columns`` option accepts original
+        """The table's ORIGINAL shape: struct columns (split into flat lanes
+        at encode) report as structs; the ``columns`` option accepts original
         names or individual flat leaf names (``s·leaf``)."""
-        from ..operators.table import (_orig_columns, _struct_col_type,
-                                       relax_nullable)
+        from ..operators.table import _read_plan
 
         _, spec = self._spec()
         cols_opt = self.options.get("columns")
-        scols = {n: relax_nullable(_struct_col_type(tj))
-                 for n, tj in (spec.structs or {}).get("cols", {}).items()}
-        fields = {f.name: f for f in spec.schema.fields}
-        if cols_opt:
-            names = [c.strip() for c in cols_opt.split(",") if c.strip()]
-            missing = [c for c in names if c not in fields and c not in scols]
-            if missing:
-                raise ValueError(f"columns not in encoded table: {missing}")
-        else:
-            names = _orig_columns(spec)
-        return T.StructType(
-            [T.StructField(n, scols[n] if n in scols else fields[n].dataType,
-                           True) for n in names]
-        )
+        names = ([c.strip() for c in cols_opt.split(",") if c.strip()]
+                 if cols_opt else None)
+        return _read_plan(spec, names)[1]
 
     def reader(self, schema: T.StructType) -> "PandoraTableReader":
         path, spec = self._spec()
@@ -156,24 +148,17 @@ class PandoraTableDataSource(DataSource):
             spec_json=spec.to_json(),
             out_names=[f.name for f in schema.fields],
             as_of=int(as_of) if as_of is not None else None,
-            plan_prune=self.options.get("plan_prune", "true").lower() != "false",
         )
 
     def _sink_spec(self, schema: T.StructType):
         """Shared batch/stream sink setup: resolve key columns and
-        create/evolve the ``_schema.json`` sidecar BEFORE tasks run.
-        Struct columns split into their physical lanes here (schema level;
-        executor tasks split the Arrow batches to match)."""
-        from ..operators.table import (
-            _io, _prepare_spec, _struct_lane_nullable, flatten_struct_schema,
-            read_table_spec,
-        )
+        create/evolve the ``_schema.json`` sidecar BEFORE tasks run (the
+        encode kernel splits struct columns into their lanes)."""
+        from ..operators.table import _io, _prepare_spec, read_table_spec
 
         path = self.options.get("path")
         if not path:
             raise ValueError("pandora_table requires a path: .save(<encoded dir>)")
-        if "part_id" in schema.fieldNames():
-            raise ValueError("'part_id' is a reserved column name")
         io = _io(path, None)
         key_opt = self.options.get("key_cols")
         if key_opt:
@@ -184,17 +169,7 @@ class PandoraTableDataSource(DataSource):
             raise ValueError(
                 "first write into a new dir needs .option('key_cols', 'a,b')"
             )
-        missing = [k for k in key_cols if k not in schema.fieldNames()]
-        if missing:
-            raise ValueError(f"key columns not in DataFrame: {missing}")
-        for k in key_cols:
-            if isinstance(schema[k].dataType, T.StructType):
-                raise ValueError(f"key column {k!r} may not be a struct")
-        flat_schema, structs = flatten_struct_schema(schema)
-        spec = _prepare_spec(
-            io, _struct_lane_nullable(flat_schema, structs), key_cols,
-            structs=structs,
-        )
+        spec = _prepare_spec(io, schema, key_cols)
         if spec.pds_col:
             # the DataSource task kernel stamps a fixed pds; writing into a
             # date-partitioned table through it would give every new file a
@@ -212,6 +187,7 @@ class PandoraTableDataSource(DataSource):
         import uuid
 
         from ..operators.encode import committed_files
+        from ..operators.table import DEFAULT_CHUNK_ROWS
 
         path, io, spec = self._sink_spec(schema)
         prev_live = committed_files(path, io) if overwrite else None
@@ -219,17 +195,19 @@ class PandoraTableDataSource(DataSource):
             path=path,
             spec_json=spec.to_json(),
             run="w" + uuid.uuid4().hex[:10],
-            chunk_rows=int(self.options.get("chunk_rows", "65536")),
+            chunk_rows=int(self.options.get("chunk_rows", DEFAULT_CHUNK_ROWS)),
             prev_live=prev_live or [],
         )
 
     def streamWriter(self, schema: T.StructType,
                      overwrite: bool) -> "PandoraTableStreamWriter":
+        from ..operators.table import DEFAULT_CHUNK_ROWS
+
         path, _io_, spec = self._sink_spec(schema)
         return PandoraTableStreamWriter(
             path=path,
             spec_json=spec.to_json(),
-            chunk_rows=int(self.options.get("chunk_rows", "65536")),
+            chunk_rows=int(self.options.get("chunk_rows", DEFAULT_CHUNK_ROWS)),
             app_id=self.options.get("app_id", "pandora-stream-sink"),
             overwrite=overwrite,
         )
@@ -245,12 +223,11 @@ class PandoraTableDataSource(DataSource):
 
 class PandoraTableReader(DataSourceReader):
     def __init__(self, path: str, spec_json: str, out_names: list[str],
-                 as_of: int | None, plan_prune: bool):
+                 as_of: int | None):
         self._path = path
         self._spec_json = spec_json
         self._out_names = out_names
         self._as_of = as_of
-        self._plan_prune = plan_prune
         self._zone: list = []
 
     # -- planning (driver) --------------------------------------------------
@@ -259,7 +236,7 @@ class PandoraTableReader(DataSourceReader):
         from ..operators.table import TableSpec
 
         spec = TableSpec.from_json(self._spec_json)
-        self._zone = _zone_specs(filters, {f.name for f in spec.schema.fields})
+        self._zone = _zone_specs(filters, spec.logicals)
         # everything is residual: zone maps prune chunks, Spark still applies
         # the exact predicate to every decoded row
         return iter(filters)
@@ -276,7 +253,7 @@ class PandoraTableReader(DataSourceReader):
         snap = log_snapshot(self._path, io, as_of=self._as_of)
         dv_files = tuple(a["dvFile"] for a in (snap.dvs if snap else []))
         files = _plan_files(io, TableSpec.from_json(self._spec_json), snap,
-                            self._zone if self._plan_prune else None)
+                            self._zone)
         return [InputPartition((f, dv_files)) for f in files]
 
     # -- execution (executors) ----------------------------------------------
@@ -299,7 +276,6 @@ def _decode_file_batches(path: str, spec_json: str, names: list[str],
     file's META rows before any payload bytes materialize, and live
     deletion vectors (``dv_files``) subtracted per chunk. Shared by the
     batch reader and the streaming reader (``zone=[]`` there)."""
-    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -307,31 +283,12 @@ def _decode_file_batches(path: str, spec_json: str, names: list[str],
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from ..operators.table import (
-        TableSpec, _decode_column, _io, _struct_col_type, _struct_flat_names,
-        assemble_struct_arrow, load_dv_map, relax_nullable,
+        TableSpec, _decode_chunks, _io, _read_plan, load_dv_map,
     )
 
     spec = TableSpec.from_json(spec_json)
     logicals = spec.logicals
-    fields = {f.name: f for f in spec.schema.fields}
-    scols = {n: relax_nullable(_struct_col_type(tj))
-             for n, tj in (spec.structs or {}).get("cols", {}).items()}
-    # requested names may include original struct columns: decode their
-    # flat physical lanes, reassemble per batch
-    flat_needed: list[str] = []
-    for n in names:
-        for fn in (_struct_flat_names(n, scols[n]) if n in scols else [n]):
-            if fn not in flat_needed:
-                flat_needed.append(fn)
-    out_struct = T.StructType(
-        [T.StructField(n, scols[n] if n in scols else fields[n].dataType,
-                       True) for n in names]
-    )
-    arrow_out = to_arrow_schema(out_struct)
-    flat_struct = T.StructType(
-        [T.StructField(n, fields[n].dataType, True) for n in flat_needed]
-    )
-    arrow_flat = to_arrow_schema(flat_struct)
+    lanes, out_struct = _read_plan(spec, names)
 
     io = _io(path, None)
     pf = pq.ParquetFile(io.open_input_file(io.join("data/" + fname)))
@@ -375,10 +332,8 @@ def _decode_file_batches(path: str, spec_json: str, names: list[str],
     want = ["n_rows"]
     if dv_map:
         want.append("chunk_id")
-    for n in flat_needed:
-        for side in ("__valid", "__payload"):
-            if f"{n}{side}" in present:
-                want.append(f"{n}{side}")
+    want += [f"{lane}{side}" for lane in lanes
+             for side in ("__valid", "__payload") if f"{lane}{side}" in present]
     try:
         tbl = pq.read_table(
             io.open_input_file(io.join("data/" + fname)),
@@ -391,35 +346,8 @@ def _decode_file_batches(path: str, spec_json: str, names: list[str],
             io.open_input_file(io.join("data/" + fname)),
             columns=want,
         )
-    cols = {c: tbl.column(c) for c in tbl.column_names}
-    n_rows_col = cols["n_rows"]
-    for i in range(tbl.num_rows):  # iterates CHUNKS
-        n = int(n_rows_col[i].as_py())
-        flat: dict = {}
-        for name in flat_needed:
-            pcol = cols.get(f"{name}__payload")
-            pl = pcol[i].as_py() if pcol is not None else None
-            if pl is None:
-                flat[name] = pa.nulls(n, arrow_flat.field(name).type)
-                continue
-            vcol = cols.get(f"{name}__valid")
-            vp = vcol[i].as_py() if vcol is not None else None
-            flat[name] = _decode_column(vp, pl, logicals[name], n,
-                                        arrow_flat.field(name).type)
-        arrays = [
-            assemble_struct_arrow(flat, name, scols[name],
-                                  arrow_out.field(name).type)
-            if name in scols else flat[name]
-            for name in names
-        ]
-        if dv_map:
-            dead = dv_map.get(cols["chunk_id"][i].as_py())
-            if dead is not None:
-                keep = np.ones(n, dtype=bool)
-                keep[dead] = False
-                mask = pa.array(keep)
-                arrays = [a.filter(mask) for a in arrays]
-        yield pa.RecordBatch.from_arrays(arrays, schema=arrow_out)
+    yield from _decode_chunks(tbl, spec, lanes, to_arrow_schema(out_struct),
+                              dead=dv_map)
 
 
 def _encode_partition_task(path: str, spec_json: str, chunk_rows: int,
@@ -437,9 +365,7 @@ def _encode_partition_task(path: str, spec_json: str, chunk_rows: int,
 
     from pyspark import TaskContext
 
-    from ..operators.table import (
-        TableSpec, _encode_table_partition, _io, flatten_struct_arrow,
-    )
+    from ..operators.table import TableSpec, _encode_table_partition, _io
 
     pid = TaskContext.get().partitionId()
     collected = [b for b in iterator if b.num_rows]
@@ -447,11 +373,6 @@ def _encode_partition_task(path: str, spec_json: str, chunk_rows: int,
         return _FileCommit()
     spec = TableSpec.from_json(spec_json)
     table = pa.Table.from_batches(collected)
-    # struct columns arrive in their original shape; split to the flat
-    # physical lanes the kernel encodes
-    table = flatten_struct_arrow(table, spec.structs or {})
-    # align to spec order (evolved sidecar may order columns differently)
-    table = table.select([f.name for f in spec.schema.fields])
     table = table.append_column(
         "part_id", pa.array(np.full(table.num_rows, pid, np.int32))
     )

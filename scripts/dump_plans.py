@@ -93,6 +93,14 @@ def main() -> None:
         "timestamp_ntz'2026-01-01 00:00:00' + make_interval(0,0,0,0,0,0,id) AS ts",
     )
     encode_table(typed, tbl_out, key_cols=["id"], n_parts=4)
+    struct_out = tempfile.mkdtemp(prefix="plans_struct_")
+    _sh.rmtree(struct_out)
+    nested = spark.range(200).selectExpr(
+        "id", "named_struct('a', cast(id % 5 as int), 'b', cast(id as string)) AS s",
+        "transform(sequence(0, cast(id % 3 as int)), i -> "
+        "named_struct('x', id * 10 + i, 'ok', i % 2 = 0)) AS tags",
+    )
+    encode_table(nested, struct_out, key_cols=["id"], n_parts=2)
     sections += [
         (
             "Generic table decode, selective (chunk scan → mapInArrow)",
@@ -100,6 +108,13 @@ def main() -> None:
             "payload/validity bytes (top-level per-column chunk columns), so\n"
             "decoding 2 of 5 columns scans 2 of 5 payload streams.",
             decode_table(spark, tbl_out, columns=["grp", "id"]),
+        ),
+        (
+            "Struct table decode (chunk scan → one mapInArrow)",
+            "* Struct and array<struct> columns reassemble inside the chunk\n"
+            "decoder: the plan is the chunk scan and ONE MapInArrow, with no\n"
+            "Project of `arrays_zip`/`transform` over flat lanes after it.",
+            decode_table(spark, struct_out),
         ),
         (
             "Generic table manifest (payload-pruned long-form stats)",

@@ -1,7 +1,7 @@
 """array<struct<...>> column lane (round 5, VERDICT r04 #6): encode_table
 auto-flattens an array-of-struct column into per-leaf ARRAY lanes (+ a
 ``·__elem`` per-element presence lane) and decode_table reassembles the
-original shape via arrays_zip/transform — bit-identical, selectively
+original shape in Arrow — bit-identical, selectively
 decodable, DML-able, served through the DataSource and both streaming faces.
 The reference handles array-of-record as a first-class rewrite (A5,
 Avro.fs:221-290); this is the in-store analog. Also covers the round-5
@@ -17,7 +17,7 @@ from pyspark.sql import types as T
 from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
     decode_table,
     encode_table,
-    flatten_struct_columns,
+    flatten_struct_schema,
     read_table_spec,
 )
 
@@ -119,6 +119,16 @@ def test_array_struct_leaf_payload_pruning(spark, out_dir):
     assert "tags·a__payload" in line
     assert "tags·b__payload" not in line
     assert "tags·inner·x__payload" not in line
+
+
+def test_array_struct_decode_is_one_map_in_arrow(spark, out_dir):
+    """Reassembly happens inside the chunk decoder: the executed plan is the
+    chunk scan and one MapInArrow, with no arrays_zip/transform projection
+    over the flat lanes."""
+    encode_table(_df(spark), out_dir, key_cols=["id"], n_parts=2)
+    plan = decode_table(spark, out_dir)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    assert "arrays_zip" not in plan and "transform" not in plan, plan
 
 
 def test_array_struct_schema_evolution(spark, out_dir):
@@ -251,14 +261,14 @@ def test_element_leaf_type_rejections(spark, out_dir):
         F.array(F.struct(F.array(F.lit(1)).alias("xs"))).alias("s"),
     )
     with pytest.raises(ValueError, match="element leaves must be"):
-        flatten_struct_columns(df)
+        flatten_struct_schema(df.schema)
     # timestamp leaf: same rejection
     df2 = spark.range(0, 3).select(
         F.col("id"),
         F.array(F.struct(F.current_timestamp().alias("ts"))).alias("s"),
     )
     with pytest.raises(ValueError, match="element leaves must be"):
-        flatten_struct_columns(df2)
+        flatten_struct_schema(df2.schema)
 
 
 def test_elem_lane_name_collision_rejects(spark):
@@ -267,4 +277,4 @@ def test_elem_lane_name_collision_rejects(spark):
         F.array(F.struct(F.lit(1).alias("__elem"))).alias("s"),
     )
     with pytest.raises(ValueError, match="collides"):
-        flatten_struct_columns(shadow)
+        flatten_struct_schema(shadow.schema)

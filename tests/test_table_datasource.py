@@ -134,6 +134,21 @@ def test_pushdown_null_tests(spark, store):
     assert ds.where("grp IS NULL").count() == 0
 
 
+def test_pushed_array_comparison_is_residual_only(spark):
+    """Spark pushes `xs = array(...)` to the reader; array lanes have no
+    zone map, so the comparison must not reach the chunk filter (it used to
+    fail the read) and the residual filter answers it."""
+    out = _mkdir()
+    try:
+        df = spark.range(50).select(
+            F.col("id"), F.array(F.col("id").cast("int"), F.lit(1)).alias("xs"))
+        encode_table(df, out, key_cols=["id"], n_parts=2)
+        got = read_encoded_table(spark, out).where("xs = array(3, 1)")
+        assert [r.id for r in got.collect()] == [3]
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_datasource_as_of_and_schema_evolution(spark):
     """Append a second run adding a column; as_of sees version 0; a filter on
     the new column prunes the pre-evolution file entirely."""
