@@ -18,8 +18,11 @@ rule asks for; AQE skew handling does not apply to grouped-map UDFs), and
 sorts each part by source, then doc_id. A chunk holds at most
 ``DEFAULT_CHUNK_ROWS`` rows and ``DEFAULT_CHUNK_VALUES`` tokens.
 
-The commit log (below) is the store's: all chunk/checkpoint/commit-log I/O
-goes through :class:`..functions.fsio.FsIO` resolved from the output URI, so
+The commit log (below) is the store's, and this module is its only reader
+and writer: every other module replays it through :func:`log_snapshot` /
+:func:`log_entries` and commits through :func:`append_log_entry`. All
+chunk/checkpoint/commit-log I/O goes through
+:class:`..functions.fsio.FsIO` resolved from the output URI, so
 executors write to the real shared store (S3/HDFS/local). Each group
 publishes its chunk file and then its checkpoint marker, so a failed job
 leaves only whole-partition units; the next run re-encodes only the
@@ -36,6 +39,7 @@ import posixpath
 import uuid
 from dataclasses import dataclass, field
 from datetime import date
+from typing import Iterator
 
 import pyarrow as pa
 
@@ -123,152 +127,201 @@ def encode_tokens_scan(df: DataFrame, out_dir: str,
 
 
 PROTOCOL = {"minReaderVersion": 1, "minWriterVersion": 1, "payloadFormat": 2}
+_LAST_CHECKPOINT = "_last_checkpoint"
 
 
-def write_commit_log(out_dir: str, pds: date, io: FsIO | None = None) -> str | None:
-    """Numbered-JSONL commit log — the A28/A29 analog of the reference's
-    ``_delta_log`` writer (``/root/reference/.../Pandora/Databricks/
-    DeltaLake.fs:176-444``): a ``_log/<%020d>.json`` file holding one
-    ``protocol`` line, one ``metaData`` line (schema + partition column), and
-    one ``add`` line per data file (path, size, sha256, partitionValues).
+def log_header(spec) -> list[dict]:
+    """The ``protocol`` and ``metaData`` lines that open every commit-log
+    entry: the chunk schema of ``spec`` (the store's ``_schema.json``
+    sidecar) and the ``pds`` partition column."""
+    from .table import chunk_schema_for
 
-    Index discovery mirrors the reference's fold-max-plus-one over existing
-    numeric filenames (``README.md:608-645``); the write is optimistic —
-    ``FsIO.create_exclusive`` plays the role of the reference's upload-
-    with-overwrite=false, and on collision (concurrent committer) the log is
-    re-read so files the winner committed are dropped from our payload before
-    the next index is tried. Only files not yet referenced by earlier log
-    entries are added, so re-running after resume appends exactly the new
-    files. ``metaData.schemaString`` is the chunk schema of the store's
-    ``_schema.json`` sidecar, and each ``add`` carries the exact per-file
-    ``stats`` its marker recorded.
-    """
-    from .table import chunk_schema_for, read_table_spec
+    return [{"protocol": PROTOCOL},
+            {"metaData": {"schemaString": chunk_schema_for(spec).json(),
+                          "partitionColumns": ["pds"],
+                          "format": {"provider": "parquet"}}}]
 
+
+def add_action(marker: dict, pds: str | None = None, data_change: bool = True,
+               io: FsIO | None = None) -> dict:
+    """The log ``add`` of one chunk file, from the marker the encode kernel
+    published for it: name, size and sha256 (hashed in flight, so a commit
+    never re-reads data), its partition date and its per-file ``stats``.
+    ``pds`` stands in for a marker that records no date (compaction's
+    merged files have none: they get no ``partitionValues``); ``io`` stamps
+    the file's ``modificationTime``."""
+    add = {"path": marker["file_name"], "size": marker["file_size"],
+           "sha256": marker["file_sha256"]}
+    pds = marker.get("pds", pds)
+    if pds:
+        add["partitionValues"] = {"pds": pds}
+    add["dataChange"] = data_change
+    if io is not None:
+        add["modificationTime"] = io.mtime_ms(io.join("data", marker["file_name"]))
+    add["stats"] = marker["stats"]
+    return {"add": add}
+
+
+class CleanedLogError(ValueError):
+    """A log read reached json files that ``checkpoint_log(clean=True)``
+    deleted."""
+
+
+def _checkpoint_pointer(io: FsIO) -> dict | None:
+    pointer = posixpath.join(io.join("_log"), _LAST_CHECKPOINT)
+    return json.loads(io.read_text(pointer)) if io.exists(pointer) else None
+
+
+def _json_indices(io: FsIO) -> list[int]:
+    return [int(f[:-5]) for f in io.listdir(io.join("_log")) if f.endswith(".json")]
+
+
+def _next_index(io: FsIO) -> int:
+    """One past the newest json index or checkpoint version: a commit never
+    reuses an index a clean checkpoint covers."""
+    ptr = _checkpoint_pointer(io)
+    return max(_json_indices(io) + [-1 if ptr is None else int(ptr["version"])]) + 1
+
+
+def log_entries(out_dir: str, io: FsIO | None = None, after: int | None = None,
+                upto: int | None = None, newest_first: bool = False
+                ) -> Iterator[tuple[int, dict]]:
+    """The commit log as ``(index, entry)`` pairs, one per action line, in
+    index order (``newest_first`` reverses the order of the files), up to
+    index ``upto``. Files are read as the walk reaches them, so a walk that
+    stops early reads only the files it passed.
+
+    With ``after=None`` the walk is the table's state: when a checkpoint
+    covers ``upto``, its collapsed entries (at its version) stand in for
+    every json file it covers, so readers see checkpointed state even after
+    ``checkpoint_log(clean=True)`` deleted those files. With ``after=N`` it
+    is the raw json range ``(N, upto]`` (a change feed); a range reaching
+    into json files a clean checkpoint deleted raises
+    :class:`CleanedLogError`, as does a state walk to a version before such
+    a checkpoint — never a silently incomplete log."""
     io = _io(out_dir, io)
-    data_dir, log_dir = io.join("data"), io.join("_log")
-    if not io.isdir(data_dir):
-        return None
-    io.makedirs(log_dir)
+    log_dir = io.join("_log")
+    lo = -1 if after is None else after
+    idx = [i for i in _json_indices(io)
+           if i > lo and (upto is None or i <= upto)]
+    ptr = _checkpoint_pointer(io)
+    ckpt_v = -1 if ptr is None else int(ptr["version"])
+    from_ckpt = after is None and ptr is not None and (upto is None or upto >= ckpt_v)
+    covered = ckpt_v if upto is None else min(upto, ckpt_v)
+    if from_ckpt:
+        idx = [i for i in idx if i > ckpt_v]
+    elif lo < covered and not any(i <= covered for i in idx):
+        raise CleanedLogError(
+            f"reading log version(s) {lo + 1}..{covered} predates log "
+            f"checkpoint {ckpt_v}, whose covered json files were cleaned")
 
-    def _scan_log() -> tuple[set[str], list[int]]:
-        # "referenced" = ever added OR removed: neither may be re-added
-        # (a removed file's data lives on in its compaction target). A
-        # checkpoint's collapsed adds + remove tombstones stand in for any
-        # json files checkpoint_log(clean=True) deleted, and its version
-        # floors index allocation so new commits never reuse covered indices.
-        referenced: set[str] = set()
-        indices: list[int] = []
-        ckpt = read_log_checkpoint(out_dir, io)
-        if ckpt is not None:
-            indices.append(ckpt[0])
-            for entry in ckpt[1]:
-                if "add" in entry:
-                    referenced.add(entry["add"]["path"])
-                if "remove" in entry:
-                    referenced.add(entry["remove"]["path"])
-        for f in io.listdir(log_dir):
-            if not f.endswith(".json"):
-                continue
-            indices.append(int(f[:-5]))
-            for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-                entry = json.loads(line)
-                if "add" in entry:
-                    referenced.add(entry["add"]["path"])
-                if "remove" in entry:
-                    referenced.add(entry["remove"]["path"])
-        return referenced, indices
+    def ckpt_entries():
+        for e in read_log_checkpoint(out_dir, io)[1]:
+            yield ckpt_v, e
 
-    def _marker_index() -> dict[str, dict]:
-        """file_name -> integrity info from the checkpoint markers (written
-        executor-side, hashed in flight), so commit never re-reads data."""
-        idx: dict[str, dict] = {}
-        ckpt = io.join("_checkpoints")
-        for f in io.listdir(ckpt):
-            if f.startswith("part-") and f.endswith(".json"):
-                st = json.loads(io.read_text(posixpath.join(ckpt, f)))
-                if "file_name" in st:
-                    idx[st["file_name"]] = st
-        return idx
-
-    def _build_payload(referenced: set[str]) -> str | None:
-        # marker-gated adds: only files whose writer completed its checkpoint
-        # marker are committed. A crash between file publish and marker
-        # leaves an orphan that is never added (and never read — readers are
-        # log-gated, see committed_files) until the part's re-encode
-        # overwrites it; vacuum() reclaims anything unreferenced.
-        markers = _marker_index()
-        new_files = sorted(
-            f for f in io.listdir(data_dir)
-            if f.endswith(".parquet") and f not in referenced and f in markers
-        )
-        if not new_files:
-            return None
-        lines = [
-            json.dumps({"protocol": PROTOCOL}),
-            json.dumps(
-                {
-                    "metaData": {
-                        "schemaString": chunk_schema_for(
-                            read_table_spec(out_dir, io)).json(),
-                        "partitionColumns": ["pds"],
-                        "format": {"provider": "parquet"},
-                    }
-                }
-            ),
-        ]
-        for f in new_files:
-            path = posixpath.join(data_dir, f)
-            info = markers[f]
-            add = {
-                "path": f,
-                "size": info["file_size"],
-                "sha256": info["file_sha256"],
-                # date-partitioned encodes record each file's own partition
-                # date in its marker; legacy markers fall back to the
-                # run-level pds
-                "partitionValues": {"pds": info.get("pds", pds.isoformat())},
-                "dataChange": True,
-                "modificationTime": io.mtime_ms(path),
-                "stats": info["stats"],
-            }
-            lines.append(json.dumps({"add": add}))
-        return "\n".join(lines) + "\n"
-
-    referenced, indices = _scan_log()
-    payload = _build_payload(referenced)
-    if payload is None:
-        return None
-    idx = (max(indices) + 1) if indices else 0
-    while True:  # optimistic retry on index collision (A29)
-        target = posixpath.join(log_dir, f"{idx:020d}.json")
-        if io.create_exclusive(target, payload.encode()):
-            return target
-        # a concurrent committer won this index: re-read the log so files
-        # it committed are dropped from our payload (exactly-once — the
-        # 'only files not yet referenced' invariant), then try next index
-        referenced, indices = _scan_log()
-        payload = _build_payload(referenced)
-        if payload is None:
-            return None
-        idx = max(idx + 1, (max(indices) + 1) if indices else 0)
+    if from_ckpt and not newest_first:
+        yield from ckpt_entries()
+    for i in (reversed(idx) if newest_first else idx):
+        for line in io.read_text(posixpath.join(log_dir, f"{i:020d}.json")).splitlines():
+            yield i, json.loads(line)
+    if from_ckpt and newest_first:
+        yield from ckpt_entries()
 
 
 def read_commit_log(out_dir: str, io: FsIO | None = None) -> list[dict]:
-    """All committed entries across the numbered log files, in order."""
+    """Every committed entry, in order: the table's log as
+    :func:`log_entries` replays it, so after a checkpoint its collapsed
+    entries come first, in place of the json files it covers."""
+    return [e for _, e in log_entries(out_dir, io)]
+
+
+def append_log_entry(out_dir: str, lines, io: FsIO | None = None,
+                     reads: list[str] | None = None) -> str | None:
+    """Commit one numbered log file — the only code that claims a ``_log``
+    index — and return its path. The claim is optimistic:
+    ``FsIO.create_exclusive`` of ``_log/<%020d>.json`` plays the role of the
+    reference's upload-with-overwrite=false, and a lost claim (a concurrent
+    committer took the index) tries again at a later one.
+
+    ``lines`` is the entry, or a function of the current :class:`LogSnapshot`
+    that plans it (None: nothing left to commit), called again after each
+    lost claim so the plan sees what the winner committed.
+
+    ``reads`` names the files this commit's removes or deletion-vector
+    positions were planned from. Such a commit replays the log, checks that
+    every file it read is still live, and claims ``snapshot.version + 1``;
+    after a lost claim it checks again. A file a concurrent commit removed
+    first is a conflict: ``ValueError``, and nothing is committed (the
+    *Delta Lake* isolation rule). A commit that reads no file (a plain
+    append, a stream epoch) and plans no entry claims the next free index
+    with no replay."""
     io = _io(out_dir, io)
     log_dir = io.join("_log")
-    entries: list[dict] = []
-    for f in io.listdir(log_dir):
-        if f.endswith(".json"):
-            entries.extend(
-                json.loads(line)
-                for line in io.read_text(posixpath.join(log_dir, f)).splitlines()
-            )
-    return entries
+    io.makedirs(log_dir)
+    replay = callable(lines) or bool(reads)
+    idx = -1
+    while True:
+        if replay:
+            snap = log_snapshot(out_dir, io)
+            gone = sorted(set(reads or ()) - set(snap.adds))
+            if gone:
+                raise ValueError(
+                    f"commit conflict: {len(gone)} file(s) this commit read "
+                    f"are no longer live (e.g. {gone[0]!r}); a concurrent "
+                    "commit rewrote them, re-run the operation")
+            entry = lines(snap) if callable(lines) else lines
+            if entry is None:
+                return None
+            nxt = snap.version + 1
+        else:
+            entry, nxt = lines, _next_index(io)
+        idx = max(idx + 1, nxt)
+        target = posixpath.join(log_dir, f"{idx:020d}.json")
+        if io.create_exclusive(target, ("\n".join(json.dumps(e) for e in entry)
+                                        + "\n").encode()):
+            return target
 
 
-_LAST_CHECKPOINT = "_last_checkpoint"
+def write_commit_log(out_dir: str, pds: date, io: FsIO | None = None) -> str | None:
+    """Commit the encode's chunk files: every file in ``data/`` whose
+    checkpoint marker its writer completed and that the log does not yet
+    reference (as live or removed: a removed file's rows live on in its
+    rewrite) becomes one ``add`` in ONE entry after a ``log_header`` — the
+    A28/A29 analog of the reference's ``_delta_log`` writer
+    (``DeltaLake.fs:176-444``).
+    Each ``add`` carries the exact per-file ``stats`` its marker recorded;
+    ``pds`` dates a marker that records no date of its own.
+
+    The referenced set comes from :func:`log_snapshot`, so it includes
+    what a checkpoint collapsed. A crash between a file's publish and its
+    marker leaves an orphan that is never added (and never read — readers
+    are log-gated) until the part's re-encode overwrites it. After a lost
+    index claim (:func:`append_log_entry`) the entry is re-planned, so files
+    the winner committed are dropped from it: re-running after a resume, or
+    a racing encode into the same table, adds each file exactly once."""
+    from .table import read_table_spec
+
+    io = _io(out_dir, io)
+    if not io.isdir(io.join("data")):
+        return None
+    ckpt_dir = io.join("_checkpoints")
+    markers = {}
+    for f in io.listdir(ckpt_dir):
+        if f.startswith("part-") and f.endswith(".json"):
+            st = json.loads(io.read_text(posixpath.join(ckpt_dir, f)))
+            if "file_name" in st:
+                markers[st["file_name"]] = st
+    listed = set(listed_data_files(io))
+
+    def plan(snap: LogSnapshot) -> list[dict] | None:
+        new = [f for f in sorted(markers) if f in listed
+               and f not in snap.adds and f not in snap.removes]
+        if not new:
+            return None
+        return log_header(read_table_spec(out_dir, io)) + [
+            add_action(markers[f], pds.isoformat(), io=io) for f in new]
+
+    return append_log_entry(out_dir, plan, io)
 
 
 def checkpoint_log(out_dir: str, io: FsIO | None = None,
@@ -322,9 +375,9 @@ def checkpoint_log(out_dir: str, io: FsIO | None = None,
                      attempt_tag=tag)
     removed = 0
     if clean:
-        for f in list(io.listdir(log_dir)):
-            if f.endswith(".json") and int(f[:-5]) <= v:
-                io.fs.delete_file(posixpath.join(log_dir, f))
+        for i in _json_indices(io):
+            if i <= v:
+                io.fs.delete_file(posixpath.join(log_dir, f"{i:020d}.json"))
                 removed += 1
     return {"version": v, "entries": len(lines), "file": name,
             "cleaned_json_files": removed}
@@ -337,13 +390,11 @@ def read_log_checkpoint(out_dir: str, io: FsIO | None = None
     import pyarrow.parquet as pq
 
     io = _io(out_dir, io)
-    log_dir = io.join("_log")
-    pointer = posixpath.join(log_dir, _LAST_CHECKPOINT)
-    if not io.exists(pointer):
+    d = _checkpoint_pointer(io)
+    if d is None:
         return None
-    d = json.loads(io.read_text(pointer))
     tbl = pq.read_table(pa.BufferReader(
-        io.read_bytes(posixpath.join(log_dir, d["file"]))))
+        io.read_bytes(posixpath.join(io.join("_log"), d["file"]))))
     return int(d["version"]), [json.loads(s) for s in tbl.column("line").to_pylist()]
 
 
@@ -352,20 +403,23 @@ class LogSnapshot:
     """The table state one replay of the commit log yields: the live
     ``add`` action per data file (with its ``stats`` when the writer
     recorded them), the live deletion-vector actions in commit order
-    (``"v"``-stamped), the remove tombstones, the latest ``metaData`` and
-    the latest ``txn`` per appId."""
+    (``"v"``-stamped), the remove tombstones, the latest ``metaData``, the
+    latest ``txn`` per appId, and the log ``version`` replayed to (-1 for
+    an empty log)."""
 
     adds: dict[str, dict] = field(default_factory=dict)
     dvs: list[dict] = field(default_factory=list)
     removes: dict[str, dict] = field(default_factory=dict)
     meta: dict | None = None
     txns: dict[str, dict] = field(default_factory=dict)
+    version: int = -1
 
     @property
     def files(self) -> list[str]:
         return sorted(self.adds)
 
     def apply(self, entry: dict, idx: int) -> None:
+        self.version = idx
         if "add" in entry:
             self.adds[entry["add"]["path"]] = entry["add"]
             self.removes.pop(entry["add"]["path"], None)
@@ -401,39 +455,13 @@ def log_snapshot(out_dir: str, io: FsIO | None = None,
     checkpoint's collapsed state and touches only the json files AFTER it —
     O(commits since checkpoint), not O(log). An ``as_of`` BEFORE the
     checkpoint replays the json files directly (they are retained unless
-    the checkpoint was taken with ``clean=True``)."""
+    the checkpoint was taken with ``clean=True``, which fails loudly)."""
     io = _io(out_dir, io)
-    log_dir = io.join("_log")
-    if not io.isdir(log_dir):
+    if not io.isdir(io.join("_log")):
         return None
     snap = LogSnapshot()
-    start_after = -1
-    ckpt = read_log_checkpoint(out_dir, io)
-    if ckpt is not None and (as_of is None or as_of >= ckpt[0]):
-        start_after = ckpt[0]
-        for entry in ckpt[1]:
-            snap.apply(entry, ckpt[0])
-    elif ckpt is not None and as_of is not None and as_of < ckpt[0]:
-        # pre-checkpoint time travel replays raw json; if checkpoint_log ran
-        # with clean=True those files are gone — fail loudly, never return a
-        # silently incomplete version
-        json_idx = [int(f[:-5]) for f in io.listdir(log_dir)
-                    if f.endswith(".json")]
-        if not json_idx or min(json_idx) > 0:
-            raise ValueError(
-                f"time travel to version {as_of} predates log checkpoint "
-                f"{ckpt[0]} and the covered json files were cleaned"
-            )
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json"):
-            continue
-        idx = int(f[:-5])
-        if idx <= start_after:
-            continue
-        if as_of is not None and idx > as_of:
-            break
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            snap.apply(json.loads(line), idx)
+    for idx, entry in log_entries(out_dir, io, upto=as_of):
+        snap.apply(entry, idx)
     return snap
 
 
@@ -455,9 +483,11 @@ def committed_dv_actions(out_dir: str, io: FsIO | None = None,
     deletion vector (``_dv/<dvFile>``: chunk_id -> deleted row ordinals) to
     the table — merge-on-read DELETE, the Delta deletion-vector analog.
     DVs are keyed by *chunk id*, never by file path, so compaction (which
-    moves chunk rows verbatim into new files) carries them untouched, and a
-    copy-on-write rewrite (which mints new chunk ids) orphans them
-    harmlessly. Readers union every live action's positions per chunk.
+    moves chunk rows verbatim into new files) carries them untouched. A
+    copy-on-write rewrite mints new chunk ids, so a DV commit names the
+    files its positions point into (``append_log_entry``'s ``reads``) and
+    conflicts with a rewrite of any of them that commits first. Readers
+    union every live action's positions per chunk.
 
     ``{"dvRestore": {"asOf": V, "keep": [...]}}`` (written by
     :func:`..operators.table.restore_table`) REPLACES the DV state with the
@@ -474,30 +504,8 @@ def committed_dv_actions(out_dir: str, io: FsIO | None = None,
 
 
 def log_versions(out_dir: str, io: FsIO | None = None) -> list[int]:
-    """Committed log indices, in order (the time-travel axis)."""
-    io = _io(out_dir, io)
-    d = io.join("_log")
-    return sorted(int(f[:-5]) for f in io.listdir(d) if f.endswith(".json"))
-
-
-def append_log_entry(out_dir: str, lines: list[dict], io: FsIO | None = None) -> str:
-    """Append one numbered log file holding ``lines`` (e.g. compaction's
-    add+remove set) with the same optimistic exclusive-create index protocol
-    as :func:`write_commit_log`."""
-    io = _io(out_dir, io)
-    log_dir = io.join("_log")
-    io.makedirs(log_dir)
-    payload = "\n".join(json.dumps(e) for e in lines) + "\n"
-    indices = [int(f[:-5]) for f in io.listdir(log_dir) if f.endswith(".json")]
-    ckpt = read_log_checkpoint(out_dir, io)
-    if ckpt is not None:
-        indices.append(ckpt[0])  # never reuse a checkpointed index
-    idx = (max(indices) + 1) if indices else 0
-    while True:
-        target = posixpath.join(log_dir, f"{idx:020d}.json")
-        if io.create_exclusive(target, payload.encode()):
-            return target
-        idx += 1
+    """Committed json log indices, in order (the time-travel axis)."""
+    return _json_indices(_io(out_dir, io))
 
 
 def vacuum(out_dir: str, io: FsIO | None = None,

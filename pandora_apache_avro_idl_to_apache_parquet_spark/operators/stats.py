@@ -68,32 +68,18 @@ def read_column_stats(out_dir: str, io: FsIO | None = None) -> dict | None:
 
 def _log_delta(out_dir: str, io: FsIO, lo: int, hi: int
                ) -> tuple[list[str], bool]:
-    """(files added in log versions (lo, hi], any-removes?)."""
-    from .encode import read_log_checkpoint
+    """(files added in log versions (lo, hi], any-removes?). Deletion
+    vectors change existing files' VISIBLE rows without touching the file
+    set: same consequence as a remove — HLL state is insert-only,
+    soft-deleted values can't subtract."""
+    from .encode import CleanedLogError, log_entries
 
-    log_dir = io.join("_log")
-    ckpt = read_log_checkpoint(out_dir, io)
-    if ckpt is not None and ckpt[0] > lo:
-        return [], True  # checkpointed-over gap: can't prove append-only
-    added: list[str] = []
-    removed = False
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json"):
-            continue
-        idx = int(f[:-5])
-        if idx <= lo or idx > hi:
-            continue
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "add" in entry:
-                added.append(entry["add"]["path"])
-            if "remove" in entry:
-                removed = True
-            if "dv" in entry or "dvRestore" in entry:
-                # deletion vectors change existing files' VISIBLE rows without
-                # touching the file set: same consequence as a remove — HLL
-                # state is insert-only, soft-deleted values can't subtract
-                removed = True
+    try:
+        entries = [e for _, e in log_entries(out_dir, io, after=lo, upto=hi)]
+    except CleanedLogError:
+        return [], True  # the gap's json files were checkpointed and cleaned
+    added = [e["add"]["path"] for e in entries if "add" in e]
+    removed = any(k in e for e in entries for k in ("remove", "dv", "dvRestore"))
     return added, removed
 
 
@@ -105,17 +91,14 @@ def analyze_table(spark: SparkSession, out_dir: str,
     persist it as ``_stats/<log_version>.json``. Idempotent per version:
     re-running at an unchanged table returns the stored document without
     touching data. Returns the stats document."""
-    from .encode import log_versions
+    from .encode import log_snapshot
     from .table import decode_table, read_table_spec
 
     io = _io(out_dir, io)
-    versions = log_versions(out_dir, io)
-    from .encode import read_log_checkpoint
-
-    ckpt = read_log_checkpoint(out_dir, io)
-    if not versions and ckpt is None:
+    snap = log_snapshot(out_dir, io)
+    if snap is None or snap.version < 0:
         raise ValueError("analyze_table requires a committed table")
-    version = max(versions + ([ckpt[0]] if ckpt else []))
+    version = snap.version
     spec = read_table_spec(out_dir, io)
     known = {f.name for f in spec.schema.fields}
     unknown = [c for c in columns if c not in known]

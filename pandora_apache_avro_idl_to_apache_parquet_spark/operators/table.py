@@ -69,9 +69,10 @@ from ..functions import codecs as C
 from ..functions.fsio import FsIO
 from ..functions.hashing import klondike, sha256
 from ..plans.cost import select_int_codec, select_str_codec, select_typed_codec
-from .encode import (DEFAULT_CHUNK_VALUES, _io, completed_parts,
-                     listed_data_files, log_snapshot, part_id_frame,
-                     write_commit_log)
+from .encode import (DEFAULT_CHUNK_VALUES, _io, add_action, append_log_entry,
+                     committed_files, completed_parts, listed_data_files,
+                     log_entries, log_header, log_snapshot, log_versions,
+                     part_id_frame, write_commit_log)
 
 DEFAULT_CHUNK_ROWS = 65536
 
@@ -1702,8 +1703,6 @@ def compact_table(out_dir: str, io: FsIO | None = None,
     """
     import pyarrow.parquet as pq
 
-    from .encode import append_log_entry, committed_files
-
     io = _io(out_dir, io)
     spec = read_table_spec(out_dir, io)
     snap = log_snapshot(out_dir, io)
@@ -1734,13 +1733,10 @@ def compact_table(out_dir: str, io: FsIO | None = None,
     )
     data_dir = io.join("data")
     tag = uuid.uuid4().hex[:8]
-    entries: list[dict] = [
-        {"metaData": {"schemaString": chunk_schema.json(),
-                      "partitionColumns": ["pds"], "format": {"provider": "parquet"}}}
-    ]
+    entries = log_header(spec)
     new_files = 0
-    stats = _live_file_stats(io, spec, snap,
-                             [f for g in groups if len(g) > 1 for f in g])
+    merged_away = [f for g in groups if len(g) > 1 for f in g]
+    stats = _live_file_stats(io, spec, snap, merged_away)
     for i, group in enumerate(groups):
         if len(group) <= 1:
             continue  # singleton stays as-is (still live, not removed)
@@ -1755,11 +1751,12 @@ def compact_table(out_dir: str, io: FsIO | None = None,
         new_files += 1
         # chunk rows move verbatim, so the merged file's stats are the
         # fold of its sources'
-        entries.append({"add": {
-            "path": name, "size": size, "sha256": sha, "dataChange": False,
-            "stats": _FileStats.merge([stats[f] for f in group]).to_json()}})
+        entries.append(add_action(
+            {"file_name": name, "file_size": size, "file_sha256": sha,
+             "stats": _FileStats.merge([stats[f] for f in group]).to_json()},
+            data_change=False))
         entries += [{"remove": {"path": f, "dataChange": False}} for f in group]
-    log = append_log_entry(out_dir, entries, io)
+    log = append_log_entry(out_dir, entries, io, reads=merged_away)
     after = len(committed_files(out_dir, io))
     return {"files_before": len(live), "files_after": after, "log": log}
 
@@ -2352,19 +2349,21 @@ def table_stats(spark: SparkSession, out_dir: str,
 # ------------------------------------------- row-level DELETE / MERGE (CoW)
 
 
-def _file_pds_map(out_dir: str, io: FsIO) -> dict[str, date]:
-    """Each live-or-historical file's partition date from its commit-log add
-    record — the source of truth a rewrite must PRESERVE per file so
-    date-partitioned (``pds_col``) tables keep pruning correctly after DML."""
-    from .encode import read_commit_log
+def _dml_target(out_dir: str, io: FsIO | None, what: str
+                ) -> tuple[FsIO, TableSpec]:
+    """The io and spec of the committed table a row-level DML rewrites."""
+    io = _io(out_dir, io)
+    if log_snapshot(out_dir, io) is None:
+        raise ValueError(f"{what} requires a committed table (no _log found)")
+    return io, read_table_spec(out_dir, io)
 
-    out: dict[str, date] = {}
-    for e in read_commit_log(out_dir, io):
-        if "add" in e:
-            v = e["add"].get("partitionValues", {}).get("pds")
-            if v:
-                out[e["add"]["path"]] = date.fromisoformat(v)
-    return out
+
+def _file_pds(snap, f: str, default: date) -> date:
+    """A live file's partition date from its ``add`` record — the date a
+    rewrite must PRESERVE so date-partitioned (``pds_col``) tables keep
+    pruning correctly after DML (compaction's merged files carry none)."""
+    v = snap.adds.get(f, {}).get("partitionValues", {}).get("pds")
+    return date.fromisoformat(v) if v else default
 
 
 def _rewrite_job(survivors: DataFrame, io: FsIO, spec: TableSpec,
@@ -2391,31 +2390,50 @@ def _rewrite_job(survivors: DataFrame, io: FsIO, spec: TableSpec,
 
     (survivors.groupBy("part_id").applyInArrow(kernel, manifest_struct)
      .write.format("noop").mode("overwrite").save())
-    adds: list[dict] = []
     rw = io.join("_rewrites")
     prefix = f"part-{run}-"
-    if io.isdir(rw):
-        for f in sorted(io.listdir(rw)):
-            if f.startswith(prefix) and f.endswith(".json"):
-                st = json.loads(io.read_text(posixpath.join(rw, f)))
-                adds.append({"add": {
-                    "path": st["file_name"], "size": st["file_size"],
-                    "sha256": st["file_sha256"],
-                    # per-file partition date from the rewrite marker: a DML
-                    # rewrite of a date-partitioned file keeps ITS date
-                    "partitionValues": {"pds": st.get("pds",
-                                                      pds.isoformat())},
-                    "dataChange": True,
-                    "stats": st["stats"],
-                }})
-    return adds
+    # each marker records its file's own partition date: a DML rewrite of a
+    # date-partitioned file keeps ITS date
+    return [add_action(json.loads(io.read_text(posixpath.join(rw, f))),
+                       pds.isoformat())
+            for f in io.listdir(rw)
+            if f.startswith(prefix) and f.endswith(".json")]
 
 
-def _meta_entry(spec: TableSpec) -> dict:
-    chunk_schema = chunk_schema_for(spec)
-    return {"metaData": {"schemaString": chunk_schema.json(),
-                         "partitionColumns": ["pds"],
-                         "format": {"provider": "parquet"}}}
+def _cow_commit(spark: SparkSession, out_dir: str, io: FsIO, spec: TableSpec,
+                matched: list[str], rewrite, run: str, chunk_rows: int,
+                pds: date, inserts: DataFrame | None = None
+                ) -> tuple[list[dict], str]:
+    """The copy-on-write tail of every row-level DML: decode only the
+    ``matched`` files (``__src_file`` provenance), let ``rewrite`` turn
+    their rows into the rows that stay (``__src_file`` kept), give each
+    file's rows one part id and that file's own partition date, add the
+    already-routed ``inserts``, encode, and commit the new files' adds with
+    the matched files' removes as ONE log entry — readers switch
+    atomically. The entry names the matched files as read, so a concurrent
+    commit that rewrote one of them first makes this one raise instead of
+    resurrecting its rows. Returns (adds, log path)."""
+    new_rows = inserts
+    if matched:
+        snap = log_snapshot(out_dir, io)
+        part_map = spark.createDataFrame(
+            [(f, i, _file_pds(snap, f, pds)) for i, f in enumerate(matched)],
+            "__src_file string, part_id int, __pds date",
+        )
+        dec = decode_table(spark, out_dir, io=io, meta_cols=["__src_file"],
+                           chunk_filter=F.col("__src_file").isin(matched))
+        kept = (rewrite(dec).join(F.broadcast(part_map), "__src_file")
+                .drop("__src_file"))
+        new_rows = kept if inserts is None else kept.unionByName(inserts)
+    adds = _rewrite_job(new_rows, io, spec, chunk_rows, pds, run,
+                        pds_from_col=True)
+    log = append_log_entry(
+        out_dir,
+        log_header(spec) + adds
+        + [{"remove": {"path": f, "dataChange": True}} for f in matched],
+        io, reads=matched,
+    )
+    return adds, log
 
 
 DML_MAX_MATCHED_FILES = 1_000_000
@@ -2478,42 +2496,17 @@ def delete_where(spark: SparkSession, out_dir: str, condition,
        versions before the entry still see the pre-delete rows until
        ``vacuum`` reclaims them.
     """
-    from .encode import append_log_entry, committed_files
-
-    io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("delete_where requires a committed table (no _log found)")
-    spec = read_table_spec(out_dir, io)
-    pds = pds or date(2026, 1, 1)
-
+    io, spec = _dml_target(out_dir, io, "delete_where")
     probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
                          chunk_filter=chunk_filter, meta_cols=["__src_file"])
     matched, n_deleted = _dml_matched_files(probe.filter(condition))
     if not matched:
         return {"rows_deleted": 0, "files_rewritten": 0,
                 "files_removed": 0, "log": None}
-
-    run = f"dw{uuid.uuid4().hex[:8]}"
-    fp = _file_pds_map(out_dir, io)
-    part_map = spark.createDataFrame(
-        [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
-        "__src_file string, part_id int, __pds date",
-    )
-    dec = decode_table(spark, out_dir, io=io, meta_cols=["__src_file"],
-                       chunk_filter=F.col("__src_file").isin(matched))
-    survivors = (
-        dec.join(F.broadcast(part_map), "__src_file")
-        .filter(~F.coalesce(condition, F.lit(False)))
-        .drop("__src_file")
-    )
-    adds = _rewrite_job(survivors, io, spec, chunk_rows, pds, run,
-                        pds_from_col=True)
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"remove": {"path": f, "dataChange": True}} for f in matched],
-        io,
-    )
+    adds, log = _cow_commit(
+        spark, out_dir, io, spec, matched,
+        lambda dec: dec.filter(~F.coalesce(condition, F.lit(False))),
+        f"dw{uuid.uuid4().hex[:8]}", chunk_rows, pds or date(2026, 1, 1))
     return {"rows_deleted": n_deleted, "files_rewritten": len(adds),
             "files_removed": len(matched), "log": log}
 
@@ -2567,6 +2560,51 @@ def _dv_packed_map(io: FsIO, actions: list[dict]) -> dict[str, bytes]:
             for cid, pos in load_dv_map(io, actions).items()}
 
 
+def _dv_mark(spark: SparkSession, out_dir: str, io: FsIO, condition,
+             condition_cols: list[str] | None, chunk_filter,
+             kind: str) -> dict | None:
+    """The merge-on-read half of a DV delete or update (``kind``): one
+    probe (selective decode of ``condition_cols``, ``chunk_filter``
+    pruning) finds the matched rows' (file, chunk_id, pre-DV ordinal),
+    capped at :data:`DV_MAX_DELETED_ROWS`; the positions per chunk publish
+    to ``_dv/dv-<uuid>.json``. None when nothing matches, else the row
+    count, the chunk ids, the ``{"dv": ...}`` log action and the files the
+    chunks live in — the commit names them as read, because a concurrent
+    copy-on-write rewrite of one of them (fresh chunk ids) would orphan
+    these positions."""
+    probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
+                         chunk_filter=chunk_filter,
+                         meta_cols=["__src_file", "chunk_id", "__pos"])
+    hits = (probe.filter(condition).select("__src_file", "chunk_id", "__pos")
+            .localCheckpoint(eager=False))
+    total = hits.count()
+    if total == 0:
+        return None
+    if total > DV_MAX_DELETED_ROWS:
+        raise ValueError(
+            f"predicate matches {total} rows "
+            f"(> DV_MAX_DELETED_ROWS={DV_MAX_DELETED_ROWS}); this is a broad "
+            f"{kind} — use the copy-on-write {kind}_where instead"
+        )
+    rows = (
+        hits.groupBy("__src_file", "chunk_id")
+        .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
+        .collect()
+    )
+    chunks = {r["chunk_id"]: _pack_positions(np.asarray(r["pos"]))
+              for r in rows}
+    name = f"dv-{uuid.uuid4().hex[:12]}.json"
+    io.makedirs(io.join("_dv"))
+    io.publish_bytes(
+        io.join("_dv/" + name),
+        json.dumps({"chunks": chunks, "cardinality": total}).encode(),
+        attempt_tag=name[3:15],
+    )
+    return {"rows": total, "chunks": sorted(chunks), "dv_file": name,
+            "action": {"dv": {"dvFile": name, "cardinality": total}},
+            "files": sorted({r["__src_file"] for r in rows})}
+
+
 def dv_delete_where(spark: SparkSession, out_dir: str, condition,
                     io: FsIO | None = None,
                     condition_cols: list[str] | None = None,
@@ -2583,49 +2621,16 @@ def dv_delete_where(spark: SparkSession, out_dir: str, condition,
     ``dvRestore``, and any later CoW rewrite of a file materializes the
     deletes (survivor decode is DV-filtered) and retires its vectors.
     """
-    from .encode import append_log_entry, committed_files
-
-    io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("dv_delete_where requires a committed table (no _log found)")
-    spec = read_table_spec(out_dir, io)
-
-    probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
-                         chunk_filter=chunk_filter,
-                         meta_cols=["chunk_id", "__pos"])
-    hits = (probe.filter(condition).select("chunk_id", "__pos")
-            .localCheckpoint(eager=False))
-    total = hits.count()
-    if total == 0:
+    io, spec = _dml_target(out_dir, io, "dv_delete_where")
+    mark = _dv_mark(spark, out_dir, io, condition, condition_cols,
+                    chunk_filter, "delete")
+    if mark is None:
         return {"rows_deleted": 0, "chunks_touched": 0,
                 "dv_file": None, "log": None}
-    if total > DV_MAX_DELETED_ROWS:
-        raise ValueError(
-            f"predicate matches {total} rows "
-            f"(> DV_MAX_DELETED_ROWS={DV_MAX_DELETED_ROWS}); this is a broad "
-            "delete — use the copy-on-write delete_where instead"
-        )
-    rows = (
-        hits.groupBy("chunk_id")
-        .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
-        .collect()
-    )
-    chunks = {r["chunk_id"]: _pack_positions(np.asarray(r["pos"]))
-              for r in rows}
-    name = f"dv-{uuid.uuid4().hex[:12]}.json"
-    io.makedirs(io.join("_dv"))
-    io.publish_bytes(
-        io.join("_dv/" + name),
-        json.dumps({"chunks": chunks, "cardinality": total}).encode(),
-        attempt_tag=name[3:15],
-    )
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec), {"dv": {"dvFile": name, "cardinality": total}}],
-        io,
-    )
-    return {"rows_deleted": total, "chunks_touched": len(rows),
-            "dv_file": name, "log": log}
+    log = append_log_entry(out_dir, log_header(spec) + [mark["action"]], io,
+                           reads=mark["files"])
+    return {"rows_deleted": mark["rows"], "chunks_touched": len(mark["chunks"]),
+            "dv_file": mark["dv_file"], "log": log}
 
 
 def dv_update_where(spark: SparkSession, out_dir: str, condition,
@@ -2667,47 +2672,24 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
     :func:`restore_table` undoes both halves (``dvRestore`` + file removes);
     a later compaction carries the vectors (chunk-id-keyed) verbatim.
     """
-    from .encode import append_log_entry, committed_files
-
-    io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("dv_update_where requires a committed table (no _log found)")
-    spec = read_table_spec(out_dir, io)
+    io, spec = _dml_target(out_dir, io, "dv_update_where")
     orig_fields = _read_plan(spec)[1].fields
     bad = sorted(set(assignments) - {f.name for f in orig_fields})
     if bad:
         raise ValueError(f"assigned columns not in table: {bad}")
     pds = pds or date(2026, 1, 1)
-
-    probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
-                         chunk_filter=chunk_filter,
-                         meta_cols=["chunk_id", "__pos"])
-    hits = (probe.filter(condition).select("chunk_id", "__pos")
-            .localCheckpoint(eager=False))
-    total = hits.count()
-    if total == 0:
+    mark = _dv_mark(spark, out_dir, io, condition, condition_cols,
+                    chunk_filter, "update")
+    if mark is None:
         return {"rows_updated": 0, "chunks_touched": 0, "files_added": 0,
                 "dv_file": None, "log": None}
-    if total > DV_MAX_DELETED_ROWS:
-        raise ValueError(
-            f"predicate matches {total} rows "
-            f"(> DV_MAX_DELETED_ROWS={DV_MAX_DELETED_ROWS}); this is a broad "
-            "update — use the copy-on-write update_where instead"
-        )
-    pos_rows = (
-        hits.groupBy("chunk_id")
-        .agg(F.sort_array(F.collect_list("__pos")).alias("pos"))
-        .collect()
-    )
-    chunks = {r["chunk_id"]: _pack_positions(np.asarray(r["pos"]))
-              for r in pos_rows}
 
     # replacement rows: full decode of ONLY the touched chunks (every other
     # chunk's payload is never read), condition re-applied, assignments
     # evaluated against the pre-update row, routed like merge inserts
     run = f"du{uuid.uuid4().hex[:8]}"
     dec = decode_table(spark, out_dir, io=io,
-                       chunk_filter=F.col("chunk_id").isin(sorted(chunks)))
+                       chunk_filter=F.col("chunk_id").isin(mark["chunks"]))
     updated = dec.filter(condition).select(
         *[
             assignments[f.name].cast(f.dataType).alias(f.name)
@@ -2719,22 +2701,10 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
                             out_dir, io)
     adds = _rewrite_job(routed, io, spec, chunk_rows, pds, run,
                         pds_from_col=True)
-
-    name = f"dv-{uuid.uuid4().hex[:12]}.json"
-    io.makedirs(io.join("_dv"))
-    io.publish_bytes(
-        io.join("_dv/" + name),
-        json.dumps({"chunks": chunks, "cardinality": total}).encode(),
-        attempt_tag=name[3:15],
-    )
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"dv": {"dvFile": name, "cardinality": total}}],
-        io,
-    )
-    return {"rows_updated": total, "chunks_touched": len(pos_rows),
-            "files_added": len(adds), "dv_file": name, "log": log}
+    log = append_log_entry(out_dir, log_header(spec) + adds + [mark["action"]],
+                           io, reads=mark["files"])
+    return {"rows_updated": mark["rows"], "chunks_touched": len(mark["chunks"]),
+            "files_added": len(adds), "dv_file": mark["dv_file"], "log": log}
 
 
 def _route_inserts(spark: SparkSession, src: DataFrame, spec: TableSpec,
@@ -2807,12 +2777,7 @@ def merge_table(spark: SparkSession, out_dir: str, source: DataFrame,
     ``append_log_entry`` so readers switch atomically. Untouched files are
     never rewritten.
     """
-    from .encode import append_log_entry, committed_files
-
-    io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("merge_table requires a committed table (no _log found)")
-    spec = read_table_spec(out_dir, io)
+    io, spec = _dml_target(out_dir, io, "merge_table")
     keys = spec.key_cols
     clause_mode = (when_matched_update is not None or when_matched_delete
                    or when_matched_condition is not None
@@ -2844,37 +2809,16 @@ def merge_table(spark: SparkSession, out_dir: str, source: DataFrame,
         probe.join(src_keys, list(keys), "left_semi")
     )
 
-    run = f"mg{uuid.uuid4().hex[:8]}"
     # rewritten files each keep THEIR OWN partition date; inserts route by
     # the table's persisted partition column when it has one (fresh files
     # per (date, salt)), else they stamp the call's pds — date-partitioned
     # tables keep pruning correctly after a merge either way
     inserts = _route_inserts(spark, src, spec, insert_parts, pds,
                              len(matched), out_dir, io)
-    if matched:
-        fp = _file_pds_map(out_dir, io)
-        part_map = spark.createDataFrame(
-            [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
-            "__src_file string, part_id int, __pds date",
-        )
-        dec = decode_table(spark, out_dir, io=io, meta_cols=["__src_file"],
-                           chunk_filter=F.col("__src_file").isin(matched))
-        survivors = (
-            dec.join(F.broadcast(part_map), "__src_file")
-            .join(src_keys, list(keys), "left_anti")
-            .drop("__src_file")
-        )
-        new_rows = survivors.unionByName(inserts)
-    else:
-        new_rows = inserts
-    adds = _rewrite_job(new_rows, io, spec, chunk_rows, pds, run,
-                        pds_from_col=True)
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"remove": {"path": f, "dataChange": True}} for f in matched],
-        io,
-    )
+    adds, log = _cow_commit(
+        spark, out_dir, io, spec, matched,
+        lambda dec: dec.join(src_keys, list(keys), "left_anti"),
+        f"mg{uuid.uuid4().hex[:8]}", chunk_rows, pds, inserts)
     return {"rows_replaced": n_replaced, "files_rewritten": len(adds),
             "files_removed": len(matched), "log": log}
 
@@ -2888,8 +2832,6 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
     transformed IN PLACE inside their files (update) or dropped (delete),
     unmatched-by-target source rows insert under ``i_cond``; one atomic
     add+remove log entry either way."""
-    from .encode import append_log_entry
-
     if upd is not None and delete:
         raise ValueError(
             "choose ONE matched action: when_matched_update or when_matched_delete")
@@ -2959,12 +2901,13 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
         inserts = _route_inserts(spark, ins, spec, insert_parts, pds,
                                  len(matched), out_dir, io)
 
-    run = f"mg{uuid.uuid4().hex[:8]}"
+    if not matched and inserts is None:
+        return {"rows_matched": 0, "rows_deleted": 0, "rows_updated": 0,
+                "files_rewritten": 0, "files_removed": 0, "log": None}
     n_action = 0
-    new_rows = inserts
-    if matched:
-        dec = decode_table(spark, out_dir, io=io, meta_cols=["__src_file"],
-                           chunk_filter=F.col("__src_file").isin(matched))
+
+    def rewrite(dec: DataFrame) -> DataFrame:
+        nonlocal n_action
         t = dec.alias("t")
         join_cond = F.col(f"t.{keys[0]}").eqNullSafe(F.col(f"s.{keys[0]}"))
         for k in keys[1:]:
@@ -2975,42 +2918,24 @@ def _merge_with_clauses(spark: SparkSession, out_dir: str, source: DataFrame,
         hit = matched_flag & F.coalesce(cond.cast("boolean"), F.lit(False))
         n_action = joined.filter(hit).count()
         if delete:
-            result = joined.filter(~hit).select(
+            return joined.filter(~hit).select(
                 *[F.col(f"t.{c}").alias(c) for c in orig_cols],
                 F.col("t.__src_file").alias("__src_file"),
             )
-        else:
-            exprs = []
-            for c in orig_cols:
-                tgt_dt = dec.schema[c].dataType
-                if c in upd:
-                    exprs.append(
-                        F.when(hit, upd[c].cast(tgt_dt))
-                        .otherwise(F.col(f"t.{c}")).alias(c))
-                else:
-                    exprs.append(F.col(f"t.{c}").alias(c))
-            result = joined.select(
-                *exprs, F.col("t.__src_file").alias("__src_file"))
-        fp = _file_pds_map(out_dir, io)
-        part_map = spark.createDataFrame(
-            [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
-            "__src_file string, part_id int, __pds date",
-        )
-        survivors = (result.join(F.broadcast(part_map), "__src_file")
-                     .drop("__src_file"))
-        new_rows = (survivors if inserts is None
-                    else survivors.unionByName(inserts))
-    if new_rows is None:
-        return {"rows_matched": 0, "rows_deleted": 0, "rows_updated": 0,
-                "files_rewritten": 0, "files_removed": 0, "log": None}
-    adds = _rewrite_job(new_rows, io, spec, chunk_rows, pds, run,
-                        pds_from_col=True)
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"remove": {"path": f, "dataChange": True}} for f in matched],
-        io,
-    )
+        exprs = []
+        for c in orig_cols:
+            tgt_dt = dec.schema[c].dataType
+            if c in upd:
+                exprs.append(
+                    F.when(hit, upd[c].cast(tgt_dt))
+                    .otherwise(F.col(f"t.{c}")).alias(c))
+            else:
+                exprs.append(F.col(f"t.{c}").alias(c))
+        return joined.select(*exprs, F.col("t.__src_file").alias("__src_file"))
+
+    adds, log = _cow_commit(spark, out_dir, io, spec, matched, rewrite,
+                            f"mg{uuid.uuid4().hex[:8]}", chunk_rows, pds,
+                            inserts)
     return {"rows_matched": n_matched,
             "rows_deleted": n_action if delete else 0,
             "rows_updated": 0 if delete else n_action,
@@ -3036,12 +2961,7 @@ def update_where(spark: SparkSession, out_dir: str, condition,
     order; re-keying is a DELETE + MERGE). Only files holding matches are
     rewritten; every surviving byte of untouched files is untouched.
     """
-    from .encode import append_log_entry, committed_files
-
-    io = _io(out_dir, io)
-    if committed_files(out_dir, io) is None:
-        raise ValueError("update_where requires a committed table (no _log found)")
-    spec = read_table_spec(out_dir, io)
+    io, spec = _dml_target(out_dir, io, "update_where")
     # assignments address the table's ORIGINAL shape: a struct column is
     # assigned as a whole (produce the full struct value); leaf-level
     # assignment composes naturally via F.struct over the PRE-update row.
@@ -3065,42 +2985,25 @@ def update_where(spark: SparkSession, out_dir: str, condition,
             "(rows keep their file's partition date); use dv_update_where, "
             "which re-routes updated rows to their new date's files"
         )
-    pds = pds or date(2026, 1, 1)
-
     probe = decode_table(spark, out_dir, columns=condition_cols, io=io,
                          chunk_filter=chunk_filter, meta_cols=["__src_file"])
     matched, n_updated = _dml_matched_files(probe.filter(condition))
     if not matched:
         return {"rows_updated": 0, "files_rewritten": 0,
                 "files_removed": 0, "log": None}
-
-    run = f"up{uuid.uuid4().hex[:8]}"
-    fp = _file_pds_map(out_dir, io)
-    part_map = spark.createDataFrame(
-        [(f, i, fp.get(f, pds)) for i, f in enumerate(matched)],
-        "__src_file string, part_id int, __pds date",
-    )
-    dec = decode_table(spark, out_dir, io=io, meta_cols=["__src_file"],
-                       chunk_filter=F.col("__src_file").isin(matched))
     hit = F.coalesce(condition, F.lit(False))
-    updated = dec.join(F.broadcast(part_map), "__src_file").select(
-        *[
-            F.when(hit, assignments[f.name]).otherwise(F.col(f.name))
-            .cast(f.dataType).alias(f.name)
-            if f.name in assignments else F.col(f.name)
-            for f in orig_fields
-        ],
-        "part_id",
-        "__pds",
-    )
-    adds = _rewrite_job(updated, io, spec, chunk_rows, pds, run,
-                        pds_from_col=True)
-    log = append_log_entry(
-        out_dir,
-        [_meta_entry(spec)] + adds
-        + [{"remove": {"path": f, "dataChange": True}} for f in matched],
-        io,
-    )
+    adds, log = _cow_commit(
+        spark, out_dir, io, spec, matched,
+        lambda dec: dec.select(
+            *[
+                F.when(hit, assignments[f.name]).otherwise(F.col(f.name))
+                .cast(f.dataType).alias(f.name)
+                if f.name in assignments else F.col(f.name)
+                for f in orig_fields
+            ],
+            "__src_file",
+        ),
+        f"up{uuid.uuid4().hex[:8]}", chunk_rows, pds or date(2026, 1, 1))
     return {"rows_updated": n_updated, "files_rewritten": len(adds),
             "files_removed": len(matched), "log": log}
 
@@ -3132,19 +3035,18 @@ def recluster_table(spark: SparkSession, out_dir: str, by: list[str],
     ``by[0]`` must be a non-null numeric/date column (quantile bucketing);
     remaining ``by`` columns refine the within-chunk sort only.
     """
-    from .encode import append_log_entry, committed_files
-
     io = _io(out_dir, io)
-    live = committed_files(out_dir, io)
-    if live is None:
+    snap = log_snapshot(out_dir, io)
+    if snap is None:
         raise ValueError("recluster_table requires a committed table (no _log found)")
+    live = snap.files
     spec = read_table_spec(out_dir, io)
     names = {f.name for f in spec.schema.fields}
     missing = sorted(set(by) - names)
     if not by or missing:
         raise ValueError(f"cluster columns not in table: {missing or by}")
-    live_pds = sorted({d for f, d in _file_pds_map(out_dir, io).items()
-                       if f in set(live)})
+    live_pds = sorted({a["partitionValues"]["pds"] for a in snap.adds.values()
+                       if "partitionValues" in a})
     if len(live_pds) > 1:
         raise ValueError(
             "recluster_table does not support date-partitioned tables "
@@ -3152,7 +3054,8 @@ def recluster_table(spark: SparkSession, out_dir: str, by: list[str],
             "buckets would merge dates and break partition pruning)"
         )
     # a single-date table keeps ITS date through the rewrite
-    pds = pds or (live_pds[0] if live_pds else date(2026, 1, 1))
+    pds = pds or (date.fromisoformat(live_pds[0]) if live_pds
+                  else date(2026, 1, 1))
 
     dec = decode_table(spark, out_dir, io=io)
     probs = [i / n_parts for i in range(1, n_parts)]
@@ -3169,9 +3072,9 @@ def recluster_table(spark: SparkSession, out_dir: str, by: list[str],
                         sort_cols=list(by))
     log = append_log_entry(
         out_dir,
-        [_meta_entry(spec)] + adds
+        log_header(spec) + adds
         + [{"remove": {"path": f, "dataChange": True}} for f in live],
-        io,
+        io, reads=live,
     )
     return {"files_before": len(live), "files_after": len(adds),
             "buckets": len(bounds) + 1, "log": log}
@@ -3194,8 +3097,6 @@ def table_diff(spark: SparkSession, out_dir: str,
     rewrites (``dataChange: false``) are content-neutral and correctly
     produce an empty diff.
     """
-    from .encode import log_versions
-
     io = _io(out_dir, io)
     versions = log_versions(out_dir, io)
     if to_version is None:
@@ -3206,30 +3107,18 @@ def table_diff(spark: SparkSession, out_dir: str,
         raise ValueError("from_version must be <= to_version")
 
     # replay only the in-range entries to classify the change shape
-    log_dir = io.join("_log")
-    added: list[str] = []
     removed = False
     data_change_adds: list[str] = []
-    for f in sorted(io.listdir(log_dir)):
-        if not f.endswith(".json"):
-            continue
-        idx = int(f[:-5])
-        if idx <= from_version or idx > to_version:
-            continue
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            entry = json.loads(line)
-            if "add" in entry:
-                added.append(entry["add"]["path"])
-                if entry["add"].get("dataChange", True):
-                    data_change_adds.append(entry["add"]["path"])
-            if "remove" in entry and entry["remove"].get("dataChange", True):
-                removed = True
-            if "dv" in entry or "dvRestore" in entry:
-                # a deletion vector (or its restore) changed existing files'
-                # visible rows: the range is not append-only
-                removed = True
-
-    from .encode import committed_files
+    for _, entry in log_entries(out_dir, io, after=from_version,
+                                upto=to_version):
+        if "add" in entry and entry["add"].get("dataChange", True):
+            data_change_adds.append(entry["add"]["path"])
+        if "remove" in entry and entry["remove"].get("dataChange", True):
+            removed = True
+        if "dv" in entry or "dvRestore" in entry:
+            # a deletion vector (or its restore) changed existing files'
+            # visible rows: the range is not append-only
+            removed = True
 
     live_now = set(committed_files(out_dir, io, as_of=to_version))
     if not removed and all(f in live_now for f in data_change_adds):
@@ -3403,9 +3292,9 @@ def restore_table(out_dir: str, version: int, io: FsIO | None = None) -> dict:
     makes restore self-inverse). No data byte moves;
     history is preserved (``as_of`` reads of intermediate versions still
     work, and the restore itself is a new version that can be restored
-    away). Raises if any needed file has already been vacuumed."""
-    from .encode import append_log_entry
-
+    away). Raises if any needed file has already been vacuumed, and on a
+    concurrent commit that removed a file live when the restore was
+    planned (the entry names every such file as read)."""
     io = _io(out_dir, io)
     cur_snap = log_snapshot(out_dir, io)
     old_snap = log_snapshot(out_dir, io, as_of=version)
@@ -3437,12 +3326,12 @@ def restore_table(out_dir: str, version: int, io: FsIO | None = None) -> dict:
     spec = read_table_spec(out_dir, io)
     log = append_log_entry(
         out_dir,
-        [_meta_entry(spec)]
+        log_header(spec)
         + [{"add": dict(old_snap.adds[f], dataChange=True)} for f in re_add]
         + [{"remove": {"path": f, "dataChange": True}} for f in remove]
         + ([{"dvRestore": {"asOf": version, "keep": dv_target}}]
            if dv_changed else []),
-        io,
+        io, reads=cur,
     )
     return {"restored_to": version, "files_readded": len(re_add),
             "files_removed": len(remove), "log": log}
@@ -3459,14 +3348,12 @@ def clone_table(src_dir: str, dst_dir: str, as_of: int | None = None,
     never touch the other. File bytes stream through FsIO (works across
     filesystems); sizes/hashes are carried from the source's add records —
     commit never re-reads what it just wrote."""
-    from .encode import append_log_entry
-
     src_io = _io(src_dir, src_io)
     dst_io = _io(dst_dir, dst_io)
     snap = log_snapshot(src_dir, src_io, as_of=as_of)
     if snap is None:
         raise ValueError("clone_table requires a committed source (no _log found)")
-    if dst_io.isdir(dst_io.join("_log")):
+    if log_snapshot(dst_dir, dst_io) is not None:
         raise ValueError(f"clone destination {dst_dir!r} already has a table")
     live = snap.files
     spec = read_table_spec(src_dir, src_io)
@@ -3492,7 +3379,7 @@ def clone_table(src_dir: str, dst_dir: str, as_of: int | None = None,
             )
     log = append_log_entry(
         dst_dir,
-        [_meta_entry(spec)]
+        log_header(spec)
         + [{"add": dict(snap.adds[f], dataChange=True)} for f in live]
         + [{"dv": {"dvFile": a["dvFile"], "cardinality": a["cardinality"]}}
            for a in dv_actions],

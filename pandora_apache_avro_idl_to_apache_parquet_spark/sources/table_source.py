@@ -47,6 +47,15 @@ skipped via their ``dataChange: false`` tag), and a **streaming sink**
 micro-batch carrying a ``txn`` idempotence line, so epoch replay after a
 crash never duplicates rows; ``outputMode("complete")`` atomically replaces
 the live file set each epoch — a materialized view inside the store).
+
+Sink commits build their entry from the store's own builders (``log_header``
+and one ``add_action`` per task marker) and land it through
+``operators/encode.py``'s ``append_log_entry``, the one commit-log writer;
+the stream source and the txn lookup walk its one reader, ``log_entries``.
+An append (or a stream epoch) reads no file and claims the next index. An
+overwrite names the files it replaces, so a concurrent commit that removed
+one of them first makes it raise instead of landing over a table it did
+not see.
 """
 
 from __future__ import annotations
@@ -381,36 +390,36 @@ def _encode_partition_task(path: str, spec_json: str, chunk_rows: int,
         table, io, spec, chunk_rows, date(2026, 1, 1), run=run
     )
     marker = io.join(f"_checkpoints/part-{run}-{pid:05d}.json")
-    st = _json.loads(io.read_text(marker))
-    return _FileCommit(file_name=st["file_name"],
-                       file_size=st["file_size"],
-                       file_sha=st["file_sha256"],
-                       stats=st["stats"])
+    return _FileCommit(_json.loads(io.read_text(marker)))
 
 
 @dataclass
 class _FileCommit(WriterCommitMessage):
-    """Per-task result: the chunk file this task published (None if its
-    partition was empty), with the size/sha the kernel hashed in flight —
-    commit() builds the log entry from these, never re-reading data."""
+    """Per-task result: the marker of the chunk file this task published
+    (None if its partition was empty), with the size/sha/stats the kernel
+    recorded in flight — commit() builds the log entry from these, never
+    re-reading data."""
 
-    file_name: str | None = None
-    file_size: int = 0
-    file_sha: str = ""
-    stats: dict | None = None
+    marker: dict | None = None
+
+    @property
+    def file_name(self) -> str | None:
+        return self.marker["file_name"] if self.marker else None
 
 
-def _add_action(io, m: _FileCommit) -> dict:
-    """The log ``add`` of one task's file, with the kernel's file stats."""
-    return {"add": {
-        "path": m.file_name,
-        "size": m.file_size,
-        "sha256": m.file_sha,
-        "partitionValues": {"pds": "2026-01-01"},
-        "dataChange": True,
-        "modificationTime": io.mtime_ms(io.join("data/" + m.file_name)),
-        "stats": m.stats,
-    }}
+def _sink_entry(path: str, spec_json: str, messages, removes: list[str],
+                extra: list[dict] = ()) -> list[dict]:
+    """One sink commit's log entry: the header, ``extra`` lines, an ``add``
+    per task file (stamped with its ``modificationTime``) and a remove per
+    file an overwrite replaces."""
+    from ..operators.encode import add_action, log_header
+    from ..operators.table import TableSpec, _io
+
+    io = _io(path, None)
+    return (log_header(TableSpec.from_json(spec_json)) + list(extra)
+            + [add_action(m.marker, io=io) for m in messages
+               if m is not None and m.marker]
+            + [{"remove": {"path": f, "dataChange": True}} for f in removes])
 
 
 class PandoraTableWriter(DataSourceArrowWriter):
@@ -443,25 +452,14 @@ class PandoraTableWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages) -> None:
-        from ..operators.encode import PROTOCOL, append_log_entry
-        from ..operators.table import TableSpec, _io, chunk_schema_for
+        from ..operators.encode import append_log_entry
 
-        adds = [m for m in messages if m is not None and m.file_name]
-        spec = TableSpec.from_json(self._spec_json)
-        io = _io(self._path, None)
-        lines: list[dict] = [
-            {"protocol": PROTOCOL},
-            {"metaData": {
-                "schemaString": chunk_schema_for(spec).json(),
-                "partitionColumns": ["pds"],
-                "format": {"provider": "parquet"},
-            }},
-        ]
-        lines += [_add_action(io, m) for m in adds]
-        lines += [{"remove": {"path": f, "dataChange": True}}
-                  for f in self._prev_live]
+        lines = _sink_entry(self._path, self._spec_json, messages,
+                            self._prev_live)
         if len(lines) > 2:
-            append_log_entry(self._path, lines)
+            # an overwrite names the files it replaces: a concurrent commit
+            # that removed one of them first makes this one raise
+            append_log_entry(self._path, lines, reads=self._prev_live)
 
     def abort(self, messages) -> None:
         import posixpath
@@ -482,36 +480,17 @@ def _last_txn_version(path: str, app_id: str) -> int | None:
     """Highest committed streaming-epoch version for ``app_id`` per the
     commit log's ``txn`` lines (the Delta SetTransaction idempotence axis,
     ``DeltaLake.fs:176-444`` contract). None when the app never committed."""
-    import json as _json
-    import posixpath
+    from ..operators.encode import log_entries
 
-    from ..operators.table import _io
-
-    io = _io(path, None)
-    log_dir = io.join("_log")
-    if not io.isdir(log_dir):
-        return None
     # an app's txn versions are monotone in log order (each commit carries
     # its batchId), so the NEWEST entry with a txn line for this app is the
-    # max — scan newest-first and stop at the first hit, keeping per-epoch
-    # commit cost O(entries since the app's last commit), not O(log)
-    for f in sorted(io.listdir(log_dir), reverse=True):
-        if not f.endswith(".json"):
-            continue
-        for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-            txn = _json.loads(line).get("txn")
-            if txn and txn.get("appId") == app_id:
-                return int(txn["version"])
-    # no hit in the json tail: a checkpoint (possibly taken with clean=True)
-    # may hold the app's latest txn line in its collapsed state
-    from ..operators.encode import read_log_checkpoint
-
-    ckpt = read_log_checkpoint(path, io)
-    if ckpt is not None:
-        for entry in ckpt[1]:
-            txn = entry.get("txn")
-            if txn and txn.get("appId") == app_id:
-                return int(txn["version"])
+    # max — walk newest-first (a checkpoint's collapsed txn lines come last)
+    # and stop at the first hit, keeping per-epoch commit cost
+    # O(entries since the app's last commit), not O(log)
+    for _, entry in log_entries(path, newest_first=True):
+        txn = entry.get("txn")
+        if txn and txn.get("appId") == app_id:
+            return int(txn["version"])
     return None
 
 
@@ -566,10 +545,7 @@ class PandoraTableStreamWriter(DataSourceStreamArrowWriter):
                     pass  # vacuum() reclaims stragglers
 
     def commit(self, messages, batchId: int) -> None:
-        from ..operators.encode import (
-            PROTOCOL, append_log_entry, committed_files,
-        )
-        from ..operators.table import TableSpec, _io, chunk_schema_for
+        from ..operators.encode import append_log_entry, committed_files
 
         last = _last_txn_version(self._path, self._app_id)
         if last is not None and last >= batchId:
@@ -577,24 +553,13 @@ class PandoraTableStreamWriter(DataSourceStreamArrowWriter):
             # files are orphans — reclaim them now
             self._drop_files(messages)
             return
-        adds = [m for m in messages if m is not None and m.file_name]
-        spec = TableSpec.from_json(self._spec_json)
-        io = _io(self._path, None)
-        lines: list[dict] = [
-            {"protocol": PROTOCOL},
-            {"metaData": {
-                "schemaString": chunk_schema_for(spec).json(),
-                "partitionColumns": ["pds"],
-                "format": {"provider": "parquet"},
-            }},
-            {"txn": {"appId": self._app_id, "version": batchId}},
-        ]
-        prev_live = committed_files(self._path, io) if self._overwrite else None
-        lines += [_add_action(io, m) for m in adds]
-        lines += [{"remove": {"path": f, "dataChange": True}}
-                  for f in (prev_live or [])]
+        prev_live = (committed_files(self._path) or []) if self._overwrite else []
         # the txn line makes even an empty epoch a commit: replay stays gated
-        append_log_entry(self._path, lines)
+        append_log_entry(
+            self._path,
+            _sink_entry(self._path, self._spec_json, messages, prev_live,
+                        [{"txn": {"appId": self._app_id, "version": batchId}}]),
+            reads=prev_live)
 
     def abort(self, messages, batchId: int) -> None:
         self._drop_files(messages)
@@ -631,30 +596,13 @@ class PandoraTableStreamReader(DataSourceStreamReader):
         vs = log_versions(self._path)
         return {"version": vs[-1] if vs else -1}
 
-    def _added_files(self, start_v: int, end_v: int) -> list[str]:
-        import json as _json
-        import posixpath
-
-        from ..operators.table import _io
-
-        io = _io(self._path, None)
-        log_dir = io.join("_log")
-        files: list[str] = []
-        for f in sorted(io.listdir(log_dir)):
-            if not f.endswith(".json"):
-                continue
-            v = int(f[:-5])
-            if v <= start_v or v > end_v:
-                continue
-            for line in io.read_text(posixpath.join(log_dir, f)).splitlines():
-                entry = _json.loads(line)
-                add = entry.get("add")
-                if add and add.get("dataChange", True):
-                    files.append(add["path"])
-        return files
-
     def partitions(self, start: dict, end: dict):
-        files = self._added_files(int(start["version"]), int(end["version"]))
+        from ..operators.encode import log_entries
+
+        files = [e["add"]["path"] for _, e in log_entries(
+                     self._path, after=int(start["version"]),
+                     upto=int(end["version"]))
+                 if "add" in e and e["add"].get("dataChange", True)]
         # a remove-only range (compaction) still needs one no-op partition:
         # Spark requires a non-empty partition set per planned batch
         return [InputPartition(f) for f in files] or [InputPartition(None)]

@@ -101,3 +101,23 @@ def test_idempotent_per_version_and_column_set_change(spark, out_dir):
     assert d1 == d2 == read_column_stats(out_dir)
     with pytest.raises(ValueError, match="not in encoded table"):
         analyze_table(spark, out_dir, columns=["nope"])
+
+
+@pytest.mark.parametrize("clean", [False, True])
+def test_refresh_across_a_log_checkpoint(spark, out_dir, clean):
+    """A checkpoint that keeps its json files leaves the appended gap
+    readable, so the refresh stays incremental; one that deleted them hides
+    what the gap did, so the refresh recomputes in full."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+        checkpoint_log,
+    )
+
+    encode_table(_df(spark, 0, 1000), out_dir, key_cols=["id"], n_parts=2)
+    analyze_table(spark, out_dir, columns=COLS)
+    encode_table(_df(spark, 1000, 1500), out_dir, key_cols=["id"], n_parts=2,
+                 run="r1")
+    checkpoint_log(out_dir, clean=clean)
+    doc = analyze_table(spark, out_dir, columns=COLS)
+    assert doc["mode"] == ("full" if clean else "incremental")
+    est = {r.col_name: r.ndv_est for r in ndv_estimates(spark, out_dir).collect()}
+    assert abs(est["id"] - 1500) / 1500 < 0.15

@@ -159,3 +159,40 @@ def test_datasource_sink_rejects_pds_table(spark, tmp_path):
     encode_table(df, out, key_cols=["id"], pds_col="d", n_parts=2)
     with pytest.raises(Exception, match="date-partitioned"):
         (df.write.format("pandora_table").mode("append").save(out))
+
+
+def test_dml_and_recluster_after_clean_checkpoint_keep_partition_dates(
+        spark, tmp_path):
+    """A rewrite reads each file's partition date from the live log state,
+    which after ``checkpoint_log(clean=True)`` lives only in the
+    checkpoint: a DELETE must keep the rewritten file's own date (not the
+    default one, which a pds-pruned read would then miss), and recluster
+    must still see that the table spans several dates."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+        checkpoint_log,
+        log_snapshot,
+    )
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        delete_where,
+        recluster_table,
+    )
+
+    out = str(tmp_path / "tbl")
+    df = spark.range(3000).select(
+        F.col("id").alias("k"),
+        F.expr("date_add(date'2024-03-01', cast(id % 3 as int))").alias("day"),
+        (F.col("id") * 0.5).alias("v"),
+    )
+    encode_table(df, out, key_cols=["k"], n_parts=2, chunk_rows=256,
+                 pds_col="day")
+    checkpoint_log(out, clean=True)
+    delete_where(spark, out, F.col("k") == 7)
+
+    live = log_snapshot(out).adds.values()
+    assert sorted({a["partitionValues"]["pds"] for a in live}) == [
+        "2024-03-01", "2024-03-02", "2024-03-03"]
+    pruned = decode_table(spark, out,
+                          chunk_filter=F.col("pds") == F.lit(date(2024, 3, 2)))
+    assert pruned.filter("day = date'2024-03-02'").count() == 999
+    with pytest.raises(ValueError, match="date-partitioned"):
+        recluster_table(spark, out, ["v"])
