@@ -210,7 +210,9 @@ def log_entries(out_dir: str, io: FsIO | None = None, after: int | None = None,
     covered = ckpt_v if upto is None else min(upto, ckpt_v)
     if from_ckpt:
         idx = [i for i in idx if i > ckpt_v]
-    elif lo < covered and not any(i <= covered for i in idx):
+    elif lo < covered and lo + 1 not in idx:
+        # indices are contiguous (every claim is the newest + 1), so the
+        # range is whole iff its first json file survived
         raise CleanedLogError(
             f"reading log version(s) {lo + 1}..{covered} predates log "
             f"checkpoint {ckpt_v}, whose covered json files were cleaned")
@@ -236,7 +238,8 @@ def read_commit_log(out_dir: str, io: FsIO | None = None) -> list[dict]:
 
 
 def append_log_entry(out_dir: str, lines, io: FsIO | None = None,
-                     reads: list[str] | None = None) -> str | None:
+                     reads: list[str] | None = None,
+                     base: "LogSnapshot | None" = None) -> str | None:
     """Commit one numbered log file — the only code that claims a ``_log``
     index — and return its path. The claim is optimistic:
     ``FsIO.create_exclusive`` of ``_log/<%020d>.json`` plays the role of the
@@ -252,13 +255,20 @@ def append_log_entry(out_dir: str, lines, io: FsIO | None = None,
     every file it read is still live, and claims ``snapshot.version + 1``;
     after a lost claim it checks again. A file a concurrent commit removed
     first is a conflict: ``ValueError``, and nothing is committed (the
-    *Delta Lake* isolation rule). A commit that reads no file (a plain
-    append, a stream epoch) and plans no entry claims the next free index
-    with no replay."""
+    *Delta Lake* isolation rule).
+
+    ``base`` is the snapshot a commit decoded its rows under, given by
+    commits that write rows back (a copy-on-write rewrite, a DV update's
+    replacement rows): those rows reflect ``base``'s deletion vectors, so a
+    DV delete, update or restore committed since is a conflict too (the
+    rewrite would undo the delete, or an update would land twice).
+
+    A commit that reads no file (a plain append, a stream epoch) and plans
+    no entry claims the next free index with no replay."""
     io = _io(out_dir, io)
     log_dir = io.join("_log")
     io.makedirs(log_dir)
-    replay = callable(lines) or bool(reads)
+    replay = callable(lines) or bool(reads) or base is not None
     idx = -1
     while True:
         if replay:
@@ -269,6 +279,11 @@ def append_log_entry(out_dir: str, lines, io: FsIO | None = None,
                     f"commit conflict: {len(gone)} file(s) this commit read "
                     f"are no longer live (e.g. {gone[0]!r}); a concurrent "
                     "commit rewrote them, re-run the operation")
+            if base is not None and snap.dvs != base.dvs:
+                raise ValueError(
+                    "commit conflict: a concurrent commit changed the "
+                    "deletion vectors this commit's rows were read under, "
+                    "re-run the operation")
             entry = lines(snap) if callable(lines) else lines
             if entry is None:
                 return None

@@ -2410,10 +2410,12 @@ def _cow_commit(spark: SparkSession, out_dir: str, io: FsIO, spec: TableSpec,
     file's rows one part id and that file's own partition date, add the
     already-routed ``inserts``, encode, and commit the new files' adds with
     the matched files' removes as ONE log entry — readers switch
-    atomically. The entry names the matched files as read, so a concurrent
-    commit that rewrote one of them first makes this one raise instead of
-    resurrecting its rows. Returns (adds, log path)."""
+    atomically. The entry names the matched files as read, and the
+    snapshot they were decoded under, so a concurrent commit that rewrote
+    one of them, or changed the deletion vectors, first makes this one
+    raise instead of resurrecting rows. Returns (adds, log path)."""
     new_rows = inserts
+    snap = None
     if matched:
         snap = log_snapshot(out_dir, io)
         part_map = spark.createDataFrame(
@@ -2431,7 +2433,7 @@ def _cow_commit(spark: SparkSession, out_dir: str, io: FsIO, spec: TableSpec,
         out_dir,
         log_header(spec) + adds
         + [{"remove": {"path": f, "dataChange": True}} for f in matched],
-        io, reads=matched,
+        io, reads=matched, base=snap,
     )
     return adds, log
 
@@ -2668,7 +2670,10 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
 
     The commit carries the new files' adds AND the ``{"dv": ...}`` action
     atomically: readers see either the old rows or (new rows + vectors),
-    never both. ``as_of`` before the commit sees pre-update rows;
+    never both. A DV commit that lands between the probe and this commit
+    makes it raise, since the replacement rows were read without it (two
+    racing updates of one row would each re-add it). ``as_of`` before the
+    commit sees pre-update rows;
     :func:`restore_table` undoes both halves (``dvRestore`` + file removes);
     a later compaction carries the vectors (chunk-id-keyed) verbatim.
     """
@@ -2678,6 +2683,7 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
     if bad:
         raise ValueError(f"assigned columns not in table: {bad}")
     pds = pds or date(2026, 1, 1)
+    base = log_snapshot(out_dir, io)
     mark = _dv_mark(spark, out_dir, io, condition, condition_cols,
                     chunk_filter, "update")
     if mark is None:
@@ -2702,7 +2708,7 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
     adds = _rewrite_job(routed, io, spec, chunk_rows, pds, run,
                         pds_from_col=True)
     log = append_log_entry(out_dir, log_header(spec) + adds + [mark["action"]],
-                           io, reads=mark["files"])
+                           io, reads=mark["files"], base=base)
     return {"rows_updated": mark["rows"], "chunks_touched": len(mark["chunks"]),
             "files_added": len(adds), "dv_file": mark["dv_file"], "log": log}
 

@@ -121,3 +121,26 @@ def test_refresh_across_a_log_checkpoint(spark, out_dir, clean):
     assert doc["mode"] == ("full" if clean else "incremental")
     est = {r.col_name: r.ndv_est for r in ndv_estimates(spark, out_dir).collect()}
     assert abs(est["id"] - 1500) / 1500 < 0.15
+
+
+def test_refresh_whose_base_predates_a_clean_checkpoint_recomputes(spark, out_dir):
+    """The stats base is at version 0; version 1's json file is cleaned by
+    a checkpoint at 1, and a later checkpoint at 2 keeps version 2's. The
+    gap (0, 2] is incomplete, so the refresh recomputes in full instead of
+    folding in version 2's files alone (missing version 1's ids)."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+        checkpoint_log,
+    )
+
+    encode_table(_df(spark, 0, 1000), out_dir, key_cols=["id"], n_parts=2)
+    analyze_table(spark, out_dir, columns=COLS)
+    encode_table(_df(spark, 1000, 2000), out_dir, key_cols=["id"], n_parts=2,
+                 run="r1")
+    checkpoint_log(out_dir, clean=True)
+    encode_table(_df(spark, 2000, 2500), out_dir, key_cols=["id"], n_parts=2,
+                 run="r2")
+    checkpoint_log(out_dir)
+    doc = analyze_table(spark, out_dir, columns=COLS)
+    assert doc["mode"] == "full"
+    est = {r.col_name: r.ndv_est for r in ndv_estimates(spark, out_dir).collect()}
+    assert abs(est["id"] - 2500) / 2500 < 0.15

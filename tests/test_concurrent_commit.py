@@ -8,7 +8,8 @@ Store fault matrix: a racer that rewrites a file commits just before a
 store commit claims its log index (``_RaceAt(at="create_exclusive")``).
 Pure appends both land; every commit path that removes the rewritten file,
 or attaches deletion-vector positions to it, raises, and committed reads
-show exactly the winner's state."""
+show exactly the winner's state. A DV delete racing a rewrite of its file
+makes the rewrite raise too."""
 
 import threading
 
@@ -197,6 +198,27 @@ def test_store_commit_path_under_a_racing_rewrite(spark, tmp_path, path):
         return
     with pytest.raises(ValueError, match="commit conflict"):
         _LOSERS[path](spark, out, io)
+    assert _rows(spark, out) == _without(5)
+
+
+@pytest.mark.parametrize("path", ["compact_table", "delete_where",
+                                  "update_where", "merge_upsert",
+                                  "merge_clauses", "dv_update_where"])
+def test_commit_path_under_a_racing_deletion_vector(spark, tmp_path, path):
+    """A DV delete of k == 5 commits just before ``path`` claims its log
+    index. A rewrite decoded its rows before that delete and mints new
+    chunk ids, so landing it would bring k == 5 back (a DV update would
+    re-add the rows it replaced): it raises. Compaction moves chunks with
+    their ids, so the vector still applies and both land."""
+    out = str(tmp_path / "tbl")
+    _two_file_store(spark, out)
+    io = _RaceAt(out, "create_exclusive",
+                 lambda: dv_delete_where(spark, out, F.col("k") == 5))
+    if path == "compact_table":
+        _LOSERS[path](spark, out, io)
+    else:
+        with pytest.raises(ValueError, match="commit conflict"):
+            _LOSERS[path](spark, out, io)
     assert _rows(spark, out) == _without(5)
 
 

@@ -133,3 +133,29 @@ def test_second_checkpoint_after_clean_keeps_checkpointed_files(tmp_path):
     append_log_entry(out, [{"add": {"path": "c.parquet"}}])
     checkpoint_log(out)
     assert committed_files(out) == ["a.parquet", "b.parquet", "c.parquet"]
+
+
+def test_reads_reaching_behind_a_clean_checkpoint_raise_after_a_kept_one(tmp_path):
+    """a@0, a clean checkpoint at 0, c@1, d@2, a kept checkpoint at 2: the
+    json file of version 0 is gone, so time travel to version 1 and a raw
+    range starting at or before 0 are incomplete and raise, even though
+    json files at or below the latest checkpoint's version remain."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+        CleanedLogError,
+        append_log_entry,
+        log_entries,
+    )
+
+    out = str(tmp_path / "t")
+    append_log_entry(out, [{"add": {"path": "a.parquet"}}])
+    checkpoint_log(out, clean=True)
+    append_log_entry(out, [{"add": {"path": "c.parquet"}}])
+    append_log_entry(out, [{"add": {"path": "d.parquet"}}])
+    checkpoint_log(out)
+    assert committed_files(out) == ["a.parquet", "c.parquet", "d.parquet"]
+    assert committed_files(out, as_of=2) == ["a.parquet", "c.parquet", "d.parquet"]
+    with pytest.raises(CleanedLogError):
+        committed_files(out, as_of=1)
+    with pytest.raises(CleanedLogError):
+        list(log_entries(out, after=-1, upto=1))
+    assert [i for i, _ in log_entries(out, after=0)] == [1, 2]
