@@ -4,13 +4,17 @@ suite (``Unit.Tests/Tests/Tables/EqualsMarkdownTests.fs`` diffing
 byte-for-byte against checked-in goldens, regenerable with
 ``python -m tests.test_goldens`` (run as a module).
 
-Covered: the token store's chunk physical schema, and the codec-choice table for
+Covered: the token store's chunk physical schema, the codec-choice table for
 the seeded fixture (the auto-selection provenance — the engine's analog of
-the reference's Transformation tags).
+the reference's Transformation tags), and the payload bytes of every
+numeric codec, selector and string selector on seeded streams.
 """
 
+import hashlib
+import json
 import os
 
+import numpy as np
 import pytest
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
@@ -96,10 +100,161 @@ def test_manifest_scan_prunes_payloads(spark, tmp_path):
     assert "_payload" not in plan, "payload columns leaked into the manifest scan"
 
 
+# --------------------------------------------------------- codec payloads
+
+_DTYPES = ("int32", "int64", "float32", "float64")
+_SMALL = [3, -1, 7, 7, 7, 1 << 20, 0, 5]
+_SMALL_STRS = ["ab", "", "abab", "é", "ab"]
+
+
+def _sha(buf) -> str | None:
+    return None if buf is None else hashlib.sha256(buf).hexdigest()
+
+
+def _typed_family(C, dtype: str) -> list[int]:
+    """The codecs ``encode_typed`` takes for a lane dtype."""
+    fam = list(C.INT_CODECS)
+    if dtype in ("int64", "float64"):
+        fam.append(C.GCD)
+    if dtype.startswith("float"):
+        fam.append(C.ALP)
+    return fam
+
+
+def payload_cases() -> dict:
+    """(dtype, case) -> array: the ``INT_CASES`` shapes cast to every lane
+    dtype, plus full-width 64-bit streams as int64 and as float64 bits."""
+    from codec_cases import INT_CASES
+
+    rng = np.random.default_rng(13)
+    wide = {
+        "wide64": rng.integers(-(2**63), 2**63 - 1, 2000, dtype=np.int64, endpoint=True),
+        "stride64": rng.integers(18000, 20500, 2000) * 86_400_000_000,
+        "extremes64": np.array([-(2**63), 2**63 - 1, 0, -1], np.int64),
+    }
+    cases = {(dt, name): a.astype(dt) for dt in _DTYPES for name, a in INT_CASES.items()}
+    for name, a in wide.items():
+        cases[("int64", name)] = a
+        cases[("float64", name)] = a.view(np.float64)
+    return cases
+
+
+def _row_lengths(rng, n: int) -> np.ndarray:
+    cuts = np.sort(rng.integers(0, n + 1, n // 100))
+    return np.diff(np.concatenate(([0], cuts, [n]))).astype(np.int64)
+
+
+def _grouped_cases() -> dict:
+    """name -> (values, lengths): each int32 case cut into seeded rows, plus
+    a stream of statistically mixed rows (the GROUPED cascade's case)."""
+    from codec_cases import INT_CASES
+
+    rng = np.random.default_rng(7)
+    out = {name: (a, _row_lengths(rng, len(a))) for name, a in INT_CASES.items()}
+    rows = []
+    for i in range(400):
+        n = int(rng.integers(0, 300))
+        rows.append([np.full(n, 9), rng.integers(0, 256, n),
+                     50_000 + rng.integers(0, 500, n), rng.integers(0, 32_000, n),
+                     rng.integers(-(2**31), 2**31 - 1, n)][i % 5].astype(np.int32))
+    out["mixed"] = (np.concatenate(rows), np.array([len(r) for r in rows], np.int64))
+    return out
+
+
+def codec_payloads() -> dict:
+    """sha256 of every numeric payload ``encode_typed`` writes per dtype x
+    case x codec (None where inapplicable), of what the selectors write on
+    the same cases, and a few small payloads as hex with their inputs."""
+    from codec_cases import STR_CASES
+
+    from pandora_apache_avro_idl_to_apache_parquet_spark.functions import codecs as C
+    from pandora_apache_avro_idl_to_apache_parquet_spark.plans.cost import (
+        encode_values,
+        select_str_codec,
+        select_typed_codec,
+    )
+
+    cases = payload_cases()
+    typed, selected = {}, {}
+    for (dt, name), a in cases.items():
+        for codec in _typed_family(C, dt):
+            typed[f"{dt}/{name}/{C.CODEC_NAMES[codec]}"] = _sha(C.encode_typed(a, codec))
+        selected[f"{dt}/{name}"] = _sha(select_typed_codec(a))
+    grouped = {name: _sha(encode_values(v, l)) for name, (v, l) in _grouped_cases().items()}
+    strs = {name: list(v) for name, v in STR_CASES.items()}
+    strs.update({f"digits/{name}": a.astype(str).tolist()
+                 for (dt, name), a in cases.items() if dt == "int32"})
+    str_sel = {name: _sha(select_str_codec(*C.strings_to_blob(np.array(v, dtype=object))))
+               for name, v in strs.items()}
+    hexes = []
+    for dt in _DTYPES:
+        for codec in _typed_family(C, dt):
+            buf = C.encode_typed(np.array(_SMALL, dt), codec)
+            if buf is not None:
+                hexes.append({"kind": "typed", "dtype": dt, "values": _SMALL,
+                              "payload": buf.hex()})
+    lengths = np.array([3, 0, 5], np.int64)
+    hexes.append({"kind": "grouped", "values": _SMALL, "lengths": lengths.tolist(),
+                  "payload": C.encode_int32_grouped(np.array(_SMALL, np.int32), lengths).hex()})
+    for codec in C.STR_CODECS:
+        buf = C.encode_strings(*C.strings_to_blob(np.array(_SMALL_STRS, dtype=object)), codec)
+        hexes.append({"kind": "strings", "values": _SMALL_STRS, "payload": buf.hex()})
+    return {"encode_typed": typed, "select_typed_codec": selected,
+            "encode_values": grouped, "select_str_codec": str_sel, "hex": hexes}
+
+
+def _delta_overflows_32(a: np.ndarray) -> bool:
+    """A 32-bit lane whose consecutive diffs leave int32 (DELTA wraps them)."""
+    d = np.diff(a.view(np.int32).astype(np.int64))
+    return a.itemsize == 4 and len(d) > 0 and (d.max() > 2**31 - 1 or d.min() < -(2**31))
+
+
+def test_codec_payloads_golden():
+    """Every numeric payload is byte-identical to the pinned one. The one
+    allowed difference: DELTA on a 32-bit lane whose diffs overflow int32
+    was inapplicable (None) and now wraps mod 2^32 and must round-trip."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.functions import codecs as C
+
+    with open(os.path.join(GOLDEN_DIR, "codec_payloads.json")) as fh:
+        want = json.load(fh)
+    got = codec_payloads()
+    cases = payload_cases()
+    for key, sha in want["encode_typed"].items():
+        dt, name, codec = key.split("/")
+        if sha is None and got["encode_typed"][key] is not None:
+            a = cases[(dt, name)]
+            assert codec == "delta" and _delta_overflows_32(a), key
+            out = C.decode_typed(C.encode_typed(a, C.DELTA))
+            assert out.dtype == a.dtype and np.array_equal(out.view(np.int32), a.view(np.int32))
+            got["encode_typed"][key] = None
+    for section in want:
+        assert got[section] == want[section], section
+    for entry in want["hex"]:
+        buf = bytes.fromhex(entry["payload"])
+        if entry["kind"] == "strings":
+            assert C.blob_to_strings(*C.decode_strings(buf)).to_pylist() == entry["values"]
+        elif entry["kind"] == "grouped":
+            out = C.decode_int32_grouped(buf, np.array(entry["lengths"], np.int64))
+            assert out.tolist() == entry["values"]
+        else:
+            out = C.decode_typed(buf)
+            assert out.dtype == entry["dtype"] and out.tolist() == entry["values"]
+
+
+def write_codec_payloads() -> None:
+    with open(os.path.join(GOLDEN_DIR, "codec_payloads.json"), "w") as fh:
+        json.dump(codec_payloads(), fh, indent=1, sort_keys=True)
+        fh.write("\n")
+
+
 if __name__ == "__main__":
+    import sys
+
     from pandora_apache_avro_idl_to_apache_parquet_spark.session import get_spark
 
+    sys.path.insert(0, os.path.dirname(__file__))  # codec_cases, as under pytest
     os.makedirs(GOLDEN_DIR, exist_ok=True)
+    write_codec_payloads()
     spark = get_spark(app="regen-goldens", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     with open(os.path.join(GOLDEN_DIR, "manifest_schema.md"), "w") as fh:
