@@ -2,19 +2,30 @@
 
 Per the north rule these generalize the reference's single static codec
 (Snappy, ``/root/reference/.../Pandora/Apache/Parquet.fs:1374``) into a per-chunk
-candidate set with auto-selection:
+candidate set with auto-selection (``plans/cost.py``):
 
-* int32 streams: PLAIN, BITPACK, FOR (frame-of-reference + bit-packed residuals),
+* numeric streams — int32, int64, float32, float64 — share ONE integer codec
+  family: PLAIN, BITPACK, FOR (frame-of-reference + bit-packed residuals),
   RLE (run values + run lengths, each FOR-packed), DICT (sorted dictionary +
-  bit-packed codes).
+  bit-packed codes), DELTA (FOR-packed consecutive differences) and GCD
+  (FOR over the residuals divided by their common stride). One kernel per
+  codec serves every width: it takes its lane from the array's dtype and
+  computes residuals and differences mod 2^w in the unsigned lane. Floats
+  ride these kernels as bit patterns; ALP (decimal floats as scaled ints,
+  nested through the family) is float-only.
+* GROUPED: a chunk's int32 element stream regrouped into row classes, each
+  with its own codec (token streams, ``encode_int32_grouped``).
 * byte/string streams: STR_PLAIN, STR_DICT, STR_FSST (FSST-style symbol-table
   compression per Boncz/Neumann/Leis, VLDB 2020 — a pure-Python/numpy "FSST-lite"
-  that is bit-identical on round-trip; see PAPERS.md).
+  that is bit-identical on round-trip; see PAPERS.md) and STR_ZLIB (DEFLATE,
+  the entropy fallback for natural text).
 
 Every encoded payload is **self-describing**: a fixed header (magic, version,
 codec id, dtype, value count) followed by codec-specific sections, so a chunk can
 be decoded with nothing but its payload bytes — the property the reference gets
 from one-Parquet-file-per-table (``Parquet.fs:1357-1391``) we get per column chunk.
+The header's dtype byte is the only difference between the payloads of one
+codec at different lane types.
 
 All kernels operate on whole numpy arrays; no per-row Python.
 """
@@ -47,8 +58,8 @@ STR_ZLIB = 13  # DEFLATE over the blob: the entropy-codec fallback FSST's
 DT_INT32 = 0
 DT_BYTES = 1
 DT_INT64 = 2
-DT_FLOAT32 = 3  # float32 bit patterns through the int32 codec family
-DT_FLOAT64 = 4  # float64 bit patterns through the int64 codec family
+DT_FLOAT32 = 3  # float32 bit patterns through 32-bit lanes
+DT_FLOAT64 = 4  # float64 bit patterns through 64-bit lanes
 
 INT_CODECS = (PLAIN, BITPACK, FOR, RLE, DICT, DELTA)
 STR_CODECS = (STR_PLAIN, STR_DICT, STR_FSST, STR_ZLIB)
@@ -84,51 +95,60 @@ def _read_header(buf: bytes) -> tuple[int, int, int, int]:
 
 # ---------------------------------------------------------------- bit packing
 
+def _lane(itemsize: int) -> np.dtype:
+    """Unsigned lane for values of ``itemsize`` bytes: arrays of 4 bytes or
+    less stay on uint32 lanes, wider ones take uint64."""
+    return np.dtype(np.uint32 if itemsize <= 4 else np.uint64)
+
+
 def pack_bits(vals: np.ndarray, width: int) -> bytes:
-    """Pack non-negative uint32 values at exactly ``width`` bits each, in a
+    """Pack non-negative values at exactly ``width`` bits each, in a
     plane-major (bitsliced) layout: ``width // 8`` contiguous byte planes
     followed by ``width % 8`` packbits-compressed bit planes. Exact-width
     compression at vectorized-contiguous speed — every pass is a whole-array
-    shift/mask into a preallocated plane, no per-value bit matrix.
-    width==0 encodes a constant-0 stream as zero bytes."""
+    shift/mask into a preallocated plane, no per-value bit matrix. The
+    layout does not depend on the lane (uint32 or uint64, from the array's
+    itemsize). width==0 encodes a constant-0 stream as zero bytes."""
     if width == 0 or len(vals) == 0:
         return b""
-    v = vals.astype(np.uint32, copy=False)
+    u = _lane(vals.dtype.itemsize).type
+    v = vals.astype(u, copy=False)
     n = len(v)
     n_byte_planes, rem = divmod(width, 8)
     parts = []
     if n_byte_planes:
         bplanes = np.empty((n_byte_planes, n), np.uint8)
         for p in range(n_byte_planes):
-            np.bitwise_and(v >> np.uint32(8 * p), np.uint32(0xFF),
-                           out=bplanes[p], casting="unsafe")
+            np.bitwise_and(v >> u(8 * p), u(0xFF), out=bplanes[p], casting="unsafe")
         parts.append(bplanes.tobytes())
     if rem:
         bits = np.empty((rem, n), np.uint8)
-        base = np.uint32(8 * n_byte_planes)
+        base = 8 * n_byte_planes
         for j in range(rem):
-            np.bitwise_and(v >> (base + np.uint32(j)), np.uint32(1),
-                           out=bits[j], casting="unsafe")
+            np.bitwise_and(v >> u(base + j), u(1), out=bits[j], casting="unsafe")
         parts.append(np.packbits(bits, axis=1).tobytes())
     return b"".join(parts)
 
 
-def unpack_bits(buf: bytes, n: int, width: int) -> np.ndarray:
+def unpack_bits(buf: bytes, n: int, width: int, lane=np.uint32) -> np.ndarray:
+    """Inverse of :func:`pack_bits` into ``n`` values of the unsigned
+    ``lane`` dtype."""
+    u = np.dtype(lane).type
+    out = np.zeros(n, dtype=u)
     if width == 0 or n == 0:
-        return np.zeros(n, dtype=np.uint32)
+        return out
     raw = np.frombuffer(buf, dtype=np.uint8)
     n_byte_planes, rem = divmod(width, 8)
-    out = np.zeros(n, dtype=np.uint32)
     for p in range(n_byte_planes):
-        out |= raw[p * n : (p + 1) * n].astype(np.uint32) << np.uint32(8 * p)
+        out |= raw[p * n : (p + 1) * n].astype(u) << u(8 * p)
     if rem:
         nb = (n + 7) // 8
         planes = np.unpackbits(
             raw[n_byte_planes * n :].reshape(rem, nb), axis=1, count=n
         )
-        base = np.uint32(8 * n_byte_planes)
+        base = 8 * n_byte_planes
         for j in range(rem):
-            out |= planes[j].astype(np.uint32) << (base + np.uint32(j))
+            out |= planes[j].astype(u) << u(base + j)
     return out
 
 
@@ -136,92 +156,57 @@ def _bit_width(max_val: int) -> int:
     return int(max_val).bit_length()
 
 
-def pack_bits64(vals: np.ndarray, width: int) -> bytes:
-    """64-bit-wide variant of :func:`pack_bits` (same plane-major layout,
-    uint64 lanes) for the int64/float64 codec family."""
-    if width == 0 or len(vals) == 0:
-        return b""
-    v = vals.astype(np.uint64, copy=False)
-    n = len(v)
-    n_byte_planes, rem = divmod(width, 8)
-    parts = []
-    if n_byte_planes:
-        bplanes = np.empty((n_byte_planes, n), np.uint8)
-        for p in range(n_byte_planes):
-            np.bitwise_and(v >> np.uint64(8 * p), np.uint64(0xFF),
-                           out=bplanes[p], casting="unsafe")
-        parts.append(bplanes.tobytes())
-    if rem:
-        bits = np.empty((rem, n), np.uint8)
-        base = np.uint64(8 * n_byte_planes)
-        for j in range(rem):
-            np.bitwise_and(v >> (base + np.uint64(j)), np.uint64(1),
-                           out=bits[j], casting="unsafe")
-        parts.append(np.packbits(bits, axis=1).tobytes())
-    return b"".join(parts)
+# --------------------------------------------------------- integer codecs
+# One kernel per codec for every lane width: each _enc takes a signed int32
+# or int64 array (floats arrive as bit-pattern views) and returns the codec
+# *body* (no header), or None if inapplicable; each _dec takes the lane
+# dtype back from the header. FOR residuals, DELTA diffs and GCD quotients
+# are computed in the unsigned type of the lane, mod 2^w: exact, because
+# max - min < 2^w. The reference's INT / LONG / TIMESTAMP_MS / TIME_MS
+# physical types (``Parquet.fs:52-110, 534-621``) all land here.
+
+def _wrap(x: int, dt: np.dtype):
+    """Signed ``x`` as a scalar of ``dt``'s unsigned lane (mod 2^w)."""
+    return np.array([x], dtype=dt).view(_lane(dt.itemsize))[0]
 
 
-def unpack_bits64(buf: bytes, n: int, width: int) -> np.ndarray:
-    if width == 0 or n == 0:
-        return np.zeros(n, dtype=np.uint64)
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    n_byte_planes, rem = divmod(width, 8)
-    out = np.zeros(n, dtype=np.uint64)
-    for p in range(n_byte_planes):
-        out |= raw[p * n : (p + 1) * n].astype(np.uint64) << np.uint64(8 * p)
-    if rem:
-        nb = (n + 7) // 8
-        planes = np.unpackbits(
-            raw[n_byte_planes * n :].reshape(rem, nb), axis=1, count=n
-        )
-        base = np.uint64(8 * n_byte_planes)
-        for j in range(rem):
-            out |= planes[j].astype(np.uint64) << (base + np.uint64(j))
-    return out
+def _enc_plain(a: np.ndarray) -> bytes:
+    return a.astype(a.dtype.newbyteorder("<"), copy=False).tobytes()
 
 
-# ------------------------------------------------------------- int32 codecs
-# Each _enc returns the codec *body* (no header) or None if inapplicable.
-
-def _enc_plain_i32(a: np.ndarray) -> bytes:
-    return a.astype("<i4", copy=False).tobytes()
+def _dec_plain(body: bytes, n: int, dt: np.dtype) -> np.ndarray:
+    return np.frombuffer(body, dtype=dt.newbyteorder("<"), count=n).astype(dt)
 
 
-def _dec_plain_i32(body: bytes, n: int) -> np.ndarray:
-    return np.frombuffer(body, dtype="<i4", count=n).copy()
-
-
-def _enc_bitpack_i32(a: np.ndarray) -> bytes | None:
+def _enc_bitpack(a: np.ndarray) -> bytes | None:
     """Bit-pack raw values; applicable only to non-negative streams."""
     if len(a) == 0:
         return struct.pack("<B", 0)
-    lo = int(a.min())
-    if lo < 0:
+    if int(a.min()) < 0:
         return None
     w = _bit_width(int(a.max()))
-    return struct.pack("<B", w) + pack_bits(a.astype(np.int64).astype(np.uint32), w)
+    return struct.pack("<B", w) + pack_bits(a.view(_lane(a.itemsize)), w)
 
 
-def _dec_bitpack_i32(body: bytes, n: int) -> np.ndarray:
+def _dec_bitpack(body: bytes, n: int, dt: np.dtype) -> np.ndarray:
     (w,) = struct.unpack_from("<B", body, 0)
-    return unpack_bits(body[1:], n, w).astype(np.int32)
+    return unpack_bits(body[1:], n, w, _lane(dt.itemsize)).view(dt)
 
 
-def _enc_for_i32(a: np.ndarray) -> bytes:
+def _enc_for(a: np.ndarray) -> bytes:
     """Frame-of-reference: store min as i64 base, bit-pack residuals."""
     if len(a) == 0:
         return struct.pack("<qB", 0, 0)
-    a64 = a.astype(np.int64, copy=False)
-    base = int(a64.min())
-    resid = (a64 - base).astype(np.uint64)
+    base = int(a.min())
+    resid = a.view(_lane(a.itemsize)) - _wrap(base, a.dtype)
     w = _bit_width(int(resid.max()))
-    return struct.pack("<qB", base, w) + pack_bits(resid.astype(np.uint32), w)
+    return struct.pack("<qB", base, w) + pack_bits(resid, w)
 
 
-def _dec_for_i32(body: bytes, n: int) -> np.ndarray:
+def _dec_for(body: bytes, n: int, dt: np.dtype) -> np.ndarray:
     base, w = struct.unpack_from("<qB", body, 0)
-    resid = unpack_bits(body[9:], n, w)
-    return (resid.astype(np.int64) + base).astype(np.int32)
+    resid = unpack_bits(body[9:], n, w, _lane(dt.itemsize))
+    return (resid + _wrap(base, dt)).view(dt)
 
 
 def _rle_split(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -235,22 +220,24 @@ def _rle_split(a: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return vals, lens
 
 
-def _enc_rle_i32(a: np.ndarray) -> bytes:
+def _enc_rle(a: np.ndarray) -> bytes:
+    """Run values and run lengths - 1, each FOR-packed."""
     vals, lens = _rle_split(a)
-    vb = _enc_for_i32(vals.astype(np.int32, copy=False))
-    lb = _enc_for_i32((lens - 1).astype(np.int32)) if len(lens) else _enc_for_i32(np.zeros(0, np.int32))
+    vb = _enc_for(vals)
+    lb = _enc_for((lens - 1).astype(a.dtype))
     return struct.pack("<QQ", len(vals), len(vb)) + vb + lb
 
 
-def _dec_rle_i32(body: bytes, n: int) -> np.ndarray:
+def _dec_rle(body: bytes, n: int, dt: np.dtype) -> np.ndarray:
     n_runs, vlen = struct.unpack_from("<QQ", body, 0)
     off = 16
-    vals = _dec_for_i32(body[off : off + vlen], n_runs)
-    lens = _dec_for_i32(body[off + vlen :], n_runs).astype(np.int64) + 1
+    vals = _dec_for(body[off : off + vlen], n_runs, dt)
+    lens = _dec_for(body[off + vlen :], n_runs, dt).astype(np.int64) + 1
     return np.repeat(vals, lens)
 
 
-def _enc_dict_i32(a: np.ndarray) -> bytes:
+def _enc_dict(a: np.ndarray) -> bytes:
+    """Sorted dictionary (FOR-packed) + bit-packed codes."""
     # hash-based factorize (O(n)) beats np.unique's O(n log n) sort; only the
     # (small) dictionary is sorted, codes are remapped through its rank
     import pandas as pd
@@ -262,179 +249,46 @@ def _enc_dict_i32(a: np.ndarray) -> bytes:
     rank[order] = np.arange(len(order), dtype=np.uint32)
     inv = rank[codes]
     uniq = uniq[order]
-    ub = _enc_for_i32(uniq.astype(np.int32, copy=False))
+    ub = _enc_for(uniq.astype(a.dtype, copy=False))
     w = _bit_width(max(len(uniq) - 1, 0))
     codes_packed = pack_bits(inv, w)
     return struct.pack("<QQB", len(uniq), len(ub), w) + ub + codes_packed
 
 
-def _dec_dict_i32(body: bytes, n: int) -> np.ndarray:
+def _dec_dict(body: bytes, n: int, dt: np.dtype) -> np.ndarray:
     n_dict, ulen, w = struct.unpack_from("<QQB", body, 0)
     off = 17
-    uniq = _dec_for_i32(body[off : off + ulen], n_dict)
+    uniq = _dec_for(body[off : off + ulen], n_dict, dt)
     inv = unpack_bits(body[off + ulen :], n, w)
     return uniq[inv] if n else uniq[:0]
 
 
-def _enc_delta_i32(a: np.ndarray) -> bytes:
+def _enc_delta(a: np.ndarray) -> bytes:
     """Delta: first value as i64, then FOR-packed consecutive differences —
     wins on sorted/near-monotone streams (offsets, row ids) where raw FOR
-    still pays the full value range."""
+    still pays the full value range. Diffs wrap mod 2^w on both encode and
+    decode, so the round-trip is exact for any stream."""
     if len(a) == 0:
-        return struct.pack("<q", 0) + _enc_for_i32(a)
-    a64 = a.astype(np.int64, copy=False)
-    diffs = np.diff(a64)
-    if len(diffs) and (diffs.max() > 2**31 - 1 or diffs.min() < -(2**31)):
-        return None  # diff overflow (int32 extremes); other codecs cover this
-    return struct.pack("<q", int(a64[0])) + _enc_for_i32(diffs.astype(np.int32))
+        return struct.pack("<q", 0) + _enc_for(a)
+    u = a.view(_lane(a.itemsize))
+    return struct.pack("<q", int(a[0])) + _enc_for((u[1:] - u[:-1]).view(a.dtype))
 
 
-def _dec_delta_i32(body: bytes, n: int) -> np.ndarray:
+def _dec_delta(body: bytes, n: int, dt: np.dtype) -> np.ndarray:
     (first,) = struct.unpack_from("<q", body, 0)
+    u = _lane(dt.itemsize)
+    out = np.empty(n, dtype=u)
     if n == 0:
-        return np.zeros(0, dtype=np.int32)
-    diffs = _dec_for_i32(body[8:], n - 1).astype(np.int64)
-    out = np.empty(n, dtype=np.int64)
-    out[0] = first
-    np.cumsum(diffs, out=out[1:]) if n > 1 else None
-    out[1:] += first
-    return out.astype(np.int32)
-
-
-_INT_ENC = {PLAIN: _enc_plain_i32, BITPACK: _enc_bitpack_i32, FOR: _enc_for_i32,
-            RLE: _enc_rle_i32, DICT: _enc_dict_i32, DELTA: _enc_delta_i32}
-_INT_DEC = {PLAIN: _dec_plain_i32, BITPACK: _dec_bitpack_i32, FOR: _dec_for_i32,
-            RLE: _dec_rle_i32, DICT: _dec_dict_i32, DELTA: _dec_delta_i32}
-
-
-def encode_int32(a: np.ndarray, codec: int) -> bytes | None:
-    """Encode an int32 array with the given codec; None if inapplicable."""
-    a = np.asarray(a, dtype=np.int32)
-    body = _INT_ENC[codec](a)
-    if body is None:
-        return None
-    return _header(codec, DT_INT32, len(a)) + body
-
-
-def decode_int32(buf: bytes) -> np.ndarray:
-    codec, dtype, n, off = _read_header(buf)
-    if dtype != DT_INT32:
-        raise ValueError("not an int32 payload")
-    return np.asarray(_INT_DEC[codec](buf[off:], n), dtype=np.int32)
-
-
-# ------------------------------------------------------------- int64 codecs
-# Same codec family as int32, 64-bit lanes: the reference's LONG /
-# TIMESTAMP_MS / TIME_MS physical types (``Parquet.fs:52-110, 534-621``) all
-# land here; float64 rides the same kernels as bit patterns (DT_FLOAT64).
-
-def _u64(x: int) -> np.uint64:
-    return np.array([x], dtype=np.int64).view(np.uint64)[0]
-
-
-def _enc_plain_i64(a: np.ndarray) -> bytes:
-    return a.astype("<i8", copy=False).tobytes()
-
-
-def _dec_plain_i64(body: bytes, n: int) -> np.ndarray:
-    return np.frombuffer(body, dtype="<i8", count=n).copy()
-
-
-def _enc_bitpack_i64(a: np.ndarray) -> bytes | None:
-    if len(a) == 0:
-        return struct.pack("<B", 0)
-    lo = int(a.min())
-    if lo < 0:
-        return None
-    w = _bit_width(int(a.max()))
-    return struct.pack("<B", w) + pack_bits64(a.view(np.uint64), w)
-
-
-def _dec_bitpack_i64(body: bytes, n: int) -> np.ndarray:
-    (w,) = struct.unpack_from("<B", body, 0)
-    return unpack_bits64(body[1:], n, w).view(np.int64).copy()
-
-
-def _enc_for_i64(a: np.ndarray) -> bytes:
-    """FOR with mod-2^64 residuals: (a - min) in uint64 wraparound arithmetic
-    is exact for any int64 range (max - min always fits in uint64)."""
-    if len(a) == 0:
-        return struct.pack("<qB", 0, 0)
-    base = int(a.min())
-    resid = a.view(np.uint64) - _u64(base)
-    w = _bit_width(int(resid.max()))
-    return struct.pack("<qB", base, w) + pack_bits64(resid, w)
-
-
-def _dec_for_i64(body: bytes, n: int) -> np.ndarray:
-    base, w = struct.unpack_from("<qB", body, 0)
-    resid = unpack_bits64(body[9:], n, w)
-    return (resid + _u64(base)).view(np.int64).copy()
-
-
-def _enc_rle_i64(a: np.ndarray) -> bytes:
-    vals, lens = _rle_split(a)
-    vb = _enc_for_i64(vals.astype(np.int64, copy=False))
-    lb = _enc_for_i64((lens - 1).astype(np.int64)) if len(lens) else _enc_for_i64(np.zeros(0, np.int64))
-    return struct.pack("<QQ", len(vals), len(vb)) + vb + lb
-
-
-def _dec_rle_i64(body: bytes, n: int) -> np.ndarray:
-    n_runs, vlen = struct.unpack_from("<QQ", body, 0)
-    off = 16
-    vals = _dec_for_i64(body[off : off + vlen], n_runs)
-    lens = _dec_for_i64(body[off + vlen :], n_runs) + 1
-    return np.repeat(vals, lens)
-
-
-def _enc_dict_i64(a: np.ndarray) -> bytes:
-    import pandas as pd
-
-    codes, uniq = pd.factorize(a, sort=False)
-    uniq = np.asarray(uniq)
-    order = np.argsort(uniq, kind="stable")
-    rank = np.empty(len(order), dtype=np.uint32)
-    rank[order] = np.arange(len(order), dtype=np.uint32)
-    inv = rank[codes]
-    uniq = uniq[order]
-    ub = _enc_for_i64(uniq.astype(np.int64, copy=False))
-    w = _bit_width(max(len(uniq) - 1, 0))
-    codes_packed = pack_bits(inv, w)
-    return struct.pack("<QQB", len(uniq), len(ub), w) + ub + codes_packed
-
-
-def _dec_dict_i64(body: bytes, n: int) -> np.ndarray:
-    n_dict, ulen, w = struct.unpack_from("<QQB", body, 0)
-    off = 17
-    uniq = _dec_for_i64(body[off : off + ulen], n_dict)
-    inv = unpack_bits(body[off + ulen :], n, w)
-    return uniq[inv] if n else uniq[:0]
-
-
-def _enc_delta_i64(a: np.ndarray) -> bytes:
-    """Delta with mod-2^64 diffs: wraparound on both encode and decode keeps
-    the round-trip exact for any int64 stream (no overflow bail needed)."""
-    if len(a) == 0:
-        return struct.pack("<q", 0) + _enc_for_i64(a)
-    diffs = (a.view(np.uint64)[1:] - a.view(np.uint64)[:-1]).view(np.int64)
-    return struct.pack("<q", int(a[0])) + _enc_for_i64(diffs)
-
-
-def _dec_delta_i64(body: bytes, n: int) -> np.ndarray:
-    (first,) = struct.unpack_from("<q", body, 0)
-    if n == 0:
-        return np.zeros(0, dtype=np.int64)
-    diffs = _dec_for_i64(body[8:], n - 1).view(np.uint64)
-    out = np.empty(n, dtype=np.uint64)
-    out[0] = _u64(first)
+        return out.view(dt)
+    out[0] = _wrap(first, dt)
     if n > 1:
-        np.cumsum(diffs, out=out[1:])
-        out[1:] += _u64(first)
-    return out.view(np.int64).copy()
+        np.cumsum(_dec_for(body[8:], n - 1, dt).view(u), dtype=u, out=out[1:])
+        out[1:] += out[0]
+    return out.view(dt)
 
 
-def _enc_gcd_i64(a: np.ndarray) -> bytes | None:
-    """GCD frame-of-reference: quantized int64 streams (epoch timestamps at
+def _enc_gcd(a: np.ndarray) -> bytes | None:
+    """GCD frame-of-reference: quantized streams (epoch timestamps at
     day/second/ms granularity, money in micros, anything on a stride) carry a
     large common divisor in (a - min); dividing it out shrinks the bit width
     by log2(g). Layout: base i64, g i64, FOR-packed (a-base)/g. Inapplicable
@@ -443,7 +297,8 @@ def _enc_gcd_i64(a: np.ndarray) -> bytes | None:
     if len(a) == 0:
         return None
     base = int(a.min())
-    resid = a.view(np.uint64) - _u64(base)
+    u = _lane(a.itemsize)
+    resid = a.view(u) - _wrap(base, a.dtype)
     nz = resid[resid != 0]
     if len(nz) == 0:
         return None  # constant stream: RLE/FOR cover it
@@ -453,38 +308,21 @@ def _enc_gcd_i64(a: np.ndarray) -> bytes | None:
         # IS the gcd) won't fit the signed header word; such streams have
         # <=2 distinct nonzero residuals and RLE/DICT already crush them
         return None
-    q = (resid // np.uint64(g)).view(np.int64)
-    return struct.pack("<qq", base, g) + _enc_for_i64(q)
+    q = (resid // u.type(g)).view(a.dtype)
+    return struct.pack("<qq", base, g) + _enc_for(q)
 
 
-def _dec_gcd_i64(body: bytes, n: int) -> np.ndarray:
+def _dec_gcd(body: bytes, n: int, dt: np.dtype) -> np.ndarray:
     base, g = struct.unpack_from("<qq", body, 0)
-    q = _dec_for_i64(body[16:], n).view(np.uint64)
-    return (q * _u64(g) + _u64(base)).view(np.int64).copy()
+    u = _lane(dt.itemsize)
+    q = _dec_for(body[16:], n, dt).view(u)
+    return (q * u.type(g) + _wrap(base, dt)).view(dt)
 
 
-_INT64_ENC = {PLAIN: _enc_plain_i64, BITPACK: _enc_bitpack_i64, FOR: _enc_for_i64,
-              RLE: _enc_rle_i64, DICT: _enc_dict_i64, DELTA: _enc_delta_i64,
-              GCD: _enc_gcd_i64}
-_INT64_DEC = {PLAIN: _dec_plain_i64, BITPACK: _dec_bitpack_i64, FOR: _dec_for_i64,
-              RLE: _dec_rle_i64, DICT: _dec_dict_i64, DELTA: _dec_delta_i64,
-              GCD: _dec_gcd_i64}
-
-
-def encode_int64(a: np.ndarray, codec: int) -> bytes | None:
-    a = np.ascontiguousarray(a, dtype=np.int64)
-    body = _INT64_ENC[codec](a)
-    if body is None:
-        return None
-    return _header(codec, DT_INT64, len(a)) + body
-
-
-def decode_int64(buf: bytes) -> np.ndarray:
-    codec, dtype, n, off = _read_header(buf)
-    if dtype != DT_INT64:
-        raise ValueError("not an int64 payload")
-    return np.asarray(_INT64_DEC[codec](buf[off:], n), dtype=np.int64)
-
+_INT_ENC = {PLAIN: _enc_plain, BITPACK: _enc_bitpack, FOR: _enc_for, RLE: _enc_rle,
+            DICT: _enc_dict, DELTA: _enc_delta, GCD: _enc_gcd}
+_INT_DEC = {PLAIN: _dec_plain, BITPACK: _dec_bitpack, FOR: _dec_for, RLE: _dec_rle,
+            DICT: _dec_dict, DELTA: _dec_delta, GCD: _dec_gcd}
 
 # ----------------------------------------------------- ALP (decimal floats)
 # Most real-world float columns are decimals in disguise (prices, rates,
@@ -504,14 +342,14 @@ _ALP_BOUND = {4: float(1 << 24), 8: float(1 << 53)}  # exact-int range
 
 def _enc_alp(a: np.ndarray) -> bytes | None:
     """Codec body for a float32/float64 array, or None if inapplicable."""
-    f = a.dtype.type
+    lane = np.dtype(f"i{a.itemsize}")
     if len(a) == 0:
-        nested = encode_typed(np.zeros(0, np.int32 if a.itemsize == 4 else np.int64), PLAIN)
+        nested = encode_typed(np.zeros(0, lane), PLAIN)
         return struct.pack("<BQ", 0, len(nested)) + nested
     if not np.isfinite(a).all():
         return None
     bound = _ALP_BOUND[a.itemsize]
-    bits = a.view(np.int32 if a.itemsize == 4 else np.int64)
+    bits = a.view(lane)
     for e in range(_ALP_MAX_E[a.itemsize] + 1):
         scale = 10.0 ** e
         scaled = np.round(a.astype(np.float64) * scale)
@@ -519,11 +357,10 @@ def _enc_alp(a: np.ndarray) -> bytes | None:
             return None  # larger e only grows further
         ints = scaled.astype(np.int64)
         recon = (ints.astype(np.float64) / scale).astype(a.dtype)
-        if np.array_equal(recon.view(bits.dtype), bits):
-            lane = ints.astype(np.int32) if a.itemsize == 4 else ints
+        if np.array_equal(recon.view(lane), bits):
             from ..plans.cost import select_typed_codec
 
-            nested = select_typed_codec(lane)
+            nested = select_typed_codec(ints.astype(lane, copy=False))
             return struct.pack("<BQ", e, len(nested)) + nested
     return None
 
@@ -531,8 +368,7 @@ def _enc_alp(a: np.ndarray) -> bytes | None:
 def _dec_alp(body: bytes, dtype: int) -> np.ndarray:
     e, nlen = struct.unpack_from("<BQ", body, 0)
     ints = decode_typed(body[9 : 9 + nlen])
-    out64 = ints.astype(np.float64) / (10.0 ** e)
-    return out64.astype(np.float32) if dtype == DT_FLOAT32 else out64
+    return (ints.astype(np.float64) / (10.0 ** e)).astype(_DTYPE_OF[dtype], copy=False)
 
 
 # ------------------------------------------------------- generic typed API
@@ -541,45 +377,49 @@ def _dec_alp(body: bytes, dtype: int) -> np.ndarray:
 # bit-identically because equality never touches float semantics. ALP is the
 # exception: it re-expresses decimal-valued floats as scaled integers.
 
+_DTYPE_OF = {DT_INT32: np.dtype(np.int32), DT_INT64: np.dtype(np.int64),
+             DT_FLOAT32: np.dtype(np.float32), DT_FLOAT64: np.dtype(np.float64)}
+_DT_ID = {dt: i for i, dt in _DTYPE_OF.items()}
+
+
 def encode_typed(a: np.ndarray, codec: int) -> bytes | None:
     """Encode a 1-D numpy array of int32/int64/float32/float64 with the given
     int-family codec; None if inapplicable."""
     a = np.ascontiguousarray(a)
-    if a.dtype == np.int32:
-        return encode_int32(a, codec)
-    if a.dtype == np.int64:
-        return encode_int64(a, codec)
-    if a.dtype == np.float32:
-        if codec == ALP:
-            body = _enc_alp(a)
-            return None if body is None else _header(ALP, DT_FLOAT32, len(a)) + body
-        body = _INT_ENC[codec](a.view(np.int32))
-        return None if body is None else _header(codec, DT_FLOAT32, len(a)) + body
-    if a.dtype == np.float64:
-        if codec == ALP:
-            body = _enc_alp(a)
-            return None if body is None else _header(ALP, DT_FLOAT64, len(a)) + body
-        body = _INT64_ENC[codec](a.view(np.int64))
-        return None if body is None else _header(codec, DT_FLOAT64, len(a)) + body
-    raise ValueError(f"unsupported dtype {a.dtype}")
+    dt = _DT_ID.get(a.dtype)
+    if dt is None:
+        raise ValueError(f"unsupported dtype {a.dtype}")
+    if codec == ALP:
+        if a.dtype.kind != "f":
+            raise ValueError("ALP encodes float lanes only")
+        body = _enc_alp(a)
+    else:
+        body = _INT_ENC[codec](a.view(f"i{a.itemsize}"))
+    return None if body is None else _header(codec, dt, len(a)) + body
 
 
 def decode_typed(buf: bytes) -> np.ndarray:
     """Inverse of :func:`encode_typed`: dtype comes from the header."""
-    codec, dtype, n, off = _read_header(buf)
+    codec, dt, n, off = _read_header(buf)
+    if dt not in _DTYPE_OF:
+        raise ValueError(f"not a typed-array payload (dtype {dt})")
     if codec == ALP:
-        if dtype not in (DT_FLOAT32, DT_FLOAT64):
+        if dt not in (DT_FLOAT32, DT_FLOAT64):
             raise ValueError("ALP payload must be float-typed")
-        return _dec_alp(buf[off:], dtype)
-    if dtype == DT_INT32:
-        return np.asarray(_INT_DEC[codec](buf[off:], n), dtype=np.int32)
-    if dtype == DT_INT64:
-        return np.asarray(_INT64_DEC[codec](buf[off:], n), dtype=np.int64)
-    if dtype == DT_FLOAT32:
-        return np.asarray(_INT_DEC[codec](buf[off:], n), dtype=np.int32).view(np.float32)
-    if dtype == DT_FLOAT64:
-        return np.asarray(_INT64_DEC[codec](buf[off:], n), dtype=np.int64).view(np.float64)
-    raise ValueError(f"not a typed-array payload (dtype {dtype})")
+        return _dec_alp(buf[off:], dt)
+    out = _DTYPE_OF[dt]
+    return _INT_DEC[codec](buf[off:], n, np.dtype(f"i{out.itemsize}")).view(out)
+
+
+def encode_int32(a: np.ndarray, codec: int) -> bytes | None:
+    """Encode an int32 array with the given codec; None if inapplicable."""
+    return encode_typed(np.asarray(a, dtype=np.int32), codec)
+
+
+def decode_int32(buf: bytes) -> np.ndarray:
+    if _read_header(buf)[1] != DT_INT32:
+        raise ValueError("not an int32 payload")
+    return decode_typed(buf)
 
 
 # ------------------------------------------------------------ string codecs
@@ -936,13 +776,13 @@ def encode_int32_grouped(values: np.ndarray, lengths: np.ndarray,
     np.add.at(counts, remap, lengths)
     ends = np.cumsum(counts)
     parts = []
-    from ..plans.cost import select_int_codec
+    from ..plans.cost import select_typed_codec
 
     lo = 0
     for g in range(n_groups):
         seg = reordered[lo : int(ends[g])]
         lo = int(ends[g])
-        parts.append(select_int_codec(seg))
+        parts.append(select_typed_codec(seg))
     body = struct.pack("<BQ", n_groups, len(gid_payload)) + gid_payload
     for p in parts:
         body += struct.pack("<Q", len(p)) + p

@@ -147,9 +147,9 @@ def add_action(marker: dict, pds: str | None = None, data_change: bool = True,
     """The log ``add`` of one chunk file, from the marker the encode kernel
     published for it: name, size and sha256 (hashed in flight, so a commit
     never re-reads data), its partition date and its per-file ``stats``.
-    ``pds`` stands in for a marker that records no date (compaction's
-    merged files have none: they get no ``partitionValues``); ``io`` stamps
-    the file's ``modificationTime``."""
+    ``pds`` stands in for a marker that records no date (a compaction's
+    merged file takes the date of the files it merged; no date, no
+    ``partitionValues``); ``io`` stamps the file's ``modificationTime``."""
     add = {"path": marker["file_name"], "size": marker["file_size"],
            "sha256": marker["file_sha256"]}
     pds = marker.get("pds", pds)

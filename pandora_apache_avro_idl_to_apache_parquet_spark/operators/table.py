@@ -68,7 +68,7 @@ from pyspark.sql import types as T
 from ..functions import codecs as C
 from ..functions.fsio import FsIO
 from ..functions.hashing import klondike, sha256
-from ..plans.cost import select_int_codec, select_str_codec, select_typed_codec
+from ..plans.cost import encode_values, select_str_codec, select_typed_codec
 from .encode import (DEFAULT_CHUNK_VALUES, _io, add_action, append_log_entry,
                      committed_files, completed_parts, listed_data_files,
                      log_entries, log_header, log_snapshot, log_versions,
@@ -81,6 +81,16 @@ DEFAULT_CHUNK_ROWS = 65536
 _I32_LOGICALS = {"byte", "short", "int", "date", "bool"}
 _I64_LOGICALS = {"long", "timestamp", "timestamp_ntz"}
 _STR_LOGICALS = {"string", "binary"}
+
+
+def _elem_lane(dt: T.DataType) -> str | None:
+    """Element lane of an array<T> / map<string,T> column, or None."""
+    for vt, name in ((T.IntegerType, "int"), (T.LongType, "long"),
+                     (T.FloatType, "float"), (T.DoubleType, "double"),
+                     (T.StringType, "string")):
+        if isinstance(dt, vt):
+            return name
+    return None
 
 
 def _logical_of(dt: T.DataType) -> str:
@@ -128,37 +138,27 @@ def _logical_of(dt: T.DataType) -> str:
             return f"decimal128({dt.precision},{dt.scale})"
         return f"decimal({dt.precision},{dt.scale})"
     if isinstance(dt, T.ArrayType):
-        elem = dt.elementType
-        if isinstance(elem, T.IntegerType):
-            return "array<int>"
-        if isinstance(elem, T.LongType):
-            return "array<long>"
-        if isinstance(elem, T.FloatType):
-            return "array<float>"
-        if isinstance(elem, T.DoubleType):
-            return "array<double>"
-        if isinstance(elem, T.StringType):
-            return "array<string>"
-        raise ValueError(
-            f"unsupported array element type {elem.simpleString()} — explode or "
-            "flatten to extension tables first (operators.nested.flatten_table)"
-        )
+        lane = _elem_lane(dt.elementType)
+        if lane is None:
+            raise ValueError(
+                f"unsupported array element type {dt.elementType.simpleString()} — "
+                "explode or flatten to extension tables first "
+                "(operators.nested.flatten_table)"
+            )
+        return f"array<{lane}>"
     if isinstance(dt, T.MapType):
         if not isinstance(dt.keyType, T.StringType):
             raise ValueError(
                 f"unsupported map key type {dt.keyType.simpleString()} — only "
                 "string keys (the reference's MAP contract, Parquet.fs:86-98)"
             )
-        val = dt.valueType
-        for vt, name in ((T.IntegerType, "int"), (T.LongType, "long"),
-                         (T.FloatType, "float"), (T.DoubleType, "double"),
-                         (T.StringType, "string")):
-            if isinstance(val, vt):
-                return f"map<string,{name}>"
-        raise ValueError(
-            f"unsupported map value type {val.simpleString()} — explode to a "
-            "{key,value} extension table first (operators.nested.flatten_table)"
-        )
+        lane = _elem_lane(dt.valueType)
+        if lane is None:
+            raise ValueError(
+                f"unsupported map value type {dt.valueType.simpleString()} — explode "
+                "to a {key,value} extension table first (operators.nested.flatten_table)"
+            )
+        return f"map<string,{lane}>"
     raise ValueError(
         f"unsupported column type {dt.simpleString()} — nested types must be "
         "flattened to extension tables first (operators.nested.flatten_table)"
@@ -794,22 +794,41 @@ def _int64_to_decimal(v: np.ndarray, ptype: pa.DataType,
     )
 
 
-_ARRAY_LANES = {
-    "array<int>": (pa.int32(), np.int32, 4),
-    "array<long>": (pa.int64(), np.int64, 8),
-    "array<float>": (pa.float32(), np.float32, 4),
-    "array<double>": (pa.float64(), np.float64, 8),
-}
-
-# map<string,T> value lanes: the map rides three streams — entry lengths,
-# keys (a string stream), values (a string or typed stream) — the array
-# lane's composite layout with one more segment.
-_MAP_VAL_LANES = {
+# Numeric element lanes of array<T> and map<string,T> columns. Both nested
+# kinds ride three streams: row lengths, a second stream (an array's
+# element validity, empty when no element is null; a map's keys, a string
+# stream) and the element stream (a string or typed stream).
+_NUM_LANES = {
     "int": (pa.int32(), np.int32, 4),
     "long": (pa.int64(), np.int64, 8),
     "float": (pa.float32(), np.float32, 4),
     "double": (pa.float64(), np.float64, 8),
 }
+
+
+def _nested_lane(logical: str) -> tuple[bool, str] | None:
+    """(is_map, element lane) of an array<T> / map<string,T> logical."""
+    for prefix in ("array<", "map<string,"):
+        if logical.startswith(prefix):
+            return prefix != "array<", logical[len(prefix):-1]
+    return None
+
+
+def _encode_elems(flat: pa.Array, lengths: np.ndarray, lane: str,
+                  grouped: bool) -> tuple[bytes, int]:
+    """A nested column's element stream -> (payload, raw lane bytes). int32
+    elements ride the GROUPED adaptive cascade when ``grouped`` (no element
+    nulls): a token store's ``tokens``."""
+    if lane == "string":
+        el, blob = C.bytes_to_blob(flat)
+        return select_str_codec(el, blob), 4 * len(el) + len(blob)
+    lane_pa, lane_np, width = _NUM_LANES[lane]
+    values = np.ascontiguousarray(
+        flat.cast(lane_pa).to_numpy(zero_copy_only=False), dtype=lane_np
+    )
+    if lane_np is np.int32 and grouped:
+        return encode_values(values, lengths), width * len(values)
+    return select_typed_codec(values), width * len(values)
 
 
 def _encode_column(arr: pa.Array, logical: str) -> tuple[bytes | None, bytes, int, int, str]:
@@ -818,9 +837,9 @@ def _encode_column(arr: pa.Array, logical: str) -> tuple[bytes | None, bytes, in
 
     ``raw_bytes`` is the uncompressed lane footprint (lane width x rows, or
     blob + offsets for byte lanes) — the denominator of the compression ratio.
-    Array lanes store a composite payload: length-prefixed row-lengths
-    stream + flattened element stream — int32 elements (a token store's
-    ``tokens``) ride the GROUPED adaptive cascade.
+    Array and map lanes store a composite payload: length-prefixed
+    row-lengths stream, length-prefixed second stream, element stream (see
+    ``_NUM_LANES``).
     """
     import struct as _struct
 
@@ -828,83 +847,44 @@ def _encode_column(arr: pa.Array, logical: str) -> tuple[bytes | None, bytes, in
     n_nulls = arr.null_count
     if n_nulls:
         valid = arr.is_valid().to_numpy(zero_copy_only=False)
-        valid_payload = select_int_codec(valid.astype(np.int32))
+        valid_payload = select_typed_codec(valid.astype(np.int32))
         dense = arr.drop_null()
     else:
         valid_payload = None
         dense = arr
 
-    if logical in _ARRAY_LANES or logical == "array<string>":
-        import pyarrow.compute as pc
-
-        lengths = pc.list_value_length(dense).to_numpy(zero_copy_only=False).astype(np.int32)
-        flat = dense.combine_chunks().flatten() if isinstance(dense, pa.ChunkedArray) else dense.flatten()
-        # Interior nulls (nullable elements — the array<struct> leaf lanes
-        # produce them for null elements / null fields) ride an optional
-        # element-validity stream; the value stream stores non-nulls only.
-        if flat.null_count:
-            ev = flat.is_valid().to_numpy(zero_copy_only=False).astype(np.int32)
-            ep = select_int_codec(ev)
-            flat = flat.drop_null()
-        else:
-            ep = b""
-        lp = select_int_codec(lengths)
-        if logical == "array<string>":
-            # element stream is itself a string stream (elem-lengths + blob)
-            el, blob = C.bytes_to_blob(flat)
-            vp = select_str_codec(el, blob)
-            raw = 4 * n + 4 * len(el) + len(blob)
-        else:
-            lane_pa, lane_np, width = _ARRAY_LANES[logical]
-            values = np.ascontiguousarray(
-                flat.cast(lane_pa).to_numpy(zero_copy_only=False), dtype=lane_np
-            )
-            if lane_np is np.int32 and not ep:
-                from ..plans.cost import encode_values
-
-                vp = encode_values(values, lengths)
-            else:
-                vp = select_typed_codec(values)
-            raw = 4 * n + width * len(values)
-        payload = (_struct.pack("<Q", len(lp)) + lp
-                   + _struct.pack("<Q", len(ep)) + ep + vp)
-        name = f"{C.payload_codec_name(lp)}+{C.payload_codec_name(vp)}"
-        return valid_payload, payload, n_nulls, raw, name
-
-    if logical.startswith("map<string,"):
+    nested = _nested_lane(logical)
+    if nested is not None:
+        is_map, lane = nested
         dense = dense.combine_chunks() if isinstance(dense, pa.ChunkedArray) else dense
-        # no list_value_length kernel for maps in this pyarrow: lengths come
-        # straight from the (slice-adjusted) offsets buffer
-        offsets = dense.offsets.to_numpy(zero_copy_only=False)
-        lengths = np.diff(offsets).astype(np.int32)
-        keys, items = dense.keys, dense.items
-        if items.null_count:
-            raise ValueError("null values inside map columns are not supported")
-        lp = select_int_codec(lengths)
-        kl, kblob = C.bytes_to_blob(keys)
-        kp = select_str_codec(kl, kblob)
-        vlane = logical[len("map<string,"):-1]
-        if vlane == "string":
-            vl, vblob = C.bytes_to_blob(items)
-            vp = select_str_codec(vl, vblob)
-            raw = 4 * n + 4 * len(kl) + len(kblob) + 4 * len(vl) + len(vblob)
+        # lengths straight from the (slice-adjusted) offsets buffer: there
+        # is no list_value_length kernel for maps in this pyarrow
+        lengths = np.diff(dense.offsets.to_numpy(zero_copy_only=False)).astype(np.int32)
+        lp = select_typed_codec(lengths)
+        raw = 4 * n
+        if is_map:
+            flat = dense.items
+            if flat.null_count:
+                raise ValueError("null values inside map columns are not supported")
+            kl, kblob = C.bytes_to_blob(dense.keys)
+            sp = select_str_codec(kl, kblob)
+            raw += 4 * len(kl) + len(kblob)
         else:
-            lane_pa, lane_np, width = _MAP_VAL_LANES[vlane]
-            values = np.ascontiguousarray(
-                items.cast(lane_pa).to_numpy(zero_copy_only=False), dtype=lane_np
-            )
-            if lane_np is np.int32:
-                from ..plans.cost import encode_values
-
-                vp = encode_values(values, lengths)
-            else:
-                vp = select_typed_codec(values)
-            raw = 4 * n + 4 * len(kl) + len(kblob) + width * len(values)
+            flat = dense.flatten()
+            # Interior nulls (nullable elements — the array<struct> leaf
+            # lanes produce them for null elements / null fields) ride the
+            # element-validity stream; the value stream stores non-nulls only.
+            sp = b""
+            if flat.null_count:
+                sp = select_typed_codec(
+                    flat.is_valid().to_numpy(zero_copy_only=False).astype(np.int32))
+                flat = flat.drop_null()
+        vp, vraw = _encode_elems(flat, lengths, lane, grouped=is_map or not sp)
         payload = (_struct.pack("<Q", len(lp)) + lp
-                   + _struct.pack("<Q", len(kp)) + kp + vp)
-        name = (f"{C.payload_codec_name(lp)}+{C.payload_codec_name(kp)}"
-                f"+{C.payload_codec_name(vp)}")
-        return valid_payload, payload, n_nulls, raw, name
+                   + _struct.pack("<Q", len(sp)) + sp + vp)
+        segs = (lp, sp, vp) if is_map else (lp, vp)
+        name = "+".join(C.payload_codec_name(p) for p in segs)
+        return valid_payload, payload, n_nulls, raw + vraw, name
 
     if logical in _STR_LOGICALS:
         lengths, blob = C.bytes_to_blob(dense)
@@ -912,7 +892,7 @@ def _encode_column(arr: pa.Array, logical: str) -> tuple[bytes | None, bytes, in
         raw = len(blob) + 4 * n
     elif logical in _I32_LOGICALS:
         vals = dense.cast(pa.int32()).to_numpy(zero_copy_only=False)
-        payload = select_int_codec(np.ascontiguousarray(vals, dtype=np.int32))
+        payload = select_typed_codec(np.ascontiguousarray(vals, dtype=np.int32))
         raw = 4 * n
     elif logical in _I64_LOGICALS:
         vals = dense.cast(pa.int64()).to_numpy(zero_copy_only=False)
@@ -965,6 +945,44 @@ def _validity_buffer(mask: np.ndarray) -> pa.Buffer:
     return pa.py_buffer(np.packbits(mask, bitorder="little").tobytes())
 
 
+def _scatter(dense: np.ndarray, mask: np.ndarray | None) -> np.ndarray:
+    """Non-null values -> one slot per ``mask`` position, zeros at nulls."""
+    if mask is None:
+        return dense
+    full = np.zeros(len(mask), dtype=dense.dtype)
+    full[mask] = dense
+    return full
+
+
+def _offsets(lengths: np.ndarray, mask: np.ndarray | None) -> pa.Buffer:
+    """Lengths of the non-null rows -> int32 offsets (null rows span 0)."""
+    lengths = _scatter(lengths, mask)
+    offs = np.zeros(len(lengths) + 1, dtype=np.int32)
+    np.cumsum(lengths, out=offs[1:])
+    return pa.py_buffer(offs.tobytes())
+
+
+def _decode_elems(vbuf: bytes, lengths: np.ndarray, lane: str,
+                  elem_mask: np.ndarray | None) -> pa.Array:
+    """Inverse of :func:`_encode_elems`: the element child array, its
+    validity from ``elem_mask`` (None: no null element)."""
+    ebuf = None if elem_mask is None else _validity_buffer(elem_mask)
+    if lane == "string":
+        el, blob = C.decode_strings(vbuf)
+        if elem_mask is None:
+            return C.blob_to_strings(el, blob)
+        el = _scatter(el, elem_mask)
+        return pa.Array.from_buffers(
+            pa.string(), len(el), [ebuf, _offsets(el, None), pa.py_buffer(blob)])
+    lane_pa, lane_np, _w = _NUM_LANES[lane]
+    if C.payload_codec_name(vbuf) == "grouped":
+        values = C.decode_int32_grouped(vbuf, lengths)
+    else:
+        values = C.decode_typed(vbuf)
+    values = _scatter(np.ascontiguousarray(values, dtype=lane_np), elem_mask)
+    return pa.Array.from_buffers(lane_pa, len(values), [ebuf, pa.py_buffer(values.tobytes())])
+
+
 def _decode_column(valid_payload: bytes | None, payload: bytes, logical: str,
                    n: int, target: pa.DataType) -> pa.Array:
     """Inverse of :func:`_encode_column`: rebuild the arrow column (validity
@@ -976,115 +994,38 @@ def _decode_column(valid_payload: bytes | None, payload: bytes, logical: str,
         mask = None
         validity = None
 
-    if logical in _ARRAY_LANES or logical == "array<string>":
+    nested = _nested_lane(logical)
+    if nested is not None:
         import struct as _struct
 
+        is_map, lane = nested
         (llen,) = _struct.unpack_from("<Q", payload, 0)
         lengths = C.decode_int32(payload[8 : 8 + llen])
         rest = payload[8 + llen :]
-        (elen,) = _struct.unpack_from("<Q", rest, 0)
-        elem_mask = (C.decode_int32(rest[8 : 8 + elen]).astype(bool)
-                     if elen else None)
-        vbuf = rest[8 + elen :]
-        n_elems = int(lengths.sum())
-        if logical == "array<string>":
-            el, blob = C.decode_strings(vbuf)
-            if elem_mask is None:
-                child = C.blob_to_strings(el, blob)
-            else:
-                # scatter non-null string lengths into the full slot layout
-                full_el = np.zeros(n_elems, dtype=np.int32)
-                full_el[elem_mask] = el
-                offs_e = np.zeros(n_elems + 1, dtype=np.int32)
-                np.cumsum(full_el, out=offs_e[1:])
-                child = pa.Array.from_buffers(
-                    pa.string(), n_elems,
-                    [_validity_buffer(elem_mask), pa.py_buffer(offs_e.tobytes()),
-                     pa.py_buffer(blob)],
-                )
-            lane_pa = pa.string()
-        else:
-            lane_pa, lane_np, _w = _ARRAY_LANES[logical]
-            if C.payload_codec_name(vbuf) == "grouped":
-                values = C.decode_int32_grouped(vbuf, lengths)
-            else:
-                values = C.decode_typed(vbuf)
-            if elem_mask is None:
-                full_vals = np.ascontiguousarray(values, dtype=lane_np)
-                ebuf = None
-            else:
-                full_vals = np.zeros(n_elems, dtype=lane_np)
-                full_vals[elem_mask] = values
-                ebuf = _validity_buffer(elem_mask)
-            child = pa.Array.from_buffers(
-                lane_pa, n_elems, [ebuf, pa.py_buffer(full_vals.tobytes())],
+        (slen,) = _struct.unpack_from("<Q", rest, 0)
+        second, vbuf = rest[8 : 8 + slen], rest[8 + slen :]
+        elem_mask = None
+        if not is_map and slen:
+            elem_mask = C.decode_int32(second).astype(bool)
+        child = _decode_elems(vbuf, lengths, lane, elem_mask)
+        if is_map:
+            map_t = pa.map_(pa.string(), child.type)
+            child = pa.StructArray.from_arrays(
+                [C.blob_to_strings(*C.decode_strings(second)), child],
+                fields=[pa.field("key", pa.string(), nullable=False),
+                        pa.field("value", child.type)],
             )
-        if mask is not None:
-            full_len = np.zeros(n, dtype=np.int32)
-            full_len[mask] = lengths
-            lengths = full_len  # null rows contribute 0 elements
-        offs = np.zeros(n + 1, dtype=np.int32)
-        np.cumsum(lengths, out=offs[1:])
         arr = pa.Array.from_buffers(
-            pa.list_(lane_pa), n, [validity, pa.py_buffer(offs.tobytes())],
-            children=[child],
-        )
-        return arr if arr.type == target else arr.cast(target)
-
-    if logical.startswith("map<string,"):
-        import struct as _struct
-
-        (llen,) = _struct.unpack_from("<Q", payload, 0)
-        lengths = C.decode_int32(payload[8 : 8 + llen])
-        rest = payload[8 + llen :]
-        (klen,) = _struct.unpack_from("<Q", rest, 0)
-        kl, kblob = C.decode_strings(rest[8 : 8 + klen])
-        keys = C.blob_to_strings(kl, kblob)
-        vbuf = rest[8 + klen :]
-        vlane = logical[len("map<string,"):-1]
-        if vlane == "string":
-            vl, vblob = C.decode_strings(vbuf)
-            items = C.blob_to_strings(vl, vblob)
-            lane_pa = pa.string()
-        else:
-            lane_pa, lane_np, _w = _MAP_VAL_LANES[vlane]
-            if C.payload_codec_name(vbuf) == "grouped":
-                values = C.decode_int32_grouped(vbuf, lengths)
-            else:
-                values = C.decode_typed(vbuf)
-            items = pa.Array.from_buffers(
-                lane_pa, len(values),
-                [None, pa.py_buffer(np.ascontiguousarray(values, dtype=lane_np).tobytes())],
-            )
-        if mask is not None:
-            full_len = np.zeros(n, dtype=np.int32)
-            full_len[mask] = lengths
-            lengths = full_len
-        offs = np.zeros(n + 1, dtype=np.int32)
-        np.cumsum(lengths, out=offs[1:])
-        map_t = pa.map_(pa.string(), lane_pa)
-        entries = pa.StructArray.from_arrays(
-            [keys, items],
-            fields=[pa.field("key", pa.string(), nullable=False),
-                    pa.field("value", lane_pa)],
-        )
-        arr = pa.Array.from_buffers(
-            map_t, n, [validity, pa.py_buffer(offs.tobytes())],
-            children=[entries],
+            map_t if is_map else pa.list_(child.type), n,
+            [validity, _offsets(lengths, mask)], children=[child],
         )
         return arr if arr.type == target else arr.cast(target)
 
     if logical in _STR_LOGICALS:
-        lengths, blob = C.decode_strings(payload)
-        if mask is not None:
-            full_len = np.zeros(n, dtype=np.int32)
-            full_len[mask] = lengths
-            lengths = full_len  # nulls contribute 0 bytes: blob unchanged
-        offs = np.zeros(n + 1, dtype=np.int32)
-        np.cumsum(lengths, out=offs[1:])
+        lengths, blob = C.decode_strings(payload)  # nulls span 0 bytes
         arrow_type = pa.string() if logical == "string" else pa.binary()
         arr = pa.Array.from_buffers(
-            arrow_type, n, [validity, pa.py_buffer(offs.tobytes()), pa.py_buffer(blob)]
+            arrow_type, n, [validity, _offsets(lengths, mask), pa.py_buffer(blob)]
         )
         return arr if arr.type == target else arr.cast(target)
 
@@ -1092,36 +1033,15 @@ def _decode_column(valid_payload: bytes | None, payload: bytes, logical: str,
         import struct as _struct
 
         (llen,) = _struct.unpack_from("<Q", payload, 0)
-        lo = C.decode_typed(payload[8 : 8 + llen])
-        hi = C.decode_typed(payload[8 + llen :])
-        if mask is not None:
-            full_lo = np.zeros(n, dtype=np.int64)
-            full_hi = np.zeros(n, dtype=np.int64)
-            full_lo[mask] = lo
-            full_hi[mask] = hi
-            lo, hi = full_lo, full_hi
+        lo = _scatter(C.decode_typed(payload[8 : 8 + llen]), mask)
+        hi = _scatter(C.decode_typed(payload[8 + llen :]), mask)
         return _words_to_decimal(lo, hi, target, validity)
 
+    dense = _scatter(C.decode_typed(payload), mask)
     if logical.startswith("decimal"):
-        dense = C.decode_typed(payload)
-        if mask is not None:
-            full = np.zeros(n, dtype=np.int64)
-            full[mask] = dense
-            dense = full
         return _int64_to_decimal(dense, target, validity)
-
-    dense = C.decode_typed(payload)
-    if mask is not None:
-        full = np.zeros(n, dtype=dense.dtype)
-        full[mask] = dense
-        dense = full
-    lane_type = {
-        np.dtype(np.int32): pa.int32(),
-        np.dtype(np.int64): pa.int64(),
-        np.dtype(np.float32): pa.float32(),
-        np.dtype(np.float64): pa.float64(),
-    }[dense.dtype]
-    arr = pa.Array.from_buffers(lane_type, n, [validity, pa.py_buffer(dense.tobytes())])
+    arr = pa.Array.from_buffers(pa.from_numpy_dtype(dense.dtype), n,
+                                [validity, pa.py_buffer(dense.tobytes())])
     return arr if arr.type == target else arr.cast(target)
 
 
@@ -1690,7 +1610,8 @@ def compact_table(out_dir: str, io: FsIO | None = None,
 
     Chunk ROWS are moved verbatim (payloads untouched — compaction is pure
     file regrouping, no re-encode); files are greedily grouped under
-    ``max_group_bytes``. The swap is committed as ONE log entry holding the
+    ``max_group_bytes`` within one partition date, and each merged file
+    carries its group's date. The swap is committed as ONE log entry holding the
     new ``add``s and the old ``remove``s, so log-gated readers switch
     atomically; old files stay on disk (still referenced by nothing) until
     :func:`..operators.encode.vacuum` reclaims them. Pre-evolution files
@@ -1709,20 +1630,23 @@ def compact_table(out_dir: str, io: FsIO | None = None,
     if snap is None:
         raise ValueError("compact_table requires a committed table (no _log found)")
     live = snap.files
-    sizes = {f: snap.adds[f]["size"] for f in live}
-    groups: list[list[str]] = []
-    cur: list[str] = []
-    cur_bytes = 0
+    by_pds: dict[str | None, list[str]] = {}
     for f in live:
-        fsize = sizes.get(f, 0)
-        if cur and cur_bytes + fsize > max_group_bytes:
-            groups.append(cur)
-            cur, cur_bytes = [], 0
-        cur.append(f)
-        cur_bytes += fsize
-    if cur:
-        groups.append(cur)
-    if all(len(g) <= 1 for g in groups):
+        by_pds.setdefault(snap.adds[f].get("partitionValues", {}).get("pds"), []).append(f)
+    groups: list[tuple[str | None, list[str]]] = []
+    for pds, files in by_pds.items():
+        cur: list[str] = []
+        cur_bytes = 0
+        for f in files:
+            fsize = snap.adds[f]["size"]
+            if cur and cur_bytes + fsize > max_group_bytes:
+                groups.append((pds, cur))
+                cur, cur_bytes = [], 0
+            cur.append(f)
+            cur_bytes += fsize
+        if cur:
+            groups.append((pds, cur))
+    if all(len(g) <= 1 for _, g in groups):
         return {"files_before": len(live), "files_after": len(live), "log": None}
 
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -1735,9 +1659,9 @@ def compact_table(out_dir: str, io: FsIO | None = None,
     tag = uuid.uuid4().hex[:8]
     entries = log_header(spec)
     new_files = 0
-    merged_away = [f for g in groups if len(g) > 1 for f in g]
+    merged_away = [f for _, g in groups if len(g) > 1 for f in g]
     stats = _live_file_stats(io, spec, snap, merged_away)
-    for i, group in enumerate(groups):
+    for i, (pds, group) in enumerate(groups):
         if len(group) <= 1:
             continue  # singleton stays as-is (still live, not removed)
         tables = [
@@ -1754,7 +1678,7 @@ def compact_table(out_dir: str, io: FsIO | None = None,
         entries.append(add_action(
             {"file_name": name, "file_size": size, "file_sha256": sha,
              "stats": _FileStats.merge([stats[f] for f in group]).to_json()},
-            data_change=False))
+            pds=pds, data_change=False))
         entries += [{"remove": {"path": f, "dataChange": False}} for f in group]
     log = append_log_entry(out_dir, entries, io, reads=merged_away)
     after = len(committed_files(out_dir, io))
@@ -2361,7 +2285,8 @@ def _dml_target(out_dir: str, io: FsIO | None, what: str
 def _file_pds(snap, f: str, default: date) -> date:
     """A live file's partition date from its ``add`` record — the date a
     rewrite must PRESERVE so date-partitioned (``pds_col``) tables keep
-    pruning correctly after DML (compaction's merged files carry none)."""
+    pruning correctly after DML (a compaction's merged file carries the
+    date of the files it merged)."""
     v = snap.adds.get(f, {}).get("partitionValues", {}).get("pds")
     return date.fromisoformat(v) if v else default
 

@@ -4,9 +4,11 @@ The reference picks one codec globally and statically (Snappy,
 ``/root/reference/.../Pandora/Apache/Parquet.fs:1374``). Per the north rule we
 instead pick per column chunk: encode a *prefix sample* of the chunk with every
 candidate, extrapolate encoded size, take the argmin, then encode the full chunk
-with the winner. The chosen codec is recorded in the manifest — the same
-provenance-tag idea as the reference's ``Transformation`` marks
-(``Parquet.fs:43-50``), applied to codecs.
+with the winner. The chosen codec is recorded in each chunk's ``__codec``
+column (and in the payload header) — the same provenance-tag idea as the
+reference's ``Transformation`` marks (``Parquet.fs:43-50``), applied to
+codecs. One loop selects for every numeric dtype; the dtype only sets the
+candidates.
 
 A head sample (not a strided one) is used deliberately: run lengths and local
 value locality — what RLE/FOR exploit — survive a prefix but not a stride.
@@ -23,37 +25,14 @@ from ..functions import codecs as C
 SAMPLE_VALUES = 4096
 
 
-def select_int_codec(a: np.ndarray, sample: int = SAMPLE_VALUES) -> bytes:
-    """Encode int32 array with the estimated-best codec; returns payload."""
-    a = np.asarray(a, dtype=np.int32)
-    n = len(a)
-    if n == 0:
-        return C.encode_int32(a, C.PLAIN)
-    s = a[: min(n, sample)]
-    scale = n / len(s)
-    best_codec, best_est = C.PLAIN, 4.0 * n
-    for codec in (C.BITPACK, C.FOR, C.RLE, C.DICT, C.DELTA):
-        enc = C.encode_int32(s, codec)
-        if enc is None:
-            continue
-        est = len(enc) * scale
-        if est < best_est:
-            best_codec, best_est = codec, est
-    out = C.encode_int32(a, best_codec)
-    if out is None or (best_codec != C.PLAIN and len(out) >= 4 * n + 32):
-        out = C.encode_int32(a, C.PLAIN)
-    return out
-
-
 def select_typed_codec(a: np.ndarray, sample: int = SAMPLE_VALUES) -> bytes:
     """Auto-select for any supported dtype (int32/int64/float32/float64):
     prefix-sample every candidate, extrapolate, encode with the argmin, with
-    the same <=PLAIN guard. Floats ride the int kernels as bit patterns (see
-    ``codecs.encode_typed``), so DICT/RLE/FOR wins on repeated or clustered
-    float values carry over for free."""
+    a <=PLAIN guard. The dtype sets the candidates: ``INT_CODECS`` for
+    int32, plus GCD for int64, plus ALP for floats. Floats ride the int
+    kernels as bit patterns (see ``codecs.encode_typed``), so DICT/RLE/FOR
+    wins on repeated or clustered float values carry over for free."""
     a = np.ascontiguousarray(a)
-    if a.dtype == np.int32:
-        return select_int_codec(a, sample)
     n = len(a)
     width = a.dtype.itemsize
     if n == 0:
@@ -61,12 +40,12 @@ def select_typed_codec(a: np.ndarray, sample: int = SAMPLE_VALUES) -> bytes:
     s = a[: min(n, sample)]
     scale = n / len(s)
     best_codec, best_est = C.PLAIN, float(width) * n
-    candidates = (C.BITPACK, C.FOR, C.RLE, C.DICT, C.DELTA)
+    candidates = C.INT_CODECS[1:]
     if a.dtype == np.int64:
         # GCD-FOR: quantized streams (timestamps at coarse granularity,
         # strided ids) divide out their common stride before bit-packing
         candidates += (C.GCD,)
-    if a.dtype in (np.float32, np.float64):
+    if a.dtype.kind == "f":
         # ALP: decimal-valued floats as scaled ints (sampled like the rest;
         # a chunk whose tail defeats the sampled exponent encodes to None
         # below and falls back to PLAIN via the guard)
@@ -97,12 +76,12 @@ def encode_values(values: np.ndarray, lengths: np.ndarray) -> bytes:
     gid = C._row_groups(values, lengths)
     uniq = np.unique(gid[lengths > 0]) if len(gid) else np.zeros(0, np.int32)
     if len(uniq) <= 1:
-        return select_int_codec(values)
+        return select_typed_codec(values)
     grouped = C.encode_int32_grouped(values, lengths, gid=gid)
     # size guard: a misclassified chunk must never encode larger than the
-    # whole-stream selection (mirrors select_int_codec's <=PLAIN guard)
+    # whole-stream selection (mirrors select_typed_codec's <=PLAIN guard)
     if len(grouped) >= 4 * len(values) + 32:
-        whole = select_int_codec(values)
+        whole = select_typed_codec(values)
         if len(whole) < len(grouped):
             return whole
     return grouped

@@ -7,61 +7,65 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from codec_cases import INT_CASES, STR_CASES
+
 from pandora_apache_avro_idl_to_apache_parquet_spark.functions import codecs as C
 from pandora_apache_avro_idl_to_apache_parquet_spark.plans.cost import (
-    select_int_codec,
     select_str_codec,
     select_typed_codec,
 )
 
-RNG = np.random.default_rng(42)
-
-INT_CASES = {
-    "const": np.full(10_000, 7, np.int32),
-    "ramp": (np.arange(10_000, dtype=np.int32) + 50_000),
-    "small_range": RNG.integers(0, 256, 10_000).astype(np.int32),
-    "narrow_band": (50_000 + RNG.integers(0, 100, 10_000)).astype(np.int32),
-    "zipf": np.minimum(RNG.zipf(1.3, 10_000), 32_000).astype(np.int32),
-    "uniform": RNG.integers(0, 2**31 - 1, 10_000).astype(np.int32),
-    "negative": RNG.integers(-1_000, 1_000, 10_000).astype(np.int32),
-    "empty": np.zeros(0, np.int32),
-    "single": np.array([2**31 - 1], np.int32),
-    "extremes": np.array([-(2**31), 2**31 - 1, 0, -1], np.int32),
-    "runs": np.repeat(RNG.integers(0, 50, 100), RNG.integers(1, 400, 100)).astype(np.int32),
-}
+DTYPES = (np.int32, np.int64, np.float32, np.float64)
 
 
-@pytest.mark.parametrize("name", list(INT_CASES))
-@pytest.mark.parametrize("codec", C.INT_CODECS)
-def test_int_codec_roundtrip(name, codec):
-    a = INT_CASES[name]
-    buf = C.encode_int32(a, codec)
+def _codecs(dtype) -> tuple[int, ...]:
+    """Every codec ``encode_typed`` takes for a lane dtype: the integer
+    family (GCD included) on every width, ALP on floats."""
+    return C.INT_CODECS + (C.GCD,) + ((C.ALP,) if np.dtype(dtype).kind == "f" else ())
+
+
+def _bits(a: np.ndarray) -> np.ndarray:
+    return a.view(f"i{a.itemsize}")
+
+
+def _param(dtype, *vals):
+    """A pytest param whose id has a dtype suffix unless the dtype is int32."""
+    suffix = [] if dtype is np.int32 else [dtype.__name__]
+    return pytest.param(dtype, *vals, id="-".join([*map(str, vals), *suffix]))
+
+
+@pytest.mark.parametrize("dtype, codec, name", [
+    _param(dt, codec, name) for codec in _codecs(np.float64) for name in INT_CASES
+    for dt in DTYPES if codec in _codecs(dt)
+])
+def test_int_codec_roundtrip(dtype, codec, name):
+    a = INT_CASES[name].astype(dtype)
+    buf = C.encode_typed(a, codec)
     if buf is None:
-        # only two inapplicabilities exist: bitpack on negatives, delta on
-        # diff-overflowing extremes
-        assert (codec == C.BITPACK and len(a) and a.min() < 0) or (
-            codec == C.DELTA and len(a) > 1
-            and (np.diff(a.astype(np.int64)).max() > 2**31 - 1
-                 or np.diff(a.astype(np.int64)).min() < -(2**31))
-        )
+        # the inapplicabilities: bitpack on negative (bit patterns), GCD on
+        # empty, constant or stride-1 streams, ALP on non-decimal floats;
+        # DELTA wraps its diffs and applies everywhere
+        assert (codec == C.BITPACK and len(a) and _bits(a).min() < 0) or codec in (C.GCD, C.ALP)
         return
-    assert np.array_equal(C.decode_int32(buf), a)
+    out = C.decode_typed(buf)
+    assert out.dtype == a.dtype and np.array_equal(_bits(out), _bits(a))
 
 
-@pytest.mark.parametrize("name", list(INT_CASES))
-def test_int_codec_selection_roundtrip(name):
-    a = INT_CASES[name]
-    buf = select_int_codec(a)
-    assert np.array_equal(C.decode_int32(buf), a)
+@pytest.mark.parametrize("dtype, name", [_param(dt, name) for name in INT_CASES for dt in DTYPES])
+def test_int_codec_selection_roundtrip(dtype, name):
+    a = INT_CASES[name].astype(dtype)
+    buf = select_typed_codec(a)
+    out = C.decode_typed(buf)
+    assert out.dtype == a.dtype and np.array_equal(_bits(out), _bits(a))
     # selection never loses to plain by more than the header guard
-    assert len(buf) <= 4 * len(a) + 32
+    assert len(buf) <= a.itemsize * len(a) + 32
 
 
 def test_selection_picks_expected_winners():
-    assert C.payload_codec_name(select_int_codec(INT_CASES["runs"])) == "rle"
-    assert C.payload_codec_name(select_int_codec(INT_CASES["small_range"])) == "bitpack"
-    assert C.payload_codec_name(select_int_codec(INT_CASES["narrow_band"])) == "for"
-    assert C.payload_codec_name(select_int_codec(INT_CASES["zipf"])) == "dict"
+    assert C.payload_codec_name(select_typed_codec(INT_CASES["runs"])) == "rle"
+    assert C.payload_codec_name(select_typed_codec(INT_CASES["small_range"])) == "bitpack"
+    assert C.payload_codec_name(select_typed_codec(INT_CASES["narrow_band"])) == "for"
+    assert C.payload_codec_name(select_typed_codec(INT_CASES["zipf"])) == "dict"
 
 
 def test_gcd_codec_quantized_streams():
@@ -102,15 +106,6 @@ def test_alp_codec_decimal_doubles():
         assert np.array_equal(out.view(np.int64), a.view(np.int64))
     # full-precision randoms: inapplicable
     assert C.encode_typed(rng.standard_normal(256), C.ALP) is None
-
-
-STR_CASES = {
-    "prefix_heavy": [f"web-{i:012d}" for i in range(3_000)],
-    "low_card": ["web"] * 5_000 + ["code"] * 100 + ["books"] * 5,
-    "empty_strings": ["", "", "x", ""],
-    "none": [],
-    "unicode": ["tøkén", "日本語", "ascii", ""] * 50,
-}
 
 
 @pytest.mark.parametrize("name", list(STR_CASES))
@@ -182,5 +177,5 @@ def test_bitpack_width_zero_and_full():
 
 def test_payloads_self_describing():
     a = INT_CASES["zipf"]
-    buf = select_int_codec(a)
+    buf = select_typed_codec(a)
     assert C.payload_codec_name(buf) in {"plain", "bitpack", "for", "rle", "dict"}

@@ -1,5 +1,5 @@
-"""Property-based codec round-trip tests (hypothesis) — every int32 stream and
-every string stream must round-trip bit-identically through every applicable
+"""Property-based codec round-trip tests (hypothesis) — every int32 / int64
+stream and every string stream must round-trip bit-identically through every applicable
 codec and through the auto-selectors. Complements the crafted-array tests in
 test_codecs.py with adversarial random structure."""
 
@@ -9,7 +9,6 @@ from hypothesis import given, settings, strategies as st
 from pandora_apache_avro_idl_to_apache_parquet_spark.functions import codecs as C
 from pandora_apache_avro_idl_to_apache_parquet_spark.plans.cost import (
     encode_values,
-    select_int_codec,
     select_str_codec,
     select_typed_codec,
 )
@@ -37,23 +36,6 @@ def int_arrays(draw):
         vals = draw(st.lists(st.integers(0, 255), min_size=n, max_size=n))
         return np.array(vals, dtype=np.int32)
     return np.full(n, draw(int32s), dtype=np.int32)
-
-
-@settings(max_examples=60, deadline=None)
-@given(a=int_arrays(), codec=st.sampled_from(C.INT_CODECS))
-def test_int_codec_roundtrip(a, codec):
-    enc = C.encode_int32(a, codec)
-    if enc is None:  # codec inapplicable (e.g. bitpack on negatives)
-        return
-    assert np.array_equal(C.decode_int32(enc), a)
-
-
-@settings(max_examples=40, deadline=None)
-@given(a=int_arrays())
-def test_select_int_roundtrip_and_bounded(a):
-    enc = select_int_codec(a)
-    assert np.array_equal(C.decode_int32(enc), a)
-    assert len(enc) <= 4 * len(a) + 64  # never meaningfully worse than plain
 
 
 @settings(max_examples=30, deadline=None)
@@ -119,13 +101,39 @@ def int64_arrays(draw):
     return np.full(n, draw(int64s), dtype=np.int64)
 
 
-@settings(max_examples=60, deadline=None)
-@given(a=int64_arrays(), codec=st.sampled_from(C.INT_CODECS))
-def test_int64_codec_roundtrip(a, codec):
-    enc = C.encode_int64(a, codec)
+def _int_lane(draw, dtype):
+    return draw(int_arrays() if dtype == np.int32 else int64_arrays())
+
+
+@settings(max_examples=120, deadline=None)
+@given(data=st.data(), dtype=st.sampled_from([np.int32, np.int64]),
+       codec=st.sampled_from(C.INT_CODECS + (C.GCD,)))
+def test_int_codec_roundtrip(data, dtype, codec):
+    """One kernel per codec for every lane width: int32 and int64 streams
+    round-trip through each codec (None: inapplicable, e.g. bitpack on
+    negatives)."""
+    a = _int_lane(data.draw, dtype)
+    enc = C.encode_typed(a, codec)
     if enc is None:
         return
-    assert np.array_equal(C.decode_int64(enc), a)
+    out = C.decode_typed(enc)
+    assert out.dtype == a.dtype and np.array_equal(out, a)
+
+
+@settings(max_examples=40, deadline=None)
+@given(a=int_arrays())
+def test_select_int_roundtrip_and_bounded(a):
+    enc = select_typed_codec(a)
+    assert np.array_equal(C.decode_typed(enc), a)
+    assert len(enc) <= 4 * len(a) + 64  # never meaningfully worse than plain
+
+
+@settings(max_examples=40, deadline=None)
+@given(a=int64_arrays())
+def test_select_typed_int64_roundtrip_and_bounded(a):
+    enc = select_typed_codec(a)
+    assert np.array_equal(C.decode_typed(enc), a)
+    assert len(enc) <= 8 * len(a) + 64
 
 
 @st.composite
@@ -200,16 +208,6 @@ def test_alp_direct_applicability(data, dtype):
 
 
 @settings(max_examples=40, deadline=None)
-@given(a=int64_arrays())
-def test_select_typed_int64_roundtrip_and_bounded(a):
-    from pandora_apache_avro_idl_to_apache_parquet_spark.plans.cost import select_typed_codec
-
-    enc = select_typed_codec(a)
-    assert np.array_equal(C.decode_typed(enc), a)
-    assert len(enc) <= 8 * len(a) + 64
-
-
-@settings(max_examples=40, deadline=None)
 @given(strings=st.lists(st.text(max_size=30), max_size=50))
 def test_string_codecs_roundtrip_unicode(strings):
     """Arbitrary unicode (multi-byte UTF-8 ⇒ bytes ≥ 0xC2 everywhere) through
@@ -245,6 +243,6 @@ def test_gcd_i64_oversized_gcd_skipped():
     huge residual IS the gcd) must make GCD inapplicable, not crash the
     struct pack — and the cost model still round-trips via another codec."""
     a = np.array([0, -(2**63)], dtype=np.int64)  # residual 2^63 > i64 max
-    assert C.encode_int64(a, C.GCD) is None
+    assert C.encode_typed(a, C.GCD) is None
     buf = select_typed_codec(a)
     assert np.array_equal(C.decode_typed(buf), a)

@@ -104,6 +104,7 @@ def test_manifest_scan_prunes_payloads(spark, tmp_path):
 
 _DTYPES = ("int32", "int64", "float32", "float64")
 _SMALL = [3, -1, 7, 7, 7, 1 << 20, 0, 5]
+_SMALL_LENGTHS = [3, 0, 5]
 _SMALL_STRS = ["ab", "", "abab", "é", "ab"]
 
 
@@ -186,21 +187,20 @@ def codec_payloads() -> dict:
                  for (dt, name), a in cases.items() if dt == "int32"})
     str_sel = {name: _sha(select_str_codec(*C.strings_to_blob(np.array(v, dtype=object))))
                for name, v in strs.items()}
-    hexes = []
+    hexes = {}
     for dt in _DTYPES:
         for codec in _typed_family(C, dt):
             buf = C.encode_typed(np.array(_SMALL, dt), codec)
-            if buf is not None:
-                hexes.append({"kind": "typed", "dtype": dt, "values": _SMALL,
-                              "payload": buf.hex()})
-    lengths = np.array([3, 0, 5], np.int64)
-    hexes.append({"kind": "grouped", "values": _SMALL, "lengths": lengths.tolist(),
-                  "payload": C.encode_int32_grouped(np.array(_SMALL, np.int32), lengths).hex()})
+            hexes[f"{dt}/small/{C.CODEC_NAMES[codec]}"] = None if buf is None else buf.hex()
+    hexes["grouped"] = C.encode_int32_grouped(np.array(_SMALL, np.int32),
+                                              np.array(_SMALL_LENGTHS, np.int64)).hex()
     for codec in C.STR_CODECS:
-        buf = C.encode_strings(*C.strings_to_blob(np.array(_SMALL_STRS, dtype=object)), codec)
-        hexes.append({"kind": "strings", "values": _SMALL_STRS, "payload": buf.hex()})
+        blob = C.strings_to_blob(np.array(_SMALL_STRS, dtype=object))
+        hexes[f"strings/{C.CODEC_NAMES[codec]}"] = C.encode_strings(*blob, codec).hex()
     return {"encode_typed": typed, "select_typed_codec": selected,
-            "encode_values": grouped, "select_str_codec": str_sel, "hex": hexes}
+            "encode_values": grouped, "select_str_codec": str_sel, "hex": hexes,
+            "hex_inputs": {"typed": _SMALL, "grouped_lengths": _SMALL_LENGTHS,
+                           "strings": _SMALL_STRS}}
 
 
 def _delta_overflows_32(a: np.ndarray) -> bool:
@@ -219,26 +219,33 @@ def test_codec_payloads_golden():
         want = json.load(fh)
     got = codec_payloads()
     cases = payload_cases()
-    for key, sha in want["encode_typed"].items():
-        dt, name, codec = key.split("/")
-        if sha is None and got["encode_typed"][key] is not None:
-            a = cases[(dt, name)]
-            assert codec == "delta" and _delta_overflows_32(a), key
-            out = C.decode_typed(C.encode_typed(a, C.DELTA))
-            assert out.dtype == a.dtype and np.array_equal(out.view(np.int32), a.view(np.int32))
-            got["encode_typed"][key] = None
+    cases.update({(dt, "small"): np.array(_SMALL, dt) for dt in _DTYPES})
+    for section in ("encode_typed", "hex"):
+        for key, pinned in want[section].items():
+            if pinned is None and got[section][key] is not None:
+                dt, name, codec = key.split("/")
+                a = cases[(dt, name)]
+                assert codec == "delta" and _delta_overflows_32(a), key
+                out = C.decode_typed(C.encode_typed(a, C.DELTA))
+                assert out.dtype == a.dtype
+                assert np.array_equal(out.view(np.int32), a.view(np.int32)), key
+                got[section][key] = None
     for section in want:
         assert got[section] == want[section], section
-    for entry in want["hex"]:
-        buf = bytes.fromhex(entry["payload"])
-        if entry["kind"] == "strings":
-            assert C.blob_to_strings(*C.decode_strings(buf)).to_pylist() == entry["values"]
-        elif entry["kind"] == "grouped":
-            out = C.decode_int32_grouped(buf, np.array(entry["lengths"], np.int64))
-            assert out.tolist() == entry["values"]
+    inputs = want["hex_inputs"]
+    for key, payload in want["hex"].items():
+        if payload is None:
+            continue
+        buf = bytes.fromhex(payload)
+        if key.startswith("strings/"):
+            strs = C.blob_to_strings(*C.decode_strings(buf)).to_pylist()
+            assert strs == inputs["strings"], key
+        elif key == "grouped":
+            lengths = np.array(inputs["grouped_lengths"], np.int64)
+            assert C.decode_int32_grouped(buf, lengths).tolist() == inputs["typed"]
         else:
             out = C.decode_typed(buf)
-            assert out.dtype == entry["dtype"] and out.tolist() == entry["values"]
+            assert out.dtype == key.split("/")[0] and out.tolist() == inputs["typed"], key
 
 
 def write_codec_payloads() -> None:

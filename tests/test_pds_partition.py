@@ -196,3 +196,40 @@ def test_dml_and_recluster_after_clean_checkpoint_keep_partition_dates(
     assert pruned.filter("day = date'2024-03-02'").count() == 999
     with pytest.raises(ValueError, match="date-partitioned"):
         recluster_table(spark, out, ["v"])
+
+
+def test_compaction_keeps_partition_dates(spark, tmp_path):
+    """compact_table merges files of one date only and gives the merged file
+    that date: a later copy-on-write DML then keeps the merged rows' date
+    (a date-less merged file was rewritten under the call's default pds,
+    and date-pruned reads of it returned nothing)."""
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.encode import (
+        log_snapshot,
+    )
+    from pandora_apache_avro_idl_to_apache_parquet_spark.operators.table import (
+        compact_table,
+        delete_where,
+    )
+
+    out = str(tmp_path / "tbl")
+
+    def batch(lo):
+        return spark.range(lo, lo + 1000).select(
+            F.col("id").alias("k"),
+            F.expr("date_add(date'2024-03-01', cast(id % 2 as int))").alias("day"),
+        )
+
+    encode_table(batch(0), out, key_cols=["k"], n_parts=1, pds_col="day")
+    encode_table(batch(1000), out, key_cols=["k"], n_parts=1, pds_col="day", run="r1")
+    res = compact_table(out)
+    assert res["files_before"] == 4 and res["files_after"] == 2
+    delete_where(spark, out, F.col("k") == 1, condition_cols=["k"])
+
+    snap = log_snapshot(out)
+    dates = sorted(snap.adds[f]["partitionValues"]["pds"] for f in snap.files)
+    assert dates == ["2024-03-01", "2024-03-02"]
+    day1 = decode_table(spark, out, chunk_filter=F.col("pds") == F.lit(date(2024, 3, 1)))
+    assert sorted(r.k for r in day1.collect()) == list(range(0, 2000, 2))
+    day2 = decode_table(spark, out, chunk_filter=F.col("pds") == F.lit(date(2024, 3, 2)))
+    assert day2.filter("day <> date'2024-03-02'").count() == 0
+    assert day2.count() == 999
