@@ -324,6 +324,7 @@ _INT_ENC = {PLAIN: _enc_plain, BITPACK: _enc_bitpack, FOR: _enc_for, RLE: _enc_r
 _INT_DEC = {PLAIN: _dec_plain, BITPACK: _dec_bitpack, FOR: _dec_for, RLE: _dec_rle,
             DICT: _dec_dict, DELTA: _dec_delta, GCD: _dec_gcd}
 
+
 # ----------------------------------------------------- ALP (decimal floats)
 # Most real-world float columns are decimals in disguise (prices, rates,
 # sensor readings): v = k / 10^e for small e. ALP (Afroozeh & Boncz,
