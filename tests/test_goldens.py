@@ -205,8 +205,10 @@ def codec_payloads() -> dict:
 
 def _delta_overflows_32(a: np.ndarray) -> bool:
     """A 32-bit lane whose consecutive diffs leave int32 (DELTA wraps them)."""
+    if a.itemsize != 4 or len(a) < 2:
+        return False
     d = np.diff(a.view(np.int32).astype(np.int64))
-    return a.itemsize == 4 and len(d) > 0 and (d.max() > 2**31 - 1 or d.min() < -(2**31))
+    return d.max() > 2**31 - 1 or d.min() < -(2**31)
 
 
 def test_codec_payloads_golden():
