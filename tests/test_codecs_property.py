@@ -101,23 +101,30 @@ def int64_arrays(draw):
     return np.full(n, draw(int64s), dtype=np.int64)
 
 
-def _int_lane(draw, dtype):
-    return draw(int_arrays() if dtype == np.int32 else int64_arrays())
+INT_CODECS_ALL = C.INT_CODECS + (C.GCD,)
 
 
-@settings(max_examples=120, deadline=None)
-@given(data=st.data(), dtype=st.sampled_from([np.int32, np.int64]),
-       codec=st.sampled_from(C.INT_CODECS + (C.GCD,)))
-def test_int_codec_roundtrip(data, dtype, codec):
-    """One kernel per codec for every lane width: int32 and int64 streams
-    round-trip through each codec (None: inapplicable, e.g. bitpack on
-    negatives)."""
-    a = _int_lane(data.draw, dtype)
+def _check_int_codec_roundtrip(a, codec):
+    """One kernel per codec for every lane width: the stream round-trips
+    through the codec with its dtype kept (None: inapplicable, e.g. bitpack
+    on negatives)."""
     enc = C.encode_typed(a, codec)
     if enc is None:
         return
     out = C.decode_typed(enc)
     assert out.dtype == a.dtype and np.array_equal(out, a)
+
+
+@settings(max_examples=60, deadline=None)
+@given(a=int_arrays(), codec=st.sampled_from(INT_CODECS_ALL))
+def test_int_codec_roundtrip(a, codec):
+    _check_int_codec_roundtrip(a, codec)
+
+
+@settings(max_examples=60, deadline=None)
+@given(a=int64_arrays(), codec=st.sampled_from(INT_CODECS_ALL))
+def test_int64_codec_roundtrip(a, codec):
+    _check_int_codec_roundtrip(a, codec)
 
 
 @settings(max_examples=40, deadline=None)
