@@ -11,11 +11,9 @@ equality between source and decode(encode(source)).
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .table import decode_table
+from .table import decode_table, zone_filter
 
 _LANES = ["doc_id", "tokens", "source"]
 
@@ -42,16 +40,14 @@ def lookup_docs(spark: SparkSession, out_dir: str, doc_ids: list[str]) -> DataFr
     """Selective decode: fetch specific documents without scanning every chunk.
 
     Chunk pruning via the per-chunk ``doc_id`` zone map: a chunk can
-    contain a wanted doc only if ``doc_id__min <= id <= doc_id__max``. The
+    contain a wanted doc only if some id lies within its min/max. The
     predicate lands in the parquet scan (PushedFilters on the min/max
-    columns), payloads of pruned chunks are never read, and only surviving
-    chunks are decoded — the point-lookup path the reference's
-    one-file-per-table layout cannot offer.
+    columns) and only surviving chunks are decoded (a chunk file is one
+    parquet row group, so a pruned chunk's payload bytes are still read
+    when another chunk of its file survives) — the point-lookup path the
+    reference's one-file-per-table layout cannot offer.
     """
-    hit = reduce(lambda a, b: a | b, [
-        (F.col("doc_id__min") <= F.lit(d)) & (F.col("doc_id__max") >= F.lit(d))
-        for d in doc_ids
-    ], F.lit(False))
+    hit = zone_filter([("in", "doc_id", doc_ids)])
     decoded = decode_table(spark, out_dir, columns=_LANES, chunk_filter=hit)
     return _with_n_tok(decoded).filter(F.col("doc_id").isin(doc_ids))
 

@@ -52,17 +52,19 @@ from __future__ import annotations
 import base64
 import json
 import math
+import operator
 import posixpath
 import uuid
 import zlib
 from dataclasses import dataclass, field
 from datetime import date, datetime, timedelta, timezone
 from decimal import Decimal
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..functions import codecs as C
@@ -1175,10 +1177,17 @@ def _read_file_stats(io: FsIO, fname: str, spec: TableSpec) -> _FileStats:
     pf = pq.ParquetFile(io.open_input_file(io.join("data/" + fname)))
     present = set(pf.schema_arrow.names)
     names = [f.name for f in spec.schema.fields if f"{f.name}__nulls" in present]
+    return _FileStats.of_chunks(_chunk_stat_rows(pf, names), names)
+
+
+def _chunk_stat_rows(pf, names: list[str]) -> list[dict]:
+    """One dict per chunk of the open chunk file ``pf``: ``n_rows``,
+    ``chunk_id`` and the stat columns of ``names`` the file has."""
+    present = set(pf.schema_arrow.names)
     cols = ["n_rows", "chunk_id"] + [
         f"{c}__{k}" for c in names for k in ("nulls", "min", "max")
         if f"{c}__{k}" in present]
-    return _FileStats.of_chunks(pf.read(columns=cols).to_pylist(), names)
+    return pf.read(columns=cols).to_pylist()
 
 
 def _live_file_stats(io: FsIO, spec: TableSpec, snap,
@@ -1197,7 +1206,11 @@ def _live_file_stats(io: FsIO, spec: TableSpec, snap,
 # DataSource's pushed filters give them — never a Column: a chunk-meta
 # predicate such as ``key_min > 5`` is not monotone under a file's
 # min-of-chunk-mins, so evaluating arbitrary ``chunk_filter`` Columns on
-# file stats would drop matching files.
+# file stats would drop matching files. Every zone-map-pruned read states
+# its predicate this way, and two evaluators decide it: ``_stats_may_match``
+# in Python (files at planning, DataSource chunks on executors) and
+# ``zone_filter``, the one ``chunk_filter`` renderer for Spark chunk scans.
+# Only this module names the zone columns.
 
 
 def _comparable(stat, lit):
@@ -1229,29 +1242,27 @@ def _comparable(stat, lit):
 
 
 def _range_may_hold(op: str, lit, lo, hi) -> bool:
+    if op == "in":  # some listed non-null value may be equal to a row's
+        return any(_range_may_hold("eq", v, lo, hi)
+                   for v in lit if v is not None)
+    if op == "eq":
+        return (_range_may_hold("le", lit, lo, hi)
+                and _range_may_hold("ge", lit, lo, hi))
     try:
-        if op == "in":  # the list's own range must overlap the file's
-            if any(v != v for v in lit):
-                return True  # Spark's NaN equals NaN
-            return (_range_may_hold("le", max(lit), lo, hi)
-                    and _range_may_hold("ge", min(lit), lo, hi))
         if op in ("lt", "le"):
             a, b = _comparable(lo, lit)
             return a < b if op == "lt" else a <= b
         if op in ("gt", "ge"):
             a, b = _comparable(hi, lit)
             return a > b if op == "gt" else a >= b
-        if op == "eq":
-            a, b = _comparable(lo, lit)
-            c, d = _comparable(hi, lit)
-            return a <= b and c >= d
     except TypeError:
         pass
     return True
 
 
 def _stats_may_match(fs: _FileStats, conjuncts: list, logicals: dict) -> bool:
-    """False only when some conjunct provably holds for no row of the file."""
+    """False only when some conjunct provably holds for no row of the file
+    (or chunk) whose stats ``fs`` are."""
     for op, col, lit in conjuncts:
         if col not in logicals:
             continue
@@ -1272,6 +1283,46 @@ def _stats_may_match(fs: _FileStats, conjuncts: list, logicals: dict) -> bool:
         if lo is not None and hi is not None and not _range_may_hold(op, lit, lo, hi):
             return False
     return True
+
+
+def _chunks_may_match(pf, conjuncts: list, logicals: dict) -> list[int]:
+    """Row indices of the chunks of the open chunk file ``pf`` that the
+    conjuncts do not rule out, each chunk judged by :func:`_stats_may_match`
+    on its own stat columns (a column the file predates is all null)."""
+    names = sorted({c for _, c, _ in conjuncts if c in logicals})
+    return [i for i, r in enumerate(_chunk_stat_rows(pf, names))
+            if _stats_may_match(_FileStats.of_chunks([r], names), conjuncts,
+                                logicals)]
+
+
+def zone_filter(conjuncts: list):
+    """The conjuncts as a ``chunk_filter`` Column over the chunk zone
+    columns, for Spark chunk scans: TRUE unless some conjunct provably
+    holds for no row of the chunk. Spark orders NaN as the rows do and a
+    NULL stat (an all-null chunk, or a column the file predates) fails
+    every comparison; a chunk without ``__nulls`` counts every row null.
+    A literal may be a Column (taken as is)."""
+    return reduce(operator.and_, [_zone_term(*c) for c in conjuncts],
+                  F.lit(True))
+
+
+_ZONE_CMP = {"lt": ("min", operator.lt), "le": ("min", operator.le),
+             "gt": ("max", operator.gt), "ge": ("max", operator.ge)}
+
+
+def _zone_term(op: str, c: str, v):
+    if op == "in":
+        return reduce(operator.or_, [_zone_term("eq", c, x) for x in v
+                                     if x is not None], F.lit(False))
+    if op == "eq":
+        return _zone_term("le", c, v) & _zone_term("ge", c, v)
+    nulls = F.coalesce(F.col(f"{c}__nulls"), F.col("n_rows"))
+    if op == "isnull":
+        return nulls > 0
+    if op == "notnull":
+        return F.col("n_rows") > nulls
+    side, cmp = _ZONE_CMP[op]
+    return cmp(F.col(f"{c}__{side}"), v if isinstance(v, Column) else F.lit(v))
 
 
 def _plan_files(io: FsIO, spec: TableSpec, snap,
@@ -1471,6 +1522,23 @@ def _encode_table_partition(table: pa.Table, io: FsIO, spec: TableSpec,
     )
 
 
+def _encode_scan_partition(batches, pid: int, io: FsIO, spec: TableSpec,
+                           chunk_rows: int, pds: date, run: str,
+                           fail_parts=None) -> pa.Table | None:
+    """Map-only encode unit: one scan partition's Arrow batches, as part
+    ``pid``, -> one chunk file (:func:`_encode_table_partition`'s result),
+    or None when the partition holds no row."""
+    collected = [b for b in batches if b.num_rows]
+    if not collected:
+        return None
+    table = pa.Table.from_batches(collected)
+    table = table.append_column(
+        "part_id", pa.array(np.full(table.num_rows, pid, np.int32))
+    )
+    return _encode_table_partition(table, io, spec, chunk_rows, pds,
+                                   fail_parts=fail_parts, run=run)
+
+
 def _encode_store(df: DataFrame, out_dir: str, key_cols: list[str],
                   n_parts: int | None, chunk_rows: int, pds: date | None,
                   fail_parts: set[int] | None, io: FsIO | None, run: str,
@@ -1499,16 +1567,10 @@ def _encode_store(df: DataFrame, out_dir: str, key_cols: list[str],
             pid = TaskContext.get().partitionId()
             if pid in done:
                 return
-            collected = list(batches)
-            if not collected or sum(b.num_rows for b in collected) == 0:
-                return
-            table = pa.Table.from_batches(collected)
-            table = table.append_column(
-                "part_id", pa.array(np.full(table.num_rows, pid, np.int32))
-            )
-            yield from _encode_table_partition(
-                table, io, spec, chunk_rows, pds, fail_parts=fail_parts, run=run
-            ).to_batches()
+            out = _encode_scan_partition(batches, pid, io, spec, chunk_rows,
+                                         pds, run, fail_parts=fail_parts)
+            if out is not None:
+                yield from out.to_batches()
 
         result = df.mapInArrow(gen, schema=manifest_struct)
     else:
@@ -1868,8 +1930,10 @@ def decode_table(spark: SparkSession, out_dir: str,
     read (parquet column pruning at the chunk scan) and decoded; the plan is a
     shuffle-free ``mapInArrow`` either way.
     ``chunk_filter`` (a Column over the chunk meta fields, e.g. a
-    ``key_min``/``key_max`` zone-map predicate) prunes whole chunks at the
-    parquet scan before any payload is read. ``as_of`` time-travels to the
+    :func:`zone_filter` zone-map predicate) prunes whole chunks at the
+    parquet scan before any payload is decoded (a chunk file is one
+    parquet row group, so a pruned chunk's payload bytes are still read
+    when the file is). ``as_of`` time-travels to the
     table as of that commit-log index (appends/compactions after it are
     invisible; schema-on-read under the CURRENT sidecar schema, so columns
     added later decode as null at old versions).
@@ -1999,6 +2063,7 @@ def referenced_table_columns(sql: str, spec: TableSpec) -> list[str] | None:
 
 
 _SQL_LIT = r"(?:(?:date|timestamp)\s*'[^']*'|'(?:[^']|'')*'|-?\d+(?:\.\d+)?)"
+_SQL_OPS = {"<": "lt", "<=": "le", ">": "gt", ">=": "ge", "=": "eq"}
 
 
 def _zone_lit(tok: str, dt: T.DataType):
@@ -2080,31 +2145,18 @@ def zone_map_filter_for_sql(sql: str, spec: TableSpec, view_name: str):
         if m:
             conds.append(("cmp", m.group(1), m.group(2), m.group(3)))
 
-    pred = None
+    conjuncts = []
     for cond in conds:
-        name = cond[1].lower()
-        field = dtypes.get(name)
+        field = dtypes.get(cond[1].lower())
         if field is None:
             continue
-        col = field.name
         if cond[0] == "between":
-            lo = _zone_lit(cond[2], field.dataType)
-            hi = _zone_lit(cond[3], field.dataType)
-            p = (F.col(f"{col}__max") >= lo) & (F.col(f"{col}__min") <= hi)
+            conjuncts += [("ge", field.name, _zone_lit(cond[2], field.dataType)),
+                          ("le", field.name, _zone_lit(cond[3], field.dataType))]
         else:
-            op, lit = cond[2], _zone_lit(cond[3], field.dataType)
-            if op == ">=":
-                p = F.col(f"{col}__max") >= lit
-            elif op == ">":
-                p = F.col(f"{col}__max") > lit
-            elif op == "<=":
-                p = F.col(f"{col}__min") <= lit
-            elif op == "<":
-                p = F.col(f"{col}__min") < lit
-            else:  # =
-                p = (F.col(f"{col}__min") <= lit) & (F.col(f"{col}__max") >= lit)
-        pred = p if pred is None else (pred & p)
-    return pred
+            conjuncts.append((_SQL_OPS[cond[2]], field.name,
+                              _zone_lit(cond[3], field.dataType)))
+    return zone_filter(conjuncts) if conjuncts else None
 
 
 def table_sql(spark: SparkSession, out_dir: str, sql: str, name: str,
@@ -2132,18 +2184,20 @@ def lookup_key_range(spark: SparkSession, out_dir: str, lo, hi,
                      io: FsIO | None = None) -> DataFrame:
     """Selective decode of rows whose FIRST key column lies in ``[lo, hi]``.
 
-    Chunk pruning via the typed ``key_min``/``key_max`` zone map: rows inside
-    a chunk are key-sorted (the encode kernel sorts before slicing), so a
-    chunk can overlap the range only if ``key_max >= lo AND key_min <= hi``.
-    The predicate lands in the parquet scan (``PushedFilters``), payloads of
-    pruned chunks are never read, and only surviving chunks are decoded —
-    ``decode.lookup_docs``'s point-lookup idea generalized to any key type.
+    Chunk pruning via that column's zone map (equal to the chunk's
+    ``key_min``/``key_max`` on key-sorted and reclustered layouts alike): a
+    chunk can overlap the range only if its max is ``>= lo`` and its min
+    ``<= hi``. The predicate lands in the parquet scan (``PushedFilters``)
+    and only surviving chunks are decoded; a pruned chunk's payload bytes
+    are still read when another chunk of its file survives (a chunk file
+    is one parquet row group) — ``decode.lookup_docs``'s point-lookup idea
+    generalized to any key type.
     """
     spec = read_table_spec(out_dir, io)
     k0 = spec.key_cols[0]
     if columns is not None and k0 not in columns:
         columns = [k0] + list(columns)
-    pruned = (F.col("key_max") >= F.lit(lo)) & (F.col("key_min") <= F.lit(hi))
+    pruned = zone_filter([("ge", k0, lo), ("le", k0, hi)])
     dec = decode_table(spark, out_dir, columns=columns, io=io, chunk_filter=pruned)
     return dec.filter(F.col(k0).between(F.lit(lo), F.lit(hi)))
 
@@ -2160,18 +2214,14 @@ def lookup_value(spark: SparkSession, out_dir: str, column: str, value,
       in ``bloom_cols`` — the structure that actually prunes point lookups
       on unsorted high-cardinality columns, where every chunk's min/max
       spans nearly the full range.
-    Both prune conservatively (null stats/bloom keep the chunk); surviving
-    chunks decode only the requested ``columns``.
+    Both prune conservatively (an all-null chunk, whose stats are NULL,
+    holds no match; a missing bloom keeps the chunk); surviving chunks
+    decode only the requested ``columns``.
     """
     spec = read_table_spec(out_dir, io)
     if columns is not None and column not in columns:
         columns = [column] + list(columns)
-    zmap = (
-        F.col(f"{column}__min").isNull()
-        | ((F.col(f"{column}__min") <= F.lit(value))
-           & (F.col(f"{column}__max") >= F.lit(value)))
-    )
-    pred = zmap
+    pred = zone_filter([("eq", column, value)])
     if column in spec.bloom_cols:
         pred = pred & bloom_value_predicate(column, value)
     dec = decode_table(spark, out_dir, columns=columns, io=io, chunk_filter=pred)
@@ -2186,9 +2236,8 @@ def column_range_filter(name: str, lo, hi):
     for conjunctive predicates. The caller applies the residual row filter
     after decode (zone maps prune chunks, not rows). A ``None`` bound leaves
     that side of the range open."""
-    lo_ok = F.lit(True) if lo is None else F.col(f"{name}__max") >= F.lit(lo)
-    hi_ok = F.lit(True) if hi is None else F.col(f"{name}__min") <= F.lit(hi)
-    return lo_ok & hi_ok
+    return zone_filter([(op, name, v) for op, v in (("ge", lo), ("le", hi))
+                        if v is not None])
 
 
 # ----------------------------------------------- metadata-only statistics
@@ -2615,8 +2664,8 @@ def dv_update_where(spark: SparkSession, out_dir: str, condition,
         return {"rows_updated": 0, "chunks_touched": 0, "files_added": 0,
                 "dv_file": None, "log": None}
 
-    # replacement rows: full decode of ONLY the touched chunks (every other
-    # chunk's payload is never read), condition re-applied, assignments
+    # replacement rows: full decode of ONLY the touched chunks (no other
+    # chunk is decoded), condition re-applied, assignments
     # evaluated against the pre-update row, routed like merge inserts
     run = f"du{uuid.uuid4().hex[:8]}"
     dec = decode_table(spark, out_dir, io=io,

@@ -330,7 +330,7 @@ FROM toks
 def q_doc_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selective decode (point lookup): fetch five specific documents through
     the chunks' doc_id zone map — chunks outside the range
-    are pruned at the parquet scan, their payloads never read
+    are pruned at the parquet scan and never decoded
     (``operators/decode.py:lookup_docs``)."""
     from .operators.decode import lookup_docs
 
@@ -1694,7 +1694,7 @@ FROM lineitem GROUP BY l_linestatus
 def q_table_sql_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL WHERE → zone-map chunk pruning: ``table_sql`` turns the safe
     conjuncts (key BETWEEN, quantity >=) into chunk filters on the typed
-    min/max stats, so pruned chunks' payloads are never read OR decoded;
+    min/max stats, so pruned chunks are never decoded;
     Spark still applies the full residual WHERE on decoded rows. The oracle
     runs the same predicate on the raw table — a pruning bug in either
     direction (over- or under-prune) fails rows/hash."""

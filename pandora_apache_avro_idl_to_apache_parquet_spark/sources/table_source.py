@@ -22,10 +22,13 @@ become zone-map pruning at two levels:
   reader (file skipping from log stats, ``DeltaLake.fs:176-444``), with the
   same log replay supplying the live file set (orphans and compacted-away
   files are invisible).
-* **chunk level (executors)**: the surviving files are read with a pyarrow
-  filter over the chunk META rows (``col__min``/``col__max``/``col__nulls``),
-  so pruned chunks' payload bytes are never materialized; only then do the
-  surviving chunks decode, column-pruned to the requested ``columns``.
+* **chunk level (executors)**: each surviving file's chunk META rows (per
+  column null count, min and max) are read first and every chunk is judged
+  by the same rule as the files (``_stats_may_match``); only the surviving
+  chunks decode, column-pruned to the requested ``columns``. A chunk file
+  is one parquet row group, so a pruned chunk's payload bytes are still
+  read when another chunk of its file survives; a file with no surviving
+  chunk reads none.
 
 Pruning is strictly conservative: ``pushFilters`` returns EVERY filter as
 residual, so Spark re-applies the full predicate on decoded rows — a zone map
@@ -85,14 +88,11 @@ from pyspark.sql import types as T
 
 FORMAT_NAME = "pandora_table"
 
-# (op, column, value) specs recorded by pushFilters; value is None for the
-# null tests. All ops are self-inverse under conservative zone logic below.
-_COMPARE_OPS = {"lt", "le", "gt", "ge", "eq", "in"}
-
 
 def _zone_specs(filters: list[Filter], logicals: dict[str, str]) -> list:
-    """Translate supported pushed filters into picklable zone specs;
-    comparisons only on columns that carry a zone map."""
+    """Translate supported pushed filters into picklable ``(op, column,
+    value)`` pruning conjuncts (``operators/table.py``; value is None for
+    the null tests); comparisons only on columns that carry a zone map."""
     from ..operators.table import _has_zone_map
 
     specs = []
@@ -281,80 +281,40 @@ def _decode_file_batches(path: str, spec_json: str, names: list[str],
                          zone: list, fname: str,
                          dv_files: list[str] | None = None) -> Iterator[Any]:
     """Executor-side: one chunk file -> decoded Arrow batches (one per
-    surviving chunk), with the chunk-level zone filter applied over the
-    file's META rows before any payload bytes materialize, and live
-    deletion vectors (``dv_files``) subtracted per chunk. Shared by the
-    batch reader and the streaming reader (``zone=[]`` there)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    surviving chunk). The ``zone`` conjuncts judge each chunk on its META
+    row, read before any payload column, so a file with no surviving chunk
+    reads no payload byte; live deletion vectors (``dv_files``) are
+    subtracted per chunk. Shared by the batch reader and the streaming
+    reader (``zone=[]`` there)."""
     import pyarrow.parquet as pq
 
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from ..operators.table import (
-        TableSpec, _decode_chunks, _io, _read_plan, load_dv_map,
+        TableSpec, _chunks_may_match, _decode_chunks, _io, _read_plan,
+        load_dv_map,
     )
 
     spec = TableSpec.from_json(spec_json)
-    logicals = spec.logicals
     lanes, out_struct = _read_plan(spec, names)
 
     io = _io(path, None)
     pf = pq.ParquetFile(io.open_input_file(io.join("data/" + fname)))
-    present = set(pf.schema_arrow.names)
-
-    # chunk-level zone filter over the meta rows of THIS file
-    expr = None
-    for op, c, v in zone:
-        mn, mx, nl = f"{c}__min", f"{c}__max", f"{c}__nulls"
-        if op in _COMPARE_OPS and not (mn in present and mx in present):
-            return  # column predates file: all-null, no row matches
-        # a NaN max is above every value in Spark's order, never in Arrow's
-        nan_max = (pc.is_nan(pc.field(mx))
-                   if logicals.get(c) in ("float", "double") else pc.scalar(False))
-        if op == "lt":
-            e = pc.field(mn) < v
-        elif op == "le":
-            e = pc.field(mn) <= v
-        elif op == "gt":
-            e = (pc.field(mx) > v) | nan_max
-        elif op == "ge":
-            e = (pc.field(mx) >= v) | nan_max
-        elif op == "eq":
-            e = (pc.field(mn) <= v) & ((pc.field(mx) >= v) | nan_max)
-        elif op == "in":
-            e = (pc.field(mn) <= max(v)) & ((pc.field(mx) >= min(v)) | nan_max)
-        elif op == "isnull":
-            if nl not in present:
-                continue  # column predates file: all rows null, keep all
-            e = pc.field(nl) > 0
-        elif op == "notnull":
-            if nl not in present:
-                return  # all rows null in this file
-            e = pc.field("n_rows") > pc.field(nl)
-        else:  # pragma: no cover
-            continue
-        expr = e if expr is None else expr & e
+    keep = _chunks_may_match(pf, zone, spec.logicals) if zone else None
+    if keep == []:
+        return
 
     dv_map = (load_dv_map(io, [{"dvFile": f} for f in dv_files])
               if dv_files else {})
+    present = set(pf.schema_arrow.names)
     want = ["n_rows"]
     if dv_map:
         want.append("chunk_id")
     want += [f"{lane}{side}" for lane in lanes
              for side in ("__valid", "__payload") if f"{lane}{side}" in present]
-    try:
-        tbl = pq.read_table(
-            io.open_input_file(io.join("data/" + fname)),
-            columns=want, filters=expr,
-        )
-    except pa.ArrowInvalid:
-        # filter referenced a stat column absent from this file's subset
-        # (pre-evolution file + mixed conjuncts): fall back to unfiltered
-        tbl = pq.read_table(
-            io.open_input_file(io.join("data/" + fname)),
-            columns=want,
-        )
+    tbl = pf.read(columns=want)
+    if keep is not None and len(keep) < tbl.num_rows:
+        tbl = tbl.take(keep)
     yield from _decode_chunks(tbl, spec, lanes, to_arrow_schema(out_struct),
                               dead=dv_map)
 
@@ -369,26 +329,15 @@ def _encode_partition_task(path: str, spec_json: str, chunk_rows: int,
     import json as _json
     from datetime import date
 
-    import numpy as np
-    import pyarrow as pa
-
     from pyspark import TaskContext
 
-    from ..operators.table import TableSpec, _encode_table_partition, _io
+    from ..operators.table import TableSpec, _encode_scan_partition, _io
 
     pid = TaskContext.get().partitionId()
-    collected = [b for b in iterator if b.num_rows]
-    if not collected:
-        return _FileCommit()
-    spec = TableSpec.from_json(spec_json)
-    table = pa.Table.from_batches(collected)
-    table = table.append_column(
-        "part_id", pa.array(np.full(table.num_rows, pid, np.int32))
-    )
     io = _io(path, None)
-    _encode_table_partition(
-        table, io, spec, chunk_rows, date(2026, 1, 1), run=run
-    )
+    if _encode_scan_partition(iterator, pid, io, TableSpec.from_json(spec_json),
+                              chunk_rows, date(2026, 1, 1), run) is None:
+        return _FileCommit()
     marker = io.join(f"_checkpoints/part-{run}-{pid:05d}.json")
     return _FileCommit(_json.loads(io.read_text(marker)))
 

@@ -281,12 +281,14 @@ def test_lookup_key_range_typed_zone_maps(spark):
         exp = df.filter("k between 90 and 1105").toPandas().sort_values(
             "k", ignore_index=True)
         pd.testing.assert_frame_equal(exp, got[exp.columns], check_exact=True)
-        # the zone-map predicate is pushed into the parquet scan
+        # the zone-map predicate (on the key column's own zone map, equal
+        # to key_min/key_max) is pushed into the parquet scan
         plan = lookup_key_range(spark, out, 90, 1105)._jdf.queryExecution(
         ).executedPlan().toString()
         assert "PushedFilters" in plan
         pushed = plan[plan.index("PushedFilters"):].splitlines()[0]
-        assert "key_max" in pushed and "key_min" in pushed
+        assert ("GreaterThanOrEqual(k__max,90)" in pushed
+                and "LessThanOrEqual(k__min,1105)" in pushed)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
